@@ -618,7 +618,11 @@ def dedup_components(pairs: DataFrame, max_iter: int = 24) -> DataFrame:
     neighbors there. Each phase is one groupBy(node) min plus one
     edge equi-join, the edge set SHRINKS as chains collapse into
     stars, and the alternation converges to star forests rooted at
-    each component's minimum id. Replaces the earlier min-label
+    each component's minimum id. The paper's proven bound for the
+    alternation is O(log² n) rounds in the node count n — not the
+    O(log diameter) of the pointer-jump loop it replaced — so
+    `max_iter=24` is a loud backstop, not a proven cover for every
+    input; tune it against log² n. Replaces the earlier min-label
     propagation + pointer-jump loop: on the sf0.1 simhash pair graph
     (35k pairs, 3.7k nodes) the rounds drop 10 → 4 and the Spark jobs
     per call 88 → 51, with bit-identical labels; the round-9 law

@@ -22,8 +22,14 @@ Layout under `path/`:
                                constraints?, key_bloom?, mor_fold?}
     _LATEST                    the committed version number (pointer FILE)
     _COMMITLOCK / _MERGELOCK   flock files (pointer advance / merger serialization)
-    v-<n>.json                 immutable manifest: {buckets: {id -> generation
-                               dir}, schema, stats, op, committed_at,
+    v-<n>.json                 immutable manifest ROOT: {format: 2, n_buckets,
+                               shard_size, shards: {shard -> {f, r|ids,
+                               cols?}}, schema, op, committed_at} — or a
+                               delta root {root_base: n-1, shards_set,
+                               shards_del?} resolved against its base
+    _manifest/ms-<hex>.json    immutable content-addressed shard: for the
+                               buckets [s*shard_size, (s+1)*shard_size)
+                               {buckets: {id -> generation dir}, stats?,
                                dv?: {id -> [{n, d}]} (ordinal-scoped deletion
                                vectors), deltas?: {id -> [{g, stats}]}
                                (merge-on-read delta chains)}
@@ -62,6 +68,7 @@ from __future__ import annotations
 
 import functools
 import json
+import math
 import os
 import shutil
 import threading
@@ -124,24 +131,21 @@ def _load_manifest(path: str, v: int) -> dict[str, str]:
 # A monolithic full-snapshot manifest grows with TABLE WIDTH, not
 # change size: at 4096 buckets every commit rewrote a ~1.9 MB JSON
 # (MANIFESTBENCH_4096 — 300 commits = 564 MB of manifests) and a point
-# lookup parsed all of it. Format 2 splits the bucket-level payload
-# (buckets/stats/dv/deltas) into per-bucket-range SHARD files under
-# `_manifest/`, content-addressed by payload hash, referenced from a
-# small root `v-N.json` that also carries per-shard column-bound
-# rollups — the Iceberg manifest-list / Delta-checkpoint shape:
+# lookup parsed all of it. The manifest format (2) therefore splits the
+# bucket-level payload (buckets/stats/dv/deltas) into per-bucket-range
+# SHARD files under `_manifest/`, content-addressed by payload hash,
+# referenced from a small root `v-N.json` that also carries per-shard
+# column-bound rollups — the Iceberg manifest-list / Delta-checkpoint
+# shape:
 #   * commit bytes ∝ touched shards (unchanged shards are carried as
 #     the same file reference — same content, same hash, no write);
 #   * a point lookup loads root + ONE shard (O(touched), not O(width));
 #   * a bounded range scan skips whole shards by the root rollups
 #     before per-bucket stats are even loaded.
-# Both formats stay readable forever: time travel across the
-# `shard_manifest_versioned` migration boundary reads each version
-# under the format it was written with.
+# It is the only format: every width writes it, and a root without
+# "format": 2 is rejected at load instead of being misread.
 MANIFEST_DIR = "_manifest"
-# tables at least this wide auto-shard (below it one manifest is
-# already O(small)); explicit opt-in/out via meta "manifest_shard_size"
-AUTO_SHARD_MIN_BUCKETS = 256
-DEFAULT_SHARD_SIZE = 64
+MANIFEST_FORMAT = 2
 
 
 def _table_meta(path: str) -> dict:
@@ -152,33 +156,22 @@ def _table_meta(path: str) -> dict:
         return {}
 
 
-def _shard_size_for(path: str, n_buckets: int) -> int | None:
-    """Buckets per manifest shard for NEW commits of this table: the
-    meta's recorded "manifest_shard_size" when present (0 = explicitly
-    monolithic), else the auto policy. None = monolithic."""
-    s = _table_meta(path).get("manifest_shard_size")
-    if s is not None:
-        return int(s) or None
-    return DEFAULT_SHARD_SIZE if n_buckets >= AUTO_SHARD_MIN_BUCKETS else None
+def _shard_size_for(n_buckets: int) -> int:
+    """Buckets per manifest shard: ⌈√n⌉, so a root holds ~√n shard
+    entries and each shard ~√n buckets — root and one-shard loads both
+    grow as √width (4 at 16 buckets, 64 at 4096)."""
+    return math.isqrt(n_buckets - 1) + 1
 
 
-# root delta-chain: a format-2 commit may write its root as a DELTA
-# against the previous version's root ("root_base": v-1 plus only the
-# changed shard entries) instead of repeating every shard reference —
-# at 16384 buckets the full root rollup was ~105 KB/commit regardless
-# of how little the commit touched (MANIFESTBENCH_16384: 194 KB total
-# per manifest), the one storage term that grew with table WIDTH
-# instead of change size. A full checkpoint root lands every
-# ROOT_CKPT_EVERY versions so chain resolution stays O(interval).
+# root delta-chain: a commit may write its root as a DELTA against the
+# previous version's root ("root_base": v-1 plus only the changed shard
+# entries) instead of repeating every shard reference — at 16384
+# buckets the full root rollup was ~105 KB/commit regardless of how
+# little the commit touched (MANIFESTBENCH_16384: 194 KB total per
+# manifest), the one storage term that grew with table WIDTH instead of
+# change size. A full checkpoint root lands every ROOT_CKPT_EVERY
+# versions so chain resolution stays O(interval).
 ROOT_CKPT_EVERY = 16
-
-
-def _root_ckpt_every(path: str) -> int:
-    """Checkpoint cadence for NEW commits: the meta's recorded
-    "root_checkpoint_every" when present (<=1 = every commit writes a
-    full root, i.e. delta roots disabled), else the default."""
-    e = _table_meta(path).get("root_checkpoint_every")
-    return ROOT_CKPT_EVERY if e is None else max(1, int(e))
 
 
 # PACKED base generations: a FULL-WIDTH write (initial load, compact,
@@ -421,15 +414,20 @@ def _plan_base_paths(
 
 
 def _load_root_raw(path: str, v: int) -> dict:
-    with open(_manifest_path(path, v)) as f:
-        return json.load(f)
+    mpath = _manifest_path(path, v)
+    with open(mpath) as f:
+        m = json.load(f)
+    if m.get("format") != MANIFEST_FORMAT:
+        raise ValueError(
+            f"{mpath} is not a format-{MANIFEST_FORMAT} manifest root "
+            f"(format={m.get('format')!r}); monolithic manifests are no "
+            "longer readable — rebuild the table from its source"
+        )
+    return m
 
 
 def _resolve_root(path: str, v: int) -> dict:
     m = _load_root_raw(path, v)
-    if "n_buckets" not in m:  # manifests written before layout-in-manifest
-        with open(os.path.join(path, BUCKET_META)) as f:
-            m["n_buckets"] = json.load(f)["n_buckets"]
     if "root_base" not in m:
         return m
     # delta root: walk the chain down to the nearest checkpoint, then
@@ -456,9 +454,8 @@ def _resolve_root(path: str, v: int) -> dict:
 
 
 def _load_root(path: str, v: int) -> dict:
-    """The RESOLVED v-N.json: for format-2 manifests the small root
-    (full shard-reference map + rollups + schema — delta-chain roots
-    resolve transparently), for legacy manifests the whole thing.
+    """The RESOLVED v-N.json: the small root (full shard-reference map
+    + rollups + schema — delta-chain roots resolve transparently).
     Retries once on a missing chain link: vacuum materializes every
     surviving delta root whose base it reclaims BEFORE deleting
     anything, so a reader that raced the unlink finds the re-read
@@ -474,8 +471,9 @@ def _load_root(path: str, v: int) -> dict:
 # full-loads the latest manifest per merge re-parses only the shards
 # the previous commit changed. Entries are shared dicts: consumers
 # treat shard payloads as read-only (every mutator in this module
-# copies before writing — the sharded≡monolithic twin law is the
-# tripwire). Bounded FIFO: ~the working set of a few versions.
+# copies before writing — every write-surface law that re-reads its
+# table is the tripwire). Bounded FIFO: ~the working set of a few
+# versions.
 # Mutations are lock-guarded: concurrent OCC/MOR writer threads are a
 # supported pattern (catalog_txn_occ runs member actions on real
 # threads), and an unguarded evict could race two threads into
@@ -501,11 +499,11 @@ def _load_shard(path: str, fname: str) -> dict:
 
 
 def _assemble_shards(path: str, root: dict, shard_keys: set | None) -> dict:
-    """Materialize a format-2 root into the legacy full-manifest shape,
-    loading only `shard_keys` (None = all). The raw root rides along as
-    "_root" so commit assembly can carry unchanged shard files by
-    reference. The result is PARTIAL when shard_keys is given — sound
-    only for consumers that touch the requested buckets."""
+    """Materialize a root into the full-manifest shape, loading only
+    `shard_keys` (None = all). The raw root rides along as "_root" so
+    commit assembly can carry unchanged shard files by reference. The
+    result is PARTIAL when shard_keys is given — sound only for
+    consumers that touch the requested buckets."""
     full = {k: v2 for k, v2 in root.items() if k != "shards"}
     full["_root"] = root
     buckets: dict = {}
@@ -532,10 +530,7 @@ def _assemble_shards(path: str, root: dict, shard_keys: set | None) -> dict:
 
 def _slice_from_root(path: str, root: dict, bucket_ids) -> dict:
     """Full-manifest-shaped dict covering (at least) `bucket_ids`
-    (None = everything). For legacy manifests the root IS the full
-    manifest; for format-2 roots only the covering shards load."""
-    if root.get("format") != 2:
-        return root
+    (None = everything): only the covering shards load."""
     want = None
     if bucket_ids is not None:
         size = root["shard_size"]
@@ -548,8 +543,8 @@ def _load_manifest_full(path: str, v: int) -> dict:
     schema/...]}. Each manifest carries ITS OWN bucket count —
     re-bucketing (rebucket_versioned) is just another committed
     version, so time travel across a layout change resolves each
-    version under the layout it was written with. Sharded (format-2)
-    manifests assemble transparently."""
+    version under the layout it was written with. The root's shards
+    assemble transparently."""
     return _slice_from_root(path, _load_root(path, v), None)
 
 
@@ -631,9 +626,9 @@ def _write_manifest_shards(
     (payload hash), so even a rebuilt-identical shard lands on the
     existing file. CALLER CONTRACT: `changed` must contain every
     bucket whose entry in ANY of buckets/stats/dv/deltas differs from
-    `base_full` — a missed bucket would carry a stale shard (the
-    sharded≡monolithic twin law in tests/test_merge_versioned.py is
-    the tripwire)."""
+    `base_full` — a missed bucket would carry a stale shard, and every
+    write-surface law that re-reads its table would see the old
+    entry."""
     import hashlib
 
     stats = stats or {}
@@ -649,7 +644,6 @@ def _write_manifest_shards(
     if (
         changed is not None
         and base_root is not None
-        and base_root.get("format") == 2
         and base_root.get("shard_size") == shard_size
         and base_root.get("n_buckets") == n_buckets
     ):
@@ -750,58 +744,41 @@ def _write_manifest(
         # would collide with one (_union_schema raises) — the rule
         # that keeps dropped data from leaking into a new column
         m["dead_phys"] = sorted(dead_phys)
-    shard_size = _shard_size_for(path, n_buckets)
-    if shard_size:
-        m["format"] = 2
-        m["shard_size"] = shard_size
-        m["shards"] = _write_manifest_shards(
-            path, buckets, stats, dv, deltas, n_buckets, shard_size,
-            base_full, changed,
-        )
-        # root delta-chain: when the previous version's (resolved)
-        # root is layout-compatible and this is not a checkpoint slot,
-        # persist only the shard entries that CHANGED plus a back
-        # reference — commit bytes ∝ touched shards at any table
-        # width. The in-memory manifest keeps the full map; only the
-        # serialized form is a delta (readers resolve via _load_root).
-        base_root = (base_full or {}).get("_root")
-        ck = _root_ckpt_every(path)
-        if (
-            ck > 1
-            and v % ck != 0
-            and base_root is not None
-            and base_root.get("format") == 2
-            and base_root.get("shard_size") == shard_size
-            and base_root.get("n_buckets") == n_buckets
-            and base_root.get("v") == v - 1
-            and "shards" in base_root
-        ):
-            base_shards = base_root["shards"]
-            sset = {
-                k: e
-                for k, e in m["shards"].items()
-                if base_shards.get(k) != e
-            }
-            sdel = sorted(k for k in base_shards if k not in m["shards"])
-            if (len(sset) + len(sdel)) * 2 <= len(m["shards"]):
-                del m["shards"]
-                m["root_base"] = v - 1
-                m["shards_set"] = sset
-                if sdel:
-                    m["shards_del"] = sdel
-    else:
-        m["buckets"] = buckets
-        if stats is not None:
-            m["stats"] = stats
-        if dv:
-            m["dv"] = dv
-        if deltas:
-            # merge-on-read DELTA generations: {bucket -> ordered list
-            # of {"g": gen dir, "stats": footer stats}} — later entries
-            # supersede earlier ones and the base generation per
-            # key/column (operators read through _read_snapshot_slice's
-            # ordinal fold)
-            m["deltas"] = deltas
+    shard_size = _shard_size_for(n_buckets)
+    m["format"] = MANIFEST_FORMAT
+    m["shard_size"] = shard_size
+    m["shards"] = _write_manifest_shards(
+        path, buckets, stats, dv, deltas, n_buckets, shard_size,
+        base_full, changed,
+    )
+    # root delta-chain: when the previous version's (resolved) root is
+    # layout-compatible and this is not a checkpoint slot, persist only
+    # the shard entries that CHANGED plus a back reference — commit
+    # bytes ∝ touched shards at any table width. The in-memory manifest
+    # keeps the full map; only the serialized form is a delta (readers
+    # resolve via _load_root).
+    base_root = (base_full or {}).get("_root")
+    if (
+        v % ROOT_CKPT_EVERY != 0
+        and base_root is not None
+        and base_root.get("shard_size") == shard_size
+        and base_root.get("n_buckets") == n_buckets
+        and base_root.get("v") == v - 1
+        and "shards" in base_root
+    ):
+        base_shards = base_root["shards"]
+        sset = {
+            k: e
+            for k, e in m["shards"].items()
+            if base_shards.get(k) != e
+        }
+        sdel = sorted(k for k in base_shards if k not in m["shards"])
+        if (len(sset) + len(sdel)) * 2 <= len(m["shards"]):
+            del m["shards"]
+            m["root_base"] = v - 1
+            m["shards_set"] = sset
+            if sdel:
+                m["shards_del"] = sdel
     with open(tmp, "w") as f:
         json.dump(m, f, indent=0, sort_keys=True)
     os.replace(tmp, _manifest_path(path, v))
@@ -1360,64 +1337,42 @@ def prune_generations(
     {version, read, skipped, manifest}; buckets without usable stats
     for the column are always read (absent stats never skip).
 
-    On a SHARDED (format-2) manifest a bounded predicate first tests
-    each shard's root-level rollup bounds: an excluded shard's buckets
-    all skip WITHOUT loading the shard file, so plan cost is O(shards
-    that can match), not O(table width) — the returned "manifest" is
-    then PARTIAL (complete for every `read` bucket, which is all any
-    scan consumer touches)."""
+    A bounded predicate first tests each shard's root-level rollup
+    bounds: an excluded shard's buckets all skip WITHOUT loading the
+    shard file, so plan cost is O(shards that can match), not O(table
+    width) — the returned "manifest" is then PARTIAL (complete for
+    every `read` bucket, which is all any scan consumer touches)."""
     v = _resolve_version(path, version)
     root = _load_root(path, v)
-    read: list[str] = []
-    skipped: list[str] = []
-    if root.get("format") == 2 and (lo is not None or hi is not None):
-        pcol = _phys_map(root.get("schema")).get(column, column)
-        load_keys: set[str] = set()
-        for s, e in root["shards"].items():
-            if _stat_excludes((e.get("cols") or {}).get(pcol), lo, hi):
-                skipped.extend(str(i) for i in _entry_ids(e))
-            else:
-                load_keys.add(s)
-        full = _assemble_shards(path, root, load_keys)
-        stats = full.get("stats") or {}
-        deltas = full.get("deltas") or {}
-        for i in sorted(full["buckets"]):
-            entries = [stats.get(i)] + [
-                d.get("stats") for d in deltas.get(i, [])
-            ]
-            if all(
-                _stat_excludes((e or {}).get("cols", {}).get(pcol), lo, hi)
-                for e in entries
-            ):
-                skipped.append(i)
-            else:
-                read.append(i)
-        return {
-            "version": v,
-            "read": sorted(read),
-            "skipped": sorted(skipped),
-            "manifest": full,
-        }
-    full = _slice_from_root(path, root, None)
-    stats = full.get("stats") or {}
     if lo is None and hi is None:
         # no predicate, no pruning: an unbounded scan returns EVERY
         # row, including nulls — even an all-null generation's rows
         # (skipping those here while applying no residual filter would
         # silently drop them; a range with at least one bound excludes
         # nulls by SQL semantics, which is what licenses the skips)
+        full = _assemble_shards(path, root, None)
         return {
             "version": v,
             "read": sorted(full["buckets"]),
             "skipped": [],
             "manifest": full,
         }
-    deltas = full.get("deltas") or {}
     # stats are harvested from data-file FOOTERS, so their keys are
     # PHYSICAL column names — translate the (logical) predicate column
     # through the mapping (identity for never-altered tables)
-    pcol = _phys_map(full.get("schema")).get(column, column)
-    for i in sorted(full["buckets"]):
+    pcol = _phys_map(root.get("schema")).get(column, column)
+    read: list[str] = []
+    skipped: list[str] = []
+    load_keys: set[str] = set()
+    for s, e in root["shards"].items():
+        if _stat_excludes((e.get("cols") or {}).get(pcol), lo, hi):
+            skipped.extend(str(i) for i in _entry_ids(e))
+        else:
+            load_keys.add(s)
+    full = _assemble_shards(path, root, load_keys)
+    stats = full.get("stats") or {}
+    deltas = full.get("deltas") or {}
+    for i in full["buckets"]:
         # a bucket with merge-on-read deltas is excludable only when
         # EVERY generation's stats exclude: the base may be out of
         # range while a delta holds a matching (and winning) row, and
@@ -1431,7 +1386,12 @@ def prune_generations(
             skipped.append(i)
         else:
             read.append(i)
-    return {"version": v, "read": read, "skipped": skipped, "manifest": full}
+    return {
+        "version": v,
+        "read": sorted(read),
+        "skipped": sorted(skipped),
+        "manifest": full,
+    }
 
 
 def prune_generations_multi(
@@ -2258,8 +2218,6 @@ def write_bucket_table_versioned(
     constraints: dict[str, str] | None = None,
     key_bloom: dict | bool | None = None,
     mor_fold: dict | None = None,
-    manifest_shard_size: int | None = None,
-    root_checkpoint_every: int | None = None,
     packed_base: bool | None = None,
     pack_target_bytes: int | None = None,
 ) -> int:
@@ -2311,12 +2269,6 @@ def write_bucket_table_versioned(
                 key_bloom = old_meta.get("key_bloom")
             if mor_fold is None:
                 mor_fold = old_meta.get("mor_fold")
-            if manifest_shard_size is None:
-                manifest_shard_size = old_meta.get("manifest_shard_size")
-            if root_checkpoint_every is None:
-                root_checkpoint_every = old_meta.get(
-                    "root_checkpoint_every"
-                )
             if packed_base is None:
                 packed_base = old_meta.get("packed_base")
             if pack_target_bytes is None:
@@ -2337,15 +2289,6 @@ def write_bucket_table_versioned(
                     f"the bucket key {key!r}"
                 )
             meta["mor_fold"] = mor_fold
-        if manifest_shard_size is not None:
-            # explicit manifest layout policy (0 = monolithic even
-            # above the auto threshold); absent = the auto rule in
-            # _shard_size_for
-            meta["manifest_shard_size"] = int(manifest_shard_size)
-        if root_checkpoint_every is not None:
-            # root delta-chain checkpoint cadence (<=1 = full roots
-            # every commit); absent = ROOT_CKPT_EVERY
-            meta["root_checkpoint_every"] = int(root_checkpoint_every)
         if packed_base is not None:
             # explicit packed-layout policy for full-width writes;
             # absent = the auto rule in _packed_from_meta
@@ -2400,8 +2343,6 @@ def init_bucket_table_versioned(
     constraints: dict[str, str] | None = None,
     key_bloom: dict | bool | None = None,
     mor_fold: dict | None = None,
-    manifest_shard_size: int | None = None,
-    root_checkpoint_every: int | None = None,
     packed_base: bool | None = None,
 ) -> int:
     """Metadata-only creation of an EMPTY versioned table: meta, an
@@ -2443,10 +2384,6 @@ def init_bucket_table_versioned(
                 f"bucket key {key!r}"
             )
         meta["mor_fold"] = mor_fold
-    if manifest_shard_size is not None:
-        meta["manifest_shard_size"] = int(manifest_shard_size)
-    if root_checkpoint_every is not None:
-        meta["root_checkpoint_every"] = int(root_checkpoint_every)
     if packed_base is not None:
         meta["packed_base"] = bool(packed_base)
     with open(os.path.join(path, BUCKET_META), "w") as f:
@@ -3891,77 +3828,14 @@ def alter_bucket_table_versioned(
             ),
             dv=full.get("dv"), deltas=full.get("deltas"),
             dead_phys=sorted(dead),
-            # metadata-only: every bucket entry is byte-identical, so a
-            # sharded manifest reuses EVERY shard file (root only)
+            # metadata-only: every bucket entry is byte-identical, so
+            # the commit reuses EVERY shard file (root only)
             base_full=full, changed=set(),
         )
     finally:
         fcntl.flock(lock, fcntl.LOCK_UN)
         lock.close()
     return {"version": v, "schema_columns": len(new_fields)}
-
-
-def shard_manifest_versioned(
-    path: str, shard_size: int = DEFAULT_SHARD_SIZE
-) -> dict:
-    """Migrate a table's manifest layout to SHARDED (format 2) — or
-    back to monolithic with `shard_size=0` — as one metadata-only
-    commit: no data file moves, no generation rewrites, and the
-    committed content is byte-for-byte the same table (the
-    content-neutrality law in tests/test_merge_versioned.py
-    hash-compares across the boundary). Older versions stay readable
-    under the format they were written with; every LATER commit
-    inherits the recorded policy from the table meta.
-
-    Why: a monolithic full-snapshot manifest costs O(table width) to
-    write per commit and to parse per plan — at 4096 buckets that was
-    ~1.9 MB/commit and 564 MB over 300 commits (MANIFESTBENCH_4096).
-    Sharded, a commit writes the small root plus only the shards its
-    touched buckets live in (unchanged shards carry as the same
-    content-addressed file), and point lookups / bounded scans load
-    O(touched) shards. This is Iceberg's manifest-list / Delta's
-    checkpoint answer, applied at the bucket-range grain.
-
-    Returns {version, shard_size, shards}."""
-    import fcntl
-
-    if shard_size < 0:
-        raise ValueError(f"shard_size must be >= 0, got {shard_size}")
-    meta_path = os.path.join(path, BUCKET_META)
-    lock = open(os.path.join(path, "_MERGELOCK"), "w")
-    fcntl.flock(lock, fcntl.LOCK_EX)
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        cur = latest_version(path)
-        full = _load_manifest_full(path, cur)
-        # record the policy FIRST (under the lock): _write_manifest
-        # resolves the format from the meta at commit time. A crash
-        # between the meta write and the commit is benign — the table
-        # stays on `cur` and the next commit simply writes the new
-        # format.
-        meta["manifest_shard_size"] = int(shard_size)
-        tmp = f"{meta_path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, meta_path)
-        v = max([cur] + _list_versions(path)) + 1
-        _commit(
-            path, v, dict(full["buckets"]), full["n_buckets"],
-            full.get("schema"), full.get("stats"),
-            op=f"shard-manifest:{shard_size}",
-            dv=full.get("dv"), deltas=full.get("deltas"),
-            dead_phys=full.get("dead_phys"),
-        )
-        root = _load_root(path, v)
-    finally:
-        fcntl.flock(lock, fcntl.LOCK_UN)
-        lock.close()
-    return {
-        "version": v,
-        "shard_size": shard_size,
-        "shards": len(root.get("shards") or {}),
-    }
 
 
 def compact_versioned(
@@ -4496,9 +4370,9 @@ def read_bucket_for_key_versioned(
     spark: SparkSession, path: str, value, version: int | None = None
 ) -> DataFrame | None:
     """Point lookup: prune to the ONE generation dir that can hold
-    `value` under the pinned (or latest) version. On a sharded
-    manifest this loads the root plus the single shard the bucket
-    lives in — O(1) in table width, the format-2 design point."""
+    `value` under the pinned (or latest) version. This loads the root
+    plus the single shard the bucket lives in — O(√width) bytes, the
+    sharded-manifest design point."""
     with open(os.path.join(path, BUCKET_META)) as f:
         meta = json.load(f)
     v = _resolve_version(path, version)
@@ -4626,34 +4500,29 @@ def changed_buckets_between(
     or clock-skew surface at all, and a layout change (rebucket)
     degrades safely to "everything changed".
 
-    Sharded (format-2) manifests diff at the ROOT first: a shard whose
-    content-addressed file reference is identical in both versions is
-    byte-identical, so only the differing shards load — the consumer's
-    poll costs O(changed shards), not O(table width), exactly the
-    sharded commit's economics applied to the read side."""
+    The diff runs at the ROOT first: a shard whose content-addressed
+    file reference is identical in both versions is byte-identical, so
+    only the differing shards load — the consumer's poll costs
+    O(changed shards), not O(table width), exactly the sharded
+    commit's economics applied to the read side. Same width means same
+    shard size (_shard_size_for), so shard keys name the same bucket
+    ranges on both sides; a root kept from an older explicit shard-size
+    setting can make the diff load extra shards, never miss a change
+    (an equal file reference holds equal bucket ids and entries)."""
     to_v = _resolve_version(path, to_version)
     r_from = _load_root(path, since_version)
     r_to = _load_root(path, to_v)
     if r_from["n_buckets"] != r_to["n_buckets"]:
         full_to = _slice_from_root(path, r_to, None)
         return sorted(int(i) for i in full_to["buckets"])  # re-hashed
-    if (
-        r_from.get("format") == 2
-        and r_to.get("format") == 2
-        and r_from.get("shard_size") == r_to.get("shard_size")
-    ):
-        sh_from = r_from["shards"]
-        sh_to = r_to["shards"]
-        diff = {
-            s for s in set(sh_from) | set(sh_to)
-            if (sh_from.get(s) or {}).get("f")
-            != (sh_to.get(s) or {}).get("f")
-        }
-        m_from = _assemble_shards(path, r_from, diff)
-        m_to = _assemble_shards(path, r_to, diff)
-        return sorted(_changed_sig_buckets(m_from, m_to))
-    m_from = _slice_from_root(path, r_from, None)
-    m_to = _slice_from_root(path, r_to, None)
+    sh_from = r_from["shards"]
+    sh_to = r_to["shards"]
+    diff = {
+        s for s in set(sh_from) | set(sh_to)
+        if (sh_from.get(s) or {}).get("f") != (sh_to.get(s) or {}).get("f")
+    }
+    m_from = _assemble_shards(path, r_from, diff)
+    m_to = _assemble_shards(path, r_to, diff)
     return sorted(_changed_sig_buckets(m_from, m_to))
 
 
@@ -4875,11 +4744,7 @@ _NO_EXACT = object()  # sentinel: no exact cross-rebucket plan exists
 
 
 def _root_n_buckets(path: str, v: int) -> int:
-    m = _load_root_raw(path, v)
-    if "n_buckets" in m:
-        return m["n_buckets"]
-    with open(os.path.join(path, BUCKET_META)) as f:
-        return json.load(f)["n_buckets"]
+    return _load_root_raw(path, v)["n_buckets"]
 
 
 def _feed_across_rebucket(
@@ -4957,7 +4822,10 @@ def _feed_across_rebucket(
     # recomputing its full-outer join — the driver-side analogue of a
     # ReusedExchange, scoped to one change_feed call tree.
     def _sub_keys(f, va, vb):
-        mk = ("subfeed_keys", va, vb, n_from, n_to, tuple(keys))
+        mk = (
+            "subfeed_keys", path, bucket_key, va, vb, n_from, n_to,
+            tuple(keys),
+        )
         if memo is not None and mk in memo:
             return memo[mk]
         rows = (
@@ -4985,7 +4853,12 @@ def _feed_across_rebucket(
             seen[tuple(r[k] for k in keys)] = (r["__b_from"], r["__b_to"])
     if not seen:
         return None
-    kdf = spark.createDataFrame(sorted(seen), key_schema)
+    # sorted only to make the local relation deterministic; NULL key
+    # values sort first instead of raising on a None-vs-value compare
+    kdf = spark.createDataFrame(
+        sorted(seen, key=lambda t: tuple((x is not None, x) for x in t)),
+        key_schema,
+    )
     b_from = sorted({v[0] for v in seen.values()})
     b_to = sorted({v[1] for v in seen.values()})
     if metrics is not None:
@@ -5014,10 +4887,15 @@ def _feed_across_rebucket(
     # Without the hint the local relation plans as a stats-less
     # ExistingRDD and each semi-join becomes a full shuffle +
     # sort-merge of the SLICE side (guide §3.1) — measured 4 extra
-    # Exchanges + 4 SortMergeJoin legs in the executed plan.
-    old_df = old_df.join(F.broadcast(kdf), on=keys, how="semi")
-    new_df = new_df.join(F.broadcast(kdf), on=keys, how="semi")
-    return aligned_diff(old_df, new_df)
+    # Exchanges + 4 SortMergeJoin legs in the executed plan. Null-safe
+    # key equality: a changed row whose key holds a NULL is in the key
+    # set too, and a plain equi-join would silently drop it.
+    kb = F.broadcast(kdf)
+
+    def _changed_rows(df: DataFrame) -> DataFrame:
+        return df.join(kb, [df[k].eqNullSafe(kb[k]) for k in keys], "semi")
+
+    return aligned_diff(_changed_rows(old_df), _changed_rows(new_df))
 
 
 def change_feed(
@@ -5075,10 +4953,8 @@ def change_feed(
 
     def _root_empty(root: dict) -> bool:
         # emptiness is decidable from the ROOT alone (no shard loads):
-        # a format-2 root with no shard entries references no buckets
-        if root.get("format") == 2:
-            return not root["shards"]
-        return not root["buckets"]
+        # a root with no shard entries references no buckets
+        return not root["shards"]
 
     from .merge import table_diff
 
@@ -5242,10 +5118,10 @@ def vacuum_bucket_versions(
                 shard_referenced = set()
                 for v in _list_versions(path):
                     root = _load_root(path, v)
-                    # format-2 shard files referenced by any surviving
+                    # shard files referenced by any surviving
                     # root stay; the rest are displaced history or a
                     # crashed commit's orphans (grace-aged below)
-                    for e in (root.get("shards") or {}).values():
+                    for e in root["shards"].values():
                         shard_referenced.add(e["f"])
                     m_full = _slice_from_root(path, root, None)
                     for i, g in m_full["buckets"].items():

@@ -12,6 +12,8 @@ Determinism contract (SURVEY.md §2.12):
 
 from __future__ import annotations
 
+import hashlib
+import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -21,6 +23,29 @@ SparkBuilder = Callable[[SparkSession, str], DataFrame]
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
+
+# Queries that stage a table (versioned, bucketed, catalog) cache it
+# under `.scratch/` at the repository root, keyed on the input file's
+# identity plus ONE layout epoch. Bump the epoch whenever an on-disk
+# layout those tables use changes: every cache then rebuilds from zero
+# instead of being read under the new code. Epoch 2: manifest roots
+# are always sharded (format 2), monolithic roots no longer load.
+SCRATCH_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".scratch",
+)
+LAYOUT_EPOCH = 2
+
+
+def scratch_dir(sf_dir: str, table: str, prefix: str) -> str:
+    """`.scratch/<prefix>_<key>`: the cache dir for a table staged from
+    `sf_dir/<table>.parquet` under the current LAYOUT_EPOCH."""
+    st = os.stat(f"{sf_dir}/{table}.parquet")
+    key = hashlib.md5(
+        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:layout-{LAYOUT_EPOCH}"
+        .encode()
+    ).hexdigest()[:12]
+    return os.path.join(SCRATCH_ROOT, f"{prefix}_{key}")
 
 
 @dataclass(frozen=True)

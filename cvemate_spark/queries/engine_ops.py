@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
 
 from ..tables import load_table
-from .base import Registry, TS_FMT_DUCK, TS_FMT_SPARK
+from .base import Registry, TS_FMT_DUCK, TS_FMT_SPARK, scratch_dir
 
 REG = Registry()
 
@@ -1614,17 +1614,12 @@ def e_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "instead of serving stale versions.",
 )
 def e_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
 
     from ..operators.merge import read_versioned, write_versioned
 
     ev = load_table(spark, sf_dir, "events")
-    st = os.stat(f"{sf_dir}/events.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:tt-v1".encode()
-    ).hexdigest()[:12]
-    path = f"/root/repo/.scratch/timetravel_{key}"
+    path = scratch_dir(sf_dir, "events", "timetravel")
 
     counts = lambda df: df.groupBy("event_type").agg(  # noqa: E731
         F.count("*").cast("long").alias("cnt")
@@ -1702,7 +1697,6 @@ INS_OFFSET = 900_000_000  # synthetic insert keys, disjoint from orders
     "not the corpus.",
 )
 def e_merge_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
@@ -1713,11 +1707,7 @@ def e_merge_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    st = os.stat(f"{sf_dir}/orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:ms-v2".encode()
-    ).hexdigest()[:12]
-    path = f"/root/repo/.scratch/mscope_{key}"
+    path = scratch_dir(sf_dir, "orders", "mscope")
     done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
     if not os.path.exists(done):
         if os.path.isdir(path):
@@ -1825,7 +1815,6 @@ def e_merge_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
     "in tests/test_merge_versioned.py.",
 )
 def e_merge_scoped_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
@@ -1839,11 +1828,7 @@ def e_merge_scoped_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    st = os.stat(f"{sf_dir}/orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:msv-v1".encode()
-    ).hexdigest()[:12]
-    path = f"/root/repo/.scratch/msver_{key}"
+    path = scratch_dir(sf_dir, "orders", "msver")
     done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
     if not os.path.exists(done):
         if os.path.isdir(path):
@@ -2009,7 +1994,6 @@ def e_merge_scoped_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_merge_versioned.py.",
 )
 def e_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
@@ -2024,11 +2008,7 @@ def e_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    st = os.stat(f"{sf_dir}/orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:cdf-v2".encode()
-    ).hexdigest()[:12]
-    path = f"/root/repo/.scratch/cdf_{key}"
+    path = scratch_dir(sf_dir, "orders", "cdf")
     done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
     if not os.path.exists(done):
         if os.path.isdir(path):
@@ -2159,7 +2139,6 @@ def e_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "own batch-bounded commits; reads add one manifest resolution.",
 )
 def e_catalog_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
@@ -2177,11 +2156,7 @@ def e_catalog_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    st = os.stat(f"{sf_dir}/orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:cat-v1".encode()
-    ).hexdigest()[:12]
-    root = f"/root/repo/.scratch/cat_{key}"
+    root = scratch_dir(sf_dir, "orders", "cat")
     head, stat, cat = f"{root}/head", f"{root}/stat", f"{root}/cat"
     done = f"{root}/_MERGED"  # crash-safe gate: rebuilt unless complete
     if not os.path.exists(done):
@@ -2292,7 +2267,6 @@ def e_catalog_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     "REFERENCE in the new pointer (zero bytes copied).",
 )
 def e_catalog_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
@@ -2312,11 +2286,7 @@ def e_catalog_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    st = os.stat(f"{sf_dir}/orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:catfeed-v1".encode()
-    ).hexdigest()[:12]
-    root = f"/root/repo/.scratch/catfeed_{key}"
+    root = scratch_dir(sf_dir, "orders", "catfeed")
     head, stat, cat = f"{root}/head", f"{root}/stat", f"{root}/cat"
     rep = f"{root}/replica"
     done = f"{root}/_MERGED"  # crash-safe gate: rebuilt unless complete
@@ -2467,7 +2437,6 @@ def e_catalog_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "versions each member's own vacuum reclaims.",
 )
 def e_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
@@ -2491,11 +2460,7 @@ def e_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    st = os.stat(f"{sf_dir}/orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:wap-v1".encode()
-    ).hexdigest()[:12]
-    root = f"/root/repo/.scratch/wap_{key}"
+    root = scratch_dir(sf_dir, "orders", "wap")
     tab, cat = f"{root}/orders_t", f"{root}/cat"
     done = f"{root}/_MERGED"  # crash-safe gate: rebuilt unless complete
     if not os.path.exists(done):
@@ -2600,7 +2565,6 @@ def e_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_merge_versioned.py.",
 )
 def e_merge_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
@@ -2616,11 +2580,7 @@ def e_merge_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    st = os.stat(f"{sf_dir}/orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:chk-v1".encode()
-    ).hexdigest()[:12]
-    path = f"/root/repo/.scratch/chk_{key}"
+    path = scratch_dir(sf_dir, "orders", "chk")
     done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
     if not os.path.exists(done):
         if os.path.isdir(path):
@@ -2714,7 +2674,6 @@ def e_merge_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_merge_versioned.py.",
 )
 def e_versioned_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
@@ -2732,11 +2691,7 @@ def e_versioned_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    st = os.stat(f"{sf_dir}/orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:skip-v1".encode()
-    ).hexdigest()[:12]
-    path = f"/root/repo/.scratch/skip_{key}"
+    path = scratch_dir(sf_dir, "orders", "skip")
     done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
     if not os.path.exists(done):
         if os.path.isdir(path):
@@ -2849,7 +2804,6 @@ def e_versioned_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_merge_versioned.py.",
 )
 def e_versioned_cluster_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
@@ -2869,11 +2823,7 @@ def e_versioned_cluster_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    st = os.stat(f"{sf_dir}/orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:clus-v1".encode()
-    ).hexdigest()[:12]
-    path = f"/root/repo/.scratch/clus_{key}"
+    path = scratch_dir(sf_dir, "orders", "clus")
     done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
     if not os.path.exists(done):
         if os.path.isdir(path):
@@ -3017,7 +2967,6 @@ def e_versioned_cluster_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "evolution boundary, apply law) in tests/test_merge_versioned.py.",
 )
 def e_versioned_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
@@ -3032,11 +2981,7 @@ def e_versioned_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus", "o_orderpriority"
     )
-    st = os.stat(f"{sf_dir}/orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:evo-v1".encode()
-    ).hexdigest()[:12]
-    path = f"/root/repo/.scratch/evo_{key}"
+    path = scratch_dir(sf_dir, "orders", "evo")
     done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
     if not os.path.exists(done):
         if os.path.isdir(path):
@@ -3153,7 +3098,6 @@ def e_versioned_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "unreferenced orphans). Laws in tests/test_merge_versioned.py.",
 )
 def e_rebucket_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
@@ -3168,11 +3112,7 @@ def e_rebucket_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    st = os.stat(f"{sf_dir}/orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:rbk-v1".encode()
-    ).hexdigest()[:12]
-    path = f"/root/repo/.scratch/rbk_{key}"
+    path = scratch_dir(sf_dir, "orders", "rbk")
     done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
     if not os.path.exists(done):
         if os.path.isdir(path):
@@ -3271,7 +3211,6 @@ def e_rebucket_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     "taking N x (read+join+write) serialized wall-clock.",
 )
 def e_merge_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
     import threading
@@ -3286,11 +3225,7 @@ def e_merge_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    st = os.stat(f"{sf_dir}/orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:occ-v1".encode()
-    ).hexdigest()[:12]
-    path = f"/root/repo/.scratch/occver_{key}"
+    path = scratch_dir(sf_dir, "orders", "occver")
     done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
     if not os.path.exists(done):
         if os.path.isdir(path):
@@ -3445,7 +3380,6 @@ def e_merge_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(bucket bytes / batch bytes) dominates the nightly bill.",
 )
 def e_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
@@ -3461,11 +3395,7 @@ def e_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    st = os.stat(f"{sf_dir}/orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:mor-v1".encode()
-    ).hexdigest()[:12]
-    path = f"/root/repo/.scratch/morver_{key}"
+    path = scratch_dir(sf_dir, "orders", "morver")
     done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
     if not os.path.exists(done):
         if os.path.isdir(path):
@@ -3599,7 +3529,6 @@ def e_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def e_versioned_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
-    import hashlib
     import os
     import shutil
 
@@ -3616,11 +3545,7 @@ def e_versioned_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").alias("price"),
         F.col("o_orderstatus").alias("status"),
     )
-    st = os.stat(f"{sf_dir}/orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:ren-v1".encode()
-    ).hexdigest()[:12]
-    path = f"/root/repo/.scratch/renver_{key}"
+    path = scratch_dir(sf_dir, "orders", "renver")
     done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
     if not os.path.exists(done):
         if os.path.isdir(path):
@@ -3684,14 +3609,14 @@ def e_versioned_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders
     ),
     mk AS (SELECT MIN(k) AS mk FROM base),
-    v2 AS (  -- pre-migration merge: +5 on the %97 stripe
+    v2 AS (  -- first merge: +5 on the %97 stripe
         SELECT k,
                CASE WHEN k % 97 = 0 THEN price + 5.0 ELSE price END
                    AS price,
                status
         FROM base
     ),
-    v5 AS (  -- post-migration single-key merge on TOP of v2
+    v5 AS (  -- single-key merge on TOP of v2
         SELECT v2.k,
                CASE WHEN v2.k = mk.mk THEN b.price + 11.0
                     ELSE v2.price END AS price,
@@ -3717,24 +3642,20 @@ def e_versioned_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT version, tag, total, cnt FROM hist ORDER BY version, tag
     """,
     doc="SHARDED manifest layout (operators/merge_versioned.py::"
-    "shard_manifest_versioned + _write_manifest_shards — the Iceberg "
-    "manifest-list / Delta-checkpoint shape at bucket-range grain): "
-    "the migration is one metadata-only commit (builder asserts not "
-    "one generation dir moved and the new root is format 2); a "
-    "post-migration 1-key merge rewrites EXACTLY ONE shard file while "
-    "every other shard carries the same content-addressed reference "
-    "(commit bytes proportional to the batch, not the table width — "
-    "asserted on the roots); the point lookup goes through the "
-    "root+one-shard slice loader. The oracle hashes a pre-migration "
-    "version (time travel ACROSS the format boundary), the final "
-    "snapshot, and the point-lookup row. At 100 TB this caps both "
-    "per-commit manifest bytes and plan-time parsing at O(touched "
-    "shards) - MANIFESTBENCH_4096 measured 1.9 MB/commit and 564 MB "
-    "over 300 commits for the monolithic layout this replaces.",
+    "_write_manifest_shards — the Iceberg manifest-list / "
+    "Delta-checkpoint shape at bucket-range grain, ceil(sqrt(n)) "
+    "buckets per shard: 6 at 32 buckets): a 1-key merge rewrites "
+    "EXACTLY ONE shard file while every other shard carries the same "
+    "content-addressed reference (commit bytes proportional to the "
+    "batch, not the table width — asserted on the roots); the point "
+    "lookup goes through the root+one-shard slice loader. The oracle "
+    "hashes an earlier version (time travel), the final snapshot, "
+    "and the point-lookup row. At 100 TB this caps both per-commit "
+    "manifest bytes and plan-time parsing at O(touched shards) - "
+    "MANIFESTBENCH_4096 measured 1.9 MB/commit and 564 MB over 300 "
+    "commits for the monolithic layout this replaced.",
 )
 def e_manifest_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob as _glob
-    import hashlib
     import os
     import shutil
 
@@ -3744,7 +3665,6 @@ def e_manifest_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_scoped_versioned,
         read_bucket_for_key_versioned,
         read_bucket_table_versioned,
-        shard_manifest_versioned,
         vacuum_bucket_versions,
         write_bucket_table_versioned,
     )
@@ -3755,11 +3675,7 @@ def e_manifest_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("status"),
     )
     min_key = orders.agg(F.min("k")).collect()[0][0]  # 1 driver value
-    st = os.stat(f"{sf_dir}/orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:mshard-v1".encode()
-    ).hexdigest()[:12]
-    path = f"/root/repo/.scratch/mshard_{key}"
+    path = scratch_dir(sf_dir, "orders", "mshard")
     done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
     if not os.path.exists(done):
         if os.path.isdir(path):
@@ -3768,36 +3684,31 @@ def e_manifest_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
             merge_upsert(None, orders, key="k", now=T_MERGE),
             path, key="k", n_buckets=MS_BUCKETS,
         )
-        assert _load_root(path, 1).get("format") != 2  # monolithic era
         b1 = orders.filter(F.col("k") % 97 == 0).select(
             "k", (F.col("price") + F.lit(5.0)).alias("price")
         )
         s2 = merge_scoped_versioned(spark, path, b1, now=T_MERGE)
-        # MIGRATE: metadata-only — no generation dir moves
-        gens = sorted(_glob.glob(f"{path}/bucket=*/g-*"))
-        s3 = shard_manifest_versioned(path, shard_size=8)
-        assert sorted(_glob.glob(f"{path}/bucket=*/g-*")) == gens
-        root3 = _load_root(path, s3["version"])
-        assert root3.get("format") == 2 and len(root3["shards"]) >= 2
+        root2 = _load_root(path, s2["version"])
+        assert len(root2["shards"]) >= 2
         # a 1-key merge rewrites EXACTLY one shard; the rest carry the
         # same content-addressed file (commit bytes ∝ batch)
         b2 = orders.filter(F.col("k") == min_key).select(
             "k", (F.col("price") + F.lit(11.0)).alias("price")
         )
-        s5 = merge_scoped_versioned(spark, path, b2, now=T_MERGE)
-        root5 = _load_root(path, s5["version"])
+        s3 = merge_scoped_versioned(spark, path, b2, now=T_MERGE)
+        root3 = _load_root(path, s3["version"])
         changed = [
-            s for s in root5["shards"]
-            if root5["shards"][s]["f"]
-            != (root3["shards"].get(s) or {}).get("f")
+            s for s in root3["shards"]
+            if root3["shards"][s]["f"]
+            != (root2["shards"].get(s) or {}).get("f")
         ]
         assert len(changed) == 1, changed
         # displaced-version shard files are vacuumable storage; the
         # survivors keep every referenced shard (reads stay exact)
-        vacuum_bucket_versions(path, keep=4)
-        assert (s2["version"], s3["version"], s5["version"]) == (2, 3, 4)
+        vacuum_bucket_versions(path, keep=2)
+        assert (s2["version"], s3["version"]) == (2, 3)
         with open(done, "w") as f:
-            f.write(f"{s3}\n{s5}\n")
+            f.write(f"{s2}\n{s3}\n")
     v2 = read_bucket_table_versioned(spark, path, version=2)
     pre = (
         v2.groupBy(F.col("status").alias("tag"))
@@ -3894,7 +3805,6 @@ def e_manifest_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def e_packed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
-    import hashlib
     import os
     import shutil
 
@@ -3924,11 +3834,7 @@ def e_packed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # correctly decays the pack read to per-file paths and the
     # plan-shape asserts below would be testing the wrong branch
     lk = upd_keys[0]  # the lookup key, inside the rewritten stripe
-    st = os.stat(f"{sf_dir}/orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:packed-v3".encode()
-    ).hexdigest()[:12]
-    path = f"/root/repo/.scratch/pck_{key}"
+    path = scratch_dir(sf_dir, "orders", "pck")
     done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
     if not os.path.exists(done):
         if os.path.isdir(path):

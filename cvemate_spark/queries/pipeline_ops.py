@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from ..pipeline import build_cve_table, score
 from ..operators.merge import merge_upsert
 from ..tables import load_table
-from .base import Registry
+from .base import Registry, scratch_dir
 
 REG = Registry()
 
@@ -137,7 +137,6 @@ def cve_pipeline_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cost ∝ batch's bucket footprint, one manifest/pointer commit.",
 )
 def cve_pipeline_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
@@ -154,11 +153,7 @@ def cve_pipeline_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = load_table(spark, sf_dir, "lineitem")
     t_merge = "2026-01-01 00:00:00"
 
-    st = os.stat(f"{sf_dir}/orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:cvever-v1".encode()
-    ).hexdigest()[:12]
-    path = f"/root/repo/.scratch/cvever_{key}"
+    path = scratch_dir(sf_dir, "orders", "cvever")
     done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
     if not os.path.exists(done):
         if os.path.isdir(path):

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .session import RUNTIME_SQL_CONFS
+
 TABLE_NAMES = [
     "region",
     "nation",
@@ -33,45 +35,15 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
-    """Set runtime SQL confs the engine depends on.
+    """Set the runtime SQL confs the engine depends on
+    (session.RUNTIME_SQL_CONFS) on a session created elsewhere.
 
-    These are dynamic SQL confs, safe to set on a session the driver
-    created. UTC keeps timestamp formatting aligned with the
-    (UTC-naive) DuckDB oracle; nanosAsLong makes the events parquet
-    readable at all.
+    Shuffle partitions are pinned to 32 here, while get_spark sizes
+    them to the core count: a plain session defaults to 200 — far too
+    many tasks for the test scales; AQE coalesces but task setup still
+    dominates.
     """
-    for k, v in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.adaptive.enabled", "true"),
-        # a plain session defaults to 200 shuffle partitions — far too
-        # many tasks for the test scales; AQE coalesces but task setup
-        # still dominates. Runtime-settable, so safe on any session.
-        ("spark.sql.shuffle.partitions", "32"),
-        # join strategy (guide §3.1, r13): allow shuffled-hash instead
-        # of sort-merge when the size guards say a partition's build
-        # side fits; AQE's 64 MB local-map threshold keeps the runtime
-        # rewrite equally size-guarded. Oversized partitions still plan
-        # sort-merge, so the 100 TB shape is unchanged. Same settings
-        # as the tuned factory (session.py) so plan shape does not
-        # depend on which session built the frame.
-        ("spark.sql.join.preferSortMergeJoin", "false"),
-        (
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            str(64 * 1024 * 1024),
-        ),
-        # let AQE re-partition when materializing a persisted plan
-        # (guide §2.2 "let AQE coalesce"; off by default). Without it
-        # every cached relation materializes at the raw shuffle
-        # partition count — 32 one-row Python tasks for semdedup's
-        # 40-cell diag cache. At scale the same rule coalesces to the
-        # advisory byte target, the intended shape. Paired A/B (r14):
-        # emb_neardup_semdedup 1.50->1.39 s min, dedup_minhash a wash.
-        (
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true",
-        ),
-    ):
+    for k, v in RUNTIME_SQL_CONFS + (("spark.sql.shuffle.partitions", "32"),):
         try:
             spark.conf.set(k, v)
         except Exception:

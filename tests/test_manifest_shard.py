@@ -1,15 +1,12 @@
-"""Laws for the SHARDED (format-2) manifest layout (VERDICT r10
-item 1): per-bucket-range shard files + a small root with rollup
-bounds — the Iceberg manifest-list / Delta-checkpoint shape that makes
-commit bytes ∝ touched shards and point-lookup plan cost O(1) in table
-width.
-
-The master law is the TWIN: every write surface (load, CoW merge, MOR
-merge, DV delete, compact, alter, optimize) applied to a sharded table
-and a monolithic twin must yield identical logical manifests and
-identical content at every version — this is the tripwire for the
-_write_manifest_shards caller contract (`changed` must name every
-bucket whose entry moved; a missed bucket would carry a stale shard).
+"""Laws for the SHARDED manifest layout (VERDICT r10 item 1) — the
+only manifest format: per-bucket-range shard files + a small root with
+rollup bounds, the Iceberg manifest-list / Delta-checkpoint shape that
+makes commit bytes ∝ touched shards and point-lookup plan cost
+O(√width). Shard size is ⌈√n_buckets⌉ (4 at the 16 buckets most laws
+use), so every write-surface law elsewhere in the suite also runs on
+sharded manifests and is the tripwire for the _write_manifest_shards
+caller contract (`changed` must name every bucket whose entry moved; a
+missed bucket would carry a stale shard).
 """
 
 from __future__ import annotations
@@ -32,121 +29,21 @@ def _base(spark, n=200):
     )
 
 
-def _norm_manifest(path):
-    """Manifest structure with generation names (uuids) erased —
-    equal iff the two tables reference the same logical state."""
-    full = mv._load_manifest_full(path, mv.latest_version(path))
-    return {
-        "n_buckets": full["n_buckets"],
-        "bucket_ids": sorted(full["buckets"]),
-        "delta_depths": {
-            k: len(v) for k, v in (full.get("deltas") or {}).items()
-        },
-        "dv": {
-            k: sorted(mv._dv_ref(e)[1] for e in v)
-            for k, v in (full.get("dv") or {}).items()
-        },
-        "stats_rows": {
-            k: v["rows"] for k, v in (full.get("stats") or {}).items()
-        },
-        "schema_cols": [
-            f["name"] for f in (full.get("schema") or {"fields": []})["fields"]
-        ],
-    }
-
-
 def _content(spark, path, version=None):
     df = mv.read_bucket_table_versioned(spark, path, version=version)
     cols = [c for c in df.columns if c not in ("created_at", "updated_at")]
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
-def test_sharded_monolithic_twin_equivalence(spark, tmp_path):
-    """All write surfaces, applied identically to a sharded table and
-    a monolithic twin, commit the same logical manifest and the same
-    content — including time travel to every retained version."""
-    pm = str(tmp_path / "mono")
-    ps = str(tmp_path / "shard")
-    base = merge_upsert(None, _base(spark), key="id", now=T0)
-    mv.write_bucket_table_versioned(base, pm, key="id", n_buckets=16)
-    mv.write_bucket_table_versioned(
-        base, ps, key="id", n_buckets=16, manifest_shard_size=4
-    )
-    assert mv._load_root(ps, 1).get("format") == 2
-    assert mv._load_root(pm, 1).get("format") != 2
-
-    upd = spark.createDataFrame(
-        [(3, 99.0, "sX"), (250, 1.0, "new")],
-        "id long, val double, tag string",
-    )
-    mo = spark.createDataFrame(
-        [(5, 55.0, "sY"), (300, 2.0, "m")],
-        "id long, val double, tag string",
-    )
-    dk = spark.createDataFrame([(7,), (300,)], "id long")
-    steps = [
-        ("merge", lambda p: mv.merge_scoped_versioned(spark, p, upd, now=T0)),
-        ("mor", lambda p: mv.merge_scoped_versioned_mor(spark, p, mo, now=T0)),
-        ("delete-dv", lambda p: mv.merge_deletes_dv(spark, p, dk)),
-        ("compact", lambda p: mv.compact_versioned(spark, p)),
-        ("alter", lambda p: mv.alter_bucket_table_versioned(
-            p, rename={"tag": "label"}
-        )),
-        ("optimize", lambda p: mv.optimize_versioned(
-            spark, p, cluster_by=["val"]
-        )),
-    ]
-    for name, op in steps:
-        op(pm)
-        op(ps)
-        assert _norm_manifest(pm) == _norm_manifest(ps), name
-        assert _content(spark, pm) == _content(spark, ps), name
-    for v in range(1, mv.latest_version(pm) + 1):
-        assert _content(spark, pm, v) == _content(spark, ps, v), v
-
-
-def test_shard_migration_is_content_neutral_both_ways(spark, tmp_path):
-    """shard_manifest_versioned commits metadata only: content is
-    byte-identical across the boundary in both directions, old
-    versions stay readable under their own format, and later commits
-    inherit the recorded policy."""
-    path = str(tmp_path / "mig")
-    mv.write_bucket_table_versioned(
-        merge_upsert(None, _base(spark), key="id", now=T0),
-        path, key="id", n_buckets=16,
-    )
-    gens_before = sorted(glob.glob(f"{path}/bucket=*/g-*"))
-    before = _content(spark, path)
-    res = mv.shard_manifest_versioned(path, shard_size=4)
-    assert mv._load_root(path, res["version"]).get("format") == 2
-    assert res["shards"] == 4
-    assert sorted(glob.glob(f"{path}/bucket=*/g-*")) == gens_before
-    assert _content(spark, path) == before
-    assert _content(spark, path, version=1) == before  # pre-migration
-
-    # later commits are sharded (policy recorded in meta)
-    upd = spark.createDataFrame(
-        [(3, -1.0, "x")], "id long, val double, tag string"
-    )
-    r = mv.merge_scoped_versioned(spark, path, upd, now=T0)
-    assert mv._load_root(path, r["version"]).get("format") == 2
-
-    back = mv.shard_manifest_versioned(path, shard_size=0)
-    assert mv._load_root(path, back["version"]).get("format") != 2
-    assert {t[0] for t in _content(spark, path)} == {
-        t[0] for t in before
-    }
-
-
 def test_commit_reuses_unchanged_shard_files(spark, tmp_path):
     """A merge touching K buckets rewrites only the shards those
     buckets live in — the other shard entries carry the SAME
     content-addressed file reference (commit bytes ∝ batch, the
-    format-2 economics)."""
+    sharded-manifest economics)."""
     path = str(tmp_path / "reuse")
     mv.write_bucket_table_versioned(
         merge_upsert(None, _base(spark), key="id", now=T0),
-        path, key="id", n_buckets=32, manifest_shard_size=4,
+        path, key="id", n_buckets=32,
     )
     r0 = mv._load_root(path, 1)
     one = spark.createDataFrame(
@@ -159,7 +56,9 @@ def test_commit_reuses_unchanged_shard_files(spark, tmp_path):
         if r1["shards"].get(s, {}).get("f") == r0["shards"][s]["f"]
     ]
     changed = [s for s in r1["shards"] if s not in same]
-    # a 1-row batch touches 1 bucket -> exactly 1 of 8 shards rewrites
+    # a 1-row batch touches 1 bucket -> exactly 1 of 6 shards rewrites
+    # (32 buckets, ⌈√32⌉ = 6 per shard)
+    assert r0["shard_size"] == 6 and len(r0["shards"]) == 6
     assert len(changed) == 1 and len(same) == len(r0["shards"]) - 1
 
 
@@ -172,7 +71,7 @@ def test_shard_rollup_prunes_without_loading(spark, tmp_path):
     path = str(tmp_path / "roll")
     mv.write_bucket_table_versioned(
         merge_upsert(None, _base(spark), key="id", now=T0),
-        path, key="id", n_buckets=32, manifest_shard_size=4,
+        path, key="id", n_buckets=32,
     )
     one = spark.createDataFrame(
         [(3, -5.0, "z")], "id long, val double, tag string"
@@ -183,7 +82,8 @@ def test_shard_rollup_prunes_without_loading(spark, tmp_path):
     # the returned manifest is PARTIAL: excluded shards never loaded,
     # so it holds at most the one covering shard's buckets
     assert set(plan["read"]) <= set(plan["manifest"]["buckets"])
-    assert len(plan["manifest"]["buckets"]) <= 4
+    size = mv._load_root(path, 1)["shard_size"]
+    assert len(plan["manifest"]["buckets"]) <= size
     assert len(plan["skipped"]) == 31
     got = sorted(
         r["id"]
@@ -199,17 +99,20 @@ def test_shard_rollup_prunes_without_loading(spark, tmp_path):
 
 def test_point_lookup_loads_one_shard(spark, tmp_path):
     """_load_manifest_slice materializes only the covering shard —
-    the O(1)-in-width point-lookup loader."""
+    the O(√width) point-lookup loader."""
     path = str(tmp_path / "pl")
     mv.write_bucket_table_versioned(
         merge_upsert(None, _base(spark), key="id", now=T0),
-        path, key="id", n_buckets=32, manifest_shard_size=4,
+        path, key="id", n_buckets=32,
     )
     full = mv._load_manifest_full(path, 1)
     some_bucket = int(sorted(full["buckets"], key=int)[5])
     part = mv._load_manifest_slice(path, 1, [some_bucket])
     assert str(some_bucket) in part["buckets"]
-    want = {i for i in map(int, full["buckets"]) if i // 4 == some_bucket // 4}
+    size = full["shard_size"]
+    want = {
+        i for i in map(int, full["buckets"]) if i // size == some_bucket // size
+    }
     assert set(map(int, part["buckets"])) == want
     # and the public lookup returns the same rows as on a full read
     r = mv.read_bucket_for_key_versioned(spark, path, 7)
@@ -223,7 +126,7 @@ def test_vacuum_reclaims_unreferenced_shard_files(spark, tmp_path):
     path = str(tmp_path / "vac")
     mv.write_bucket_table_versioned(
         merge_upsert(None, _base(spark), key="id", now=T0),
-        path, key="id", n_buckets=16, manifest_shard_size=4,
+        path, key="id", n_buckets=16,
     )
     for k in (1, 2, 3):
         upd = spark.createDataFrame(
@@ -250,36 +153,30 @@ def test_vacuum_reclaims_unreferenced_shard_files(spark, tmp_path):
     assert not os.path.exists(orphan)
 
 
-def test_auto_shard_threshold(spark, tmp_path):
-    """Tables at or above AUTO_SHARD_MIN_BUCKETS shard by default;
-    narrower tables stay monolithic unless opted in."""
-    wide = str(tmp_path / "wide")
-    mv.write_bucket_table_versioned(
-        merge_upsert(None, _base(spark, 400), key="id", now=T0),
-        wide, key="id", n_buckets=mv.AUTO_SHARD_MIN_BUCKETS,
+def _snapshot_diff(spark, path, lo, hi):
+    """(id, change) rows of merge.table_diff between two versions'
+    full snapshots — the reference every O(changed) path must equal."""
+    from cvemate_spark.operators.merge import table_diff
+
+    d = table_diff(
+        mv.read_bucket_table_versioned(spark, path, lo),
+        mv.read_bucket_table_versioned(spark, path, hi),
+        key="id",
     )
-    assert mv._load_root(wide, 1).get("format") == 2
-    narrow = str(tmp_path / "narrow")
-    mv.write_bucket_table_versioned(
-        merge_upsert(None, _base(spark, 50), key="id", now=T0),
-        narrow, key="id", n_buckets=8,
-    )
-    assert mv._load_root(narrow, 1).get("format") != 2
+    return sorted((r["id"], r["change"]) for r in d.collect())
 
 
-def test_change_feed_and_diff_match_monolithic_twin(spark, tmp_path):
+def test_change_feed_and_diff_match_snapshot_diff(spark, tmp_path):
     """The O(changed) fast paths (root shard-ref diff in
     changed_buckets_between, slice loads in change_feed /
-    read_changed_between) return exactly the monolithic twin's
-    answers — including across a MOR delta commit and a DV delete,
-    whose changes live in shard content, not the buckets map."""
-    pm = str(tmp_path / "fm")
+    read_changed_between) agree with a full-snapshot table_diff —
+    including across a MOR delta commit and a DV delete, whose changes
+    live in shard content, not the buckets map."""
+    from cvemate_spark.operators.merge import bucket_expr, bucket_of_value
+
     ps = str(tmp_path / "fs")
     base = merge_upsert(None, _base(spark), key="id", now=T0)
-    mv.write_bucket_table_versioned(base, pm, key="id", n_buckets=16)
-    mv.write_bucket_table_versioned(
-        base, ps, key="id", n_buckets=16, manifest_shard_size=4
-    )
+    mv.write_bucket_table_versioned(base, ps, key="id", n_buckets=16)
     upd = spark.createDataFrame(
         [(3, 99.0, "sX")], "id long, val double, tag string"
     )
@@ -287,31 +184,34 @@ def test_change_feed_and_diff_match_monolithic_twin(spark, tmp_path):
         [(5, 55.0, "sY")], "id long, val double, tag string"
     )
     dk = spark.createDataFrame([(7,)], "id long")
-    for p in (pm, ps):
-        mv.merge_scoped_versioned(spark, p, upd, now=T0)       # v2
-        mv.merge_scoped_versioned_mor(spark, p, mo, now=T0)    # v3
-        mv.merge_deletes_dv(spark, p, dk)                      # v4
+    mv.merge_scoped_versioned(spark, ps, upd, now=T0)       # v2
+    mv.merge_scoped_versioned_mor(spark, ps, mo, now=T0)    # v3
+    mv.merge_deletes_dv(spark, ps, dk)                      # v4
     for lo, hi in [(1, 4), (1, 2), (2, 3), (3, 4)]:
-        assert mv.changed_buckets_between(pm, lo, hi) == \
-            mv.changed_buckets_between(ps, lo, hi), (lo, hi)
+        want = _snapshot_diff(spark, ps, lo, hi)
+        assert want, (lo, hi)  # every step changes a row
+        # each commit here changes exactly the rows it names, so the
+        # changed buckets are exactly the diff keys' buckets
+        assert mv.changed_buckets_between(ps, lo, hi) == sorted(
+            {bucket_of_value(spark, k, 16) for k, _ in want}
+        ), (lo, hi)
+    latest = mv.latest_version(ps)
     for since in (1, 2, 3):
-        fm = mv.change_feed(spark, pm, since)
-        fs = mv.change_feed(spark, ps, since)
-        rm = sorted(
-            (r["id"], r["change"]) for r in fm.collect()
-        ) if fm is not None else None
-        rs = sorted(
-            (r["id"], r["change"]) for r in fs.collect()
-        ) if fs is not None else None
-        assert rm == rs, since
-        cm = mv.read_changed_between(spark, pm, since)
+        feed = mv.change_feed(spark, ps, since)
+        got = sorted((r["id"], r["change"]) for r in feed.collect())
+        assert got == _snapshot_diff(spark, ps, since, latest), since
+        changed = mv.changed_buckets_between(ps, since)
+        snap = mv.read_bucket_table_versioned(spark, ps)
+        want_ids = sorted(
+            r["id"]
+            for r in snap.filter(bucket_expr("id", 16).isin(changed))
+            .collect()
+        )
         cs = mv.read_changed_between(spark, ps, since)
-        assert sorted(r["id"] for r in cm.collect()) == \
-            sorted(r["id"] for r in cs.collect()), since
+        assert sorted(r["id"] for r in cs.collect()) == want_ids, since
     # up-to-date consumer: no shard loads, no read, None
-    v = mv.latest_version(ps)
-    assert mv.change_feed(spark, ps, v) is None
-    assert mv.changed_buckets_between(ps, v, v) == []
+    assert mv.change_feed(spark, ps, latest) is None
+    assert mv.changed_buckets_between(ps, latest, latest) == []
 
 
 def test_multi_predicate_prune_on_partial_manifests(spark, tmp_path):
@@ -322,7 +222,7 @@ def test_multi_predicate_prune_on_partial_manifests(spark, tmp_path):
     path = str(tmp_path / "multi")
     mv.write_bucket_table_versioned(
         merge_upsert(None, _base(spark), key="id", now=T0),
-        path, key="id", n_buckets=32, manifest_shard_size=4,
+        path, key="id", n_buckets=32,
     )
     one = spark.createDataFrame(
         [(3, -5.0, "z"), (9, -7.0, "z")],
@@ -347,33 +247,31 @@ def test_multi_predicate_prune_on_partial_manifests(spark, tmp_path):
 
 
 def test_shard_edges_empty_rebucket_and_rich_payload(spark, tmp_path):
-    """Edge interleavings: (a) migrating an EMPTY init yields a
-    zero-shard format-2 root and the first merge + bootstrap feed work;
-    (b) rebucketing a sharded table rebuilds shards under the new
-    layout (and the cross-layout feed stays content-neutral);
-    (c) migrating a table carrying live MOR deltas AND DV refs keeps
-    both in the shard payload — reads identical across the boundary."""
+    """Edge interleavings: (a) an EMPTY init commits a zero-shard root
+    and the first merge + bootstrap feed work; (b) rebucketing
+    rebuilds shards under the new width's shard size (and the
+    cross-layout feed stays content-neutral); (c) live MOR deltas AND
+    DV refs both land in the shard payload and read back exactly."""
     # (a) empty init
     p1 = str(tmp_path / "t1")
     mv.init_bucket_table_versioned(p1, key="id", n_buckets=8)
-    r = mv.shard_manifest_versioned(p1, shard_size=2)
-    assert mv._load_root(p1, r["version"]).get("format") == 2
-    assert r["shards"] == 0
+    assert mv._load_root(p1, 1)["shards"] == {}
     b = spark.createDataFrame([(1, "x")], "id long, v string")
     mv.merge_scoped_versioned(spark, p1, b, now=T0)
     feed = mv.change_feed(spark, p1, 1)
     assert sorted(x["change"] for x in feed.collect()) == ["insert"]
 
-    # (b) rebucket a sharded table
+    # (b) rebucket 16 -> 32: shard size follows the width (4 -> 6)
     p2 = str(tmp_path / "t2")
     df = spark.range(0, 100).selectExpr("id", "cast(id as double) as val")
     mv.write_bucket_table_versioned(
         merge_upsert(None, df, key="id", now=T0),
-        p2, key="id", n_buckets=16, manifest_shard_size=4,
+        p2, key="id", n_buckets=16,
     )
+    assert mv._load_root(p2, 1)["shard_size"] == 4
     mv.rebucket_versioned(spark, p2, 32)
     root = mv._load_root(p2, mv.latest_version(p2))
-    assert root["n_buckets"] == 32 and root.get("format") == 2
+    assert root["n_buckets"] == 32 and root["shard_size"] == 6
     assert mv.read_bucket_table_versioned(spark, p2).count() == 100
     f2 = mv.change_feed(spark, p2, 1)
     assert f2 is None or f2.count() == 0  # rebucket is content-neutral
@@ -383,7 +281,7 @@ def test_shard_edges_empty_rebucket_and_rich_payload(spark, tmp_path):
         ).collect()
     ] == [7]
 
-    # (c) migrate with live deltas + DVs
+    # (c) live deltas + DVs in the shard payload
     p3 = str(tmp_path / "t3")
     mv.write_bucket_table_versioned(
         merge_upsert(None, df, key="id", now=T0), p3, key="id",
@@ -395,19 +293,47 @@ def test_shard_edges_empty_rebucket_and_rich_payload(spark, tmp_path):
         now=T0,
     )
     mv.merge_deletes_dv(spark, p3, spark.createDataFrame([(7,)], "id long"))
-    before = sorted(
+    rows = sorted(
         tuple(x) for x in mv.read_bucket_table_versioned(spark, p3)
         .select("id", "val").collect()
     )
-    mv.shard_manifest_versioned(p3, shard_size=4)
-    after = sorted(
-        tuple(x) for x in mv.read_bucket_table_versioned(spark, p3)
-        .select("id", "val").collect()
-    )
-    assert before == after and (5, 55.0) in after
-    assert all(t[0] != 7 for t in after)
+    assert len(rows) == 99 and (5, 55.0) in rows
+    assert all(t[0] != 7 for t in rows)
     full = mv._load_manifest_full(p3, mv.latest_version(p3))
     assert full.get("deltas") and full.get("dv")
+
+
+def test_root_without_format_2_raises(spark, tmp_path):
+    """Monolithic manifests (no "format": 2) are no longer a layout:
+    every read surface rejects such a root loudly instead of reading
+    it as an empty or partial table."""
+    import pytest
+
+    p = str(tmp_path / "mono")
+    mv.write_bucket_table_versioned(
+        merge_upsert(None, _base(spark, 20), key="id", now=T0),
+        p, key="id", n_buckets=4,
+    )
+    full = mv._load_manifest_full(p, 1)
+    with open(mv._manifest_path(p, 1), "w") as f:
+        json.dump(
+            {"v": 1, "n_buckets": 4, "buckets": full["buckets"],
+             "schema": full["schema"], "op": "load"}, f,
+        )
+    with pytest.raises(ValueError, match="not a format-2 manifest root"):
+        mv.read_bucket_table_versioned(spark, p)
+    with pytest.raises(ValueError, match="not a format-2 manifest root"):
+        mv.read_bucket_for_key_versioned(spark, p, 3)
+    with pytest.raises(ValueError, match="not a format-2 manifest root"):
+        mv.prune_generations(p, "val", lo=0.0)
+    with pytest.raises(ValueError, match="not a format-2 manifest root"):
+        mv.merge_scoped_versioned(
+            spark, p,
+            spark.createDataFrame(
+                [(3, 1.0, "x")], "id long, val double, tag string"
+            ),
+            now=T0,
+        )
 
 
 def test_shard_cache_eviction_is_thread_safe(spark, tmp_path):
@@ -421,7 +347,7 @@ def test_shard_cache_eviction_is_thread_safe(spark, tmp_path):
 
     p = str(tmp_path / "cachetbl")
     mv.write_bucket_table_versioned(
-        _base(spark), p, key="id", n_buckets=16, manifest_shard_size=2
+        _base(spark), p, key="id", n_buckets=16
     )
     root = mv._load_root(p, 1)
     fnames = [e["f"] for e in root["shards"].values()]
@@ -466,7 +392,7 @@ def _commit_burst(spark, p, n, start=300, tagcol="tag"):
         mv.merge_scoped_versioned(spark, p, up, now=T0)
 
 
-def test_root_delta_chain_content_neutral_twin(spark, tmp_path):
+def test_root_delta_chain_content_neutral_twin(spark, tmp_path, monkeypatch):
     """Content-neutrality law for the root chain (VERDICT r11 item 1):
     a table whose roots are delta-encoded resolves, at EVERY version,
     to the same logical manifest and content as a twin forced to write
@@ -475,14 +401,17 @@ def test_root_delta_chain_content_neutral_twin(spark, tmp_path):
     pf = str(tmp_path / "fullroots")
     pd_ = str(tmp_path / "deltaroots")
     base = merge_upsert(None, _base(spark), key="id", now=T0)
-    mv.write_bucket_table_versioned(
-        base, pf, key="id", n_buckets=16, manifest_shard_size=4,
-        root_checkpoint_every=1,
-    )
-    mv.write_bucket_table_versioned(
-        base, pd_, key="id", n_buckets=16, manifest_shard_size=4,
-        root_checkpoint_every=8,
-    )
+
+    def on(p, op):
+        # the checkpoint cadence is a module constant: full roots every
+        # commit for the twin, a checkpoint every 8 for the delta table
+        monkeypatch.setattr(mv, "ROOT_CKPT_EVERY", 1 if p == pf else 8)
+        op(p)
+
+    for p in (pf, pd_):
+        on(p, lambda p: mv.write_bucket_table_versioned(
+            base, p, key="id", n_buckets=16
+        ))
     mo = spark.createDataFrame(
         [(5, 55.0, "sY"), (300, 2.0, "m")],
         "id long, val double, tag string",
@@ -497,8 +426,8 @@ def test_root_delta_chain_content_neutral_twin(spark, tmp_path):
         lambda p: _commit_burst(spark, p, 4, start=400, tagcol="label"),
     ]
     for op in steps:
-        op(pf)
-        op(pd_)
+        on(pf, op)
+        on(pd_, op)
     # the delta table must actually HAVE delta roots (else the law is
     # vacuous) and full roots exactly at the checkpoint cadence
     raws = {
@@ -542,16 +471,18 @@ def _norm_manifest_at(path, v):
     }
 
 
-def test_vacuum_materializes_surviving_delta_roots(spark, tmp_path):
+def test_vacuum_materializes_surviving_delta_roots(
+    spark, tmp_path, monkeypatch
+):
     """Vacuum reclaiming a delta root's chain base must first rewrite
     the survivor as a self-contained checkpoint — a PINNED delta
     version (the catalog contract) stays readable with identical
     content after every version under it is gone."""
     p = str(tmp_path / "vacchain")
+    monkeypatch.setattr(mv, "ROOT_CKPT_EVERY", 100)  # none in range
     mv.write_bucket_table_versioned(
         merge_upsert(None, _base(spark), key="id", now=T0),
-        p, key="id", n_buckets=16, manifest_shard_size=4,
-        root_checkpoint_every=100,  # no natural checkpoint in range
+        p, key="id", n_buckets=16,
     )
     _commit_burst(spark, p, 10)
     pin_v = 7
@@ -569,16 +500,18 @@ def test_vacuum_materializes_surviving_delta_roots(spark, tmp_path):
     assert _content(spark, p) == _content(spark, p, mv.latest_version(p))
 
 
-def test_change_feed_and_occ_across_delta_roots(spark, tmp_path):
+def test_change_feed_and_occ_across_delta_roots(
+    spark, tmp_path, monkeypatch
+):
     """changed_buckets_between and the shard slice-loaders operate on
     RESOLVED roots: a span whose endpoints are both delta roots (no
     checkpoint between) must yield exactly the buckets the commits in
     the span touched."""
     p = str(tmp_path / "feedchain")
+    monkeypatch.setattr(mv, "ROOT_CKPT_EVERY", 100)
     mv.write_bucket_table_versioned(
         merge_upsert(None, _base(spark), key="id", now=T0),
-        p, key="id", n_buckets=16, manifest_shard_size=4,
-        root_checkpoint_every=100,
+        p, key="id", n_buckets=16,
     )
     v0 = mv.latest_version(p)
     _commit_burst(spark, p, 4, start=500)

@@ -38,14 +38,7 @@ def model_merge(batches: list[tuple[str, dict[str, str]]]) -> dict[str, dict]:
     return table
 
 
-@pytest.mark.slow
-@settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
-)
-@given(batches=batches_st)
-def test_merge_fold_matches_reference_model(spark, batches):
+def _assert_fold_matches_model(spark, batches):
     target = None
     for i, (src, rows) in enumerate(batches):
         df = spark.createDataFrame([Row(id=k, **{src: v}) for k, v in rows.items()])
@@ -55,6 +48,28 @@ def test_merge_fold_matches_reference_model(spark, batches):
         for r in target.collect()
     }
     assert got == model_merge(batches)
+
+
+@pytest.mark.slow
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(batches=batches_st)
+def test_merge_fold_matches_reference_model(spark, batches):
+    _assert_fold_matches_model(spark, batches)
+
+
+def test_merge_fold_matches_reference_model_fixed_batches(spark):
+    """The default profile's member of this module: one fixed program
+    covering a repeated key across sources, a same-source overwrite
+    and a key seen by one source only."""
+    _assert_fold_matches_model(spark, [
+        ("nvd", {"CVE-0": "a", "CVE-1": "b"}),
+        ("epss", {"CVE-1": "c", "CVE-2": "a"}),
+        ("nvd", {"CVE-1": "cc", "CVE-3": "b"}),
+    ])
 
 
 @pytest.mark.slow
@@ -191,9 +206,7 @@ def test_mor_random_program_matches_python_model(spark, tmp_path):
 
 
 def test_sharded_occ_random_program_matches_python_model(spark, tmp_path):
-    """Round-11 soak: the same random-program model, now on SHARDED
-    (format-2) tables, with two extra ops — a mid-program manifest
-    MIGRATION (shard size flips 2 -> 0 -> 2, metadata-only by law)
+    """Round-11 soak: the same random-program model with compaction
     and an OCC MOR merge whose pre-commit hook injects a CONCURRENT
     MOR batch into the same table (the ordinal-compose path: both
     batches must land, modelled in commit order — hook's batch first,
@@ -211,7 +224,6 @@ def test_sharded_occ_random_program_matches_python_model(spark, tmp_path):
         merge_scoped_versioned,
         merge_scoped_versioned_mor,
         read_bucket_table_versioned,
-        shard_manifest_versioned,
     )
 
     T0 = "2024-01-01 00:00:00"
@@ -250,19 +262,11 @@ def test_sharded_occ_random_program_matches_python_model(spark, tmp_path):
     for seed in (11, 42, 77):
         rng = random.Random(seed)
         path = str(tmp_path / f"soak{seed}")
-        init_bucket_table_versioned(
-            path, key="id", n_buckets=4, manifest_shard_size=2
-        )
+        init_bucket_table_versioned(path, key="id", n_buckets=4)
         model: dict[str, dict] = {}
-        shard_state = 2
         for step in range(9):
-            op = rng.choice(
-                ["mor", "cow", "dv", "compact", "occ_compose", "migrate"]
-            )
-            if op == "migrate":
-                shard_state = 0 if shard_state else 2
-                shard_manifest_versioned(path, shard_size=shard_state)
-            elif op == "compact":
+            op = rng.choice(["mor", "cow", "dv", "compact", "occ_compose"])
+            if op == "compact":
                 compact_versioned(spark, path)
             elif op == "dv":
                 victims = rng.sample(KEYS, rng.randint(1, 3))

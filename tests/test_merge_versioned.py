@@ -3267,6 +3267,49 @@ def test_change_feed_two_rebuckets_compose(spark, tmp_path):
     )
 
 
+def test_change_feed_across_rebucket_with_null_key(spark, tmp_path):
+    """A NULL key value inside a span that crosses a rebucket: the
+    exact plan once sorted the changed-key tuples in Python and raised
+    TypeError comparing None with a string. The NULL-keyed row must
+    come out of the exact plan like any other changed key, equal to
+    the full-outer-diff oracle over the endpoint snapshots."""
+    from collections import Counter
+
+    from cvemate_spark.operators.merge import table_diff
+    from cvemate_spark.operators.merge_versioned import (
+        change_feed, rebucket_versioned,
+    )
+
+    base = _batch(spark, "nvd", {f"CVE-{i}": f"n{i}" for i in range(20)})
+    path = str(tmp_path / "vbtnull")
+    write_bucket_table_versioned(
+        merge_upsert(None, base, now=T0), path, key="id", n_buckets=4
+    )
+    nul = spark.createDataFrame(
+        [Row(id=None, nvd="orphan")], "id string, nvd string"
+    )
+    merge_scoped_versioned(spark, path, nul, now=T1)
+    rebucket_versioned(spark, path, 8)
+    merge_scoped_versioned(
+        spark, path, _batch(spark, "nvd", {"CVE-1": "u"}), now=T1
+    )
+    v1 = latest_version(path)
+
+    metrics = {}
+    feed = change_feed(spark, path, 1, v1, _metrics=metrics)
+    assert metrics["mode"] == "rebucket-exact"
+    assert metrics["changed_keys"] == 2
+    old = read_bucket_table_versioned(spark, path, 1)
+    new = read_bucket_table_versioned(spark, path, v1)
+    oracle = table_diff(old, new, key="id")
+    cols = sorted(oracle.columns)
+    got = Counter(map(tuple, feed.select(*cols).collect()))
+    assert got == Counter(map(tuple, oracle.select(*cols).collect()))
+    assert {(r["id"], r["change"]) for r in feed.collect()} == {
+        (None, "insert"), ("CVE-1", "update"),
+    }
+
+
 def test_change_feed_reload_boundary_falls_back(spark, tmp_path):
     """A RELOAD that changes n_buckets is NOT content-neutral — the
     exact plan refuses (op != rebucket) and the feed falls back to the

@@ -18,29 +18,28 @@ import os
 
 from hypothesis import given, settings, strategies as st
 
-from cvemate_spark.operators.merge_versioned import prune_generations
+from cvemate_spark.operators.merge_versioned import (
+    _write_manifest,
+    prune_generations,
+)
 
 
 def _mk_table(tmpdir: str, buckets: dict[str, dict]) -> str:
     """Write the minimal on-disk shape prune_generations reads: a
-    _BUCKETS meta, a v-1 manifest with per-bucket stats, a _LATEST
-    pointer."""
+    _BUCKETS meta, a v-1 manifest (root + shards, through the real
+    writer) with per-bucket stats, a _LATEST pointer."""
     path = os.path.join(tmpdir, "t")
     os.makedirs(path, exist_ok=True)
     with open(os.path.join(path, "_BUCKETS"), "w") as f:
         json.dump({"key": "id", "n_buckets": len(buckets), "v": 2}, f)
-    manifest = {
-        "v": 1,
-        "n_buckets": len(buckets),
-        "buckets": {i: f"g-{i}" for i in buckets},
-        "stats": {
+    _write_manifest(
+        path, 1, {i: f"g-{i}" for i in buckets}, len(buckets),
+        stats={
             i: {"rows": 1, "bytes": 1, "files": 1, "cols": b["cols"]}
             for i, b in buckets.items()
             if b["cols"] is not None
         },
-    }
-    with open(os.path.join(path, "v-1.json"), "w") as f:
-        json.dump(manifest, f)
+    )
     with open(os.path.join(path, "_LATEST"), "w") as f:
         f.write("1")
     return path
@@ -192,14 +191,9 @@ def _mk_table_fs(tmpdir: str, buckets: dict[str, dict]) -> str:
         if b["fs"] is not None:
             e["fs"] = b["fs"]
         stats[i] = e
-    manifest = {
-        "v": 1,
-        "n_buckets": len(buckets),
-        "buckets": {i: f"g-{i}" for i in buckets},
-        "stats": stats,
-    }
-    with open(os.path.join(path, "v-1.json"), "w") as f:
-        json.dump(manifest, f)
+    _write_manifest(
+        path, 1, {i: f"g-{i}" for i in buckets}, len(buckets), stats=stats
+    )
     with open(os.path.join(path, "_LATEST"), "w") as f:
         f.write("1")
     return path

@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Long-history manifest economics (VERDICT r9 item 4).
 
-Every versioned commit writes ONE full manifest (buckets map + stats
-ledger) and the commit path does O(V) directory arithmetic
+Every versioned commit writes one manifest root plus the shards its
+touched buckets live in, and the commit path does O(V) directory arithmetic
 (_list_versions for the next number + the phantom sweep + supersession
 markers). This bench drives a table through ~N_COMMITS small merges
 and measures whether anything grows with history:
@@ -131,9 +131,9 @@ def main() -> None:
     feed_s = time.time() - t
 
     def _manifest_bytes() -> tuple[int, int]:
-        """(root bytes, shard bytes) — sharded (format-2) tables keep
-        the bucket payload in content-addressed _manifest/ shard files;
-        counting only v-*.json would under-report their storage."""
+        """(root bytes, shard bytes) — the bucket payload lives in
+        content-addressed _manifest/ shard files; counting only
+        v-*.json would under-report the storage."""
         roots = sum(
             os.path.getsize(f"{path}/{f}")
             for f in os.listdir(path)
@@ -153,8 +153,8 @@ def main() -> None:
     man_count = V
     root_bytes, shard_bytes = _manifest_bytes()
     man_bytes = root_bytes + shard_bytes
-    # POINT-LOOKUP plan time: the O(touched)-in-width claim (sharded:
-    # root + one shard; monolithic: the whole manifest)
+    # POINT-LOOKUP plan time: the O(touched)-in-width claim (root +
+    # one shard)
     t = time.time()
     hit = read_bucket_for_key_versioned_(spark, path, int(keys[0]))
     point_plan_s = time.time() - t

@@ -119,17 +119,16 @@ def main() -> None:
     harvest_s = time.time() - t
 
     # ledger overhead: manifest bytes with and without the stats block.
-    # Sharded (format-2) tables keep the payload in _manifest/ shard
-    # files — count root + the shards the version references.
+    # The payload lives in _manifest/ shard files — count root + the
+    # shards the version references.
     m_with = os.path.getsize(f"{path}/v-{mstats['version']}.json")
     from cvemate_spark.operators.merge_versioned import _load_root
 
     root = _load_root(path, mstats["version"])
-    if root.get("format") == 2:
-        m_with += sum(
-            os.path.getsize(f"{path}/_manifest/{e['f']}")
-            for e in root["shards"].values()
-        )
+    m_with += sum(
+        os.path.getsize(f"{path}/_manifest/{e['f']}")
+        for e in root["shards"].values()
+    )
     slim = {
         k: v for k, v in full.items() if k not in ("stats", "_root")
     }
