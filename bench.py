@@ -42,7 +42,12 @@ regressions). Additions only — no field removed or renamed:
     not see (a uniformly stolen run has a LOW median/min);
   * on skew (divergence over band OR no clean pass yet) the harness
     keeps running extra passes until a clean-window pass lands,
-    bounded at +6 (was +2).
+    bounded at +6 (was +2), and stops early once two consecutive extra
+    passes ran unclean without their steal falling (a persistently
+    stolen host would otherwise pay all +6 passes); "stop_reason"
+    records which rule ended the loop;
+  * "cpus" (the Spark core count) and "git_rev" name the recording
+    context.
 """
 
 from __future__ import annotations
@@ -50,6 +55,7 @@ from __future__ import annotations
 import json
 import os
 import statistics
+import subprocess
 import sys
 import time
 
@@ -98,6 +104,48 @@ HEADLINE = [
     "s3_merge_replay", # foreachBatch keyed MERGE
 ]
 
+# the noise band: median > 1.15x min across the suite means passes ran
+# under materially different machine conditions (tightened from 1.30 —
+# VERDICT r13 item 1: a 25-50% steal-inflated run slid under the old
+# band)
+BAND = 1.15
+MAX_EXTRA = 6
+# a pass is "clean" when host steal stayed <= 2% of one core for its
+# whole duration (VERDICT r13 item 1; idle-calm on these hosts measures
+# well under 1%)
+STEAL_CLEAN_PCT = 2.0
+
+
+def extra_pass_stop(
+    pass_steal_pct: list[float], extra: int, skewed: bool
+) -> str | None:
+    """Why the extra-pass loop stops now, or None to run another pass.
+
+    `extra` passes have run beyond the base passes; `skewed` is true
+    while divergence is over band or no clean pass has landed. The
+    loop gives up early when the last two extra passes were both
+    unclean and neither lowered steal below the pass before it."""
+    if not skewed:
+        return "in_band"
+    if extra >= MAX_EXTRA:
+        return "max_extra"
+    tail = pass_steal_pct[-3:]
+    if extra >= 2 and all(
+        cur > STEAL_CLEAN_PCT and cur >= prev for prev, cur in zip(tail, tail[1:])
+    ):
+        return "steal_not_falling"
+    return None
+
+
+def git_rev() -> str | None:
+    repo = os.path.dirname(os.path.abspath(__file__))
+    r = subprocess.run(
+        ["git", "-C", repo, "rev-parse", "--short", "HEAD"],
+        capture_output=True,
+        text=True,
+    )
+    return r.stdout.strip() or None
+
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -129,10 +177,6 @@ def main() -> int:
             return 0
 
     CLK_TCK = os.sysconf("SC_CLK_TCK") if hasattr(os, "sysconf") else 100
-    # a pass is "clean" when host steal stayed <= 2% of one core for
-    # its whole duration (VERDICT r13 item 1; idle-calm on these hosts
-    # measures well under 1%)
-    STEAL_CLEAN_PCT = 2.0
     pass_totals: list[float] = []
     pass_steal_pct: list[float] = []
 
@@ -168,13 +212,6 @@ def main() -> int:
     for _ in range(n_runs):
         run_pass(samples)
 
-    # the noise band: median > 1.15x min across the suite means passes
-    # ran under materially different machine conditions (tightened from
-    # 1.30 — VERDICT r13 item 1: a 25-50% steal-inflated run slid under
-    # the old band)
-    BAND = 1.15
-    MAX_EXTRA = 6
-
     def divergence() -> float:
         tot_min = sum(min(ts) for ts in samples.values())
         tot_med = sum(statistics.median(ts) for ts in samples.values())
@@ -186,8 +223,12 @@ def main() -> int:
     extra_passes = 0
     # keep going until a clean-window pass lands AND divergence is in
     # band; min-of-N absorbs transient load if it clears
-    while (divergence() > BAND or not have_clean_pass()) and (
-        extra_passes < MAX_EXTRA
+    while not (
+        stop := extra_pass_stop(
+            pass_steal_pct,
+            extra_passes,
+            divergence() > BAND or not have_clean_pass(),
+        )
     ):
         extra_passes += 1
         run_pass(samples)
@@ -208,6 +249,7 @@ def main() -> int:
                 "queries_median": median,
                 "runs": n_runs + extra_passes,
                 "extra_passes_on_divergence": extra_passes,
+                "stop_reason": stop,
                 "median_over_min": div,
                 "load_skewed": div > BAND or not have_clean_pass(),
                 "band": BAND,
@@ -220,6 +262,8 @@ def main() -> int:
                 "load_start": ctx_start,
                 "load_end": load_context(),
                 "sf": sf_dir,
+                "cpus": int(cpus) if cpus.isdigit() else cpus,
+                "git_rev": git_rev(),
             }
         )
     )

@@ -46,7 +46,10 @@ extension surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 from pyspark.sql.window import Window as W
 
 
@@ -600,52 +603,123 @@ def simhash_pairs_oracle(
 
 
 # ------------------------------------------- connected components
+# Arc count (both directions of every distinct pair) at or below which
+# dedup_components collects the edge set and finishes on the driver.
+# See the dedup_components docstring for how the value was chosen.
+LOCAL_FINISH_ARCS = 1 << 20
+
+
+def _union_find_components(down: DataFrame) -> DataFrame:
+    """(doc_id, component) for every endpoint of `down`, labeled with
+    its component's minimum id by union-find on the driver.
+
+    `down` holds one arc per undirected edge with no NULL endpoint and
+    no self-loop; it is collected with one Arrow action. Ids stay
+    Python ints/strs end to end (Arrow `to_pylist`, never pandas), so
+    no id can turn into a float."""
+    arcs = down.toArrow()
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in zip(arcs.column(0).to_pylist(), arcs.column(1).to_pylist()):
+        ru = find(parent.setdefault(u, u))
+        rv = find(parent.setdefault(v, v))
+        if ru != rv:
+            # link under the smaller root, so every root is its
+            # component's minimum id
+            if rv < ru:
+                ru, rv = rv, ru
+            parent[rv] = ru
+    nodes = list(parent)
+    id_type = down.schema["a"].dataType
+    arrow_type = to_arrow_type(id_type)
+    table = pa.table(
+        {
+            "doc_id": pa.array(nodes, arrow_type),
+            "component": pa.array([find(x) for x in nodes], arrow_type),
+        }
+    )
+    schema = StructType(
+        [StructField("doc_id", id_type), StructField("component", id_type)]
+    )
+    return down.sparkSession.createDataFrame(table, schema)
+
+
 def dedup_components(pairs: DataFrame, max_iter: int = 24) -> DataFrame:
     """Duplicate clusters from near-dup pairs: (doc_id, component).
 
     A near-dup pipeline's last step is grouping pairwise matches into
     clusters and electing a canonical document per cluster. This is
-    connected components: every node starts labeled with its own id;
-    at fixpoint the label is the minimum doc_id of the component —
-    which is also the canonical-survivor choice ("keep the smallest
-    id").
+    connected components: the label of a node is the minimum doc_id
+    of its component — which is also the canonical-survivor choice
+    ("keep the smallest id"). Pairs with a NULL endpoint connect
+    nothing, and a self-pair alone does not make its node a member.
 
-    Round shape: the alternating LARGE-STAR / SMALL-STAR edge
-    rewriting of Kiveris et al., "Connected Components in MapReduce
-    and Beyond" (SoCC 2014) — the published at-scale formulation.
-    Large-star points every strictly-larger neighbor of v at
-    m(v) = min(N(v) ∪ {v}); small-star points the smaller-or-equal
-    neighbors there. Each phase is one groupBy(node) min plus one
-    edge equi-join, the edge set SHRINKS as chains collapse into
-    stars, and the alternation converges to star forests rooted at
-    each component's minimum id. The paper's proven bound for the
-    alternation is O(log² n) rounds in the node count n — not the
-    O(log diameter) of the pointer-jump loop it replaced — so
-    `max_iter=24` is a loud backstop, not a proven cover for every
-    input; tune it against log² n. Replaces the earlier min-label
-    propagation + pointer-jump loop: on the sf0.1 simhash pair graph
-    (35k pairs, 3.7k nodes) the rounds drop 10 → 4 and the Spark jobs
-    per call 88 → 51, with bit-identical labels; the round-9 law
-    verifier history (tools/dedup_laws.py caught a plain-propagation
-    variant silently truncating on sf1's 7k-node chains) is why
-    exhausting `max_iter` without a fixpoint still raises instead of
-    returning wrong labels.
+    Two finishes over one arc relation (both directions of every
+    distinct pair, checkpointed once):
 
-    All work runs over the EDGE relation, which is near-dup-density-
-    sized, orders of magnitude below the corpus, and shrinks per
-    round. Convergence is an exact edge-set fixpoint test (count +
-    exceptAll emptiness on consecutive canonical downward edge sets —
-    driver-side probes, the standard iterative control flow).
-    `localCheckpoint` truncates the growing lineage each round so the
-    plan does not deepen per iteration.
+    - LOCAL FINISH. Once the arc relation has at most
+      `LOCAL_FINISH_ARCS` rows, its arcs are collected with one Arrow
+      action and labeled by union-find with path compression on the
+      driver; the labels come back as a local relation
+      (`LocalTableScan`). The size probe is the arc count observed
+      on the entry checkpoint's own job plus the count every
+      distributed round already takes, so it adds no Spark action,
+      and the local finish also takes over once rounds have shrunk a
+      larger graph.
+      Integral and string ids only (their Python order is Spark's
+      order); other id types stay distributed.
+    - LARGE-STAR / SMALL-STAR rounds (Kiveris et al., "Connected
+      Components in MapReduce and Beyond", SoCC 2014) for graphs too
+      large to collect. Large-star points every strictly-larger
+      neighbor of v at m(v) = min(N(v) ∪ {v}); small-star points the
+      smaller-or-equal neighbors there. Each phase is one groupBy(node)
+      min plus one edge equi-join; the edge set SHRINKS as chains
+      collapse into stars and converges to star forests rooted at
+      each component's minimum id. Convergence is an exact edge-set
+      fixpoint test (count + exceptAll emptiness on consecutive
+      canonical downward edge sets); `localCheckpoint` truncates the
+      lineage each round. The paper's proven bound for the
+      alternation is O(log² n) rounds in the node count n, so
+      `max_iter=24` is a loud backstop, not a proven cover for every
+      input: exhausting it RAISES instead of returning unconverged
+      labels (the round-9 law verifier caught a propagation variant
+      silently truncating on sf1's 7k-node chains).
+
+    Why the bound is 2^20 arcs: on random graphs on a 4-core host
+    (tools/cc_crossover.py, CCCROSSOVER.json) the local finish took
+    0.23 / 0.52 / 2.50 s against 0.97 / 1.69 / 3.81 s for ONE round at
+    2^16 / 2^18 / 2^20 arcs, and the rounds need at least two (here
+    4.8 / 5.8 / 13.7 s to the fixpoint). The local/round ratio climbs
+    0.23 → 0.31 → 0.66, so the crossover lies beyond 2^20, near 2^21
+    by extrapolation; 2^20 keeps the finish under one round while the
+    driver holds at most 2^19 collected arcs (~8 MB of Arrow ids plus
+    a node dict).
     """
     fwd = pairs.select(F.col("d1").alias("a"), F.col("d2").alias("b"))
-    # undirected representation: both arcs of every pair
+    # undirected representation: both arcs of every pair; the arc
+    # count is an observed metric of the checkpoint's own job, so the
+    # size probe at entry costs no action
+    arcs = Observation()
     edges = (
         fwd.unionByName(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
+        .observe(arcs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
+    id_type = edges.schema["a"].dataType
+    local_ok = isinstance(id_type, IntegralType) or id_type == StringType()
+    if local_ok and arcs.get["n"] <= LOCAL_FINISH_ARCS:
+        # one arc per undirected edge; NULL endpoints and self-loops
+        # fall out of the comparison exactly as they do in the rounds
+        return _union_find_components(edges.filter(F.col("a") < F.col("b")))
 
     def _min_star(e: DataFrame) -> DataFrame:
         # m(v) = min(neighborhood(v) + v) over the arc representation
@@ -689,11 +763,15 @@ def dedup_components(pairs: DataFrame, max_iter: int = 24) -> DataFrame:
             .distinct()
             .localCheckpoint()
         )
+        n3 = e3.count()
+        # e3 is downward, one arc per edge: the next round's arc
+        # relation has 2 * n3 rows
+        if local_ok and 2 * n3 <= LOCAL_FINISH_ARCS:
+            return _union_find_components(e3)
         # fixpoint: the canonical downward edge set is unchanged by a
         # full round — at that point the graph is a star forest whose
         # roots are the component minima (both probes scan the
         # checkpointed relation, no recompute)
-        n3 = e3.count()
         if (
             prev is not None
             and n3 == prev_n

@@ -99,12 +99,13 @@ def dedup_simhash_shingle(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_components",
     dedup.dedup_components_oracle(dedup.simhash_pairs_oracle(max_hamming=2)),
     doc="Duplicate clustering: connected components over simhash "
-    "near-dup pairs (hamming <= 2) via iterative min-label propagation "
-    "— the GraphX-CC shape, two edge-relation shuffles per round, "
-    "convergence probed driver-side. The component id is min(doc_id) = "
-    "the canonical survivor. Oracle is an exact recursive-CTE "
-    "transitive closure, so a hash match also proves the propagation "
-    "converged.",
+    "near-dup pairs (hamming <= 2). Up to LOCAL_FINISH_ARCS arcs the edge "
+    "set is collected once (Arrow) and labeled by union-find on the "
+    "driver; larger graphs run large-star/small-star rounds (Kiveris et "
+    "al. 2014) until they shrink under that bound or reach an edge-set "
+    "fixpoint. The component id is min(doc_id) = the canonical survivor. "
+    "Oracle is an exact recursive-CTE transitive closure, so a hash "
+    "match also proves the labels converged.",
 )
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")

@@ -41,6 +41,27 @@ def test_dedup_family_on_empty(empty_docs):
     assert dedup.dedup_components(pairs).count() == 0
 
 
+@pytest.mark.parametrize(
+    "rows",
+    [[], [(None, None), (1, None)], [(3, 3), (5, 5)]],
+    ids=["empty", "all_null", "self_only"],
+)
+def test_dedup_components_both_finishes_on_empty_graphs(spark, monkeypatch, rows):
+    """Inputs with no usable edge (no pairs, only NULL endpoints, only
+    self-pairs) give zero rows of the input's id type on the driver-side
+    finish and on the distributed rounds alike."""
+    from cvemate_spark.operators import dedup
+
+    pairs = spark.createDataFrame(rows, "d1 long, d2 long")
+    local = dedup.dedup_components(pairs)
+    assert local.isLocal() and local.count() == 0
+    # -1: even an empty arc relation goes through the rounds
+    monkeypatch.setattr(dedup, "LOCAL_FINISH_ARCS", -1)
+    dist = dedup.dedup_components(pairs)
+    assert not dist.isLocal() and dist.count() == 0
+    assert local.schema == dist.schema
+
+
 def test_similarity_family_on_empty(empty_emb):
     from cvemate_spark.operators import similarity as sim
 

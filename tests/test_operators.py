@@ -89,6 +89,62 @@ def test_dedup_components_multi_hop(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
+# (pairs, DDL, expected rows) — the expected rows are what the
+# large-star/small-star rounds return: a pair with a NULL endpoint
+# connects nothing (not even through the NULL), and a self-pair alone
+# does not make its node a member.
+COMPONENT_EDGE_INPUTS = {
+    "null_endpoints": (
+        [(1, None), (None, 2), (3, 4), (None, None), (4, None), (5, None), (5, 6)],
+        "d1 bigint, d2 bigint",
+        [(3, 3), (4, 3), (5, 5), (6, 5)],
+    ),
+    "null_bridge": ([(1, None), (None, 2)], "d1 bigint, d2 bigint", []),
+    "self_pairs": (
+        [(1, 1), (2, 3), (3, 3), (7, 7)], "d1 bigint, d2 bigint", [(2, 2), (3, 2)]
+    ),
+    "string_ids": (
+        [("b", "a"), ("c", "b"), ("Z", "é"), ("x", None)],
+        "d1 string, d2 string",
+        [("Z", "Z"), ("a", "a"), ("b", "a"), ("c", "a"), ("é", "Z")],
+    ),
+    "int_vs_long": ([(1, 2), (3, 2)], "d1 int, d2 bigint", [(1, 1), (2, 1), (3, 1)]),
+    "int_ids": ([(1, 2), (3, 2)], "d1 int, d2 int", [(1, 1), (2, 1), (3, 1)]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(COMPONENT_EDGE_INPUTS))
+def test_dedup_components_local_finish_edge_inputs(spark, monkeypatch, case):
+    """The driver-side finish returns exactly the rows and column types
+    of the distributed rounds on edge inputs; ids never become floats."""
+    from cvemate_spark.operators import dedup
+
+    rows, ddl, expected = COMPONENT_EDGE_INPUTS[case]
+    pairs = spark.createDataFrame(rows, ddl)
+    local = dedup.dedup_components(pairs)
+    assert local.isLocal(), "small graph did not take the local finish"
+    # -1: rounds that shrink the graph to nothing stay distributed too
+    monkeypatch.setattr(dedup, "LOCAL_FINISH_ARCS", -1)
+    dist = dedup.dedup_components(pairs)
+    assert not dist.isLocal()
+    assert local.schema == dist.schema
+    got = sorted(map(tuple, local.collect()))
+    assert got == sorted(map(tuple, dist.collect())) == expected
+    id_type = str if "string" in ddl else int
+    assert all(type(v) is id_type for r in got for v in r)
+
+
+def test_dedup_components_float_ids_stay_distributed(spark):
+    """Python orders float ids unlike Spark (NaN), so they never take
+    the driver-side finish."""
+    from cvemate_spark.operators.dedup import dedup_components
+
+    pairs = spark.createDataFrame([(2.5, 1.5), (2.5, 3.5)], "d1 double, d2 double")
+    out = dedup_components(pairs)
+    assert not out.isLocal()
+    assert sorted(map(tuple, out.collect())) == [(1.5, 1.5), (2.5, 1.5), (3.5, 1.5)]
+
+
 def test_simhash_identical_docs_collide(spark):
     docs = spark.createDataFrame(
         [

@@ -117,7 +117,8 @@ def rung_trip_selftest() -> dict:
     """The tripwire must TRIP: with the propagation cap broken
     (max_iter=0), the components builder must raise loudly — never
     return unconverged labels — and the battery records that the
-    failure mode is the loud one."""
+    failure mode is the loud one. The local-finish bound is set to 0
+    so the 4-chain goes through the distributed rounds."""
     from pyspark.sql import Row
 
     from cvemate_spark.operators import dedup as D
@@ -127,6 +128,7 @@ def rung_trip_selftest() -> dict:
     pairs = spark.createDataFrame(
         [Row(d1=1, d2=2), Row(d1=2, d2=3), Row(d1=3, d2=4), Row(d1=4, d2=5)]
     )
+    saved, D.LOCAL_FINISH_ARCS = D.LOCAL_FINISH_ARCS, 0
     try:
         D.dedup_components(pairs, max_iter=0).collect()
     except RuntimeError as e:
@@ -136,6 +138,8 @@ def rung_trip_selftest() -> dict:
             "detail": f"tripped loudly: {str(e)[:80]}" if tripped
             else f"raised the WRONG error: {e}",
         }
+    finally:
+        D.LOCAL_FINISH_ARCS = saved
     return {
         "ok": False,
         "detail": "cap exhaustion returned labels silently — the r9 "

@@ -9,7 +9,7 @@ the derived large corpora, so the sf1/dup-stress sweeps used to SKIP
 module replaces the closure with an EDGE-LINEAR decomposition that
 runs at any scale the engine itself runs at:
 
-  clustering correctness (labels from min-label propagation):
+  clustering correctness (labels from dedup_components):
     LAW A  edge consistency — no DuckDB-oracle pair crosses two
            labels, every pair endpoint is labeled, labels cover
            exactly the paired nodes, one row per node.

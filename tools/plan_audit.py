@@ -46,7 +46,9 @@ measured by the sf0.1/sf1 benches instead.
 
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
 Writes PLANAUDIT.json at the repo root; exits non-zero on any policy
-failure.
+failure. Naming queries refreshes only their entries: the other
+entries of the existing PLANAUDIT.json are kept and the totals are
+recomputed over the merged set.
 """
 
 from __future__ import annotations
@@ -291,21 +293,26 @@ def main() -> int:
                 f"smj={res['sort_merge_joins']} bnlj={res['bnl_joins']} "
                 f"arrow={res['arrow_python']} scans={res['scans']}"
             )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.path.join(root, "PLANAUDIT.json")
+    fleet = out
+    if only and os.path.exists(path):
+        with open(path) as f:
+            fleet = {**json.load(f)["per_query"], **out}
     summary = {
         "metric": "fleet-wide physical-plan policy audit",
         "sf_dir": sf_dir,
-        "queries": len(names),
-        "policy_violations": n_viol,
-        "build_errors": n_err,
-        "total_exchanges": sum(r.get("exchanges", 0) for r in out.values()),
-        "total_bnlj": sum(r.get("bnl_joins", 0) for r in out.values()),
+        "queries": len(fleet),
+        "policy_violations": sum("violations" in r for r in fleet.values()),
+        "build_errors": sum("error" in r for r in fleet.values()),
+        "total_exchanges": sum(r.get("exchanges", 0) for r in fleet.values()),
+        "total_bnlj": sum(r.get("bnl_joins", 0) for r in fleet.values()),
         "unbounded_bnlj": sum(
-            r.get("unbounded_bnlj", 0) for r in out.values()
+            r.get("unbounded_bnlj", 0) for r in fleet.values()
         ),
-        "per_query": out,
+        "per_query": fleet,
     }
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "PLANAUDIT.json"), "w") as f:
+    with open(path, "w") as f:
         json.dump(summary, f, indent=1, sort_keys=True)
     print(
         f"\n{len(names)} plans audited: {n_viol} policy violations, "
