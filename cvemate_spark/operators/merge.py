@@ -27,6 +27,7 @@ Laws (tested in tests/test_merge_laws.py, SURVEY §5.3-5.4):
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -519,11 +520,33 @@ def bucket_membership_expr(
     return F.expr(f"{e} {'IN' if keep else 'NOT IN'} ({lst})")
 
 
+@functools.lru_cache(maxsize=1)
+def _xxh64_string(jvm):
+    """(UTF8String.fromString, XXH64.hashUTF8String) of one JVM. Each
+    py4j attribute is a gateway round trip, so the two static members
+    are resolved once per JVM and reused by every lookup."""
+    return (
+        getattr(jvm, "org.apache.spark.unsafe.types.UTF8String").fromString,
+        getattr(jvm, "org.apache.spark.sql.catalyst.expressions.XXH64").hashUTF8String,
+    )
+
+
 def bucket_of_value(spark: SparkSession, value, n_buckets: int) -> int:
     """The bucket id of ONE literal key — the same xxhash64/pmod as
-    bucket_expr, evaluated JVM-side on a 1-row frame so point lookups
-    can never drift from the write path's bucketing (there is exactly
-    one implementation of the hash)."""
+    bucket_expr, computed by Spark's own code so point lookups can
+    never drift from the write path's bucketing (there is exactly one
+    implementation of the hash).
+
+    A `str` key, or an `int` in the signed 64-bit range (never a
+    `bool`), casts to the string it prints as, so its hash is Spark's
+    XXH64 of that string's UTF-8 bytes with xxhash64's seed 42, called
+    on the driver over py4j: two gateway calls and no Spark job.
+    Python's `%` with a positive width equals `pmod`. Every other type
+    (bool, float, Decimal, date, out-of-range int, ...) is cast by
+    Spark on a 1-row frame, which runs one job."""
+    if type(value) is str or (type(value) is int and -(2**63) <= value < 2**63):
+        from_string, hash_utf8 = _xxh64_string(spark._jvm)
+        return hash_utf8(from_string(str(value)), 42) % n_buckets
     return (
         spark.range(1)
         .select(

@@ -8,6 +8,11 @@ Local-mode settings that still reflect the cluster design:
 - `nanosAsLong` because the driver's `events` table stores parquet
   TIMESTAMP(NANOS) which Spark's vectorized reader refuses; the loader
   in tables.py converts the long back to a microsecond timestamp.
+- PySpark's DataFrame call-site capture off: with it on, every
+  DataFrame/Column API call pays a conf read over py4j, a Python stack
+  walk and a JVM origin set/clear; that was most of a point lookup's
+  gateway round trips. Errors keep their class, error class and
+  plan text; they lose only the Python file:line "DataFrame context".
 """
 
 from __future__ import annotations
@@ -23,7 +28,11 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # tables._ensure_session_confs re-applies them to a session someone
 # else created (a plain SparkSession). Shuffle partitions
 # are deliberately NOT here: get_spark sizes them to the core count,
-# _ensure_session_confs pins its own value.
+# _ensure_session_confs pins its own value. Nor is
+# spark.python.sql.dataFrameDebugging.enabled: it is a static conf
+# (spark.conf.set raises CANNOT_MODIFY_STATIC_CONFIG, which
+# _ensure_session_confs would swallow) and PySpark caches the flag per
+# process on first use, so only get_spark's builder can set it.
 RUNTIME_SQL_CONFS: tuple[tuple[str, str], ...] = (
     # UTC keeps timestamp formatting aligned with the (UTC-naive)
     # DuckDB oracle; nanosAsLong makes the events parquet readable at
@@ -74,6 +83,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # static; see RUNTIME_SQL_CONFS and the module docstring
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # file-listing jobs get ONE task per path by default (capped at
         # 10000): planning a 4096-generation versioned table spent

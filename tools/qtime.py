@@ -6,18 +6,53 @@ after one untimed warmup, printing each pass and the min/median.
 Measurement-only tool (guide §1.4): isolates a builder from the suite
 so an A/B of a single operator change is not confounded by the other
 22 headline queries.
+
+Each pass also prints its Spark job count (the pass runs under its own
+job group, read back from the status tracker) and its py4j round trips
+(the gateway client's send_command calls from this thread during the
+pass; py4j's finalizer thread releases JVM objects on its own schedule
+and is left out). Neither depends on host load, so a "jobs X->Y" or
+"round trips X->Y" claim reproduces with one command on any machine.
 """
 from __future__ import annotations
 
+import contextlib
 import os
 import statistics
 import sys
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cvemate_spark.queries import REGISTRY
 from cvemate_spark.session import get_spark
+
+
+@contextlib.contextmanager
+def counted(spark, group: str):
+    """Count the Spark jobs and py4j round trips of the block; the
+    yielded dict gains "jobs" and "round_trips" when the block exits."""
+    sc = spark.sparkContext
+    client = sc._gateway._gateway_client
+    send = client.send_command
+    n = {"round_trips": 0}
+    me = threading.get_ident()
+
+    def counting(*args, **kwargs):
+        if threading.get_ident() == me:
+            n["round_trips"] += 1
+        return send(*args, **kwargs)
+
+    sc.setJobGroup(group, group)
+    client.send_command = counting
+    try:
+        yield n
+    finally:
+        client.send_command = send
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        n["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def main() -> int:
@@ -33,17 +68,21 @@ def main() -> int:
     spec.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
     spark.catalog.clearCache()
     spark.sparkContext._jvm.System.gc()
-    ts = []
+    ts, jobs, trips = [], [], []
     for i in range(runs):
-        t0 = time.time()
-        spec.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
+        with counted(spark, f"qtime:{name}:{i}") as n:
+            t0 = time.time()
+            spec.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            dt = time.time() - t0
         ts.append(dt)
-        print(f"pass {i}: {dt:.3f}s", flush=True)
+        jobs.append(n["jobs"])
+        trips.append(n["round_trips"])
+        print(f"pass {i}: {dt:.3f}s jobs={n['jobs']} round_trips={n['round_trips']}", flush=True)
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
     print(
         f"{name}: min={min(ts):.3f} median={statistics.median(ts):.3f} "
+        f"jobs={statistics.median(jobs):g} round_trips={statistics.median(trips):g} "
         f"runs={runs} loadavg={os.getloadavg()[0]:.1f}"
     )
     spark.stop()
