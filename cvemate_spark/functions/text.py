@@ -2,15 +2,20 @@
 
 Every primitive here exists in TWO forms generated from one Python
 definition: a Spark SQL expression (used via F.expr inside DataFrame
-plans — stays in whole-stage codegen, no Python UDFs) and a DuckDB SQL
+plans, where it stays in whole-stage codegen) and a DuckDB SQL
 fragment (used in oracle queries). Keeping both generators side by
 side guarantees the engines compute bit-identical values.
 
-The string hash is a 31-ary polynomial fold over characters modulo a
-large prime — expressible as a lambda fold in both engines, verified
-identical (`aggregate(...)` in Spark, `list_reduce(...)` in DuckDB).
-At 100 TB this matters: hashing stays JVM-side inside codegen instead
-of round-tripping rows through Python.
+The string hash is the first 15 hex digits of md5 (`spark_str_hash` /
+`duck_str_hash`), a native function in both engines. One consumer
+computes it outside SQL: the token votes of the simhash operators
+(operators/dedup.py `_token_vote_batches`) run in a mapInArrow batch
+function that calls Python's `hashlib.md5` once per distinct token per
+task, because the per-occurrence SQL hash dominated that stage. Its
+value is the same number: md5 over the token's UTF-8 bytes (what
+Spark's and DuckDB's md5 hash), the top 60 bits of the digest, read
+big-endian, which is exactly what parsing the 15-hex-digit prefix
+gives. tests/test_simhash_arrow.py checks it against both SQL forms.
 """
 
 from __future__ import annotations

@@ -36,8 +36,11 @@ broadcast at runtime when the relation is actually small.
 All hashes are the portable md5-prefix hash (functions/text.py:
 `spark_str_hash` / `duck_str_hash` — the first 15 hex digits of
 md5, identical builtins on both engines), so every operator has a
-bit-identical DuckDB oracle. No Python UDFs anywhere — full
-whole-stage codegen.
+bit-identical DuckDB oracle. Everything runs in whole-stage codegen
+except the simhash token votes: one mapInArrow batch function
+(`_token_vote_batches`) splits, hashes each distinct token once per
+task with the same md5 prefix, and emits per-row vote sums into the
+SQL groupBy. No row-at-a-time Python UDF anywhere.
 
 Reference parity: the reference's only dedup is keyed-upsert collapse
 (SURVEY §2.5 OP-DEDUP); these operators are the §Phase-4 LLM-pipeline
@@ -49,7 +52,13 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.pandas.types import to_arrow_type
-from pyspark.sql.types import IntegralType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    IntegralType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window as W
 
 
@@ -387,21 +396,106 @@ def minhash_pairs_oracle(
 
 
 # ------------------------------------------------------------ simhash
+# Distinct tokens whose feature hash one simhash task keeps. The memo is
+# cleared when it fills, so a task's memory stays bounded whatever the
+# vocabulary; the bench corpus has ~6 000 distinct tokens.
+TOKEN_MEMO_MAX = 1 << 16
+
+# Counter runs (at most 255 tokens each) summed per gather in the vote
+# pass: a gather holds <= 2^20 token occurrences of one byte per
+# signature bit, however long a batch's documents are.
+RUNS_PER_GATHER = 1 << 12
+
+
+def _token_vote_batches(batches, bits: int):
+    """mapInArrow body: (doc_id, text) batches -> per-row vote sums
+    (doc_id, v0..v{bits-1}), v_b = sum over the row's tokens of
+    2 * ((h >> b) & 1) - 1.
+
+    Tokens are `split(text, ' ')` (Arrow's split_pattern keeps empty
+    tokens exactly as Spark's split does) and h is the md5-prefix
+    feature hash, computed once per distinct token per task. Rows with
+    NULL text emit nothing, as explode(split(NULL)) emits no token.
+
+    The per-row bit counts are summed in byte lanes, eight bits to a
+    uint64 word, over runs of at most 255 tokens so that no lane can
+    overflow; the runs of one row are then added in int64."""
+    import hashlib
+
+    import numpy as np
+    import pyarrow.compute as pc
+
+    memo: dict[str, int] = {}
+    shifts = np.arange(bits, dtype=np.int64)
+    width = -(-bits // 8) * 8
+    names = ["doc_id"] + [f"v{b}" for b in range(bits)]
+    for batch in batches:
+        batch = batch.filter(pc.is_valid(batch.column(1)))
+        if batch.num_rows == 0:
+            continue
+        toks = pc.split_pattern(batch.column(1), pattern=" ")
+        enc = pc.dictionary_encode(pc.list_flatten(toks))
+        hs = np.empty(len(enc.dictionary), dtype=np.int64)
+        for i, tok in enumerate(enc.dictionary.to_pylist()):
+            h = memo.get(tok)
+            if h is None:
+                # first 15 hex digits of md5 = the top 60 bits of the
+                # digest: the value of spark_str_hash / duck_str_hash
+                digest = hashlib.md5(tok.encode()).digest()
+                h = int.from_bytes(digest[:8], "big") >> 4
+                if len(memo) >= TOKEN_MEMO_MAX:
+                    memo.clear()
+                memo[tok] = h
+            hs[i] = h
+        lanes = np.zeros((len(hs), width), dtype=np.uint8)
+        lanes[:, :bits] = (hs[:, None] >> shifts) & 1
+        packed = lanes.view("<u8")  # byte k of word w counts bit 8w + k
+        offsets = toks.offsets.to_numpy()
+        offsets = offsets - offsets[0]
+        n_toks = np.diff(offsets).astype(np.int64)
+        runs = (n_toks + 254) // 255  # >= 1: non-NULL text has a token
+        first = np.cumsum(runs) - runs
+        row = np.repeat(np.arange(len(runs)), runs)
+        run_starts = offsets[:-1][row] + 255 * (np.arange(len(row)) - first[row])
+        idx = enc.indices.to_numpy()
+        ends = np.append(run_starts[1:], len(idx))
+        sums = np.empty((len(row), width // 8), dtype=np.uint64)
+        for a in range(0, len(row), RUNS_PER_GATHER):
+            b = min(a + RUNS_PER_GATHER, len(row))
+            lo, hi = run_starts[a], ends[b - 1]
+            sums[a:b] = np.add.reduceat(
+                packed[idx[lo:hi]], run_starts[a:b] - lo, axis=0
+            )
+        counts = sums.astype("<u8", copy=False).view(np.uint8)[:, :bits]
+        ones = np.add.reduceat(counts.astype(np.int64), first, axis=0)
+        votes = np.ascontiguousarray((2 * ones - n_toks[:, None]).T)
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(0)] + [pa.array(v) for v in votes], names=names
+        )
+
+
+def _token_votes(docs: DataFrame, bits: int) -> DataFrame:
+    """Per-row token votes (doc_id, v0..v{bits-1}) from one Arrow batch
+    pass; doc_id keeps the input's type."""
+    schema = StructType(
+        [docs.schema["doc_id"]]
+        + [StructField(f"v{b}", LongType(), False) for b in range(bits)]
+    )
+
+    def simhash_votes(batches):
+        return _token_vote_batches(batches, bits)
+
+    return docs.select("doc_id", "text").mapInArrow(simhash_votes, schema)
+
+
 def simhash_signatures(docs: DataFrame) -> DataFrame:
-    """32-bit simhash per doc from token-hash bit votes: (doc_id, simhash)."""
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
-    ).withColumn("h", F.expr(spark_str_hash("tok")))
-    votes = toks.groupBy("doc_id").agg(
-        *[
-            F.expr(f"sum(2 * ((h >> {b}) & 1) - 1)").alias(f"v{b}")
-            for b in range(SIMHASH_BITS)
-        ]
-    )
-    sim = " + ".join(
-        f"(CASE WHEN v{b} > 0 THEN 1L ELSE 0L END << {b})" for b in range(SIMHASH_BITS)
-    )
-    return votes.select("doc_id", F.expr(sim).alias("simhash"))
+    """32-bit simhash per doc from token-hash bit votes: (doc_id, simhash).
+
+    The votes come from one Arrow batch pass (`_token_votes`) that
+    md5-hashes each distinct token once per task instead of once per
+    occurrence; the values equal the DuckDB oracle's `duck_str_hash`
+    votes bit for bit."""
+    return simhash_signatures_wide(docs, SIMHASH_BITS)
 
 
 def simhash_signatures_wide(
@@ -410,7 +504,9 @@ def simhash_signatures_wide(
     """`bits`-wide simhash per doc — the banding-growth contract's
     widen-the-signature lever. Bit b of the signature votes on bit b
     of the 60-bit md5-prefix feature hash, so bits <= 60; bits=32 with
-    token features is bit-identical to `simhash_signatures`.
+    token features is `simhash_signatures`. Token votes come from the
+    Arrow pass of `_token_votes`; shingle votes still hash per row in
+    SQL (`spark_str_hash`).
 
     features='shingle' votes over the doc's DISTINCT 3-gram shingles
     instead of token occurrences — the feature choice Manku et al.'s
@@ -431,20 +527,21 @@ def simhash_signatures_wide(
         feats = doc_shingles(docs).withColumn(
             "h", F.expr(spark_str_hash("shingle"))
         )
+        votes = feats.select(
+            "doc_id",
+            *[F.expr(f"2 * ((h >> {b}) & 1) - 1 AS v{b}") for b in range(bits)],
+        )
     else:
-        feats = docs.select(
-            "doc_id", F.explode(F.split("text", " ")).alias("tok")
-        ).withColumn("h", F.expr(spark_str_hash("tok")))
-    votes = feats.groupBy("doc_id").agg(
-        *[
-            F.expr(f"sum(2 * ((h >> {b}) & 1) - 1)").alias(f"v{b}")
-            for b in range(bits)
-        ]
+        votes = _token_votes(docs, bits)
+    # a doc may span several rows, and NULL doc_ids form one group, so
+    # the votes are summed per doc_id before the sign is read
+    summed = votes.groupBy("doc_id").agg(
+        *[F.expr(f"sum(v{b}) AS v{b}") for b in range(bits)]
     )
     sim = " + ".join(
         f"(CASE WHEN v{b} > 0 THEN 1L ELSE 0L END << {b})" for b in range(bits)
     )
-    return votes.select("doc_id", F.expr(sim).alias("simhash"))
+    return summed.select("doc_id", F.expr(sim).alias("simhash"))
 
 
 def _simhash_band_exprs(
@@ -511,11 +608,7 @@ def simhash_pairs(
     deliberate re-parameterization of the operator (own oracle:
     dedup_simhash_wide), not a drop-in swap.
     """
-    sigs = (
-        simhash_signatures(docs)
-        if bits == SIMHASH_BITS and features == "token"
-        else simhash_signatures_wide(docs, bits, features)
-    )
+    sigs = simhash_signatures_wide(docs, bits, features)
     assert bits % chunks == 0, "equal chunks required for the pigeonhole"
     band_exprs = [
         F.expr(e) for e in _simhash_band_exprs(max_hamming, chunks, bits // chunks)

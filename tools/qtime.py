@@ -13,6 +13,12 @@ job group, read back from the status tracker) and its py4j round trips
 pass; py4j's finalizer thread releases JVM objects on its own schedule
 and is left out). Neither depends on host load, so a "jobs X->Y" or
 "round trips X->Y" claim reproduces with one command on any machine.
+
+`cpu=` is the user+system CPU seconds the whole process tree spent in
+the pass: this process, the JVM and its Python workers. Spark's
+executor CPU metric leaves out Python-worker time, so an operator that
+moves work into an Arrow batch function looks cheaper there than it
+is; quote this figure for CPU claims.
 """
 from __future__ import annotations
 
@@ -27,6 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cvemate_spark.queries import REGISTRY
 from cvemate_spark.session import get_spark
+from perfbench.run import tree_cpu_s
 
 
 @contextlib.contextmanager
@@ -68,21 +75,27 @@ def main() -> int:
     spec.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
     spark.catalog.clearCache()
     spark.sparkContext._jvm.System.gc()
-    ts, jobs, trips = [], [], []
+    ts, cpus, jobs, trips = [], [], [], []
     for i in range(runs):
         with counted(spark, f"qtime:{name}:{i}") as n:
-            t0 = time.time()
+            c0, t0 = tree_cpu_s(), time.time()
             spec.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
+            dt, cpu = time.time() - t0, tree_cpu_s() - c0
         ts.append(dt)
+        cpus.append(cpu)
         jobs.append(n["jobs"])
         trips.append(n["round_trips"])
-        print(f"pass {i}: {dt:.3f}s jobs={n['jobs']} round_trips={n['round_trips']}", flush=True)
+        print(
+            f"pass {i}: {dt:.3f}s cpu={cpu:.2f}s jobs={n['jobs']} "
+            f"round_trips={n['round_trips']}",
+            flush=True,
+        )
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
     print(
         f"{name}: min={min(ts):.3f} median={statistics.median(ts):.3f} "
-        f"jobs={statistics.median(jobs):g} round_trips={statistics.median(trips):g} "
+        f"cpu={statistics.median(cpus):.2f} jobs={statistics.median(jobs):g} "
+        f"round_trips={statistics.median(trips):g} "
         f"runs={runs} loadavg={os.getloadavg()[0]:.1f}"
     )
     spark.stop()
