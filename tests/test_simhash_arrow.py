@@ -16,8 +16,8 @@ from pyspark.sql import functions as F
 
 from cvemate_spark.functions.text import duck_str_hash, spark_str_hash
 from cvemate_spark.operators import dedup
+from cvemate_spark.tables import DEFAULT_SF_DIR as SF
 
-SF = "/root/testdata/sf0.001"
 BITS = (32, 60)
 
 EDGE_TEXTS = [
