@@ -10,16 +10,18 @@ The string hash is the first 15 hex digits of md5 (`spark_str_hash` /
 `duck_str_hash`), a native function in both engines. One consumer
 computes it outside SQL: the token votes of the simhash operators
 (operators/dedup.py `_token_vote_batches`) run in a mapInArrow batch
-function that calls Python's `hashlib.md5` once per distinct token per
-task, because the per-occurrence SQL hash dominated that stage. Its
-value is the same number: md5 over the token's UTF-8 bytes (what
-Spark's and DuckDB's md5 hash), the top 60 bits of the digest, read
-big-endian, which is exactly what parsing the 15-hex-digit prefix
-gives. tests/test_simhash_arrow.py checks it against both SQL forms.
+function that calls the Python form, `py_str_hash`, once per distinct
+token of each Arrow batch, because the per-occurrence SQL hash
+dominated that stage. Its value is the same number: md5 over the
+token's UTF-8 bytes (what Spark's and DuckDB's md5 hash), the top 60
+bits of the digest, read big-endian, which is exactly what parsing
+the 15-hex-digit prefix gives. tests/test_simhash_arrow.py checks it
+against both SQL forms.
 """
 
 from __future__ import annotations
 
+import hashlib
 import random
 
 PRIME = 1_000_000_007
@@ -51,6 +53,12 @@ def spark_str_hash(col_expr: str) -> str:
 def duck_str_hash(col_expr: str) -> str:
     """Same hash as a DuckDB SQL expression (verified value-identical)."""
     return f"CAST(('0x' || substring(md5({col_expr}), 1, 15)) AS BIGINT)"
+
+
+def py_str_hash(s: str) -> int:
+    """Same hash in Python: the top 60 bits of md5 over the UTF-8 bytes,
+    the value of the 15-hex-digit prefix."""
+    return int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "big") >> 4
 
 
 # ------------------------------------------------------------ minhash

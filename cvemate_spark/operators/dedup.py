@@ -38,9 +38,9 @@ All hashes are the portable md5-prefix hash (functions/text.py:
 md5, identical builtins on both engines), so every operator has a
 bit-identical DuckDB oracle. Everything runs in whole-stage codegen
 except the simhash token votes: one mapInArrow batch function
-(`_token_vote_batches`) splits, hashes each distinct token once per
-task with the same md5 prefix, and emits per-row vote sums into the
-SQL groupBy. No row-at-a-time Python UDF anywhere.
+(`_token_vote_batches`) splits, hashes each distinct token of a batch
+once with the same md5 prefix (`py_str_hash`), and emits per-row vote
+sums into the SQL groupBy. No row-at-a-time Python UDF anywhere.
 
 Reference parity: the reference's only dedup is keyed-upsert collapse
 (SURVEY §2.5 OP-DEDUP); these operators are the §Phase-4 LLM-pipeline
@@ -71,6 +71,7 @@ from ..functions.text import (
     SIMHASH_CHUNKS,
     band_signature_exprs,
     duck_str_hash,
+    py_str_hash,
     spark_str_hash,
 )
 
@@ -396,11 +397,6 @@ def minhash_pairs_oracle(
 
 
 # ------------------------------------------------------------ simhash
-# Distinct tokens whose feature hash one simhash task keeps. The memo is
-# cleared when it fills, so a task's memory stays bounded whatever the
-# vocabulary; the bench corpus has ~6 000 distinct tokens.
-TOKEN_MEMO_MAX = 1 << 16
-
 # Counter runs (at most 255 tokens each) summed per gather in the vote
 # pass: a gather holds <= 2^20 token occurrences of one byte per
 # signature bit, however long a batch's documents are.
@@ -413,19 +409,16 @@ def _token_vote_batches(batches, bits: int):
     2 * ((h >> b) & 1) - 1.
 
     Tokens are `split(text, ' ')` (Arrow's split_pattern keeps empty
-    tokens exactly as Spark's split does) and h is the md5-prefix
-    feature hash, computed once per distinct token per task. Rows with
-    NULL text emit nothing, as explode(split(NULL)) emits no token.
+    tokens exactly as Spark's split does) and h is `py_str_hash`,
+    computed once per distinct token of the batch. Rows with NULL text
+    emit nothing, as explode(split(NULL)) emits no token.
 
     The per-row bit counts are summed in byte lanes, eight bits to a
     uint64 word, over runs of at most 255 tokens so that no lane can
     overflow; the runs of one row are then added in int64."""
-    import hashlib
-
     import numpy as np
     import pyarrow.compute as pc
 
-    memo: dict[str, int] = {}
     shifts = np.arange(bits, dtype=np.int64)
     width = -(-bits // 8) * 8
     names = ["doc_id"] + [f"v{b}" for b in range(bits)]
@@ -435,18 +428,9 @@ def _token_vote_batches(batches, bits: int):
             continue
         toks = pc.split_pattern(batch.column(1), pattern=" ")
         enc = pc.dictionary_encode(pc.list_flatten(toks))
-        hs = np.empty(len(enc.dictionary), dtype=np.int64)
-        for i, tok in enumerate(enc.dictionary.to_pylist()):
-            h = memo.get(tok)
-            if h is None:
-                # first 15 hex digits of md5 = the top 60 bits of the
-                # digest: the value of spark_str_hash / duck_str_hash
-                digest = hashlib.md5(tok.encode()).digest()
-                h = int.from_bytes(digest[:8], "big") >> 4
-                if len(memo) >= TOKEN_MEMO_MAX:
-                    memo.clear()
-                memo[tok] = h
-            hs[i] = h
+        hs = np.array(
+            [py_str_hash(t) for t in enc.dictionary.to_pylist()], dtype=np.int64
+        )
         lanes = np.zeros((len(hs), width), dtype=np.uint8)
         lanes[:, :bits] = (hs[:, None] >> shifts) & 1
         packed = lanes.view("<u8")  # byte k of word w counts bit 8w + k
@@ -492,7 +476,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     """32-bit simhash per doc from token-hash bit votes: (doc_id, simhash).
 
     The votes come from one Arrow batch pass (`_token_votes`) that
-    md5-hashes each distinct token once per task instead of once per
+    md5-hashes each distinct token of a batch once instead of once per
     occurrence; the values equal the DuckDB oracle's `duck_str_hash`
     votes bit for bit."""
     return simhash_signatures_wide(docs, SIMHASH_BITS)

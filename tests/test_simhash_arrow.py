@@ -2,7 +2,7 @@
 
 `simhash_signatures` / `simhash_signatures_wide(features='token')`
 compute token votes in one mapInArrow batch function that md5-hashes
-each distinct token once per task. Two independent references are
+each distinct token of a batch once. Two independent references are
 rebuilt here: the per-row SQL form (explode + `spark_str_hash` per
 occurrence + grouped sums) and the DuckDB signature over
 `duck_str_hash`. Every case is checked at 32 and 60 bits.
@@ -14,7 +14,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from cvemate_spark.functions.text import duck_str_hash, spark_str_hash
+from cvemate_spark.functions.text import duck_str_hash, py_str_hash, spark_str_hash
 from cvemate_spark.operators import dedup
 from cvemate_spark.tables import DEFAULT_SF_DIR as SF
 
@@ -168,10 +168,14 @@ def test_empty_frame(spark):
         assert [f.name for f in out.schema] == ["doc_id", "simhash"]
 
 
-def test_memo_and_gather_bounds_do_not_change_votes(monkeypatch):
-    """The batch function itself, run in-process: a memo cleared on
-    every insert and a gather of one counter run at a time give the
-    same votes as the default bounds."""
+@pytest.mark.parametrize("runs_per_gather", [None, 1])
+def test_batch_function_in_process(monkeypatch, runs_per_gather):
+    """The batch function itself, run in-process over two batches:
+    NULL texts emit no row, each batch's rows come out in order, and a
+    row longer than one 255-token counter run sums exactly, with the
+    default gather bound and with one counter run per gather."""
+    if runs_per_gather is not None:
+        monkeypatch.setattr(dedup, "RUNS_PER_GATHER", runs_per_gather)
     long_row = " ".join(f"w{i % 5}" for i in range(700))
     batches = [
         pa.record_batch(
@@ -185,16 +189,15 @@ def test_memo_and_gather_bounds_do_not_change_votes(monkeypatch):
             [pa.array([4], pa.int64()), pa.array(["c a"])], names=["doc_id", "text"]
         ),
     ]
-
-    def run() -> list:
-        out = dedup._token_vote_batches(iter(batches), 60)
-        return [b.to_pylist() for b in out]
-
-    full = run()
-    monkeypatch.setattr(dedup, "TOKEN_MEMO_MAX", 1)
-    monkeypatch.setattr(dedup, "RUNS_PER_GATHER", 1)
-    assert run() == full
-    assert [r["doc_id"] for b in full for r in b] == [1, 3, 5, 4]
+    out = [r for b in dedup._token_vote_batches(iter(batches), 60) for r in b.to_pylist()]
+    assert [r["doc_id"] for r in out] == [1, 3, 5, 4]
+    h = {t: py_str_hash(t) for t in ["a", "b", "c", ""] + [f"w{i}" for i in range(5)]}
+    for b in range(60):
+        bit = {t: 2 * ((v >> b) & 1) - 1 for t, v in h.items()}
+        assert out[0][f"v{b}"] == 2 * bit["a"] + bit["b"]
+        assert out[1][f"v{b}"] == bit["a"] + bit["b"] + bit["c"] + bit[""]
+        assert out[2][f"v{b}"] == 140 * sum(bit[f"w{i}"] for i in range(5))
+        assert out[3][f"v{b}"] == bit["a"] + bit["c"]
 
 
 def test_signature_plan_is_one_arrow_pass(spark):

@@ -83,18 +83,9 @@ def minhash_candidates(docs) -> int:
 
 
 def simhash_candidates(docs, max_hamming, bits, chunks, features) -> int:
-    from cvemate_spark.functions.text import SIMHASH_BITS
-    from cvemate_spark.operators.dedup import (
-        _simhash_band_exprs,
-        simhash_signatures,
-        simhash_signatures_wide,
-    )
+    from cvemate_spark.operators.dedup import _simhash_band_exprs, simhash_signatures_wide
 
-    sigs = (
-        simhash_signatures(docs)
-        if bits == SIMHASH_BITS and features == "token"
-        else simhash_signatures_wide(docs, bits, features)
-    )
+    sigs = simhash_signatures_wide(docs, bits, features)
     exprs = _simhash_band_exprs(max_hamming, chunks, bits // chunks)
     banded = sigs.select(
         F.posexplode(F.array(*[F.expr(e) for e in exprs])).alias("band", "key")
