@@ -21,6 +21,8 @@ from pyspark.sql import Column, functions as F
 
 CVSS_THRESHOLD = 6.0  # prioritizer_handler.py:18
 EPSS_THRESHOLD = 0.2  # prioritizer_handler.py:19
+# prioritizer_handler.py:30-36, in the reference's order of preference
+CVSS_VERSIONS = ("cvssMetricV31", "cvssMetricV30", "cvssMetricV2")
 
 
 def priority_column(
@@ -59,21 +61,20 @@ def cvss_base_score(nvd: Column) -> Column:
     key-presence is array-column non-nullness on the wide `cve` table's
     `nvd` struct, and each arm defaults its own missing baseScore to
     0.0 to match `.get('baseScore', 0)`.
+
+    The CASE is parsed from one SQL string around the column's own SQL
+    text, so `nvd` must be a column reference such as `F.col("nvd")`.
+    Building `cvss_base_score(F.col("nvd"))` takes 8 py4j round trips;
+    composing the CASE from Column calls took 85, and every point
+    lookup and scored scan builds it.
     """
-
-    def arm(version: str) -> Column:
-        return F.coalesce(
-            F.element_at(nvd["metrics"][version], 1)["cvssData"]["baseScore"],
-            F.lit(0.0),
-        )
-
-    metrics = nvd["metrics"]
-    return (
-        F.when(metrics["cvssMetricV31"].isNotNull(), arm("cvssMetricV31"))
-        .when(metrics["cvssMetricV30"].isNotNull(), arm("cvssMetricV30"))
-        .when(metrics["cvssMetricV2"].isNotNull(), arm("cvssMetricV2"))
-        .otherwise(F.lit(0.0))
+    n = nvd._jc.node().sql()
+    arms = " ".join(
+        f"WHEN {n}.metrics.{v} IS NOT NULL"
+        f" THEN coalesce(element_at({n}.metrics.{v}, 1).cvssData.baseScore, 0.0D)"
+        for v in CVSS_VERSIONS
     )
+    return F.expr(f"CASE {arms} ELSE 0.0D END")
 
 
 def score_cve_table(cve, kev_col: str = "kev", nvd_col: str = "nvd", epss_col: str = "epss"):

@@ -259,8 +259,14 @@ def _concat_parquet(srcs: list[str], dst: str) -> None:
     # sizes that coalesce.
     from concurrent.futures import ThreadPoolExecutor
 
+    # INT96 read at microseconds, Spark's unit: at pyarrow's default
+    # (nanoseconds) a timestamp outside 1677-2262 wraps around int64
+    # and the rewrite would store a different instant
     with ThreadPoolExecutor(max_workers=16) as ex:
-        tables = list(ex.map(pq.read_table, srcs))
+        tables = list(ex.map(
+            functools.partial(pq.read_table, coerce_int96_timestamp_unit="us"),
+            srcs,
+        ))
     merged = pa.concat_tables(tables)
     writer = pq.ParquetWriter(
         dst, merged.schema, compression="snappy",
@@ -1041,6 +1047,253 @@ def _read_dirs(
     return df.drop("bucket") if "bucket" in df.columns else df
 
 
+# Point lookups whose live generation files total at most this many
+# bytes read them on the driver with pyarrow and return a local relation
+# (`_read_local`), so the caller's filter, select and collect fold into
+# a LocalTableScan and run no Spark job; larger slices keep the Spark
+# read. The largest generation size at which the local read won in the
+# committed crossover measurement, LOOKUPCROSSOVER.json
+# (tools/lookup_crossover.py).
+LOCAL_READ_BYTES = 1 << 24
+
+
+def _data_files(loc: str) -> list[str]:
+    """The files Spark reads at a generation location: the file itself
+    for a packed entry, else the directory's files whose names do not
+    start with "_" or "." (Spark's hidden-file rule, which skips the
+    key-bloom sidecar and checksum files)."""
+    if not os.path.isdir(loc):
+        return [loc]
+    return sorted(
+        os.path.join(loc, n) for n in os.listdir(loc) if n[0] not in "_."
+    )
+
+
+def _total_bytes(file_lists) -> int:
+    return sum(os.path.getsize(f) for fs in file_lists for f in fs)
+
+
+def _key_rows_local(files: list[str], key: str, value, columns=None):
+    """The rows of each parquet file whose `key` equals `value`, as one
+    pyarrow table per file (INT96 timestamps decoded at microseconds,
+    the unit Spark reads them in), or None when pyarrow cannot read
+    some file as Spark does:
+    - its key column does not compare with `value` in Arrow exactly as
+      Spark's `key = value` does: only a str against a string column
+      and an int in the 64-bit range against an integer column qualify;
+    - it holds INT96 timestamps and was not written by Spark (a packed
+      file): pyarrow writes an instant before 1970 with a negative time
+      of day, which its own microsecond decoding shifts by 2^64 ns.
+    The key column is decoded first; a file without a match decodes
+    nothing else."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in files:
+        pf = pq.ParquetFile(f, coerce_int96_timestamp_unit="us")
+        md = pf.metadata
+        if not md.created_by.startswith("parquet-mr") and any(
+            md.schema.column(c).physical_type == "INT96"
+            for c in range(md.num_columns)
+        ):
+            return None
+        i = pf.schema_arrow.get_field_index(key)
+        t = pf.schema_arrow.field(i).type if i >= 0 else None
+        if not (
+            (type(value) is str and pa.types.is_string(t))
+            or (
+                type(value) is int
+                and -(2**63) <= value < 2**63
+                and pa.types.is_integer(t)
+            )
+        ):
+            return None
+        mask = pc.equal(pf.read(columns=[key]).column(0), value)
+        if pc.any(mask).as_py():
+            out.append(pf.read(columns=columns).filter(mask))
+    return out
+
+
+def _dv_hits_local(path: str, dv_refs, key: str, value, bid) -> list[int] | None:
+    """The depths of the deletion vectors among `dv_refs` that delete
+    `value` from bucket `bid`, read with pyarrow; None when their files
+    total more than LOCAL_READ_BYTES or pyarrow cannot read them as
+    Spark does (`_key_rows_local`)."""
+    dv_files = [(d, _data_files(f"{path}/{n}")) for n, d in sorted(dv_refs)]
+    if _total_bytes(fs for _, fs in dv_files) > LOCAL_READ_BYTES:
+        return None
+    hits = []
+    for d, fs in dv_files:
+        rows = _key_rows_local(fs, key, value, ["__dv_bucket"])
+        if rows is None:
+            return None
+        if any(int(bid) in t.column(0).to_pylist() for t in rows):
+            hits.append(d)
+    return hits
+
+
+def _read_live_local(
+    spark: SparkSession, live, key: str, value, schema, schema_json: dict,
+    mor: bool,
+) -> DataFrame | None:
+    """A point lookup's live generations (`live`: (location, ordinal)
+    pairs), read on the driver and returned as one local relation
+    (`_read_local`), each row tagged with its generation's ordinal
+    when `mor`; None when their files total more than
+    LOCAL_READ_BYTES or pyarrow cannot return what the Spark read
+    would, which leaves the read to Spark."""
+    files = [_data_files(loc) for loc, _ in live]
+    if _total_bytes(files) > LOCAL_READ_BYTES:
+        return None
+    tables, ords = [], []
+    for fs, (_, ordn) in zip(files, live):
+        rows = _key_rows_local(fs, key, value)
+        if rows is None:
+            return None
+        tables += rows
+        ords += [ordn] * len(rows)
+    try:
+        return _read_local(spark, tables, schema, schema_json, ords if mor else None)
+    except _SparkReadNeeded:
+        return None
+
+
+def _as_nullable(t):
+    """A Spark type JSON with every nullable/containsNull/
+    valueContainsNull flag set, as a file scan reports its schema
+    (Spark's `asNullable`)."""
+    if isinstance(t, list):
+        return [_as_nullable(x) for x in t]
+    if not isinstance(t, dict):
+        return t
+    out = {k: v if k == "metadata" else _as_nullable(v) for k, v in t.items()}
+    for flag in ("nullable", "containsNull", "valueContainsNull"):
+        if flag in out:
+            out[flag] = True
+    return out
+
+
+class _SparkReadNeeded(Exception):
+    """A local read cannot return what Spark's read returns; the
+    lookup falls back to the Spark read."""
+
+
+def _check_null_map(typ) -> None:
+    """Raise `_SparkReadNeeded` for a map type whose NULL values
+    `createDataFrame` turns into empty maps: before pyarrow 17 it
+    rebuilds a map column with nested or timestamp keys or values
+    without the column's validity (SPARK-48302)."""
+    import pyarrow as pa
+
+    if any(
+        pa.types.is_nested(t) or pa.types.is_timestamp(t)
+        for t in (typ.key_type, typ.item_type)
+    ):
+        raise _SparkReadNeeded
+
+
+def _typed_nulls(n: int, dt):
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    typ = to_arrow_type(dt)
+    if n and pa.types.is_map(typ):
+        _check_null_map(typ)
+    return pa.nulls(n, typ)
+
+
+def _conform_array(a, dt):
+    """One Arrow column in the shape Spark's parquet read gives it
+    under the committed type `dt`: struct fields matched by name, a
+    field missing from the file filled with typed nulls and a field
+    absent from `dt` dropped, recursively through arrays and maps; a
+    leaf cast to the committed type, which covers Spark's read-side
+    widenings (int to long, float to double, decimal precision) and
+    turns the microsecond timestamps pyarrow reads into Spark's UTC
+    instants, so `createDataFrame` does not re-localize them in the
+    session time zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    if isinstance(dt, StructType):
+        kids = []
+        for f in dt.fields:
+            j = a.type.get_field_index(f.name)
+            kids.append(
+                _conform_array(a.field(j), f.dataType) if j >= 0
+                else _typed_nulls(len(a), f.dataType)
+            )
+        return pa.StructArray.from_arrays(
+            kids, names=dt.names, mask=a.is_null() if a.null_count else None
+        )
+    if isinstance(dt, (ArrayType, MapType)):
+        # rebuild over the original validity and offsets buffers; the
+        # child is the whole backing array those offsets index into
+        if isinstance(dt, ArrayType):
+            child = _conform_array(a.values, dt.elementType)
+            typ = pa.list_(pa.field("element", child.type))
+        else:
+            k = _conform_array(a.values.field(0), dt.keyType)
+            v = _conform_array(a.values.field(1), dt.valueType)
+            child = pa.StructArray.from_arrays(
+                [k, v],
+                fields=[pa.field("key", k.type, nullable=False),
+                        pa.field("value", v.type)],
+            )
+            typ = pa.map_(k.type, v.type)
+            if a.null_count:
+                _check_null_map(typ)
+        return pa.Array.from_buffers(
+            typ, len(a), a.buffers()[:2], a.null_count, a.offset, [child]
+        )
+    target = to_arrow_type(dt)
+    return a if a.type == target else a.cast(target)
+
+
+def _read_local(
+    spark: SparkSession, tables: list, schema, schema_json: dict,
+    ords: list[int] | None = None,
+) -> DataFrame:
+    """The local relation of per-file pyarrow tables (`_key_rows_local`)
+    under the committed schema: physical column names mapped to logical
+    ones, every column conformed by `_conform_array`, `bucket` dropped,
+    all fields nullable as a file scan reports them. With `ords` (one
+    per table) each row is tagged with its generation ordinal `__ord`,
+    as the Spark read tags a merge-on-read layer."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    pmap = _phys_map(schema_json)
+    data = [
+        StructField.fromJson(_as_nullable(f.jsonValue()))
+        for f in schema.fields if f.name != "bucket"
+    ]
+    out = StructType(
+        data if ords is None else data + [StructField("__ord", IntegerType(), False)]
+    )
+    try:
+        arrow_schema = to_arrow_schema(out)
+    except TypeError as e:  # a type pyspark does not carry in Arrow
+        raise _SparkReadNeeded from e
+    parts = [arrow_schema.empty_table()]
+    for j, t in enumerate(tables):
+        cols = []
+        for f in data:
+            i = t.schema.get_field_index(pmap.get(f.name, f.name))
+            cols.append(
+                _conform_array(t.column(i).combine_chunks(), f.dataType)
+                if i >= 0 else _typed_nulls(t.num_rows, f.dataType)
+            )
+        if ords is not None:
+            cols.append(pa.array([ords[j]] * t.num_rows, pa.int32()))
+        parts.append(pa.Table.from_arrays(cols, schema=arrow_schema))
+    return spark.createDataFrame(pa.concat_tables(parts), out)
+
+
 def _norm_stat(v):
     """Normalize a parquet-footer min/max value to a (tag, json-safe)
     pair, or None when the type can't be bounded portably. Timestamps
@@ -1723,19 +1976,60 @@ def _write_key_blooms(
         os.replace(tmp, f"{path}/bucket={i}/{g}/{KEYBLOOM_FILE}")
 
 
+def _bloom_positions(spark: SparkSession, value, key_type, m: int, k: int) -> list[int]:
+    """The k bit positions `pmod(xxhash64(cast(value AS key_type), j), m)`
+    that `_write_key_blooms` sets for `value`. xxhash64 folds its
+    arguments left to right from seed 42, so the key's own hash seeds
+    `hashInt(j, .)` for every probe j. For a string key (a str, or an
+    int in the 64-bit range, which casts to the digits it prints as), an
+    int key (an int in the 32-bit range) or a bigint key (an int in the
+    64-bit range), that chain runs on the driver through Spark's own
+    XXH64 (`merge._xxh64`): at most k + 3 gateway calls, no Spark job. Every
+    other pair casts on a 1-row frame, which runs one job."""
+    from pyspark.sql.types import IntegerType, LongType, StringType
+
+    from .merge import _xxh64
+
+    from_string, hash_utf8, xxh, seed42 = _xxh64(spark._jvm)
+    h = None
+    if type(value) is str or (type(value) is int and -(2**63) <= value < 2**63):
+        if isinstance(key_type, StringType):
+            h = hash_utf8(from_string(str(value)), 42)
+        elif type(value) is int and isinstance(key_type, LongType):
+            h = seed42.hashLong(value)
+        elif type(value) is int and isinstance(key_type, IntegerType) and (
+            -(2**31) <= value < 2**31
+        ):
+            h = seed42.hashInt(value)
+    if h is not None:
+        chain = xxh(h)
+        return [chain.hashInt(j) % m for j in range(k)]
+    probe = F.lit(value).cast(key_type)
+    row = (
+        spark.range(1)
+        .select(
+            *[
+                F.pmod(F.xxhash64(probe, F.lit(j)), F.lit(m)).alias(f"p{j}")
+                for j in range(k)
+            ]
+        )
+        .collect()[0]
+    )
+    return [row[j] for j in range(k)]
+
+
 def _bloom_proves_absent(
     spark: SparkSession, gen_dir: str, value, key_type=None
 ) -> bool:
     """True iff the generation's key-bloom sidecar PROVES `value`
     absent (any probe bit unset). Missing/corrupt sidecars mean MUST
-    READ. The probe hashes run through the same Spark xxhash64
-    expressions the builder used (one 1-row job — the bucket routing
-    job point lookups already pay has the same shape). `key_type` is
-    the COMMITTED key column type: xxhash64 is type-sensitive (a
-    Python int literal hashes as INT while a stored LongType column
-    hashes as BIGINT), so the probe literal must be cast to the exact
-    stored type — when the type is unknown, the bloom is skipped
-    (must-read, never a wrong miss)."""
+    READ. The probe positions are the builder's own xxhash64
+    expression (`_bloom_positions`). `key_type` is the COMMITTED key
+    column type: xxhash64 is type-sensitive (a Python int literal
+    hashes as INT while a stored LongType column hashes as BIGINT), so
+    the probe literal must be cast to the exact stored type — when the
+    type is unknown, the bloom is skipped (must-read, never a wrong
+    miss)."""
     import base64
 
     if key_type is None:
@@ -1750,21 +2044,7 @@ def _bloom_proves_absent(
         bits = base64.b64decode(sc["bits_b64"])
     except (ValueError, KeyError):
         return False
-    probe = F.lit(value).cast(key_type)
-    row = (
-        spark.range(1)
-        .select(
-            *[
-                F.pmod(
-                    F.xxhash64(probe, F.lit(j)), F.lit(m)
-                ).alias(f"p{j}")
-                for j in range(k)
-            ]
-        )
-        .collect()[0]
-    )
-    for j in range(k):
-        pos = row[f"p{j}"]
+    for pos in _bloom_positions(spark, value, key_type, m, k):
         if not (bits[pos // 8] >> (pos % 8)) & 1:
             return True  # an unset probe bit: definitely absent
     return False
@@ -4372,7 +4652,20 @@ def read_bucket_for_key_versioned(
     """Point lookup: prune to the ONE generation dir that can hold
     `value` under the pinned (or latest) version. This loads the root
     plus the single shard the bucket lives in — O(√width) bytes, the
-    sharded-manifest design point."""
+    sharded-manifest design point.
+
+    The slice plan runs on the driver: the bucket (`bucket_of_value`),
+    the deletion-vector gate, and the footer-stats and key-bloom
+    exclusions of each generation. When the live generations' files
+    total at most LOCAL_READ_BYTES, they are read on the driver with
+    pyarrow, filtered on the key, and returned as a local relation
+    (`_read_live_local`): the caller's filter, select and collect then
+    fold into a LocalTableScan and run no Spark job. The DV probe reads
+    its DV files the same way under the same bound. Larger slices, and
+    files pyarrow cannot read as Spark does, keep the Spark read. A
+    merge-on-read slice tags each generation's rows with its ordinal
+    either way and runs the same fold (`_fold_ordinals`/`_fold_rows`),
+    which is a Spark aggregate."""
     with open(os.path.join(path, BUCKET_META)) as f:
         meta = json.load(f)
     v = _resolve_version(path, version)
@@ -4417,18 +4710,20 @@ def read_bucket_for_key_versioned(
         _dv_ref(e) for e in (full.get("dv") or {}).get(str(bid), [])
     ]
     if dv_refs:
-        probe = None
-        for n, d in sorted(dv_refs):
-            part = (
-                spark.read.parquet(f"{path}/{n}")
-                .filter(
-                    (F.col(meta["key"]) == F.lit(value))
-                    & (F.col("__dv_bucket") == F.lit(int(bid)))
+        hits = _dv_hits_local(path, dv_refs, meta["key"], value, bid)
+        if hits is None:
+            probe = None
+            for n, d in sorted(dv_refs):
+                part = (
+                    spark.read.parquet(f"{path}/{n}")
+                    .filter(
+                        (F.col(meta["key"]) == F.lit(value))
+                        & (F.col("__dv_bucket") == F.lit(int(bid)))
+                    )
+                    .select(F.lit(d).alias("__d"))
                 )
-                .select(F.lit(d).alias("__d"))
-            )
-            probe = part if probe is None else probe.unionByName(part)
-        hits = [r["__d"] for r in probe.collect()]
+                probe = part if probe is None else probe.unionByName(part)
+            hits = [r["__d"] for r in probe.collect()]
         if hits:
             dv_gate = max(hits)
     ktype = None
@@ -4469,18 +4764,22 @@ def read_bucket_for_key_versioned(
     if not live:
         return None
     schema = StructType.fromJson(stored) if stored is not None else None
-    if len(gens) == 1:
-        return _read_dirs(
-            spark, [live[0][0]], schema, schema_json=stored
-        ).filter(F.col(meta["key"]) == F.lit(value))
+    mor = len(gens) > 1
     df = None
-    for gdir, ordn in live:
-        part = (
-            _read_dirs(spark, [gdir], schema, schema_json=stored)
-            .filter(F.col(meta["key"]) == F.lit(value))
-            .withColumn("__ord", F.lit(ordn))
+    if schema is not None:
+        df = _read_live_local(
+            spark, live, meta["key"], value, schema, stored, mor
         )
-        df = part if df is None else df.unionByName(part)
+    if df is None:
+        for gdir, ordn in live:
+            part = _read_dirs(spark, [gdir], schema, schema_json=stored).filter(
+                F.col(meta["key"]) == F.lit(value)
+            )
+            if mor:
+                part = part.withColumn("__ord", F.lit(ordn))
+            df = part if df is None else df.unionByName(part)
+    if not mor:
+        return df
     fold = (
         full["mor_fold"] if "mor_fold" in full
         else meta.get("mor_fold")

@@ -1,0 +1,378 @@
+"""The driver-local finish of point lookups: when a key's live
+generation files total at most `LOCAL_READ_BYTES`,
+`read_bucket_for_key_versioned` reads them with pyarrow and returns a
+local relation. Law: that relation holds exactly the rows the Spark
+read returns, across layouts, versions, merge-on-read deltas, deletion
+vectors, schema evolution and key blooms."""
+
+from __future__ import annotations
+
+import datetime
+import decimal
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import Row, functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DateType,
+    DecimalType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
+
+from cvemate_spark.operators import merge_versioned as mv
+from cvemate_spark.operators.merge import merge_upsert
+from test_point_lookup import _jobs, _key_values
+
+T0 = "2024-01-01 00:00:00"
+T1 = "2024-02-01 00:00:00"
+FAR = datetime.datetime(9999, 12, 31, 23, 59, 59, 999999)  # past int64 nanos
+
+
+def _row(k, i: int) -> Row:
+    return Row(
+        id=k,
+        n=i,
+        ts=datetime.datetime(2024, 3, 1, 12, 30, 45, 123456) if i % 3 else None,
+        far=FAR,
+        old=datetime.datetime(1000, 6, 1, 8) if i % 2 else datetime.datetime(1960, 5, 5, 1, 2, 3),
+        d=datetime.date(1500, 1, 31) if i % 2 else datetime.date(2024, 2, 29),
+        price=decimal.Decimal(f"{i}.25"),
+        tags={"a": i, "b": -i} if i % 2 else None,
+        notes={"x": [Row(p=1.5)]} if i % 4 == 1 else {"y": []},
+        refs=[Row(u=f"u{i}", w=[i, None])] if i % 3 else None,
+        meta=Row(src="nvd", seen=datetime.datetime(2023, 1, 1), score=None),
+    )
+
+
+def _schema(key_type) -> StructType:
+    return StructType([
+        StructField("id", key_type),
+        StructField("n", LongType()),
+        StructField("ts", TimestampType()),
+        StructField("far", TimestampType()),
+        StructField("old", TimestampType()),
+        StructField("d", DateType()),
+        StructField("price", DecimalType(10, 2)),
+        StructField("tags", MapType(StringType(), LongType())),
+        StructField("notes", MapType(
+            StringType(), ArrayType(StructType([StructField("p", DoubleType())])))),
+        StructField("refs", ArrayType(StructType([
+            StructField("u", StringType()), StructField("w", ArrayType(LongType()))]))),
+        StructField("meta", StructType([
+            StructField("src", StringType()),
+            StructField("seen", TimestampType()),
+            StructField("score", DoubleType()),
+        ])),
+    ])
+
+
+def _write(spark, path: str, keys, **kw) -> None:
+    key_type = StringType() if type(keys[0]) is str else LongType()
+    base = spark.createDataFrame(
+        [_row(k, i) for i, k in enumerate(keys)], _schema(key_type)
+    )
+    mv.write_bucket_table_versioned(
+        merge_upsert(None, base, now=T0), path, key="id", n_buckets=8, **kw
+    )
+
+
+def _lookup(spark, path: str, value, bound: int, **kw):
+    saved, mv.LOCAL_READ_BYTES = mv.LOCAL_READ_BYTES, bound
+    try:
+        out = {}
+        jobs = _jobs(
+            spark, f"lookup-local-{bound}-{id(out)}",
+            lambda: out.update(
+                df=mv.read_bucket_for_key_versioned(spark, path, value, **kw)
+            ),
+        )
+        df = out["df"]
+        if df is None:
+            return None, None, jobs
+        rows = []
+        jobs += _jobs(spark, f"collect-{bound}-{id(out)}", lambda: rows.extend(df.collect()))
+        return df.schema, sorted(rows, key=repr), jobs
+    finally:
+        mv.LOCAL_READ_BYTES = saved
+
+
+def _assert_same(spark, path: str, values, **kw) -> list[int]:
+    """Local and Spark lookups agree on schema and full rows for every
+    value; returns the local lookups' job counts."""
+    jobs = []
+    for v in values:
+        ls, lr, lj = _lookup(spark, path, v, 1 << 40, **kw)
+        ss, sr, _ = _lookup(spark, path, v, 0, **kw)
+        assert lr == sr, (v, lr, sr)
+        assert ls == ss, (v, ls, ss)
+        jobs.append(lj)
+    return jobs
+
+
+@pytest.mark.parametrize("packed", [False, True])
+def test_local_equals_spark_classic_and_packed(spark, tmp_path, packed):
+    """Both base layouts, str keys (hits and absent keys in and out of
+    the footer bounds), every type family of `_row`. The classic
+    lookup runs 0 jobs; the packed base's range files hold
+    pyarrow-written INT96 timestamps and keep the Spark read."""
+    path = str(tmp_path / "t")
+    keys = [f"CVE-2024-{i:04d}" for i in range(60)]
+    _write(spark, path, keys, packed_base=packed)
+    jobs = _assert_same(
+        spark, path, keys[:12] + ["CVE-2024-0030x", "AAA", "zzz"]
+    )
+    if not packed:
+        assert jobs == [0] * len(jobs)
+    # the packer keeps INT96 instants outside the int64-nanosecond range
+    _, rows, _ = _lookup(spark, path, keys[3], 0)
+    assert (rows[0]["far"], rows[0]["old"]) == (FAR, datetime.datetime(1000, 6, 1, 8))
+    if packed:
+        # pyarrow-written INT96 (the packed files) is left to Spark
+        _, _, jobs = _lookup(spark, path, keys[3], 1 << 40)
+        assert jobs == 1
+
+
+def test_local_equals_spark_packed_range_files(spark, tmp_path):
+    """The packed layout's coalesced range files, written by pyarrow,
+    read locally when they hold no INT96 column."""
+    path = str(tmp_path / "t")
+    keys = [f"CVE-2024-{i:04d}" for i in range(60)]
+    base = spark.createDataFrame(
+        [_row(k, i) for i, k in enumerate(keys)], _schema(StringType())
+    ).drop("ts", "far", "old", "meta")
+    mv.write_bucket_table_versioned(base, path, key="id", n_buckets=8, packed_base=True)
+    entries = mv._load_manifest_full(path, 1)["buckets"].values()
+    assert all(g.startswith("@") and "/r" in g for g in entries)
+    jobs = _assert_same(spark, path, keys[:8] + ["CVE-2024-0030x"])
+    assert jobs == [0] * len(jobs)
+
+
+def test_local_equals_spark_int_keys_time_travel_and_new_column(spark, tmp_path):
+    path = str(tmp_path / "t")
+    keys = list(range(-20, 40))
+    _write(spark, path, keys)
+    mv.merge_scoped_versioned(
+        spark, path,
+        spark.createDataFrame(
+            [Row(id=k, n=1000 + k, extra=f"e{k}") for k in (-3, 5, 17)]
+        ),
+        now=T1,
+    )
+    probes = [-3, 5, 17, 6, 0, 39, 2**40, -(2**63)]
+    _assert_same(spark, path, probes)
+    _assert_same(spark, path, probes, version=1)
+
+
+def test_local_equals_spark_mor_deltas_and_dvs(spark, tmp_path):
+    """Merge-on-read deltas over a base, deletion vectors at depth 0
+    and at depth 2, and a re-insert above the deeper DV: the local
+    read tags each layer with its ordinal and the ordinal fold runs
+    unchanged."""
+    path = str(tmp_path / "t")
+    keys = [f"k{i}" for i in range(40)]
+    _write(spark, path, keys)
+    mv.merge_deletes_dv(spark, path, spark.createDataFrame([Row(id="k1")]))
+    for j, ks in enumerate((["k2", "k3", "k1"], ["k3", "k4"])):
+        mv.merge_scoped_versioned_mor(
+            spark, path,
+            spark.createDataFrame([Row(id=k, n=100 * (j + 1)) for k in ks]),
+            now=T1,
+        )
+    mv.merge_deletes_dv(spark, path, spark.createDataFrame([Row(id="k3"), Row(id="k5")]))
+    mv.merge_scoped_versioned_mor(
+        spark, path, spark.createDataFrame([Row(id="k3", n=999)]), now=T1
+    )
+    full = mv._load_manifest_full(path, mv.latest_version(path))
+    assert full.get("deltas") and full.get("dv")
+    probes = ["k1", "k2", "k3", "k4", "k5", "k6", "k7", "nope"]
+    _assert_same(spark, path, probes)
+    for v in range(1, mv.latest_version(path)):
+        _assert_same(spark, path, probes, version=v)
+
+
+def test_local_equals_spark_renamed_column(spark, tmp_path):
+    path = str(tmp_path / "t")
+    keys = [f"k{i}" for i in range(30)]
+    _write(spark, path, keys)
+    mv.alter_bucket_table_versioned(path, rename={"price": "amount", "meta": "info"})
+    mv.merge_scoped_versioned(
+        spark, path,
+        spark.createDataFrame(
+            [Row(id="k7", amount=decimal.Decimal("7.77"))], "id string, amount decimal(10,2)"
+        ),
+        now=T1,
+    )
+    _assert_same(spark, path, ["k7", "k8", "k9"])
+    _assert_same(spark, path, ["k7", "k8"], version=1)
+
+
+def test_local_equals_spark_key_bloom(spark, tmp_path):
+    """Key-bloom tables: the driver-side probe proves misses without a
+    job, so hits and misses alike run none."""
+    path = str(tmp_path / "t")
+    keys = [f"k{i:03d}" for i in range(0, 200, 2)]
+    _write(spark, path, keys, key_bloom=True)
+    probes = keys[:10] + [f"k{i:03d}" for i in range(1, 21, 2)]
+    jobs = _assert_same(spark, path, probes)
+    assert jobs == [0] * len(jobs)
+
+
+def test_local_equals_spark_in_another_session_time_zone(spark, tmp_path):
+    """Timestamps leave the local read as UTC instants, so a session
+    time zone other than UTC renders them exactly as the Spark read
+    does."""
+    path = str(tmp_path / "t")
+    keys = [f"k{i}" for i in range(20)]
+    _write(spark, path, keys)
+    saved = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        _assert_same(spark, path, ["k1", "k2", "k4"])
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", saved)
+
+
+def _files_law(spark, tmp_path, tables: list[pa.Table], schema: StructType, key, values):
+    """Spark's read of generation files under a committed schema
+    (`_read_dirs`) equals the local read of the same files."""
+    gdir = tmp_path / "g"
+    gdir.mkdir()
+    for i, t in enumerate(tables):
+        pq.write_table(t, str(gdir / f"part-{i}.parquet"))
+    schema_json = schema.jsonValue()
+    files = mv._data_files(str(gdir))
+    for v in values:
+        want = mv._read_dirs(spark, [str(gdir)], schema, schema_json).filter(
+            F.col(key) == F.lit(v)
+        )
+        got = mv._read_local(spark, mv._key_rows_local(files, key, v), schema, schema_json)
+        assert got.schema == want.schema, v
+        assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr), v
+
+
+def test_conform_fills_missing_nested_fields_and_widens(spark, tmp_path):
+    """A file written before a top-level column and a nested struct
+    field existed, and with an int column the schema reads as long;
+    the other file already has the new shape."""
+    old = pa.table({
+        "id": pa.array([1, 2, 3], pa.int32()),
+        "s": pa.array([{"a": 1}, None, {"a": 3}], pa.struct([("a", pa.int32())])),
+        "l": pa.array([[{"a": 1}], None, []], pa.list_(pa.struct([("a", pa.int32())]))),
+    })
+    new = pa.table({
+        "id": pa.array([4, 2], pa.int64()),
+        "s": pa.array([{"a": 4, "b": "x"}, {"a": 5, "b": None}],
+                      pa.struct([("a", pa.int32()), ("b", pa.string())])),
+        "l": pa.array([[{"a": 4, "b": "y"}], [None]],
+                      pa.list_(pa.struct([("a", pa.int32()), ("b", pa.string())]))),
+        "added": pa.array(["p", "q"]),
+    })
+    ab = StructType([StructField("a", IntegerType()), StructField("b", StringType())])
+    schema = StructType([
+        StructField("id", LongType()),
+        StructField("s", ab),
+        StructField("l", ArrayType(ab)),
+        StructField("added", StringType()),
+    ])
+    _files_law(spark, tmp_path, [old, new], schema, "id", [1, 2, 3, 4, 7])
+
+
+def test_conform_reads_int96_timestamps_at_microseconds(spark, tmp_path):
+    """INT96 (Spark's default timestamp encoding) past the int64
+    nanosecond range reads as the same instant Spark reads."""
+    path = str(tmp_path / "t")
+    keys = [f"k{i}" for i in range(10)]
+    _write(spark, path, keys)
+    gdir = mv._gen_data_path(
+        path, *next(iter(mv._load_manifest_full(path, 1)["buckets"].items()))
+    )
+    types = {
+        pq.ParquetFile(f).metadata.schema.column(i).physical_type
+        for f in mv._data_files(gdir)
+        for i in range(pq.ParquetFile(f).metadata.num_columns)
+    }
+    assert "INT96" in types
+    stored = mv._load_manifest_full(path, 1)["schema"]
+    files = mv._data_files(gdir)
+    k = pq.read_table(files[0], columns=["id"]).column(0)[0].as_py()
+    got = mv._read_local(
+        spark, mv._key_rows_local(files, "id", k), StructType.fromJson(stored), stored
+    ).collect()
+    assert got[0]["far"] == FAR
+
+
+def test_key_type_mismatch_keeps_spark_read(spark, tmp_path):
+    """A value that Arrow cannot compare exactly with the key column
+    (an int against a string key) leaves the read to Spark."""
+    path = str(tmp_path / "t")
+    _write(spark, path, [str(i) for i in range(20)])
+    files = [
+        f for g in mv._load_manifest_full(path, 1)["buckets"].items()
+        for f in mv._data_files(mv._gen_data_path(path, *g))
+    ]
+    assert mv._key_rows_local(files, "id", 5) is None
+    assert mv._key_rows_local(files, "id", True) is None
+    ls, lr, lj = _lookup(spark, path, 5, 1 << 40)
+    ss, sr, _ = _lookup(spark, path, 5, 0)
+    assert lr == sr and lj >= 1
+
+
+def test_bloom_positions_match_jvm_expression(spark):
+    """Law: the driver-side probe positions equal Spark's
+    pmod(xxhash64(cast(v AS key_type), j), m) for every probe j, over
+    the point-lookup key corpus, for string, int and bigint keys; none
+    of them runs a job."""
+    ints, strs = _key_values()
+    m, k = 8192 + 64 * 7, 4
+    cases = [
+        (StringType(), strs + ints),
+        (LongType(), ints),
+        (IntegerType(), [v for v in ints if -(2**31) <= v < 2**31]),
+    ]
+    for key_type, values in cases:
+        want = spark.range(1).select(
+            *[
+                F.pmod(F.xxhash64(F.lit(v).cast(key_type), F.lit(j)), F.lit(m))
+                for v in values for j in range(k)
+            ]
+        ).collect()[0]
+        got = []
+        jobs = _jobs(
+            spark, f"bloom-{key_type.simpleString()}",
+            lambda: [got.extend(mv._bloom_positions(spark, v, key_type, m, k)) for v in values],
+        )
+        assert got == list(want), key_type
+        assert jobs == 0, key_type
+
+
+def test_bloom_positions_other_pairs_keep_the_job(spark):
+    for v, key_type in ((True, StringType()), ("7", LongType()), (1.5, StringType())):
+        want = spark.range(1).select(
+            *[F.pmod(F.xxhash64(F.lit(v).cast(key_type), F.lit(j)), F.lit(64)) for j in range(3)]
+        ).collect()[0]
+        got = []
+        jobs = _jobs(
+            spark, f"bloom-other-{v}",
+            lambda: got.extend(mv._bloom_positions(spark, v, key_type, 64, 3)),
+        )
+        assert got == list(want) and jobs == 1, (v, key_type)
+
+
+def test_local_read_bound_is_the_committed_crossover():
+    """LOCAL_READ_BYTES is the largest generation size at which the
+    local read beat the Spark read in LOOKUPCROSSOVER.json."""
+    import json
+    from pathlib import Path
+
+    art = json.loads((Path(__file__).resolve().parents[1] / "LOOKUPCROSSOVER.json").read_text())
+    wins = [1 << r["log2"] for r in art["rows"] if r["local_s"] < r["spark_s"]]
+    assert mv.LOCAL_READ_BYTES == art["local_read_bytes"] == max(wins)

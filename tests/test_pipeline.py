@@ -138,3 +138,88 @@ def test_cvss_coalesce_chain(spark, fixture_dir):
     ).collect()
     for r in got:
         assert r["base"] is not None and 0.0 <= r["base"] <= 10.0
+
+
+def _cvss_column_form(nvd):
+    """cvss_base_score as it was composed from Column calls before it
+    became one SQL expression: the reference semantics to compare."""
+
+    def arm(version):
+        return F.coalesce(
+            F.element_at(nvd["metrics"][version], 1)["cvssData"]["baseScore"],
+            F.lit(0.0),
+        )
+
+    metrics = nvd["metrics"]
+    return (
+        F.when(metrics["cvssMetricV31"].isNotNull(), arm("cvssMetricV31"))
+        .when(metrics["cvssMetricV30"].isNotNull(), arm("cvssMetricV30"))
+        .when(metrics["cvssMetricV2"].isNotNull(), arm("cvssMetricV2"))
+        .otherwise(F.lit(0.0))
+    )
+
+
+# py4j round trips to build cvss_base_score(F.col("nvd")), F.col
+# included: the column, its SQL text and one F.expr. Composing the CASE
+# from Column calls took 85.
+CVSS_ROUND_TRIPS = 8
+
+
+def test_cvss_base_score_equals_column_form(spark, fixture_dir):
+    """Law: the SQL-string form equals the Column form on NULL nvd,
+    NULL metrics, missing version keys, missing cvssData, missing
+    scores and NULL array elements, and on the NVD fixture page."""
+    metric_t = "array<struct<cvssData:struct<baseScore:double>>>"
+    arr = "array(named_struct('cvssData', named_struct('baseScore', {})))"
+    df = spark.sql(
+        f"""
+        SELECT id, CASE WHEN id = 'nvd_null' THEN NULL ELSE named_struct('metrics',
+            CASE WHEN id = 'metrics_null' THEN NULL ELSE named_struct(
+            'cvssMetricV31', CAST(v31 AS {metric_t}),
+            'cvssMetricV30', CAST(v30 AS {metric_t}),
+            'cvssMetricV2',  CAST(v2  AS {metric_t})) END) END AS nvd
+        FROM VALUES
+            ('nvd_null', NULL, NULL, NULL),
+            ('metrics_null', NULL, NULL, NULL),
+            ('none_present', NULL, NULL, NULL),
+            ('v31', {arr.format('9.8D')}, {arr.format('7.0D')}, NULL),
+            ('v31_score_null', {arr.format('CAST(NULL AS DOUBLE)')}, {arr.format('7.0D')}, NULL),
+            ('v31_data_null', array(named_struct('cvssData', CAST(NULL AS struct<baseScore:double>))),
+                NULL, {arr.format('5.0D')}),
+            ('v31_elem_null', array(CAST(NULL AS struct<cvssData:struct<baseScore:double>>)),
+                {arr.format('7.0D')}, NULL),
+            ('v30', NULL, {arr.format('6.5D')}, {arr.format('1.0D')}),
+            ('v30_score_null', NULL, {arr.format('CAST(NULL AS DOUBLE)')}, {arr.format('1.0D')}),
+            ('v2', NULL, NULL, {arr.format('4.2D')})
+            AS t(id, v31, v30, v2)
+        """
+    )
+    nvd_page = formats.normalize_nvd(
+        formats.read_nvd_json(spark, str(fixture_dir / "nvd_page.json"))
+    )
+    for frame in (df, nvd_page):
+        rows = frame.select(
+            "id",
+            cvss_base_score(F.col("nvd")).alias("sql"),
+            _cvss_column_form(F.col("nvd")).alias("col"),
+        ).collect()
+        assert rows and all(r["sql"] == r["col"] for r in rows), rows
+        assert frame.select(cvss_base_score(F.col("nvd"))).schema[0].dataType == (
+            frame.select(_cvss_column_form(F.col("nvd"))).schema[0].dataType
+        )
+
+
+def test_cvss_base_score_round_trip_pin(spark):
+    client = spark.sparkContext._gateway._gateway_client
+    send, n = client.send_command, [0]
+
+    def counting(*args, **kwargs):
+        n[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        cvss_base_score(F.col("nvd"))
+    finally:
+        client.send_command = send
+    assert n[0] <= CVSS_ROUND_TRIPS, n[0]

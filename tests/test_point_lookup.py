@@ -98,14 +98,22 @@ def test_bucket_of_value_str_and_int_run_no_job(spark):
 
 
 # Spark jobs of one point lookup plus its collect on a 16-bucket
-# versioned table with no deltas, deletion vectors or key bloom: the
-# scan of the bucket's one generation. Resolving the bucket used to run
-# a second job (a 1-row frame per key). Job counts do not depend on host
+# versioned table with no deltas, deletion vectors or key bloom. The
+# bucket's one generation is under LOCAL_READ_BYTES, so it is read on
+# the driver with pyarrow and the collect runs on a local relation.
+# Resolving the bucket used to run a job (a 1-row frame per key), and
+# the scan of the generation another. Job counts do not depend on host
 # load, so a regression fails here whatever the CPU steal.
-LOOKUP_JOBS = 1
+LOOKUP_JOBS = 0
+# the same lookup with the local read forced off (LOCAL_READ_BYTES = 0):
+# the Spark scan of the generation
+LOOKUP_JOBS_SPARK_READ = 1
 
 
-def test_lookup_job_count_pin(spark, tmp_path):
+def test_lookup_job_count_pin(spark, tmp_path, monkeypatch):
+    from cvemate_spark.operators import merge_versioned as mv
+
+    local_bound = mv.LOCAL_READ_BYTES
     for name, keys in (("str", [f"CVE-2024-{i:04d}" for i in range(200)]),
                        ("int", list(range(-100, 100)))):
         path = str(tmp_path / name)
@@ -115,10 +123,13 @@ def test_lookup_job_count_pin(spark, tmp_path):
             path, key="id", n_buckets=16,
         )
         key = keys[37]
-        rows = []
-        jobs = _jobs(
-            spark, f"lookup-pin-{name}",
-            lambda: rows.extend(read_bucket_for_key_versioned(spark, path, key).collect()),
-        )
-        assert [r["v"] for r in rows] == [f"x{key}"]
-        assert jobs == LOOKUP_JOBS, (name, jobs)
+        for bound, want_jobs in ((local_bound, LOOKUP_JOBS),
+                                 (0, LOOKUP_JOBS_SPARK_READ)):
+            monkeypatch.setattr(mv, "LOCAL_READ_BYTES", bound)
+            rows = []
+            jobs = _jobs(
+                spark, f"lookup-pin-{name}-{bound}",
+                lambda: rows.extend(read_bucket_for_key_versioned(spark, path, key).collect()),
+            )
+            assert [r["v"] for r in rows] == [f"x{key}"], (name, bound)
+            assert jobs == want_jobs, (name, bound, jobs)

@@ -7,7 +7,8 @@ a PERMANENT rung of the closing ladder: a future regression in the
 propagation loop cannot close a round, because this battery fails
 loudly when any OK-LAWS line goes missing.
 
-Rungs (each prints PASS/FAIL; summary lands in BATTERY.json):
+Rungs (each prints PASS/FAIL; results land in BATTERY.json, where a
+run of named rungs updates only those rungs):
   1. pytest tests/ -q
   2. full local oracle sweep     tools/check.py  sf0.01 (all queries)
   3. plan audit                  tools/plan_audit.py
@@ -157,6 +158,21 @@ RUNGS = {
 }
 
 
+def record(path: str, results: dict) -> dict:
+    """Write a run's results into the battery file: the rungs that ran
+    replace their entries, every other rung keeps its recorded one (a
+    run of named rungs must not erase the rest)."""
+    try:
+        with open(path) as f:
+            merged = json.load(f)
+    except FileNotFoundError:
+        merged = {}
+    merged.update(results)
+    with open(path, "w") as f:
+        json.dump(merged, f, indent=1)
+    return merged
+
+
 def main() -> int:
     picks = set(sys.argv[1:])
     results = {}
@@ -177,8 +193,7 @@ def main() -> int:
         if not r["ok"]:
             failed.append(name)
     results["loadavg_1m"] = os.getloadavg()[0]
-    with open(f"{REPO}/BATTERY.json", "w") as f:
-        json.dump(results, f, indent=1)
+    record(f"{REPO}/BATTERY.json", results)
     print(f"battery: {'PASS' if not failed else 'FAIL ' + str(failed)}")
     return 1 if failed else 0
 

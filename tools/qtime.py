@@ -7,6 +7,10 @@ Measurement-only tool (guide §1.4): isolates a builder from the suite
 so an A/B of a single operator change is not confounded by the other
 22 headline queries.
 
+Spark runs at local[SPARK_GRAFT_CPUS], or at one thread per CPU this
+process may run on when the variable is unset (as perfbench/run.py
+does), so runs on one host compare without setting it.
+
 Each pass also prints its Spark job count (the pass runs under its own
 job group, read back from the status tracker) and its py4j round trips
 (the gateway client's send_command calls from this thread during the
@@ -68,7 +72,8 @@ def main() -> int:
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
-    spark = get_spark("qtime", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n_cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    spark = get_spark("qtime", cpus=n_cpus)
     spec = REGISTRY.specs[name]
     spark.sparkContext.setJobDescription(f"qtime:{name}")
     # untimed warmup (codegen + parquet footer cache)
@@ -96,7 +101,7 @@ def main() -> int:
         f"{name}: min={min(ts):.3f} median={statistics.median(ts):.3f} "
         f"cpu={statistics.median(cpus):.2f} jobs={statistics.median(jobs):g} "
         f"round_trips={statistics.median(trips):g} "
-        f"runs={runs} loadavg={os.getloadavg()[0]:.1f}"
+        f"runs={runs} spark_cpus={n_cpus} loadavg={os.getloadavg()[0]:.1f}"
     )
     spark.stop()
     return 0
