@@ -36,8 +36,14 @@ Layout under `path/`:
     v-<n>.superseded           vacuum grace marker (stamped when displaced)
     _HISTORY.jsonl             commit log (one line per commit; O(1)/line history)
     bucket=<i>/g-<hex>/        immutable per-bucket generation (parquet,
-                               optional _KEYBLOOM.json sidecar)
-    dv-<hex>/                  deletion-vector key sets (parquet)
+                               optional _KEYBLOOM.json sidecar); Spark
+                               writes it, or pyarrow on the driver when
+                               the write is small (LOCAL_WRITE_BYTES)
+    _packed/pg-<hex>/          packed base: Spark-written b<i>.parquet
+                               files and pyarrow-coalesced r<lo>-<hi>.parquet
+                               range files (INT64 timestamps; range files
+                               packed before that hold pyarrow INT96)
+    dv-<hex>/                  deletion-vector key sets (parquet, Spark)
 
 Write protocols on top of the manifest-pointer commit:
     merge_scoped_versioned      copy-on-write (touched buckets rewritten)
@@ -233,22 +239,66 @@ def _pack_file_coverage(name: str) -> list[int]:
     return list(range(int(lo), int(hi) + 1))
 
 
-def _concat_parquet(srcs: list[str], dst: str) -> None:
-    """Concatenate same-schema parquet files into one, each source as
-    its own row group(s) in bucket order — pure pyarrow, preserving
-    INT96 timestamps when the sources carry them (Spark's default
-    physical type; silently converting to INT64 would flip the column
-    to TIMESTAMP NANOS semantics under a plain session). Readers
-    never rely on the dropped Spark footer schema: every versioned
-    read passes the manifest-recorded schema explicitly."""
+def _write_parquet(table, dst: str) -> None:
+    """Write one Arrow table as a parquet file that Spark reads exactly
+    as one of its own: snappy, and timestamps as INT64 microseconds,
+    never INT96 or NANOS. A `timestamp[us, UTC]` column (the Arrow form
+    of TimestampType) is stored with isAdjustedToUTC=true, a naive one
+    (TimestampNTZType) with false. Files carry no Arrow schema blob:
+    the parquet logical types already say everything a reader needs."""
     import pyarrow.parquet as pq
 
-    pf = pq.ParquetFile(srcs[0])
-    int96 = any(
-        pf.metadata.schema.column(i).physical_type == "INT96"
-        for i in range(pf.metadata.num_columns)
+    pq.write_table(
+        table, dst, compression="snappy", coerce_timestamps="us",
+        store_schema=False,
     )
+
+
+def _arrow_schema(schema):
+    """The Arrow schema of Spark `schema` as `toArrow()` returns it, or
+    None for a schema pyarrow cannot carry or cannot store as Spark
+    does: void, day-time intervals, variants and user-defined types
+    convert to Arrow, but not to parquet columns Spark reads back as
+    the same type."""
+    from pyspark.errors import PySparkException
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (
+        ArrayType, DayTimeIntervalType, MapType, NullType, StructType,
+        UserDefinedType, VariantType,
+    )
+
+    def stored_as_spark(t) -> bool:
+        if isinstance(t, StructType):
+            return all(stored_as_spark(f.dataType) for f in t.fields)
+        if isinstance(t, ArrayType):
+            return stored_as_spark(t.elementType)
+        if isinstance(t, MapType):
+            return stored_as_spark(t.keyType) and stored_as_spark(t.valueType)
+        return not isinstance(
+            t, (NullType, DayTimeIntervalType, VariantType, UserDefinedType)
+        )
+
+    if not stored_as_spark(schema):
+        return None
+    try:
+        return to_arrow_schema(
+            schema, error_on_duplicated_field_names_in_struct=True
+        )
+    except PySparkException:
+        return None
+
+
+def _concat_parquet(srcs: list[str], dst: str, schema) -> None:
+    """Concatenate same-schema Spark-written parquet files into one, in
+    bucket order, cast to `schema` (the Arrow form of the written Spark
+    schema, `_arrow_schema`) and written by `_write_parquet`: INT96
+    timestamps come out as INT64 microseconds adjusted to UTC, which
+    pyarrow reads back exactly (its own INT96 writer stores an instant
+    before 1970 with a negative time of day). Readers never rely on
+    the dropped Spark footer schema: every versioned read passes the
+    manifest-recorded schema explicitly."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
     # one concatenated write, NOT one write_table per source: a row
     # group per tiny bucket would put O(coalesced buckets) row groups
@@ -267,15 +317,7 @@ def _concat_parquet(srcs: list[str], dst: str) -> None:
             functools.partial(pq.read_table, coerce_int96_timestamp_unit="us"),
             srcs,
         ))
-    merged = pa.concat_tables(tables)
-    writer = pq.ParquetWriter(
-        dst, merged.schema, compression="snappy",
-        use_deprecated_int96_timestamps=int96,
-    )
-    try:
-        writer.write_table(merged)
-    finally:
-        writer.close()
+    _write_parquet(pa.concat_tables(tables).cast(schema), dst)
 
 
 def _pack_groups(
@@ -1134,16 +1176,13 @@ def _dv_hits_local(path: str, dv_refs, key: str, value, bid) -> list[int] | None
     return hits
 
 
-def _read_live_local(
-    spark: SparkSession, live, key: str, value, schema, schema_json: dict,
-    mor: bool,
-) -> DataFrame | None:
-    """A point lookup's live generations (`live`: (location, ordinal)
-    pairs), read on the driver and returned as one local relation
-    (`_read_local`), each row tagged with its generation's ordinal
-    when `mor`; None when their files total more than
-    LOCAL_READ_BYTES or pyarrow cannot return what the Spark read
-    would, which leaves the read to Spark."""
+def _live_rows_local(live, key: str, value) -> tuple[list, list[int]] | None:
+    """A point lookup's rows of `key` = `value` in its live generations
+    (`live`: (location, ordinal) pairs), read on the driver: one
+    pyarrow table per matching file (`_key_rows_local`) and each
+    table's generation ordinal; None when their files total more than
+    LOCAL_READ_BYTES or pyarrow cannot read them as Spark does, which
+    leaves the read to Spark."""
     files = [_data_files(loc) for loc, _ in live]
     if _total_bytes(files) > LOCAL_READ_BYTES:
         return None
@@ -1154,10 +1193,7 @@ def _read_live_local(
             return None
         tables += rows
         ords += [ordn] * len(rows)
-    try:
-        return _read_local(spark, tables, schema, schema_json, ords if mor else None)
-    except _SparkReadNeeded:
-        return None
+    return tables, ords
 
 
 def _as_nullable(t):
@@ -2591,6 +2627,7 @@ def write_bucket_table_versioned(
             df, path, key, n_buckets,
             packed=_packed_from_meta(meta, n_buckets),
             pack_target_bytes=_pack_target_from_meta(meta),
+            est_bytes=_plan_bytes(df),
         )
         stats = {i: _harvest_stats(path, i, g) for i, g in gens.items()}
         if key_bloom:
@@ -2672,6 +2709,132 @@ def init_bucket_table_versioned(
     return 1
 
 
+# Classic-layout writes whose size estimate is at most this many bytes
+# take the local writer (`_stage_local`): one toArrow() collect of the
+# rows and one pyarrow file per bucket, instead of Spark's bucket
+# repartition, its write stage and the partitioned file commit, which
+# cost a small commit a fixed ~0.5 s of task and job overhead. The
+# estimate is known on the driver before any job runs: the committed
+# bytes of the slice being rewritten (`_slice_bytes`) plus Spark's
+# optimized-plan estimate of the incoming rows (`_plan_bytes`). The
+# largest slice size at which the local writer won in the committed
+# crossover measurement, WRITECROSSOVER.json (tools/write_crossover.py),
+# among the sizes whose slice, collected at up to 4 bytes of Arrow per
+# parquet byte, stays within an eighth of a 2 GB driver.
+LOCAL_WRITE_BYTES = 1 << 26
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """Spark's optimized-plan size estimate of `df`; runs no job."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _slice_bytes(full: dict, bucket_ids) -> int | None:
+    """The committed bytes of the given buckets' base and merge-on-read
+    delta generations, from the manifest stats (a range file shared by
+    several buckets counts once); None when one of them has no stats."""
+    stats = full.get("stats") or {}
+    deltas = full.get("deltas") or {}
+    sizes: dict[str, int] = {}
+    for i in map(str, bucket_ids):
+        g = full["buckets"].get(i)
+        if g is None:
+            continue
+        if "bytes" not in stats.get(i, {}):
+            return None
+        sizes[g if _is_packed_entry(g) else f"{i}/{g}"] = stats[i]["bytes"]
+        for d in deltas.get(i, []):
+            if "bytes" not in d.get("stats", {}):
+                return None
+            sizes[f"{i}/{d['g']}"] = d["stats"]["bytes"]
+    return sum(sizes.values())
+
+
+def _merge_bytes(full: dict, bucket_ids, batch: DataFrame) -> int | None:
+    """The size estimate of a write that merges `batch` into the given
+    buckets' committed slice (`_slice_bytes` + `_plan_bytes`); None
+    when the slice has no stats."""
+    s = _slice_bytes(full, bucket_ids)
+    if s is None or s > LOCAL_WRITE_BYTES:
+        return s
+    return s + _plan_bytes(batch)
+
+
+def _stage_local(staged: DataFrame, staging: str, pmap: dict | None) -> None:
+    """The local writer: collect `staged` (the rows plus their `bucket`
+    column) once with toArrow() and write each bucket's rows with
+    `_write_parquet` as one file under `staging/bucket=<i>/`, the
+    layout Spark's partitioned write leaves, under physical column
+    names when the table maps columns."""
+    import pyarrow.compute as pc
+    from pyspark.sql.types import StructField
+
+    # toArrow() casts the collected batches to the frame's schema, which
+    # fails on a non-nullable field under a NULL struct or array element:
+    # collect every column under its all-nullable type, as a file scan
+    # reports it
+    cols = []
+    for f in staged.schema.fields:
+        typ = StructField.fromJson(_as_nullable(f.jsonValue())).dataType
+        cols.append(
+            F.col(f.name) if typ == f.dataType
+            else F.col(f.name).cast(typ).alias(f.name)
+        )
+    t = staged.select(*cols).toArrow()
+    order = pc.sort_indices(t.column("bucket"))
+    t = t.take(order)
+    runs = pc.value_counts(t.column("bucket"))  # ascending after the sort
+    t = t.drop_columns("bucket")
+    t = t.rename_columns([(pmap or {}).get(c, c) for c in t.column_names])
+    lo = 0
+    for i, n in zip(
+        runs.field("values").to_pylist(), runs.field("counts").to_pylist()
+    ):
+        d = f"{staging}/bucket={i}"
+        os.makedirs(d)
+        _write_parquet(
+            t.slice(lo, n), f"{d}/part-00000-{uuid.uuid4()}.c000.snappy.parquet"
+        )
+        lo += n
+
+
+def _stage_spark(
+    staged: DataFrame, staging: str, width: int,
+    sort_by: list | None, max_records_per_file: int | None,
+    pmap: dict | None,
+) -> None:
+    """The Spark writer: one job repartitions `staged` by its `bucket`
+    column into `width` tasks and writes it partitioned by bucket
+    under `staging`."""
+    job = staged.repartition(max(width, 1), "bucket")
+    if sort_by:
+        # rows arrive bucket-grouped; sorting by (bucket, cols)
+        # keeps each bucket's run contiguous AND ordered even when
+        # several buckets hash into one task. Entries may be plain
+        # column names or Column EXPRESSIONS (the z-order path
+        # sorts by a computed Morton code without materializing it
+        # into the table schema).
+        job = job.sortWithinPartitions("bucket", *sort_by)
+    if pmap:
+        # COLUMN MAPPING: data files store PHYSICAL names (the
+        # birth-time name a rename moved the logical name away
+        # from) — projected LAST so sort/bucket expressions above
+        # resolved against the logical frame; the narrow
+        # projection preserves within-partition order
+        job = job.select(
+            *[
+                F.col(c).alias(pmap.get(c, c))
+                for c in job.columns
+            ]
+        )
+    writer = job.write.mode("overwrite")
+    if max_records_per_file:
+        writer = writer.option(
+            "maxRecordsPerFile", int(max_records_per_file)
+        )
+    writer.partitionBy("bucket").parquet(staging)
+
+
 def _write_generations(
     df: DataFrame, path: str, key: str, n_buckets: int,
     buckets: list[int] | None = None,
@@ -2680,53 +2843,48 @@ def _write_generations(
     pmap: dict[str, str] | None = None,
     packed: bool = False,
     pack_target_bytes: int | None = None,
+    est_bytes: int | None = None,
 ) -> dict[str, str]:
-    """One Spark job: bucket the rows, land each written bucket as an
-    immutable `bucket=<i>/g-<hex>` generation dir (a rename off the
-    job's staging dir — new names, nothing swapped). Restricting to
-    `buckets` keeps the repartition width = |touched|. `sort_by` sorts
-    every bucket's rows by the given columns inside its task
-    (sortWithinPartitions — no extra shuffle beyond the bucket
-    repartition) and `max_records_per_file` rolls the writer at a row
-    budget: together they produce the CLUSTERED layout — per bucket, a
-    run of files each covering a contiguous sorted range, which is
-    what makes per-file min/max selective for value predicates
-    (optimize_versioned). Returns {bucket id -> generation name} for
-    the buckets that got rows."""
+    """Bucket the rows and land each written bucket as an immutable
+    `bucket=<i>/g-<hex>` generation dir (a rename off a staging dir —
+    new names, nothing swapped). Returns {bucket id -> generation name}
+    for the buckets that got rows.
+
+    Two writers fill the staging dir. When the caller's driver-side
+    size estimate `est_bytes` (see LOCAL_WRITE_BYTES; None = unknown)
+    is at most LOCAL_WRITE_BYTES, the write is classic and unsorted and
+    pyarrow can carry the schema, the local writer (`_stage_local`)
+    collects the rows once and writes one pyarrow file per bucket.
+    Otherwise one Spark job repartitions by bucket and writes
+    partitioned by it; restricting to `buckets` keeps the repartition
+    width = |touched|. `sort_by` sorts every bucket's rows by the given
+    columns inside its task (sortWithinPartitions — no extra shuffle
+    beyond the bucket repartition) and `max_records_per_file` rolls
+    the writer at a row budget: together they produce the CLUSTERED
+    layout — per bucket, a run of files each covering a contiguous
+    sorted range, which is what makes per-file min/max selective for
+    value predicates (optimize_versioned). Everything after staging
+    (the renames, the out-of-bucket check, the packed layout) is the
+    same for both writers."""
     gen = f"g-{uuid.uuid4().hex[:12]}"
     staging = f"{path}/.stage-{gen}"
     b = bucket_expr(key, n_buckets)
     staged = df.withColumn("bucket", b)
     width = len(buckets) if buckets is not None else n_buckets
     out: dict[str, str] = {}
+    local = (
+        est_bytes is not None
+        and est_bytes <= LOCAL_WRITE_BYTES
+        and not (sort_by or max_records_per_file or packed)
+        and _arrow_schema(staged.schema) is not None
+    )
     try:
-        job = staged.repartition(max(width, 1), "bucket")
-        if sort_by:
-            # rows arrive bucket-grouped; sorting by (bucket, cols)
-            # keeps each bucket's run contiguous AND ordered even when
-            # several buckets hash into one task. Entries may be plain
-            # column names or Column EXPRESSIONS (the z-order path
-            # sorts by a computed Morton code without materializing it
-            # into the table schema).
-            job = job.sortWithinPartitions("bucket", *sort_by)
-        if pmap:
-            # COLUMN MAPPING: data files store PHYSICAL names (the
-            # birth-time name a rename moved the logical name away
-            # from) — projected LAST so sort/bucket expressions above
-            # resolved against the logical frame; the narrow
-            # projection preserves within-partition order
-            job = job.select(
-                *[
-                    F.col(c).alias(pmap.get(c, c))
-                    for c in job.columns
-                ]
+        if local:
+            _stage_local(staged, staging, pmap)
+        else:
+            _stage_spark(
+                staged, staging, width, sort_by, max_records_per_file, pmap
             )
-        writer = job.write.mode("overwrite")
-        if max_records_per_file:
-            writer = writer.option(
-                "maxRecordsPerFile", int(max_records_per_file)
-            )
-        writer.partitionBy("bucket").parquet(staging)
         candidates = (
             buckets if buckets is not None else range(n_buckets)
         )
@@ -2738,6 +2896,8 @@ def _write_generations(
             # per bucket, no file rolling); a multi-file bucket falls
             # back to the classic per-bucket dirs below.
             import glob as _glob
+
+            import pyarrow as pa
 
             per_bucket: dict[int, list[str]] = {}
             single = True
@@ -2762,7 +2922,19 @@ def _write_generations(
                     for i, fs in per_bucket.items()
                 }
                 small_total = sum(b for b in sizes.values() if b < target)
-                if target <= 0 or small_total > PACK_COALESCE_MAX_BYTES:
+                # the range files' Arrow schema: the written columns
+                # under their physical names; a schema pyarrow cannot
+                # carry keeps one file per bucket
+                arrow = _arrow_schema(df.schema)
+                if arrow is not None:
+                    arrow = pa.schema([
+                        f.with_name((pmap or {}).get(f.name, f.name))
+                        for f in arrow
+                    ])
+                if (
+                    arrow is None or target <= 0
+                    or small_total > PACK_COALESCE_MAX_BYTES
+                ):
                     groups = [
                         ([i], f"b{i}.parquet") for i in sorted(per_bucket)
                     ]
@@ -2777,7 +2949,7 @@ def _write_generations(
                         os.rename(per_bucket[ids_g[0]][0], dstf)
                     else:
                         _concat_parquet(
-                            [per_bucket[i][0] for i in ids_g], dstf
+                            [per_bucket[i][0] for i in ids_g], dstf, arrow
                         )
                     for i in ids_g:
                         out[str(i)] = f"@{pg}/{name}"
@@ -2943,7 +3115,8 @@ def _prepare_scoped_merge(
     try:
         _enforce_constraints(merged, effective, path)
         new_gens = _write_generations(
-            merged, path, key, n_buckets, touched, pmap=pmap
+            merged, path, key, n_buckets, touched, pmap=pmap,
+            est_bytes=_merge_bytes(full, touched, updates),
         )
     finally:
         if persisted:
@@ -3095,6 +3268,14 @@ def merge_scoped_versioned(
     writing generations but before the pointer replace leaves only
     unreferenced orphan dirs — readers stay on the old version and
     `vacuum_bucket_versions` reclaims the orphans.
+
+    A commit whose touched slice (committed bytes, from the manifest
+    stats) plus the batch (Spark's plan estimate) is at most
+    LOCAL_WRITE_BYTES writes its generations on the driver: one
+    toArrow() collect of the merged slice, one pyarrow file per bucket
+    (`_write_generations`). Larger commits, and batches without an
+    estimate, use the Spark writer. Either way the schema union and
+    CHECK constraints run before any byte lands.
 
     Returns {version, n_buckets, buckets_touched, files_rewritten,
     bytes_rewritten}.
@@ -3876,7 +4057,8 @@ def _mor_attempt(
                 allow_missing_columns=True,
             )
         new_gens = _write_generations(
-            part, path, key, n_buckets, light, pmap=pmap
+            part, path, key, n_buckets, light, pmap=pmap,
+            est_bytes=_plan_bytes(stamped),
         )
     # leveling leg: capped buckets fold base+deltas+batch into a
     # fresh base generation (cost ∝ those buckets)
@@ -3903,7 +4085,8 @@ def _mor_attempt(
                 ), key=key, now=now,
             )
         leveled_gens = _write_generations(
-            merged_l, path, key, n_buckets, capped, pmap=pmap
+            merged_l, path, key, n_buckets, capped, pmap=pmap,
+            est_bytes=_merge_bytes(full, capped, updates),
         )
     harvested: dict[str, dict] = {}
     for gens in (new_gens, leveled_gens):
@@ -4173,6 +4356,7 @@ def compact_versioned(
                     and _packed_base_for(path, n_buckets)
                 ),
                 pack_target_bytes=_pack_target_from_meta(meta),
+                est_bytes=_slice_bytes(full, target),
             )
             if folded is not None
             else {}
@@ -4350,6 +4534,7 @@ def rebucket_versioned(
                 pmap=_phys_map(full.get("schema")),
                 packed=_packed_base_for(path, new_n_buckets),
                 pack_target_bytes=_pack_target_from_meta(meta),
+                est_bytes=_slice_bytes(full, sorted(full["buckets"])),
             )
             stats = {i: _harvest_stats(path, i, g) for i, g in gens.items()}
             if meta.get("key_bloom"):
@@ -4659,13 +4844,16 @@ def read_bucket_for_key_versioned(
     exclusions of each generation. When the live generations' files
     total at most LOCAL_READ_BYTES, they are read on the driver with
     pyarrow, filtered on the key, and returned as a local relation
-    (`_read_live_local`): the caller's filter, select and collect then
-    fold into a LocalTableScan and run no Spark job. The DV probe reads
-    its DV files the same way under the same bound. Larger slices, and
-    files pyarrow cannot read as Spark does, keep the Spark read. A
-    merge-on-read slice tags each generation's rows with its ordinal
-    either way and runs the same fold (`_fold_ordinals`/`_fold_rows`),
-    which is a Spark aggregate."""
+    (`_live_rows_local`, `_read_local`): the caller's filter, select
+    and collect then fold into a LocalTableScan and run no Spark job.
+    The DV probe reads its DV files the same way under the same bound.
+    Larger slices, and files pyarrow cannot read as Spark does, keep
+    the Spark read. A merge-on-read slice tags each generation's rows
+    with its ordinal either way and runs the same fold
+    (`_fold_ordinals`/`_fold_rows`), which is a Spark aggregate, unless
+    the local read found one live generation holding at most one row
+    of the key: that row is its own fold, returned in the fold's
+    column order with no job."""
     with open(os.path.join(path, BUCKET_META)) as f:
         meta = json.load(f)
     v = _resolve_version(path, version)
@@ -4765,28 +4953,37 @@ def read_bucket_for_key_versioned(
         return None
     schema = StructType.fromJson(stored) if stored is not None else None
     mor = len(gens) > 1
+    fold = full["mor_fold"] if "mor_fold" in full else meta.get("mor_fold")
+    key = meta["key"]
     df = None
-    if schema is not None:
-        df = _read_live_local(
-            spark, live, meta["key"], value, schema, stored, mor
-        )
+    own_fold = False
+    local = _live_rows_local(live, key, value) if schema is not None else None
+    if local is not None:
+        tables, ords = local
+        # one live generation holding at most one row of the key is
+        # its own fold: the merge-on-read lookup skips the aggregate
+        own_fold = mor and len(live) == 1 and sum(t.num_rows for t in tables) <= 1
+        mor = mor and not own_fold
+        try:
+            df = _read_local(spark, tables, schema, stored, ords if mor else None)
+        except _SparkReadNeeded:
+            pass
     if df is None:
         for gdir, ordn in live:
             part = _read_dirs(spark, [gdir], schema, schema_json=stored).filter(
-                F.col(meta["key"]) == F.lit(value)
+                F.col(key) == F.lit(value)
             )
             if mor:
                 part = part.withColumn("__ord", F.lit(ordn))
             df = part if df is None else df.unionByName(part)
+    if own_fold and not fold:
+        # the ordinal fold's column order: the key first
+        return df.select(key, *[c for c in df.columns if c != key])
     if not mor:
         return df
-    fold = (
-        full["mor_fold"] if "mor_fold" in full
-        else meta.get("mor_fold")
-    )
     if fold:
         return _fold_rows(df, fold)
-    return _fold_ordinals(df, meta["key"])
+    return _fold_ordinals(df, key)
 
 
 def changed_buckets_between(

@@ -43,7 +43,7 @@ def _row(k, i: int) -> Row:
         n=i,
         ts=datetime.datetime(2024, 3, 1, 12, 30, 45, 123456) if i % 3 else None,
         far=FAR,
-        old=datetime.datetime(1000, 6, 1, 8) if i % 2 else datetime.datetime(1960, 5, 5, 1, 2, 3),
+        old=datetime.datetime(1000, 1, 1) if i % 2 else datetime.datetime(1960, 5, 5, 1, 2, 3),
         d=datetime.date(1500, 1, 31) if i % 2 else datetime.date(2024, 2, 29),
         price=decimal.Decimal(f"{i}.25"),
         tags={"a": i, "b": -i} if i % 2 else None,
@@ -121,24 +121,38 @@ def _assert_same(spark, path: str, values, **kw) -> list[int]:
 @pytest.mark.parametrize("packed", [False, True])
 def test_local_equals_spark_classic_and_packed(spark, tmp_path, packed):
     """Both base layouts, str keys (hits and absent keys in and out of
-    the footer bounds), every type family of `_row`. The classic
-    lookup runs 0 jobs; the packed base's range files hold
-    pyarrow-written INT96 timestamps and keep the Spark read."""
+    the footer bounds), every type family of `_row`. Every lookup runs
+    0 jobs: the packed base's range files store timestamps as INT64
+    microseconds, which pyarrow reads as Spark does."""
     path = str(tmp_path / "t")
     keys = [f"CVE-2024-{i:04d}" for i in range(60)]
     _write(spark, path, keys, packed_base=packed)
+    if packed:
+        entries = mv._load_manifest_full(path, 1)["buckets"].values()
+        assert all(g.startswith("@") and "/r" in g for g in entries)
     jobs = _assert_same(
         spark, path, keys[:12] + ["CVE-2024-0030x", "AAA", "zzz"]
     )
-    if not packed:
-        assert jobs == [0] * len(jobs)
-    # the packer keeps INT96 instants outside the int64-nanosecond range
-    _, rows, _ = _lookup(spark, path, keys[3], 0)
-    assert (rows[0]["far"], rows[0]["old"]) == (FAR, datetime.datetime(1000, 6, 1, 8))
-    if packed:
-        # pyarrow-written INT96 (the packed files) is left to Spark
-        _, _, jobs = _lookup(spark, path, keys[3], 1 << 40)
-        assert jobs == 1
+    assert jobs == [0] * len(jobs)
+    # instants outside the int64-nanosecond range and before 1970 keep
+    # their value through both reads
+    for k, old in ((keys[3], datetime.datetime(1000, 1, 1)),
+                   (keys[4], datetime.datetime(1960, 5, 5, 1, 2, 3))):
+        for bound in (0, 1 << 40):
+            _, rows, _ = _lookup(spark, path, k, bound)
+            assert (rows[0]["far"], rows[0]["old"]) == (FAR, old), (k, bound)
+
+
+def test_pyarrow_int96_files_keep_the_spark_read(tmp_path):
+    """Range files packed before the coalescer wrote INT64 timestamps
+    hold pyarrow-written INT96, which pyarrow mis-decodes before 1970:
+    `_key_rows_local` leaves such files to Spark."""
+    f = str(tmp_path / "r0-7.parquet")
+    pq.write_table(
+        pa.table({"id": ["a"], "ts": pa.array([datetime.datetime(1960, 5, 5)], pa.timestamp("us"))}),
+        f, use_deprecated_int96_timestamps=True,
+    )
+    assert mv._key_rows_local([f], "id", "a") is None
 
 
 def test_local_equals_spark_packed_range_files(spark, tmp_path):
@@ -197,6 +211,64 @@ def test_local_equals_spark_mor_deltas_and_dvs(spark, tmp_path):
     _assert_same(spark, path, probes)
     for v in range(1, mv.latest_version(path)):
         _assert_same(spark, path, probes, version=v)
+
+
+def _bucket_keys(spark, keys, bucket: int) -> list:
+    from cvemate_spark.operators.merge import bucket_of_value
+
+    return [k for k in keys if bucket_of_value(spark, k, 8) == bucket]
+
+
+def test_mor_lookup_skips_the_fold_for_one_live_generation(spark, tmp_path):
+    """A merge-on-read lookup whose footer stats and deletion vectors
+    leave one live generation holding the key returns that row with no
+    fold and no job: a key in the base only, in a delta only, and
+    re-inserted above a DV. A key in the base and in a delta still
+    folds (2 jobs). Each equals the Spark read, with the fold's column
+    order."""
+    from cvemate_spark.operators.merge import bucket_of_value
+
+    path = str(tmp_path / "t")
+    keys = [f"k{i:02d}" for i in range(40)]
+    # no map with nested values: delta rows fill the missing columns
+    # with NULLs, and a NULL such map keeps the Spark read (SPARK-48302)
+    base = spark.createDataFrame(
+        [_row(k, i) for i, k in enumerate(keys)], _schema(StringType())
+    ).drop("notes")
+    mv.write_bucket_table_versioned(
+        merge_upsert(None, base, now=T0), path, key="id", n_buckets=8
+    )
+    new = [f"n{i}" for i in range(8)]  # sorts above every base key
+    mv.merge_scoped_versioned_mor(
+        spark, path,
+        spark.createDataFrame([Row(id=k, n=500) for k in ["k05"] + new]), now=T1,
+    )
+    mv.merge_deletes_dv(spark, path, spark.createDataFrame([Row(id="k07")]))
+    mv.merge_scoped_versioned_mor(
+        spark, path, spark.createDataFrame([Row(id="k07", n=700)]), now=T1
+    )
+    full = mv._load_manifest_full(path, mv.latest_version(path))
+    b07 = bucket_of_value(spark, "k07", 8)
+    assert full["deltas"][str(b07)] and full["dv"][str(b07)]
+    # a bucket whose deltas hold only new keys, above the base's range
+    busy = {bucket_of_value(spark, k, 8) for k in ("k05", "k07")}
+    quiet = next(
+        b for b in map(int, full["deltas"])
+        if b not in busy and _bucket_keys(spark, keys, b)
+    )
+    base_only = _bucket_keys(spark, keys, quiet)[0]
+    delta_only = _bucket_keys(spark, new, quiet)[0]
+    unfolded = [base_only, delta_only, "k07"]
+    jobs = _assert_same(spark, path, unfolded + ["k05"])
+    assert jobs == [0, 0, 0, MOR_FOLD_JOBS]
+    schema, rows, _ = _lookup(spark, path, "k07", 1 << 40)
+    assert schema.names[0] == "id" and "__ord" not in schema.names
+    assert [(r["id"], r["n"]) for r in rows] == [("k07", 700)]
+
+
+# the ordinal fold of a lookup whose key lives in two generations: an
+# aggregate over the local relation, planned as two AQE stages
+MOR_FOLD_JOBS = 2
 
 
 def test_local_equals_spark_renamed_column(spark, tmp_path):

@@ -48,10 +48,21 @@ the sweep cadence rises.
 
 from __future__ import annotations
 
+import os
+import shutil
 import sys
+import time
 from collections import deque
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+# DuckDB spills the materialized oracle pair table here, capped at this
+# share of the disk's free bytes: an oversized pair table then fails in
+# seconds with a clear message instead of filling the disk (DuckDB's
+# default cap is 90% of the free space, under the cwd)
+SPILL_DIR = os.path.join(REPO, ".scratch", "duckdb_spill")
+SPILL_SHARE = 0.5
 
 # pairs-oracle settings per query — MUST mirror the builders in
 # cvemate_spark/queries/dedup_ops.py
@@ -136,13 +147,38 @@ SCALE_BOUND = set(PAIR_KW)
 
 
 def _labels_df(spark, sf_dir: str, name: str):
-    """The clustering relation exactly as the query computes it."""
+    """The clustering relation exactly as the query computes it, and
+    which finish `dedup_components` ran: "driver-local" (union-find
+    over the collected arcs, at entry or after shrinking rounds) or
+    "rounds" (large-star/small-star to the fixpoint)."""
     from cvemate_spark.operators import dedup
     from cvemate_spark.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.simhash_pairs(docs, **PAIR_KW[name])
-    return dedup.dedup_components(pairs)
+    ran = []
+    local_finish = dedup._union_find_components
+
+    def _recorded(down):
+        ran.append(True)
+        return local_finish(down)
+
+    dedup._union_find_components = _recorded
+    try:
+        labels = dedup.dedup_components(pairs)
+    finally:
+        dedup._union_find_components = local_finish
+    return labels, "driver-local" if ran else "rounds"
+
+
+def cap_spill(con) -> int:
+    """Point `con`'s spill at SPILL_DIR and cap it at SPILL_SHARE of
+    that disk's free bytes; returns the cap."""
+    os.makedirs(SPILL_DIR, exist_ok=True)
+    cap = int(shutil.disk_usage(SPILL_DIR).free * SPILL_SHARE)
+    con.execute(f"SET temp_directory = '{SPILL_DIR}'")
+    con.execute(f"SET max_temp_directory_size = '{cap}B'")
+    return cap
 
 
 def check_laws(
@@ -160,7 +196,20 @@ def check_laws(
     # temp table per (connection, sql) so a sweep pays it once
     cache = getattr(con, "_law_pairs_sql", None)
     if cache != pairs_sql:
-        con.execute(f"CREATE OR REPLACE TEMP TABLE _law_pairs AS {pairs_sql}")
+        import duckdb
+
+        cap = cap_spill(con)
+        t0 = time.time()
+        try:
+            con.execute(f"CREATE OR REPLACE TEMP TABLE _law_pairs AS {pairs_sql}")
+        except duckdb.OutOfMemoryException as e:
+            raise RuntimeError(
+                f"the oracle pair table outgrew DuckDB's spill cap ({cap} B "
+                f"in {SPILL_DIR}, {SPILL_SHARE:.0%} of the free disk): free "
+                "space there or run the laws on a smaller corpus"
+            ) from e
+        n = con.execute("SELECT count(*) FROM _law_pairs").fetchone()[0]
+        print(f"_law_pairs: {n} rows ({time.time() - t0:.1f}s)", flush=True)
         try:
             con._law_pairs_sql = pairs_sql
         except AttributeError:  # duckdb connections may reject attrs
@@ -282,12 +331,16 @@ def verify(spark, con, name: str, sf_dir: str) -> tuple[list[str], dict]:
     from cvemate_spark.queries import REGISTRY
     from tools.check import compare
 
-    labels_pd = _labels_df(spark, sf_dir, name).toPandas()
+    labels, finish = _labels_df(spark, sf_dir, name)
+    labels_pd = labels.toPandas()
+    print(f"{name}: components finish = {finish}", flush=True)
     pairs_sql = dedup.simhash_pairs_oracle(**PAIR_KW[name])
     problems = check_laws(con, labels_pd, pairs_sql)
     stats = {
         "labeled_nodes": int(len(labels_pd)),
         "components": int(labels_pd["component"].nunique()),
+        "pair_rows": con.execute("SELECT count(*) FROM _law_pairs").fetchone()[0],
+        "finish": finish,
     }
     if problems:
         return problems, stats
@@ -307,7 +360,6 @@ if __name__ == "__main__":
     names = sys.argv[2:] or sorted(SCALE_BOUND)
     spark = get_spark("dedup-laws", cpus=8, shuffle_partitions=8)
     con = duck_connect(sf_dir)
-    import time
 
     bad = 0
     for n in names:
