@@ -93,6 +93,86 @@ def merge_upsert(
     return joined.select(*out_cols)
 
 
+def now_micros(spark: SparkSession, now) -> int:
+    """The instant `merge_upsert` stamps for `now`, in UTC microseconds.
+    A datetime (naive = local time, as `F.lit` reads it) or None (the
+    current instant) goes through PySpark's own
+    `TimestampType().toInternal`; any other literal, such as a
+    "yyyy-mm-dd hh:mm:ss" string, through Spark's own cast on a one-row
+    relation built from Arrow, which is local: its collect runs no
+    job."""
+    import datetime
+
+    import pyarrow as pa
+    from pyspark.sql.types import TimestampType
+
+    if now is None:
+        now = datetime.datetime.now(datetime.timezone.utc)
+    if isinstance(now, datetime.datetime):
+        return TimestampType().toInternal(now)
+    return (
+        spark.createDataFrame(pa.table({"x": [0]}))
+        .select(F.unix_micros(F.lit(now).cast("timestamp")))
+        .collect()[0][0]
+    )
+
+
+def merge_upsert_arrow(target, updates, key: str, now_us: int):
+    """`merge_upsert` on the driver, over pyarrow tables: the same rows
+    and the same columns in the same order. `target` is None for an
+    empty slice. Every column that feeds an output column must already
+    carry that output column's Arrow type; the caller checks this
+    against the Spark form's schema. `now_us` is the stamp in UTC
+    microseconds (`now_micros`).
+
+    Acero joins cannot carry nested payloads, so the full-outer join
+    runs over (key, row index) pairs only and each side's rows are
+    then taken by index. As in Spark, a NULL key matches nothing on
+    either side, and a key repeated within the batch yields one row per
+    batch row."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    now = pa.scalar(now_us, pa.timestamp("us", tz="UTC"))
+    u_cols = [c for c in updates.column_names if c != key and c not in AUDIT_COLS]
+    if target is None:
+        stamp = pa.repeat(now, updates.num_rows)
+        return pa.Table.from_arrays(
+            [updates[key], *[updates[c] for c in u_cols], stamp, stamp],
+            names=[key, *u_cols, *AUDIT_COLS],
+        )
+    t_cols = [c for c in target.column_names if c != key and c not in AUDIT_COLS]
+    pairs = pa.table(
+        {key: target[key], "__t": np.arange(target.num_rows)}
+    ).join(
+        pa.table({key: updates[key], "__u": np.arange(updates.num_rows)}),
+        key, join_type="full outer",
+    )
+    ti, ui = (pairs[c].combine_chunks() for c in ("__t", "__u"))
+    t = target.select(
+        [c for c in target.column_names if c != key]
+    ).take(ti)
+    u = updates.select(u_cols).take(ui)
+    names, cols = [key], [pairs[key]]
+    for c in t_cols:
+        names.append(c)
+        cols.append(pc.coalesce(u[c], t[c]) if c in u_cols else t[c])
+    for c in u_cols:
+        if c not in t_cols:
+            names.append(c)
+            cols.append(u[c])
+    cols.append(
+        pc.coalesce(t["created_at"], now)
+        if "created_at" in t.column_names else pa.repeat(now, len(ti))
+    )
+    cols.append(
+        pc.if_else(ui.is_valid(), now, t["updated_at"])
+        if "updated_at" in t.column_names else pa.repeat(now, len(ti))
+    )
+    return pa.Table.from_arrays(cols, names=names + list(AUDIT_COLS))
+
+
 def merge_upsert_deletes(
     target: DataFrame | None,
     updates: DataFrame,

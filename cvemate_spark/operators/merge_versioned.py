@@ -38,7 +38,9 @@ Layout under `path/`:
     bucket=<i>/g-<hex>/        immutable per-bucket generation (parquet,
                                optional _KEYBLOOM.json sidecar); Spark
                                writes it, or pyarrow on the driver when
-                               the write is small (LOCAL_WRITE_BYTES)
+                               the write is small (LOCAL_WRITE_BYTES),
+                               as do small default upserts, which also
+                               merge on the driver
     _packed/pg-<hex>/          packed base: Spark-written b<i>.parquet
                                files and pyarrow-coalesced r<lo>-<hi>.parquet
                                range files (INT64 timestamps; range files
@@ -1115,31 +1117,40 @@ def _total_bytes(file_lists) -> int:
     return sum(os.path.getsize(f) for fs in file_lists for f in fs)
 
 
+def _parquet_file(f: str):
+    """`f` opened with pyarrow, INT96 timestamps decoded at microseconds
+    (the unit Spark reads them in); None when pyarrow cannot read it as
+    Spark does: it holds INT96 timestamps and was not written by Spark
+    (a packed file), and pyarrow writes an instant before 1970 with a
+    negative time of day, which its own microsecond decoding shifts by
+    2^64 ns."""
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(f, coerce_int96_timestamp_unit="us")
+    md = pf.metadata
+    if not md.created_by.startswith("parquet-mr") and any(
+        md.schema.column(c).physical_type == "INT96"
+        for c in range(md.num_columns)
+    ):
+        return None
+    return pf
+
+
 def _key_rows_local(files: list[str], key: str, value, columns=None):
     """The rows of each parquet file whose `key` equals `value`, as one
-    pyarrow table per file (INT96 timestamps decoded at microseconds,
-    the unit Spark reads them in), or None when pyarrow cannot read
-    some file as Spark does:
-    - its key column does not compare with `value` in Arrow exactly as
-      Spark's `key = value` does: only a str against a string column
-      and an int in the 64-bit range against an integer column qualify;
-    - it holds INT96 timestamps and was not written by Spark (a packed
-      file): pyarrow writes an instant before 1970 with a negative time
-      of day, which its own microsecond decoding shifts by 2^64 ns.
-    The key column is decoded first; a file without a match decodes
-    nothing else."""
+    pyarrow table per file, or None when pyarrow cannot read some file
+    as Spark does (`_parquet_file`) or its key column does not compare
+    with `value` in Arrow exactly as Spark's `key = value` does: only a
+    str against a string column and an int in the 64-bit range against
+    an integer column qualify. The key column is decoded first; a file
+    without a match decodes nothing else."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
     out = []
     for f in files:
-        pf = pq.ParquetFile(f, coerce_int96_timestamp_unit="us")
-        md = pf.metadata
-        if not md.created_by.startswith("parquet-mr") and any(
-            md.schema.column(c).physical_type == "INT96"
-            for c in range(md.num_columns)
-        ):
+        pf = _parquet_file(f)
+        if pf is None:
             return None
         i = pf.schema_arrow.get_field_index(key)
         t = pf.schema_arrow.field(i).type if i >= 0 else None
@@ -1216,28 +1227,35 @@ class _SparkReadNeeded(Exception):
     lookup falls back to the Spark read."""
 
 
-def _check_null_map(typ) -> None:
-    """Raise `_SparkReadNeeded` for a map type whose NULL values
-    `createDataFrame` turns into empty maps: before pyarrow 17 it
-    rebuilds a map column with nested or timestamp keys or values
-    without the column's validity (SPARK-48302)."""
+def _check_null_maps(a) -> None:
+    """Raise `_SparkReadNeeded` when Arrow array `a` holds, at any
+    depth, NULL maps with nested or timestamp keys or values:
+    `createDataFrame` turns those into empty maps before pyarrow 17,
+    because it rebuilds such a map column without the column's
+    validity (SPARK-48302)."""
     import pyarrow as pa
 
-    if any(
-        pa.types.is_nested(t) or pa.types.is_timestamp(t)
-        for t in (typ.key_type, typ.item_type)
-    ):
-        raise _SparkReadNeeded
+    t = a.type
+    if pa.types.is_struct(t):
+        for j in range(t.num_fields):
+            _check_null_maps(a.field(j))
+    elif pa.types.is_map(t):
+        if a.null_count and any(
+            pa.types.is_nested(x) or pa.types.is_timestamp(x)
+            for x in (t.key_type, t.item_type)
+        ):
+            raise _SparkReadNeeded
+        _check_null_maps(a.keys)
+        _check_null_maps(a.items)
+    elif pa.types.is_list(t):
+        _check_null_maps(a.values)
 
 
 def _typed_nulls(n: int, dt):
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
-    typ = to_arrow_type(dt)
-    if n and pa.types.is_map(typ):
-        _check_null_map(typ)
-    return pa.nulls(n, typ)
+    return pa.nulls(n, to_arrow_type(dt))
 
 
 def _conform_array(a, dt):
@@ -1280,8 +1298,6 @@ def _conform_array(a, dt):
                         pa.field("value", v.type)],
             )
             typ = pa.map_(k.type, v.type)
-            if a.null_count:
-                _check_null_map(typ)
         return pa.Array.from_buffers(
             typ, len(a), a.buffers()[:2], a.null_count, a.offset, [child]
         )
@@ -1289,25 +1305,49 @@ def _conform_array(a, dt):
     return a if a.type == target else a.cast(target)
 
 
+def _slice_fields(schema) -> list:
+    """The fields of a slice read under the committed `schema`: every
+    column but `bucket`, all nullable, as a file scan reports them."""
+    from pyspark.sql.types import StructField
+
+    return [
+        StructField.fromJson(_as_nullable(f.jsonValue()))
+        for f in schema.fields if f.name != "bucket"
+    ]
+
+
+def _conform_table(t, fields: list, pmap: dict) -> list:
+    """The columns of one pyarrow table read from a generation file,
+    under the committed `fields` (`_slice_fields`): physical column
+    names mapped to logical ones (`pmap`), every column conformed by
+    `_conform_array`, a column missing from the file filled with typed
+    nulls."""
+    cols = []
+    for f in fields:
+        i = t.schema.get_field_index(pmap.get(f.name, f.name))
+        cols.append(
+            _conform_array(t.column(i).combine_chunks(), f.dataType)
+            if i >= 0 else _typed_nulls(t.num_rows, f.dataType)
+        )
+    return cols
+
+
 def _read_local(
     spark: SparkSession, tables: list, schema, schema_json: dict,
     ords: list[int] | None = None,
 ) -> DataFrame:
     """The local relation of per-file pyarrow tables (`_key_rows_local`)
-    under the committed schema: physical column names mapped to logical
-    ones, every column conformed by `_conform_array`, `bucket` dropped,
-    all fields nullable as a file scan reports them. With `ords` (one
-    per table) each row is tagged with its generation ordinal `__ord`,
-    as the Spark read tags a merge-on-read layer."""
+    under the committed schema (`_conform_table`). With `ords` (one per
+    table) each row is tagged with its generation ordinal `__ord`, as
+    the Spark read tags a merge-on-read layer. Raises
+    `_SparkReadNeeded` for rows `createDataFrame` would alter
+    (`_check_null_maps`)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     pmap = _phys_map(schema_json)
-    data = [
-        StructField.fromJson(_as_nullable(f.jsonValue()))
-        for f in schema.fields if f.name != "bucket"
-    ]
+    data = _slice_fields(schema)
     out = StructType(
         data if ords is None else data + [StructField("__ord", IntegerType(), False)]
     )
@@ -1317,17 +1357,15 @@ def _read_local(
         raise _SparkReadNeeded from e
     parts = [arrow_schema.empty_table()]
     for j, t in enumerate(tables):
-        cols = []
-        for f in data:
-            i = t.schema.get_field_index(pmap.get(f.name, f.name))
-            cols.append(
-                _conform_array(t.column(i).combine_chunks(), f.dataType)
-                if i >= 0 else _typed_nulls(t.num_rows, f.dataType)
-            )
+        cols = _conform_table(t, data, pmap)
         if ords is not None:
             cols.append(pa.array([ords[j]] * t.num_rows, pa.int32()))
         parts.append(pa.Table.from_arrays(cols, schema=arrow_schema))
-    return spark.createDataFrame(pa.concat_tables(parts), out)
+    table = pa.concat_tables(parts)
+    for col in table.columns:
+        for chunk in col.chunks:
+            _check_null_maps(chunk)
+    return spark.createDataFrame(table, out)
 
 
 def _norm_stat(v):
@@ -2760,27 +2798,32 @@ def _merge_bytes(full: dict, bucket_ids, batch: DataFrame) -> int | None:
     return s + _plan_bytes(batch)
 
 
-def _stage_local(staged: DataFrame, staging: str, pmap: dict | None) -> None:
-    """The local writer: collect `staged` (the rows plus their `bucket`
-    column) once with toArrow() and write each bucket's rows with
-    `_write_parquet` as one file under `staging/bucket=<i>/`, the
-    layout Spark's partitioned write leaves, under physical column
-    names when the table maps columns."""
-    import pyarrow.compute as pc
+def _collect_arrow(df: DataFrame):
+    """`df` collected once with toArrow(), every column under its
+    all-nullable type, as a file scan reports it: toArrow() casts the
+    collected batches to the frame's schema, which fails on a
+    non-nullable field under a NULL struct or array element."""
     from pyspark.sql.types import StructField
 
-    # toArrow() casts the collected batches to the frame's schema, which
-    # fails on a non-nullable field under a NULL struct or array element:
-    # collect every column under its all-nullable type, as a file scan
-    # reports it
     cols = []
-    for f in staged.schema.fields:
+    for f in df.schema.fields:
         typ = StructField.fromJson(_as_nullable(f.jsonValue())).dataType
         cols.append(
             F.col(f.name) if typ == f.dataType
             else F.col(f.name).cast(typ).alias(f.name)
         )
-    t = staged.select(*cols).toArrow()
+    return df.select(*cols).toArrow()
+
+
+def _stage_local(staged, staging: str, pmap: dict | None) -> None:
+    """The local writer: the rows plus their `bucket` column, as an
+    Arrow table or a frame collected once (`_collect_arrow`), each
+    bucket's rows written with `_write_parquet` as one file under
+    `staging/bucket=<i>/`, the layout Spark's partitioned write leaves,
+    under physical column names when the table maps columns."""
+    import pyarrow.compute as pc
+
+    t = _collect_arrow(staged) if isinstance(staged, DataFrame) else staged
     order = pc.sort_indices(t.column("bucket"))
     t = t.take(order)
     runs = pc.value_counts(t.column("bucket"))  # ascending after the sort
@@ -2836,7 +2879,7 @@ def _stage_spark(
 
 
 def _write_generations(
-    df: DataFrame, path: str, key: str, n_buckets: int,
+    df, path: str, key: str, n_buckets: int,
     buckets: list[int] | None = None,
     sort_by: list[str] | None = None,
     max_records_per_file: int | None = None,
@@ -2848,7 +2891,9 @@ def _write_generations(
     """Bucket the rows and land each written bucket as an immutable
     `bucket=<i>/g-<hex>` generation dir (a rename off a staging dir —
     new names, nothing swapped). Returns {bucket id -> generation name}
-    for the buckets that got rows.
+    for the buckets that got rows. `df` is a frame, or an Arrow table
+    whose rows already carry their `bucket` (a driver-side merge's
+    output), which always takes the local writer.
 
     Two writers fill the staging dir. When the caller's driver-side
     size estimate `est_bytes` (see LOCAL_WRITE_BYTES; None = unknown)
@@ -2868,16 +2913,18 @@ def _write_generations(
     same for both writers."""
     gen = f"g-{uuid.uuid4().hex[:12]}"
     staging = f"{path}/.stage-{gen}"
-    b = bucket_expr(key, n_buckets)
-    staged = df.withColumn("bucket", b)
     width = len(buckets) if buckets is not None else n_buckets
     out: dict[str, str] = {}
-    local = (
-        est_bytes is not None
-        and est_bytes <= LOCAL_WRITE_BYTES
-        and not (sort_by or max_records_per_file or packed)
-        and _arrow_schema(staged.schema) is not None
-    )
+    if isinstance(df, DataFrame):
+        staged = df.withColumn("bucket", bucket_expr(key, n_buckets))
+        local = (
+            est_bytes is not None
+            and est_bytes <= LOCAL_WRITE_BYTES
+            and not (sort_by or max_records_per_file or packed)
+            and _arrow_schema(staged.schema) is not None
+        )
+    else:  # the driver-side merge's rows, with their buckets
+        staged, local = df, True
     try:
         if local:
             _stage_local(staged, staging, pmap)
@@ -2994,6 +3041,109 @@ def _write_generations(
     return out
 
 
+def _collect_batch(updates: DataFrame, key: str, n_buckets: int):
+    """A default upsert's batch collected on the driver with its rows'
+    `bucket` (one toArrow() job), or None when it keeps the Spark
+    merge: its plan estimate exceeds LOCAL_WRITE_BYTES, its key is not
+    a string or integer column (the key types an Arrow join matches
+    exactly as Spark's join does), it has a column named `bucket`, or
+    pyarrow cannot carry its schema."""
+    from pyspark.sql.types import IntegralType, StringType
+
+    if (
+        key not in updates.columns
+        or "bucket" in updates.columns
+        or not isinstance(
+            updates.schema[key].dataType, (StringType, IntegralType)
+        )
+        or _arrow_schema(updates.schema) is None
+        or _plan_bytes(updates) > LOCAL_WRITE_BYTES
+    ):
+        return None
+    return _collect_arrow(
+        updates.withColumn("bucket", bucket_expr(key, n_buckets))
+    )
+
+
+def _merge_local(
+    spark: SparkSession, path: str, full: dict, touched: list[int],
+    batch, updates: DataFrame, key: str, now,
+):
+    """The default upsert of a collected batch (`_collect_batch`) into
+    the touched slice, on the driver: the slice read with pyarrow and
+    conformed to the committed schema (`_conform_table`), then
+    `merge_upsert_arrow`. Returns (the merged rows with their `bucket`
+    as an Arrow table, the merged schema JSON), or None when the commit
+    must take the Spark merge:
+    - a touched bucket is packed, or has merge-on-read deltas or
+      deletion vectors;
+    - the slice's committed bytes plus the batch's plan estimate exceed
+      LOCAL_WRITE_BYTES, or the slice has no stats;
+    - pyarrow cannot read some slice file as Spark does
+      (`_parquet_file`), or cannot carry the merged schema;
+    - an input column's type differs from the type of the output column
+      it feeds in the Spark form (`merge_upsert` over the same schemas,
+      analyzed and never run), e.g. an int batch key against a long
+      key column, which Spark widens."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    from .merge import AUDIT_COLS, merge_upsert_arrow, now_micros
+
+    stored = full.get("schema")
+    gens = {
+        i: full["buckets"][i] for i in map(str, touched) if i in full["buckets"]
+    }
+    fields, stub = [], None
+    if gens:
+        if stored is None or any(
+            _is_packed_entry(g)
+            or (full.get("deltas") or {}).get(i)
+            or (full.get("dv") or {}).get(i)
+            for i, g in gens.items()
+        ):
+            return None
+        s = _slice_bytes(full, gens)
+        if s is None or s + _plan_bytes(updates) > LOCAL_WRITE_BYTES:
+            return None
+        fields = _slice_fields(StructType.fromJson(stored))
+        stub = spark.createDataFrame([], StructType(fields))
+    out = merge_upsert(stub, updates, key=key, now=now).schema
+    if _arrow_schema(out) is None:
+        return None
+    want = {f.name: _type_fingerprint(f.dataType.jsonValue()) for f in out}
+    feeds = fields + [f for f in updates.schema if f.name not in AUDIT_COLS]
+    if any(
+        _type_fingerprint(f.dataType.jsonValue()) != want[f.name]
+        for f in feeds
+    ):
+        return None
+    target = None
+    if gens:
+        pmap = _phys_map(stored)
+        names = [f.name for f in fields] + ["bucket"]
+        parts = []
+        for i, g in gens.items():
+            for fp in _data_files(f"{path}/bucket={i}/{g}"):
+                pf = _parquet_file(fp)
+                if pf is None:
+                    return None
+                t = pf.read()
+                # bucket_expr's type: pmod of a long
+                bucket = pa.repeat(pa.scalar(int(i), pa.int64()), t.num_rows)
+                parts.append(pa.Table.from_arrays(
+                    _conform_table(t, fields, pmap) + [bucket], names=names
+                ))
+        target = pa.concat_tables(parts)
+    u_fields = _slice_fields(updates.schema)
+    batch = pa.Table.from_arrays(
+        _conform_table(batch, u_fields, {}) + [batch["bucket"]],
+        names=[f.name for f in u_fields] + ["bucket"],
+    )
+    merged = merge_upsert_arrow(target, batch, key, now_micros(spark, now))
+    return merged, json.loads(out.json())
+
+
 class ConcurrentWriteConflict(RuntimeError):
     """An optimistic merge lost its commit race: between its snapshot
     read and its commit attempt, another writer committed a version
@@ -3025,72 +3175,105 @@ def _prepare_scoped_merge(
     batch; otherwise {touched, new_gens, stats, batch_schema, files,
     bytes} for a commit-assembly step to publish (serial or OCC).
 
+    A default upsert (no merger, deleted_col, mor_fold or constraints)
+    whose batch has a plan estimate of at most LOCAL_WRITE_BYTES is
+    collected once with its rows' buckets (`_collect_batch`, one job),
+    and the touched set is read off that collect. When the touched
+    slice is plain and small it is merged on the driver
+    (`_merge_local`: a pyarrow read, `merge_upsert_arrow`) and written
+    by the local writer, so the commit runs that one job. Otherwise
+    the Spark merge below runs with the collected touched set. Either
+    way the schema union, the out-of-bucket check, the renames, the
+    stats and the blooms are the same.
+
     `touched_hint` = (n_buckets, bucket ids) a caller already computed
     for THIS batch (the OCC admission path collects it for the commit
     intent): honored only when the layout matches the snapshot's, so a
     raced rebucket can never smuggle in stale bucket ids."""
+    import pyarrow.compute as pc
+
     key = meta["key"]
     # the layout (bucket count) comes from the SNAPSHOT manifest, not
     # the static meta: a rebucket_versioned commit may have changed it
     n_buckets = full["n_buckets"]
-    b = bucket_expr(key, n_buckets)
+    fold = meta.get("mor_fold")
+    # table-level CHECK constraints (recorded at creation) plus any
+    # per-call additions
+    effective = dict(meta.get("constraints") or {})
+    effective.update(constraints or {})
+    # a default upsert's batch is collected once with its buckets: the
+    # touched set is read off it, and a small slice merges on the
+    # driver (`_merge_local`)
+    batch = None
+    if merger is None and deleted_col is None and not fold and not effective:
+        batch = _collect_batch(updates, key, n_buckets)
     if touched_hint is not None and touched_hint[0] == n_buckets:
         touched = sorted(int(x) for x in touched_hint[1])
+    elif batch is not None:
+        touched = sorted(pc.unique(batch["bucket"]).to_pylist())
     else:
         # bounded driver-side state: ≤ n_buckets ints, never row data
         touched = sorted(
             r[0]
-            for r in updates.select(b.alias("__b")).distinct().collect()
+            for r in updates.select(
+                bucket_expr(key, n_buckets).alias("__b")
+            ).distinct().collect()
         )
     if not touched:
         return None
-    # the target slice is read under the COMMITTED schema (a column an
-    # earlier merge added may be absent from these buckets' files),
-    # DELTA-FOLDED (merge-on-read generations supersede per key), and
-    # DV-APPLIED: the rewrite FOLDS the deltas and deletion vectors
-    # (neither survives into the new generation) and the commit
-    # assembly clears both kinds of refs
-    target = _read_snapshot_slice(spark, path, full, touched, key)
-    fold = meta.get("mor_fold")
-    if merger is not None:
-        merged = merger(target, updates)
-    elif deleted_col is not None:
-        if fold:
-            # tombstone deletes key on the bucket key ALONE — on a
-            # keep-latest fold table (composite key) that would delete
-            # every row of the key's group; route deletes through
-            # merge_deletes_dv or a custom merger instead
-            raise ValueError(
-                f"table {path} records a mor_fold policy (keys="
-                f"{fold['keys']}): deleted_col tombstones key on the "
-                f"bucket key alone and would collapse composite-key "
-                "groups — use merge_deletes_dv or a custom merger"
-            )
-        merged = merge_upsert_deletes(
-            target, updates, key=key, deleted_col=deleted_col, now=now
-        )
-    elif fold:
-        # a recorded keep-latest policy binds EVERY merge surface, not
-        # just the MOR leg: the default upsert keys on the bucket key
-        # alone, so a composite-key target would fan out in its
-        # full-outer join and the corrupted result would commit
-        # silently. Route the default CoW leg through the same
-        # comparator the read-side fold and the MOR legs use.
-        from .merge import keep_latest_merge
-
-        merged = keep_latest_merge(
-            target, updates,
-            keys=list(fold["keys"]),
-            order_by=[
-                F.desc(c) if str(d).lower() == "desc" else F.asc(c)
-                for c, d in fold["order_by"]
-            ],
-            allow_missing_columns=True,
-        )
+    local = (
+        _merge_local(spark, path, full, touched, batch, updates, key, now)
+        if batch is not None else None
+    )
+    if local is not None:
+        merged, batch_schema = local
     else:
-        merged = merge_upsert(target, updates, key=key, now=now)
+        # the target slice is read under the COMMITTED schema (a column
+        # an earlier merge added may be absent from these buckets'
+        # files), DELTA-FOLDED (merge-on-read generations supersede per
+        # key), and DV-APPLIED: the rewrite FOLDS the deltas and
+        # deletion vectors (neither survives into the new generation)
+        # and the commit assembly clears both kinds of refs
+        target = _read_snapshot_slice(spark, path, full, touched, key)
+        if merger is not None:
+            merged = merger(target, updates)
+        elif deleted_col is not None:
+            if fold:
+                # tombstone deletes key on the bucket key ALONE — on a
+                # keep-latest fold table (composite key) that would
+                # delete every row of the key's group; route deletes
+                # through merge_deletes_dv or a custom merger instead
+                raise ValueError(
+                    f"table {path} records a mor_fold policy (keys="
+                    f"{fold['keys']}): deleted_col tombstones key on the "
+                    f"bucket key alone and would collapse composite-key "
+                    "groups — use merge_deletes_dv or a custom merger"
+                )
+            merged = merge_upsert_deletes(
+                target, updates, key=key, deleted_col=deleted_col, now=now
+            )
+        elif fold:
+            # a recorded keep-latest policy binds EVERY merge surface,
+            # not just the MOR leg: the default upsert keys on the
+            # bucket key alone, so a composite-key target would fan out
+            # in its full-outer join and the corrupted result would
+            # commit silently. Route the default CoW leg through the
+            # same comparator the read-side fold and the MOR legs use.
+            from .merge import keep_latest_merge
 
-    batch_schema = _schema_of(merged)
+            merged = keep_latest_merge(
+                target, updates,
+                keys=list(fold["keys"]),
+                order_by=[
+                    F.desc(c) if str(d).lower() == "desc" else F.asc(c)
+                    for c, d in fold["order_by"]
+                ],
+                allow_missing_columns=True,
+            )
+        else:
+            merged = merge_upsert(target, updates, key=key, now=now)
+
+        batch_schema = _schema_of(merged)
     # a TYPE conflict against the snapshot schema raises HERE — before
     # a single byte lands — so a rejected batch leaves no orphans and
     # no bricked manifest (the commit step re-unions against whatever
@@ -3100,14 +3283,11 @@ def _prepare_scoped_merge(
     )
     pmap = _phys_map(union0)
 
-    # table-level CHECK constraints (recorded at creation) plus any
-    # per-call additions, enforced on the merged slice BEFORE a
+    # CHECK constraints are enforced on the merged slice BEFORE a
     # single byte lands: a violating batch is rejected atomically
     # (no generations, no manifest, no orphans — readers never
     # know). The slice is persisted so the check and the write
     # compute the merge join once, not twice.
-    effective = dict(meta.get("constraints") or {})
-    effective.update(constraints or {})
     persisted = False
     if effective:
         merged = merged.persist()
@@ -3116,7 +3296,10 @@ def _prepare_scoped_merge(
         _enforce_constraints(merged, effective, path)
         new_gens = _write_generations(
             merged, path, key, n_buckets, touched, pmap=pmap,
-            est_bytes=_merge_bytes(full, touched, updates),
+            est_bytes=(
+                None if local is not None
+                else _merge_bytes(full, touched, updates)
+            ),
         )
     finally:
         if persisted:
@@ -3271,11 +3454,16 @@ def merge_scoped_versioned(
 
     A commit whose touched slice (committed bytes, from the manifest
     stats) plus the batch (Spark's plan estimate) is at most
-    LOCAL_WRITE_BYTES writes its generations on the driver: one
-    toArrow() collect of the merged slice, one pyarrow file per bucket
-    (`_write_generations`). Larger commits, and batches without an
-    estimate, use the Spark writer. Either way the schema union and
-    CHECK constraints run before any byte lands.
+    LOCAL_WRITE_BYTES runs on the driver. A default upsert into plain
+    classic generations (no deltas, no deletion vectors) collects the
+    batch once, reads the slice with pyarrow, upserts in Arrow and
+    writes one pyarrow file per bucket: one Spark job in all
+    (`_prepare_scoped_merge`). Other small commits merge in Spark and
+    write their generations on the driver: one toArrow() collect of
+    the merged slice (`_write_generations`). Larger commits, and
+    batches without an estimate, use the Spark merge and writer.
+    Either way the schema union and CHECK constraints run before any
+    byte lands.
 
     Returns {version, n_buckets, buckets_touched, files_rewritten,
     bytes_rewritten}.

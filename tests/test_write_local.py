@@ -311,11 +311,16 @@ def test_no_estimate_keeps_the_spark_writer(spark, tmp_path):
     assert _writers(path, {"buckets": {}}, mv._load_manifest_full(path, 2)) == {"parquet-mr"}
 
 
-# A small copy-on-write commit on a 16-bucket table: the touched-set
-# distinct (2 jobs) plus the merged slice's collect (3) on the local
-# writer; the Spark writer's four write stages replace the collect.
-COMMIT_JOBS_LOCAL = 5
+# A small copy-on-write commit on a 16-bucket table: on the driver it is
+# the batch's one toArrow() collect (its buckets give the touched set;
+# the slice is read with pyarrow, merged in Arrow and written by the
+# local writer). With the bound at 0 it is the touched-set distinct (2
+# jobs) plus the Spark merge and writer's four stages.
+COMMIT_JOBS_LOCAL = 1
 COMMIT_JOBS_SPARK = 6
+# A batch under the bound over a slice above it: the batch collect,
+# then the Spark merge and writer with the collected touched set.
+COMMIT_JOBS_BIG_SLICE = 5
 
 
 def test_small_commit_job_counts(spark, tmp_path):
@@ -324,26 +329,32 @@ def test_small_commit_job_counts(spark, tmp_path):
     small = _feed(spark, tmp_path, "small", [(f"CVE-2024-{i:04d}", -i, None) for i in range(0, 200, 9)],
                   "id string, n long, desc string")
     got = {}
-    for bound in (mv.LOCAL_WRITE_BYTES, 0):
-        path = str(tmp_path / f"t{bound}")
+    for name, bound in (("local", None), ("big_slice", mv._plan_bytes(small)), ("spark", 0)):
+        path = str(tmp_path / name)
         mv.init_bucket_table_versioned(path, key="id", n_buckets=16)
-        saved, mv.LOCAL_WRITE_BYTES = mv.LOCAL_WRITE_BYTES, bound
+        mv.merge_scoped_versioned(spark, path, base, now=T0)
+        saved = mv.LOCAL_WRITE_BYTES
+        mv.LOCAL_WRITE_BYTES = saved if bound is None else bound
         try:
-            mv.merge_scoped_versioned(spark, path, base, now=T0)
-            got[bound] = _jobs(
-                spark, f"commit-{bound}",
+            got[name] = _jobs(
+                spark, f"commit-{name}",
                 lambda: mv.merge_scoped_versioned(spark, path, small, now=T1),
             )
         finally:
             mv.LOCAL_WRITE_BYTES = saved
         assert mv._load_manifest_full(path, 3)["n_buckets"] == 16
-    assert got == {mv.LOCAL_WRITE_BYTES: COMMIT_JOBS_LOCAL, 0: COMMIT_JOBS_SPARK}
+    assert got == {
+        "local": COMMIT_JOBS_LOCAL, "big_slice": COMMIT_JOBS_BIG_SLICE,
+        "spark": COMMIT_JOBS_SPARK,
+    }
 
 
 def test_local_write_bound_is_the_committed_crossover():
     """LOCAL_WRITE_BYTES is the largest slice size at which the local
     writer beat the Spark writer in WRITECROSSOVER.json, among the
-    sizes whose collected slice fits the driver."""
+    sizes whose collected slice fits the driver; the driver-side commit
+    shares the bound, and beat both other forms at every size up to
+    it."""
     art = json.loads(
         (Path(__file__).resolve().parents[1] / "WRITECROSSOVER.json").read_text()
     )
@@ -352,3 +363,6 @@ def test_local_write_bound_is_the_committed_crossover():
         if r["local_s"] < r["spark_s"] and r["fits_driver"]
     ]
     assert mv.LOCAL_WRITE_BYTES == art["local_write_bytes"] == max(wins)
+    for r in art["rows"]:
+        if 1 << r["log2"] <= mv.LOCAL_WRITE_BYTES:
+            assert r["local_commit_s"] < min(r["local_s"], r["spark_s"]), r

@@ -63,6 +63,11 @@ sys.path.insert(0, REPO)
 # default cap is 90% of the free space, under the cwd)
 SPILL_DIR = os.path.join(REPO, ".scratch", "duckdb_spill")
 SPILL_SHARE = 0.5
+# DuckDB's default memory limit is 80% of the host's RAM. The sf1
+# sweep's Python process, which DuckDB runs inside, once reached 8.5 GB
+# beside the Spark driver and was killed by the kernel's OOM killer;
+# this cap bounds DuckDB's share and makes it spill instead
+MEMORY_LIMIT = "3GB"
 
 # pairs-oracle settings per query — MUST mirror the builders in
 # cvemate_spark/queries/dedup_ops.py
@@ -173,11 +178,13 @@ def _labels_df(spark, sf_dir: str, name: str):
 
 def cap_spill(con) -> int:
     """Point `con`'s spill at SPILL_DIR and cap it at SPILL_SHARE of
-    that disk's free bytes; returns the cap."""
+    that disk's free bytes, and cap DuckDB's memory at MEMORY_LIMIT so
+    it spills instead of growing the process; returns the spill cap."""
     os.makedirs(SPILL_DIR, exist_ok=True)
     cap = int(shutil.disk_usage(SPILL_DIR).free * SPILL_SHARE)
     con.execute(f"SET temp_directory = '{SPILL_DIR}'")
     con.execute(f"SET max_temp_directory_size = '{cap}B'")
+    con.execute(f"SET memory_limit = '{MEMORY_LIMIT}'")
     return cap
 
 

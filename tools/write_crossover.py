@@ -6,12 +6,20 @@ versioned table whose generations hold about 2^k bytes of parquet (a
 string key, a long, a nested struct and a 200-character text column),
 then times one `merge_scoped_versioned` commit of a 64-row parquet
 batch that updates four keys in every bucket, so the commit rewrites
-the whole 2^k-byte slice. Min over `reps` passes, alternating the writers:
+the whole 2^k-byte slice. Min over `reps` passes, alternating the three
+forms of the commit:
 
-- local_s: the local writer (LOCAL_WRITE_BYTES unbounded): one
-  toArrow() collect of the merged slice, one pyarrow file per bucket;
-- spark_s: the Spark writer (LOCAL_WRITE_BYTES = 0): the bucket
-  repartition, its write stage and the partitioned file commit.
+- local_commit_s: the whole commit on the driver (LOCAL_WRITE_BYTES
+  unbounded): one toArrow() collect of the batch with its buckets, a
+  pyarrow read of the slice, the Arrow upsert and one pyarrow file per
+  bucket;
+- local_s: the Spark merge and the local writer (LOCAL_WRITE_BYTES
+  unbounded, the batch collect switched off): the touched-set distinct,
+  one toArrow() collect of the merged slice, one pyarrow file per
+  bucket;
+- spark_s: the Spark merge and the Spark writer (LOCAL_WRITE_BYTES =
+  0): the bucket repartition, its write stage and the partitioned file
+  commit.
 
 Each row also records `arrow_bytes`, the in-memory size of the slice
 the local writer collects (about 1.1x the parquet bytes for this
@@ -22,7 +30,8 @@ ARROW_EXPANSION times its size. The benchmark's CVE table collects
 Arrow batches in the JVM while the driver process holds the table and
 its bucket-sorted copy. The session runs with the 2 GB driver the
 benchmark uses. `merge_versioned.LOCAL_WRITE_BYTES` is the largest 2^k
-at which local_s < spark_s and the slice fits the driver. Writes
+at which local_s < spark_s and the slice fits the driver; the driver
+commit shares that bound. Writes
 WRITECROSSOVER.json with the recording context (cpus, git rev, steal
 %, driver memory) and prints one JSON line per size.
 """
@@ -75,14 +84,18 @@ def _rows(spark, n: int, salt: str):
     )
 
 
-def _timed_commit(spark, path: str, batch, bound: int) -> float:
+def _timed_commit(spark, path: str, batch, bound: int, merge_local: bool = True) -> float:
     saved, mv.LOCAL_WRITE_BYTES = mv.LOCAL_WRITE_BYTES, bound
+    collect = mv._collect_batch
+    if not merge_local:
+        mv._collect_batch = lambda *a: None
     try:
         t0 = time.perf_counter()
         r = mv.merge_scoped_versioned(spark, path, batch)
         dt = time.perf_counter() - t0
     finally:
         mv.LOCAL_WRITE_BYTES = saved
+        mv._collect_batch = collect
     assert r["buckets_touched"] == N_BUCKETS, r
     # drop the displaced generations so the disk holds one slice
     mv.vacuum_bucket_versions(path, keep=1)
@@ -109,17 +122,20 @@ def measure(spark, root: str, log2: int, reps: int) -> dict:
     batch = spark.read.parquet(feed)
     arrow_bytes = mv.read_bucket_table_versioned(spark, path).toArrow().nbytes
     inf = 1 << 62
-    _timed_commit(spark, path, batch, inf)  # warm both writers
+    _timed_commit(spark, path, batch, inf)  # warm every form
+    _timed_commit(spark, path, batch, inf, merge_local=False)
     _timed_commit(spark, path, batch, 0)
-    local, remote = [], []
+    commit, local, remote = [], [], []
     for _ in range(reps):
-        local.append(_timed_commit(spark, path, batch, inf))
+        commit.append(_timed_commit(spark, path, batch, inf))
+        local.append(_timed_commit(spark, path, batch, inf, merge_local=False))
         remote.append(_timed_commit(spark, path, batch, 0))
     shutil.rmtree(path)
     shutil.rmtree(feed)
     return {
         "log2": log2, "rows": n, "bytes": nbytes, "arrow_bytes": arrow_bytes,
         "fits_driver": (1 << log2) * ARROW_EXPANSION <= DRIVER_BYTES // 8,
+        "local_commit_s": round(min(commit), 4),
         "local_s": round(min(local), 4), "spark_s": round(min(remote), 4),
     }
 
