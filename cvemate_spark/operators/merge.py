@@ -93,6 +93,10 @@ def merge_upsert(
     return joined.select(*out_cols)
 
 
+# Spark's cast of a `now` literal, per (session time zone, literal)
+_NOW_CASTS: dict[tuple, int] = {}
+
+
 def now_micros(spark: SparkSession, now) -> int:
     """The instant `merge_upsert` stamps for `now`, in UTC microseconds.
     A datetime (naive = local time, as `F.lit` reads it) or None (the
@@ -100,7 +104,9 @@ def now_micros(spark: SparkSession, now) -> int:
     `TimestampType().toInternal`; any other literal, such as a
     "yyyy-mm-dd hh:mm:ss" string, through Spark's own cast on a one-row
     relation built from Arrow, which is local: its collect runs no
-    job."""
+    job. That cast depends only on the literal and the session time
+    zone, so its result is memoized per pair (`_NOW_CASTS`): a commit
+    repeating a literal builds no frame."""
     import datetime
 
     import pyarrow as pa
@@ -110,11 +116,14 @@ def now_micros(spark: SparkSession, now) -> int:
         now = datetime.datetime.now(datetime.timezone.utc)
     if isinstance(now, datetime.datetime):
         return TimestampType().toInternal(now)
-    return (
-        spark.createDataFrame(pa.table({"x": [0]}))
-        .select(F.unix_micros(F.lit(now).cast("timestamp")))
-        .collect()[0][0]
-    )
+    memo = (spark.conf.get("spark.sql.session.timeZone"), type(now), now)
+    if memo not in _NOW_CASTS:
+        _NOW_CASTS[memo] = (
+            spark.createDataFrame(pa.table({"x": [0]}))
+            .select(F.unix_micros(F.lit(now).cast("timestamp")))
+            .collect()[0][0]
+        )
+    return _NOW_CASTS[memo]
 
 
 def merge_upsert_arrow(target, updates, key: str, now_us: int):
@@ -223,7 +232,9 @@ def table_diff(
     surface: applying the diff to v1 through `merge_upsert_deletes`
     (or the generic `apply_change_feed`) reproduces v2 exactly (tested
     in test_merge_laws); one key-partitioned full-outer join,
-    bucketable to exchange-free at scale."""
+    bucketable to exchange-free at scale. `table_diff_arrow` is its
+    driver-side twin over pyarrow tables, which small versioned change
+    feeds use."""
     keys = [key] if isinstance(key, str) else list(key)
     cols = [c for c in v1.columns if c not in keys and c in v2.columns]
     cond = F.lit(True)
@@ -260,6 +271,96 @@ def table_diff(
             change.alias("change"),
         )
         .filter(F.col("change") != "nochange")
+    )
+
+
+def _distinct_from(a, b):
+    """`NOT (a <=> b)` per row of two same-typed Arrow arrays, as Spark
+    orders values: NULL equals NULL at any depth, NaN equals NaN and
+    -0.0 equals 0.0; structs compare field by field, lists by length
+    and then element by element. Never NULL. Maps are not comparable
+    (Spark rejects them too)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    an, bn = a.is_null(), b.is_null()
+    both = pc.and_(pc.invert(an), pc.invert(bn))
+    t = a.type
+    if pa.types.is_struct(t):
+        inner = pa.repeat(False, len(a))
+        for j in range(t.num_fields):
+            inner = pc.or_(inner, _distinct_from(a.field(j), b.field(j)))
+    elif pa.types.is_list(t):
+        la, lb = pc.list_value_length(a), pc.list_value_length(b)
+        inner = pc.fill_null(pc.not_equal(la, lb), False)
+        # rows whose lists both exist with one length: their flattened
+        # values line up element by element
+        same = pc.and_(both, pc.invert(inner))
+        a2, b2 = a.filter(same), b.filter(same)
+        hit = _distinct_from(a2.flatten(), b2.flatten())
+        rows = np.zeros(len(a2), dtype=bool)
+        rows[pc.list_parent_indices(a2).filter(hit).to_numpy()] = True
+        inner = pc.replace_with_mask(inner, same, pa.array(rows))
+    elif pa.types.is_floating(t):
+        inner = pc.and_(
+            pc.not_equal(a, b), pc.invert(pc.and_(pc.is_nan(a), pc.is_nan(b)))
+        )
+    else:
+        inner = pc.not_equal(a, b)
+    return pc.or_(pc.xor(an, bn), pc.fill_null(pc.and_(both, inner), False))
+
+
+def table_diff_arrow(v1, v2, keys: list[str]):
+    """`table_diff` on the driver, over two pyarrow tables with the same
+    columns and types: the same rows, with the key columns first, then
+    v1's other columns in order, then `change` (NULL-free). Key columns
+    must be string or integer columns, the types an Acero join matches
+    exactly as Spark's equi-join does.
+
+    Acero joins cannot carry nested payloads, so the full-outer join
+    runs over (keys, row index) only and each side's rows are then
+    taken by index. As in `table_diff`, a NULL key part matches nothing,
+    `insert` / `delete` follow the NULL-ness of `keys[0]` on each side,
+    a matched pair is an update when some column differs under Spark's
+    `<=>` (`_distinct_from`), and the payload is the surviving row's."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    cols = [c for c in v1.column_names if c not in keys]
+    pairs = pa.table(
+        {**{k: v1[k] for k in keys}, "__a": np.arange(v1.num_rows)}
+    ).join(
+        pa.table({**{k: v2[k] for k in keys}, "__b": np.arange(v2.num_rows)}),
+        keys, join_type="full outer",
+    )
+
+    def at(t, c, idx):
+        return t[c].take(idx).combine_chunks()
+
+    ia, ib = (pairs[c].combine_chunks() for c in ("__a", "__b"))
+    ins = at(v1, keys[0], ia).is_null()
+    dele = pc.and_(pc.invert(ins), at(v2, keys[0], ib).is_null())
+    matched = pc.invert(pc.or_(ins, dele))
+    ma, mb = ia.filter(matched), ib.filter(matched)
+    upd = pa.repeat(False, len(ma))
+    for c in cols:
+        upd = pc.or_(upd, _distinct_from(at(v1, c, ma), at(v2, c, mb)))
+    changed = pc.replace_with_mask(pc.or_(ins, dele), matched, upd)
+    ia, ib = ia.filter(changed), ib.filter(changed)
+    ins, dele = ins.filter(changed), dele.filter(changed)
+    change = pc.if_else(ins, "insert", pc.if_else(dele, "delete", "update"))
+    # the payload is the surviving row's: v2's unless the row was
+    # deleted or v2's keys[0] is NULL, taken from v1 ++ v2
+    survived = pc.invert(at(v2, keys[0], ib).is_null())
+    pick = pc.if_else(survived, pc.add(ib, v1.num_rows), ia)
+    both = pa.concat_tables([v1.select(cols), v2.select(cols)])
+    payload = both.take(pick)
+    return pa.Table.from_arrays(
+        [pc.coalesce(at(v2, k, ib), at(v1, k, ia)) for k in keys]
+        + [payload[c] for c in cols] + [change],
+        names=keys + cols + ["change"],
     )
 
 

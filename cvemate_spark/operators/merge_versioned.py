@@ -40,7 +40,8 @@ Layout under `path/`:
                                writes it, or pyarrow on the driver when
                                the write is small (LOCAL_WRITE_BYTES),
                                as do small default upserts, which also
-                               merge on the driver
+                               merge on the driver; small change feeds
+                               read and diff them there too
     _packed/pg-<hex>/          packed base: Spark-written b<i>.parquet
                                files and pyarrow-coalesced r<lo>-<hi>.parquet
                                range files (INT64 timestamps; range files
@@ -1330,6 +1331,42 @@ def _conform_table(t, fields: list, pmap: dict) -> list:
             if i >= 0 else _typed_nulls(t.num_rows, f.dataType)
         )
     return cols
+
+
+def _read_slice_local(
+    path: str, gens: dict, fields: list, pmap: dict, with_bucket: bool = False
+):
+    """The rows of the classic generations `gens` ({bucket id:
+    generation}) read with pyarrow and conformed to the committed
+    `fields` (`_conform_table`) as one Arrow table, with each row's
+    `bucket` when `with_bucket`; None when pyarrow cannot read some
+    file as Spark does (`_parquet_file`). The files are read on a few
+    threads (pyarrow releases the GIL while it decodes)."""
+    import pyarrow as pa
+    from concurrent.futures import ThreadPoolExecutor
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    files = [
+        (i, fp) for i, g in gens.items()
+        for fp in _data_files(f"{path}/bucket={i}/{g}")
+    ]
+    pfs = [_parquet_file(fp) for _, fp in files]
+    if any(pf is None for pf in pfs):
+        return None
+    with ThreadPoolExecutor(min(4, len(pfs) or 1)) as ex:
+        tables = list(ex.map(lambda pf: pf.read(), pfs))
+    # bucket_expr's type: pmod of a long
+    schema = to_arrow_schema(StructType(
+        fields + ([StructField("bucket", LongType())] if with_bucket else [])
+    ))
+    parts = [schema.empty_table()]
+    for (i, _), t in zip(files, tables):
+        cols = _conform_table(t, fields, pmap)
+        if with_bucket:
+            cols.append(pa.repeat(pa.scalar(int(i), pa.int64()), t.num_rows))
+        parts.append(pa.Table.from_arrays(cols, schema=schema))
+    return pa.concat_tables(parts)
 
 
 def _read_local(
@@ -3041,6 +3078,19 @@ def _write_generations(
     return out
 
 
+def _default_upsert(
+    meta: dict, deleted_col: str | None, merger,
+    constraints: dict[str, str] | None,
+) -> bool:
+    """Whether a copy-on-write commit is a default upsert: no custom
+    merger, no delete leg, no recorded fold policy and no CHECK
+    constraints, recorded or passed."""
+    return (
+        merger is None and deleted_col is None and not meta.get("mor_fold")
+        and not meta.get("constraints") and not constraints
+    )
+
+
 def _collect_batch(updates: DataFrame, key: str, n_buckets: int):
     """A default upsert's batch collected on the driver with its rows'
     `bucket` (one toArrow() job), or None when it keeps the Spark
@@ -3120,21 +3170,11 @@ def _merge_local(
         return None
     target = None
     if gens:
-        pmap = _phys_map(stored)
-        names = [f.name for f in fields] + ["bucket"]
-        parts = []
-        for i, g in gens.items():
-            for fp in _data_files(f"{path}/bucket={i}/{g}"):
-                pf = _parquet_file(fp)
-                if pf is None:
-                    return None
-                t = pf.read()
-                # bucket_expr's type: pmod of a long
-                bucket = pa.repeat(pa.scalar(int(i), pa.int64()), t.num_rows)
-                parts.append(pa.Table.from_arrays(
-                    _conform_table(t, fields, pmap) + [bucket], names=names
-                ))
-        target = pa.concat_tables(parts)
+        target = _read_slice_local(
+            path, gens, fields, _phys_map(stored), with_bucket=True
+        )
+        if target is None:
+            return None
     u_fields = _slice_fields(updates.schema)
     batch = pa.Table.from_arrays(
         _conform_table(batch, u_fields, {}) + [batch["bucket"]],
@@ -3163,7 +3203,7 @@ def _prepare_scoped_merge(
     deleted_col: str | None = None,
     merger=None,
     constraints: dict[str, str] | None = None,
-    touched_hint: tuple[int, list] | None = None,
+    touched_hint: tuple | None = None,
 ) -> dict | None:
     """The WORK phase of a scoped merge, against the `full` manifest
     snapshot: read the touched target slice DV-applied, merge, enforce
@@ -3186,10 +3226,11 @@ def _prepare_scoped_merge(
     way the schema union, the out-of-bucket check, the renames, the
     stats and the blooms are the same.
 
-    `touched_hint` = (n_buckets, bucket ids) a caller already computed
-    for THIS batch (the OCC admission path collects it for the commit
-    intent): honored only when the layout matches the snapshot's, so a
-    raced rebucket can never smuggle in stale bucket ids."""
+    `touched_hint` = (n_buckets, bucket ids, collected batch or None) a
+    caller already computed for THIS batch (the OCC admission path
+    collects it for the commit intent): honored only when the layout
+    matches the snapshot's, so a raced rebucket can never smuggle in
+    stale bucket ids or buckets."""
     import pyarrow.compute as pc
 
     key = meta["key"]
@@ -3201,14 +3242,22 @@ def _prepare_scoped_merge(
     # per-call additions
     effective = dict(meta.get("constraints") or {})
     effective.update(constraints or {})
+    hint = (
+        touched_hint
+        if touched_hint is not None and touched_hint[0] == n_buckets
+        else None
+    )
     # a default upsert's batch is collected once with its buckets: the
     # touched set is read off it, and a small slice merges on the
     # driver (`_merge_local`)
     batch = None
-    if merger is None and deleted_col is None and not fold and not effective:
-        batch = _collect_batch(updates, key, n_buckets)
-    if touched_hint is not None and touched_hint[0] == n_buckets:
-        touched = sorted(int(x) for x in touched_hint[1])
+    if _default_upsert(meta, deleted_col, merger, constraints):
+        batch = (
+            hint[2] if hint is not None
+            else _collect_batch(updates, key, n_buckets)
+        )
+    if hint is not None:
+        touched = sorted(int(x) for x in hint[1])
     elif batch is not None:
         touched = sorted(pc.unique(batch["bucket"]).to_pylist())
     else:
@@ -3659,19 +3708,31 @@ def merge_scoped_versioned_occ(
     intent = None
     if admission if admission is not None else pre_commit_hook is None:
         n_b = _root_n_buckets(path, latest_version(path))
-        my_buckets = sorted(
-            r[0]
-            for r in updates.select(
-                bucket_expr(meta["key"], n_b).alias("b")
-            ).distinct().collect()
+        # a default upsert's batch is collected once here: the intent's
+        # buckets come off that collect, and the first attempt merges it
+        batch = (
+            _collect_batch(updates, meta["key"], n_b)
+            if _default_upsert(meta, deleted_col, merger, constraints)
+            else None
         )
+        if batch is not None:
+            import pyarrow.compute as pc
+
+            my_buckets = sorted(pc.unique(batch["bucket"]).to_pylist())
+        else:
+            my_buckets = sorted(
+                r[0]
+                for r in updates.select(
+                    bucket_expr(meta["key"], n_b).alias("b")
+                ).distinct().collect()
+            )
         intent = _post_intent(path, my_buckets)
     try:
         return _merge_scoped_versioned_occ_loop(
             spark, path, updates, meta, now, deleted_col, merger,
             constraints, max_retries, pre_commit_hook, reuse,
             intent, my_buckets if intent else (), intent_ttl,
-            touched_hint=(n_b, my_buckets) if intent else None,
+            touched_hint=(n_b, my_buckets, batch) if intent else None,
         )
     finally:
         if intent is not None:
@@ -3710,8 +3771,9 @@ def _merge_scoped_versioned_occ_loop(
         prep = _prepare_scoped_merge(
             spark, path, meta, base_full, pending, now=now,
             deleted_col=deleted_col, merger=merger, constraints=constraints,
-            # the admission collect doubles as the touched set, but
-            # only while `pending` is still the whole original batch
+            # the admission collect doubles as the touched set and the
+            # collected batch, but only while `pending` is still the
+            # whole original batch
             # (retries slice it down to the conflicted buckets)
             touched_hint=touched_hint if pending is updates else None,
         )
@@ -5582,6 +5644,83 @@ def _feed_across_rebucket(
     return aligned_diff(_changed_rows(old_df), _changed_rows(new_df))
 
 
+def _feed_local(
+    spark: SparkSession, path: str, m_from: dict, m_to: dict, changed,
+    keys: list[str],
+) -> DataFrame | None:
+    """The same-layout change feed over the `changed` buckets, diffed on
+    the driver: both slices read with pyarrow (`_read_slice_local`),
+    `merge.table_diff_arrow`, and a local relation under the schema of
+    the Spark form. None when the feed must take the Spark diff:
+    - a changed bucket on either side is packed, or has merge-on-read
+      deltas or deletion vectors, or a side records no schema;
+    - the two versions' slice fields differ (an added or renamed
+      column: the Spark form aligns them);
+    - a column holds a map at any depth (Spark's `<=>` rejects maps,
+      and that error must stay), a string uses a non-default
+      collation, or a key column is not a string or integer column;
+    - pyarrow cannot carry the schema or read some file as Spark does;
+    - the two slices' committed bytes sum to more than
+      LOCAL_WRITE_BYTES, or a slice has no stats."""
+    from pyspark.sql.types import (
+        ArrayType, IntegralType, MapType, StringType, StructField, StructType,
+    )
+
+    from .merge import table_diff_arrow
+
+    def plain(t) -> bool:
+        if isinstance(t, StructType):
+            return all(plain(f.dataType) for f in t.fields)
+        if isinstance(t, ArrayType):
+            return plain(t.elementType)
+        if isinstance(t, StringType):
+            return t.collation == "UTF8_BINARY"
+        return not isinstance(t, MapType)
+
+    sides = []
+    for m in (m_from, m_to):
+        gens = {
+            i: m["buckets"][i] for i in map(str, changed) if i in m["buckets"]
+        }
+        if m.get("schema") is None or any(
+            _is_packed_entry(g)
+            or (m.get("deltas") or {}).get(i)
+            or (m.get("dv") or {}).get(i)
+            for i, g in gens.items()
+        ):
+            return None
+        sides.append((gens, _slice_fields(StructType.fromJson(m["schema"]))))
+    fields = sides[0][1]
+    schema = StructType(fields)
+    if (
+        sides[1][1] != fields
+        or not plain(schema)
+        or any(
+            k not in schema.names
+            or not isinstance(schema[k].dataType, (StringType, IntegralType))
+            for k in keys
+        )
+        or _arrow_schema(schema) is None
+    ):
+        return None
+    sizes = [_slice_bytes(m, changed) for m in (m_from, m_to)]
+    if None in sizes or sum(sizes) > LOCAL_WRITE_BYTES:
+        return None
+    pmap = _phys_map(m_to["schema"])
+    old, new = (
+        _read_slice_local(path, gens, fields, pmap) for gens, _ in sides
+    )
+    if old is None or new is None:
+        return None
+    # the Spark form's columns are expressions: no field metadata
+    out = StructType(
+        [StructField(k, schema[k].dataType) for k in keys]
+        + [StructField(f.name, f.dataType) for f in fields if f.name not in keys]
+        + [StructField("change", StringType(), False)]
+    )
+    return spark.createDataFrame(table_diff_arrow(old, new, keys), out)
+
+
 def change_feed(
     spark: SparkSession,
     path: str,
@@ -5612,6 +5751,15 @@ def change_feed(
     change bucket identity is not comparable, so the feed falls back
     to a full-snapshot diff (which is empty for the rebucket itself —
     content-neutral by law).
+
+    A same-layout span whose two slices are small and plain (classic
+    generations without deltas or deletion vectors, one schema on both
+    sides, no maps, committed bytes within LOCAL_WRITE_BYTES) diffs on
+    the driver instead (`_feed_local`: pyarrow reads and
+    `merge.table_diff_arrow`), returning a local relation with the
+    Spark form's rows and schema: its consumer's actions run no
+    full-outer join and no shuffle. Any other span takes the Spark
+    diff.
 
     `key` defaults to the table's bucket key. Tables maintained by a
     custom merger can hold SEVERAL rows per bucket key (the keep-latest
@@ -5710,6 +5858,13 @@ def change_feed(
     # consumer's whole poll is O(changed), root to data pages
     m_from = _slice_from_root(path, r_from, changed)
     m_to = _slice_from_root(path, r_to, changed)
+    if not any(
+        str(i) in m["buckets"] for m in (m_from, m_to) for i in changed
+    ):
+        return None
+    local = _feed_local(spark, path, m_from, m_to, changed, keys)
+    if local is not None:
+        return local
 
     def _read(m: dict, like: DataFrame | None):
         # each side reads THROUGH its version's deltas and deletion

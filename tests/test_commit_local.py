@@ -256,3 +256,29 @@ def test_mor_and_dv_slices_keep_spark_merge(spark, tmp_path, monkeypatch):
     for p in pair.paths.values():
         mv.compact_versioned(spark, p)
     pair.step(lambda p: mv.merge_scoped_versioned(spark, p, upd, now=T1))
+
+
+def test_now_micros_memoizes_spark_cast(spark, monkeypatch):
+    """A string `now` is cast by Spark once per (session time zone,
+    literal): a repeat builds no frame, and another session time zone
+    gives its own stamp."""
+    from cvemate_spark.operators.merge import now_micros
+
+    lit = "2023-03-04 05:06:07"
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        utc = now_micros(spark, lit)
+        assert utc == int(datetime.datetime(2023, 3, 4, 5, 6, 7, tzinfo=datetime.timezone.utc)
+                          .timestamp()) * 10**6
+
+        def no_frames(*a, **kw):
+            raise AssertionError("a memoized cast built a frame")
+
+        with monkeypatch.context() as m:
+            m.setattr(spark, "createDataFrame", no_frames)
+            assert now_micros(spark, lit) == utc
+        spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+        assert utc - now_micros(spark, lit) == (5 * 3600 + 1800) * 10**6
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)

@@ -349,12 +349,37 @@ def test_small_commit_job_counts(spark, tmp_path):
     }
 
 
+# The same commit through optimistic concurrency with admission on: the
+# batch collect gives the intent's buckets and feeds the driver merge.
+OCC_COMMIT_JOBS_LOCAL = 1
+
+
+def test_small_occ_commit_job_count(spark, tmp_path):
+    rows = [(f"CVE-2024-{i:04d}", i, f"d{i}") for i in range(200)]
+    base = _feed(spark, tmp_path, "base", rows, "id string, n long, desc string")
+    small = _feed(spark, tmp_path, "small", [(f"CVE-2024-{i:04d}", -i, None) for i in range(0, 200, 9)],
+                  "id string, n long, desc string")
+    path = str(tmp_path / "occ")
+    mv.init_bucket_table_versioned(path, key="id", n_buckets=16)
+    mv.merge_scoped_versioned(spark, path, base, now=T0)
+    out = {}
+
+    def commit():
+        out.update(mv.merge_scoped_versioned_occ(spark, path, small, now=T1))
+
+    assert _jobs(spark, "commit-occ", commit) == OCC_COMMIT_JOBS_LOCAL
+    assert out["attempts"] == 1
+    assert _writers(path, mv._load_manifest_full(path, 2), mv._load_manifest_full(path, 3)) == {
+        "parquet-cpp-arrow"}
+
+
 def test_local_write_bound_is_the_committed_crossover():
     """LOCAL_WRITE_BYTES is the largest slice size at which the local
     writer beat the Spark writer in WRITECROSSOVER.json, among the
     sizes whose collected slice fits the driver; the driver-side commit
     shares the bound, and beat both other forms at every size up to
-    it."""
+    it. The driver-side change feed is gated on it too, because it beat
+    the Spark diff at every measured feed whose two slices fit it."""
     art = json.loads(
         (Path(__file__).resolve().parents[1] / "WRITECROSSOVER.json").read_text()
     )
@@ -366,3 +391,8 @@ def test_local_write_bound_is_the_committed_crossover():
     for r in art["rows"]:
         if 1 << r["log2"] <= mv.LOCAL_WRITE_BYTES:
             assert r["local_commit_s"] < min(r["local_s"], r["spark_s"]), r
+    assert art["feed_bound"] == "LOCAL_WRITE_BYTES"
+    feeds = [r for r in art["rows"] if r["feed_bytes"] <= mv.LOCAL_WRITE_BYTES]
+    assert feeds
+    for r in feeds:
+        assert r["local_feed_s"] < r["spark_feed_s"], r

@@ -197,7 +197,14 @@ def check_laws(
 ) -> list[str]:
     """Run laws A-C; returns a list of violations (empty = pass)."""
     problems: list[str] = []
-    con.register("labels", labels_pd)
+    # a typed temp table, not the registered pandas frame: DuckDB keeps
+    # no statistics for a pandas scan, and at sf1 it planned LAW A's
+    # two label joins as a labels x labels nested loop on
+    # `component <> component` (40k x 40k rows) that filled the spill
+    # cap; over the table it plans two hash joins
+    con.register("_labels_pd", labels_pd)
+    con.execute("CREATE OR REPLACE TEMP TABLE labels AS SELECT * FROM _labels_pd")
+    con.unregister("_labels_pd")
     # the pairs SQL is the expensive half (minutes at sf1) and is
     # shared by 4 of the 5 family members — cache the materialized
     # temp table per (connection, sql) so a sweep pays it once

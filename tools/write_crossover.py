@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Small-commit local-writer crossover: write_crossover.py [reps] [log2 sizes...].
+"""Small-commit local-writer and change-feed crossover: write_crossover.py [reps] [log2 sizes...].
 
 For each size 2^k bytes (default 16 18 ... 28) writes a 16-bucket
 versioned table whose generations hold about 2^k bytes of parquet (a
@@ -21,6 +21,15 @@ forms of the commit:
   0): the bucket repartition, its write stage and the partitioned file
   commit.
 
+Then one more commit, and the change feed over it (`change_feed` from
+the version before to the commit's, plus the consumer's
+`groupBy("change").count().collect()`), whose two slices hold about
+2 x 2^k bytes (`feed_bytes`), timed the same way in two forms:
+
+- local_feed_s: both slices read with pyarrow and diffed on the driver
+  (`_feed_local`, the bound unbounded);
+- spark_feed_s: the Spark full-outer diff (the bound at 0).
+
 Each row also records `arrow_bytes`, the in-memory size of the slice
 the local writer collects (about 1.1x the parquet bytes for this
 table), and `fits_driver`: whether a slice of that many parquet bytes
@@ -31,9 +40,11 @@ Arrow batches in the JVM while the driver process holds the table and
 its bucket-sorted copy. The session runs with the 2 GB driver the
 benchmark uses. `merge_versioned.LOCAL_WRITE_BYTES` is the largest 2^k
 at which local_s < spark_s and the slice fits the driver; the driver
-commit shares that bound. Writes
-WRITECROSSOVER.json with the recording context (cpus, git rev, steal
-%, driver memory) and prints one JSON line per size.
+commit shares that bound. The driver-side feed is gated on the same
+bound when it wins at every size whose `feed_bytes` stay within it,
+else on LOCAL_READ_BYTES (`feed_bound`). Writes WRITECROSSOVER.json
+with the recording context (cpus, git rev, steal %, driver memory) and
+prints one JSON line per size.
 """
 from __future__ import annotations
 
@@ -102,6 +113,18 @@ def _timed_commit(spark, path: str, batch, bound: int, merge_local: bool = True)
     return dt
 
 
+def _timed_feed(spark, path: str, v: int, bound: int) -> float:
+    saved, mv.LOCAL_WRITE_BYTES = mv.LOCAL_WRITE_BYTES, bound
+    try:
+        t0 = time.perf_counter()
+        rows = mv.change_feed(spark, path, v - 1, v).groupBy("change").count().collect()
+        dt = time.perf_counter() - t0
+    finally:
+        mv.LOCAL_WRITE_BYTES = saved
+    assert {r["change"]: r["count"] for r in rows} == {"update": N_BUCKETS * PER_BUCKET}, rows
+    return dt
+
+
 def measure(spark, root: str, log2: int, reps: int) -> dict:
     n = max((1 << log2) // ROW_BYTES, N_BUCKETS * PER_BUCKET * 4)
     path = os.path.join(root, f"t{log2}")
@@ -130,6 +153,18 @@ def measure(spark, root: str, log2: int, reps: int) -> dict:
         commit.append(_timed_commit(spark, path, batch, inf))
         local.append(_timed_commit(spark, path, batch, inf, merge_local=False))
         remote.append(_timed_commit(spark, path, batch, 0))
+    # a commit kept with its parent: the feed spans the two
+    v = mv.merge_scoped_versioned(spark, path, batch)["version"]
+    feed_bytes = sum(
+        mv._slice_bytes(mv._load_manifest_full(path, u), range(N_BUCKETS))
+        for u in (v - 1, v)
+    )
+    _timed_feed(spark, path, v, inf)  # warm both forms
+    _timed_feed(spark, path, v, 0)
+    lfeed, sfeed = [], []
+    for _ in range(reps):
+        lfeed.append(_timed_feed(spark, path, v, inf))
+        sfeed.append(_timed_feed(spark, path, v, 0))
     shutil.rmtree(path)
     shutil.rmtree(feed)
     return {
@@ -137,7 +172,21 @@ def measure(spark, root: str, log2: int, reps: int) -> dict:
         "fits_driver": (1 << log2) * ARROW_EXPANSION <= DRIVER_BYTES // 8,
         "local_commit_s": round(min(commit), 4),
         "local_s": round(min(local), 4), "spark_s": round(min(remote), 4),
+        "feed_bytes": feed_bytes,
+        "local_feed_s": round(min(lfeed), 4), "spark_feed_s": round(min(sfeed), 4),
     }
+
+
+def feed_bound(rows: list[dict], local_write_bytes: int) -> str:
+    """The bound the driver-side feed is gated on: LOCAL_WRITE_BYTES
+    when the local feed won at every measured feed within it, else
+    LOCAL_READ_BYTES."""
+    if all(
+        r["local_feed_s"] < r["spark_feed_s"]
+        for r in rows if r["feed_bytes"] <= local_write_bytes
+    ):
+        return "LOCAL_WRITE_BYTES"
+    return "LOCAL_READ_BYTES"
 
 
 def main() -> int:
@@ -176,6 +225,7 @@ def main() -> int:
         "arrow_expansion": ARROW_EXPANSION,
         "steal_pct": round(100.0 * (s1 - s0) / max(t1 - t0, 1), 2),
         "local_write_bytes": max(wins) if wins else 0,
+        "feed_bound": feed_bound(rows, max(wins) if wins else 0),
         "rows": rows,
     }
     with open(os.path.join(REPO, "WRITECROSSOVER.json"), "w") as f:
