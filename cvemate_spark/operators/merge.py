@@ -226,48 +226,52 @@ def table_diff(
     change in {insert, update, delete} — nochange rows are dropped.
     `key` may be a single column or a COMPOSITE list (tables whose
     logical identity spans several columns, e.g. a keep-latest table
-    keyed on (user_id, event_type)); key values must be non-null and
-    unique per row on each side. Null-safe column comparison
-    (eqNullSafe) classifies updates. The law tying this to the merge
-    surface: applying the diff to v1 through `merge_upsert_deletes`
-    (or the generic `apply_change_feed`) reproduces v2 exactly (tested
-    in test_merge_laws); one key-partitioned full-outer join,
-    bucketable to exchange-free at scale. `table_diff_arrow` is its
-    driver-side twin over pyarrow tables, which small versioned change
-    feeds use."""
+    keyed on (user_id, event_type)). A row whose key parts are all
+    non-NULL is matched on its key, and a matched pair whose columns
+    differ under `<=>` is an update. A row with a NULL key part is
+    identified by its whole content instead: it matches an equal row
+    (`<=>` on every column, keys included) on the other side, so it is
+    never an update, only an insert or a delete. The law tying this to
+    the merge surface: applying the diff to v1 through the generic
+    `apply_change_feed` reproduces v2 exactly when non-NULL keys are
+    unique per side and no side holds two equal rows with a NULL key
+    part (tested in test_merge_laws and tests/test_feed_local.py); one
+    key-partitioned full-outer join, bucketable to exchange-free at
+    scale. `table_diff_arrow` is its driver-side twin over pyarrow
+    tables, which small versioned change feeds use."""
     keys = [key] if isinstance(key, str) else list(key)
     cols = [c for c in v1.columns if c not in keys and c in v2.columns]
-    cond = F.lit(True)
+    cond = keyed = same = F.lit(True)
     for k in keys:
-        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
-    j = v1.alias("a").join(v2.alias("b"), cond, "full_outer")
-    differs = F.lit(False)
+        cond = cond & F.col(f"a.{k}").eqNullSafe(F.col(f"b.{k}"))
+        keyed = keyed & F.col(f"a.{k}").isNotNull()
     for c in cols:
-        differs = differs | ~F.col(f"a.{c}").eqNullSafe(F.col(f"b.{c}"))
+        same = same & F.col(f"a.{c}").eqNullSafe(F.col(f"b.{c}"))
+    # the side markers say which side a joined row came from: a key
+    # column cannot, since a key part may be NULL on a matched row
+    j = v1.withColumn("__a", F.lit(True)).alias("a").join(
+        v2.withColumn("__b", F.lit(True)).alias("b"),
+        cond & (keyed | same), "full_outer",
+    )
+    survived_b = F.col("b.__b").isNotNull()
     change = (
-        F.when(F.col(f"a.{keys[0]}").isNull(), "insert")
-        .when(F.col(f"b.{keys[0]}").isNull(), "delete")
-        .when(differs, "update")
+        F.when(F.col("a.__a").isNull(), "insert")
+        .when(~survived_b, "delete")
+        .when(~same, "update")
         .otherwise("nochange")
     )
     # payload is the SURVIVING ROW's value, decided per row (b side
     # unless the row was deleted), never per column: a per-column
     # coalesce would resurrect the old value wherever an update
     # legitimately nulled a column, breaking the apply-exactness law
-    survived_b = F.col(f"b.{keys[0]}").isNotNull()
-    payload = [
-        F.when(survived_b, F.col(f"b.{c}"))
-        .otherwise(F.col(f"a.{c}"))
-        .alias(c)
-        for c in cols
-    ]
     return (
         j.select(
             *[
-                F.coalesce(F.col(f"b.{k}"), F.col(f"a.{k}")).alias(k)
-                for k in keys
+                F.when(survived_b, F.col(f"b.{c}"))
+                .otherwise(F.col(f"a.{c}"))
+                .alias(c)
+                for c in keys + cols
             ],
-            *payload,
             change.alias("change"),
         )
         .filter(F.col("change") != "nochange")
@@ -318,48 +322,66 @@ def table_diff_arrow(v1, v2, keys: list[str]):
     must be string or integer columns, the types an Acero join matches
     exactly as Spark's equi-join does.
 
-    Acero joins cannot carry nested payloads, so the full-outer join
-    runs over (keys, row index) only and each side's rows are then
-    taken by index. As in `table_diff`, a NULL key part matches nothing,
-    `insert` / `delete` follow the NULL-ness of `keys[0]` on each side,
-    a matched pair is an update when some column differs under Spark's
-    `<=>` (`_distinct_from`), and the payload is the surviving row's."""
+    Acero joins cannot carry nested payloads and match no NULL key, so
+    the join runs over each key part with its NULLs filled plus a
+    NULL flag per part (Spark's `<=>` on the key), and the row index of
+    each side; each side's rows are then taken by index. As in
+    `table_diff`, a pair whose key holds a NULL part is a match only
+    when every column is equal under `<=>` (`_distinct_from`), a
+    matched pair is an update when some column differs, an unmatched
+    row is an insert or a delete, and the payload is the surviving
+    row's."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
     cols = [c for c in v1.column_names if c not in keys]
-    pairs = pa.table(
-        {**{k: v1[k] for k in keys}, "__a": np.arange(v1.num_rows)}
-    ).join(
-        pa.table({**{k: v2[k] for k in keys}, "__b": np.arange(v2.num_rows)}),
-        keys, join_type="full outer",
+    flags = [f"__null_{k}" for k in keys]
+
+    def side(t, idx: str):
+        out = {idx: np.arange(t.num_rows)}
+        for k, nk in zip(keys, flags):
+            c = t[k].combine_chunks()
+            out[k] = pc.fill_null(c, "" if pa.types.is_string(c.type) else 0)
+            out[nk] = c.is_null().cast(pa.int8())
+        return pa.table(out)
+
+    pairs = side(v1, "__a").join(
+        side(v2, "__b"), keys + flags, join_type="inner"
     )
-
-    def at(t, c, idx):
-        return t[c].take(idx).combine_chunks()
-
     ia, ib = (pairs[c].combine_chunks() for c in ("__a", "__b"))
-    ins = at(v1, keys[0], ia).is_null()
-    dele = pc.and_(pc.invert(ins), at(v2, keys[0], ib).is_null())
-    matched = pc.invert(pc.or_(ins, dele))
-    ma, mb = ia.filter(matched), ib.filter(matched)
-    upd = pa.repeat(False, len(ma))
+    differs = pa.repeat(False, len(ia))
     for c in cols:
-        upd = pc.or_(upd, _distinct_from(at(v1, c, ma), at(v2, c, mb)))
-    changed = pc.replace_with_mask(pc.or_(ins, dele), matched, upd)
-    ia, ib = ia.filter(changed), ib.filter(changed)
-    ins, dele = ins.filter(changed), dele.filter(changed)
-    change = pc.if_else(ins, "insert", pc.if_else(dele, "delete", "update"))
-    # the payload is the surviving row's: v2's unless the row was
-    # deleted or v2's keys[0] is NULL, taken from v1 ++ v2
-    survived = pc.invert(at(v2, keys[0], ib).is_null())
-    pick = pc.if_else(survived, pc.add(ib, v1.num_rows), ia)
-    both = pa.concat_tables([v1.select(cols), v2.select(cols)])
+        differs = pc.or_(
+            differs,
+            _distinct_from(v1[c].take(ia).combine_chunks(),
+                           v2[c].take(ib).combine_chunks()),
+        )
+    keyless = pa.repeat(False, len(ia))
+    for nk in flags:
+        keyless = pc.or_(keyless, pc.equal(pairs[nk].combine_chunks(), 1))
+    match = pc.invert(pc.and_(keyless, differs))
+    ia, ib, upd = ia.filter(match), ib.filter(match), differs.filter(match)
+    gone = np.ones(v1.num_rows, dtype=bool)
+    gone[ia.to_numpy()] = False
+    new = np.ones(v2.num_rows, dtype=bool)
+    new[ib.to_numpy()] = False
+    # the payload is the surviving row's, taken from v1 ++ v2: v2's for
+    # updates and inserts, v1's for deletes
+    pick = np.concatenate([
+        ib.filter(upd).to_numpy() + v1.num_rows,
+        np.flatnonzero(gone),
+        np.flatnonzero(new) + v1.num_rows,
+    ])
+    n_upd, n_del = len(pick) - int(gone.sum()) - int(new.sum()), int(gone.sum())
+    change = pa.array(
+        ["update"] * n_upd + ["delete"] * n_del + ["insert"] * int(new.sum()),
+        pa.string(),
+    )
+    both = pa.concat_tables([v1.select(keys + cols), v2.select(keys + cols)])
     payload = both.take(pick)
     return pa.Table.from_arrays(
-        [pc.coalesce(at(v2, k, ib), at(v1, k, ia)) for k in keys]
-        + [payload[c] for c in cols] + [change],
+        [payload[c] for c in keys + cols] + [change],
         names=keys + cols + ["change"],
     )
 

@@ -38,10 +38,10 @@ Layout under `path/`:
     bucket=<i>/g-<hex>/        immutable per-bucket generation (parquet,
                                optional _KEYBLOOM.json sidecar); Spark
                                writes it, or pyarrow on the driver when
-                               the write is small (LOCAL_WRITE_BYTES),
-                               as do small default upserts, which also
-                               merge on the driver; small change feeds
-                               read and diff them there too
+                               `_slice_gate` admits the write (small,
+                               classic, unsorted), as for small default
+                               upserts, which also merge on the driver;
+                               small change feeds read and diff there too
     _packed/pg-<hex>/          packed base: Spark-written b<i>.parquet
                                files and pyarrow-coalesced r<lo>-<hi>.parquet
                                range files (INT64 timestamps; range files
@@ -77,12 +77,14 @@ from __future__ import annotations
 
 import functools
 import json
+import logging
 import math
 import os
 import shutil
 import threading
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -1092,16 +1094,6 @@ def _read_dirs(
     return df.drop("bucket") if "bucket" in df.columns else df
 
 
-# Point lookups whose live generation files total at most this many
-# bytes read them on the driver with pyarrow and return a local relation
-# (`_read_local`), so the caller's filter, select and collect fold into
-# a LocalTableScan and run no Spark job; larger slices keep the Spark
-# read. The largest generation size at which the local read won in the
-# committed crossover measurement, LOOKUPCROSSOVER.json
-# (tools/lookup_crossover.py).
-LOCAL_READ_BYTES = 1 << 24
-
-
 def _data_files(loc: str) -> list[str]:
     """The files Spark reads at a generation location: the file itself
     for a packed entry, else the directory's files whose names do not
@@ -1112,10 +1104,6 @@ def _data_files(loc: str) -> list[str]:
     return sorted(
         os.path.join(loc, n) for n in os.listdir(loc) if n[0] not in "_."
     )
-
-
-def _total_bytes(file_lists) -> int:
-    return sum(os.path.getsize(f) for fs in file_lists for f in fs)
 
 
 def _parquet_file(f: str):
@@ -1137,77 +1125,6 @@ def _parquet_file(f: str):
     return pf
 
 
-def _key_rows_local(files: list[str], key: str, value, columns=None):
-    """The rows of each parquet file whose `key` equals `value`, as one
-    pyarrow table per file, or None when pyarrow cannot read some file
-    as Spark does (`_parquet_file`) or its key column does not compare
-    with `value` in Arrow exactly as Spark's `key = value` does: only a
-    str against a string column and an int in the 64-bit range against
-    an integer column qualify. The key column is decoded first; a file
-    without a match decodes nothing else."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    out = []
-    for f in files:
-        pf = _parquet_file(f)
-        if pf is None:
-            return None
-        i = pf.schema_arrow.get_field_index(key)
-        t = pf.schema_arrow.field(i).type if i >= 0 else None
-        if not (
-            (type(value) is str and pa.types.is_string(t))
-            or (
-                type(value) is int
-                and -(2**63) <= value < 2**63
-                and pa.types.is_integer(t)
-            )
-        ):
-            return None
-        mask = pc.equal(pf.read(columns=[key]).column(0), value)
-        if pc.any(mask).as_py():
-            out.append(pf.read(columns=columns).filter(mask))
-    return out
-
-
-def _dv_hits_local(path: str, dv_refs, key: str, value, bid) -> list[int] | None:
-    """The depths of the deletion vectors among `dv_refs` that delete
-    `value` from bucket `bid`, read with pyarrow; None when their files
-    total more than LOCAL_READ_BYTES or pyarrow cannot read them as
-    Spark does (`_key_rows_local`)."""
-    dv_files = [(d, _data_files(f"{path}/{n}")) for n, d in sorted(dv_refs)]
-    if _total_bytes(fs for _, fs in dv_files) > LOCAL_READ_BYTES:
-        return None
-    hits = []
-    for d, fs in dv_files:
-        rows = _key_rows_local(fs, key, value, ["__dv_bucket"])
-        if rows is None:
-            return None
-        if any(int(bid) in t.column(0).to_pylist() for t in rows):
-            hits.append(d)
-    return hits
-
-
-def _live_rows_local(live, key: str, value) -> tuple[list, list[int]] | None:
-    """A point lookup's rows of `key` = `value` in its live generations
-    (`live`: (location, ordinal) pairs), read on the driver: one
-    pyarrow table per matching file (`_key_rows_local`) and each
-    table's generation ordinal; None when their files total more than
-    LOCAL_READ_BYTES or pyarrow cannot read them as Spark does, which
-    leaves the read to Spark."""
-    files = [_data_files(loc) for loc, _ in live]
-    if _total_bytes(files) > LOCAL_READ_BYTES:
-        return None
-    tables, ords = [], []
-    for fs, (_, ordn) in zip(files, live):
-        rows = _key_rows_local(fs, key, value)
-        if rows is None:
-            return None
-        tables += rows
-        ords += [ordn] * len(rows)
-    return tables, ords
-
-
 def _as_nullable(t):
     """A Spark type JSON with every nullable/containsNull/
     valueContainsNull flag set, as a file scan reports its schema
@@ -1223,33 +1140,25 @@ def _as_nullable(t):
     return out
 
 
-class _SparkReadNeeded(Exception):
-    """A local read cannot return what Spark's read returns; the
-    lookup falls back to the Spark read."""
-
-
-def _check_null_maps(a) -> None:
-    """Raise `_SparkReadNeeded` when Arrow array `a` holds, at any
-    depth, NULL maps with nested or timestamp keys or values:
-    `createDataFrame` turns those into empty maps before pyarrow 17,
-    because it rebuilds such a map column without the column's
-    validity (SPARK-48302)."""
+def _has_null_maps(a) -> bool:
+    """Whether Arrow array `a` holds, at any depth, NULL maps with
+    nested or timestamp keys or values: `createDataFrame` turns those
+    into empty maps before pyarrow 17, because it rebuilds such a map
+    column without the column's validity (SPARK-48302)."""
     import pyarrow as pa
 
     t = a.type
     if pa.types.is_struct(t):
-        for j in range(t.num_fields):
-            _check_null_maps(a.field(j))
-    elif pa.types.is_map(t):
-        if a.null_count and any(
+        return any(_has_null_maps(a.field(j)) for j in range(t.num_fields))
+    if pa.types.is_map(t):
+        nested = any(
             pa.types.is_nested(x) or pa.types.is_timestamp(x)
             for x in (t.key_type, t.item_type)
-        ):
-            raise _SparkReadNeeded
-        _check_null_maps(a.keys)
-        _check_null_maps(a.items)
-    elif pa.types.is_list(t):
-        _check_null_maps(a.values)
+        )
+        return (a.null_count > 0 and nested) or any(map(_has_null_maps, (a.keys, a.items)))
+    if pa.types.is_list(t):
+        return _has_null_maps(a.values)
+    return False
 
 
 def _typed_nulls(n: int, dt):
@@ -1331,78 +1240,6 @@ def _conform_table(t, fields: list, pmap: dict) -> list:
             if i >= 0 else _typed_nulls(t.num_rows, f.dataType)
         )
     return cols
-
-
-def _read_slice_local(
-    path: str, gens: dict, fields: list, pmap: dict, with_bucket: bool = False
-):
-    """The rows of the classic generations `gens` ({bucket id:
-    generation}) read with pyarrow and conformed to the committed
-    `fields` (`_conform_table`) as one Arrow table, with each row's
-    `bucket` when `with_bucket`; None when pyarrow cannot read some
-    file as Spark does (`_parquet_file`). The files are read on a few
-    threads (pyarrow releases the GIL while it decodes)."""
-    import pyarrow as pa
-    from concurrent.futures import ThreadPoolExecutor
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    files = [
-        (i, fp) for i, g in gens.items()
-        for fp in _data_files(f"{path}/bucket={i}/{g}")
-    ]
-    pfs = [_parquet_file(fp) for _, fp in files]
-    if any(pf is None for pf in pfs):
-        return None
-    with ThreadPoolExecutor(min(4, len(pfs) or 1)) as ex:
-        tables = list(ex.map(lambda pf: pf.read(), pfs))
-    # bucket_expr's type: pmod of a long
-    schema = to_arrow_schema(StructType(
-        fields + ([StructField("bucket", LongType())] if with_bucket else [])
-    ))
-    parts = [schema.empty_table()]
-    for (i, _), t in zip(files, tables):
-        cols = _conform_table(t, fields, pmap)
-        if with_bucket:
-            cols.append(pa.repeat(pa.scalar(int(i), pa.int64()), t.num_rows))
-        parts.append(pa.Table.from_arrays(cols, schema=schema))
-    return pa.concat_tables(parts)
-
-
-def _read_local(
-    spark: SparkSession, tables: list, schema, schema_json: dict,
-    ords: list[int] | None = None,
-) -> DataFrame:
-    """The local relation of per-file pyarrow tables (`_key_rows_local`)
-    under the committed schema (`_conform_table`). With `ords` (one per
-    table) each row is tagged with its generation ordinal `__ord`, as
-    the Spark read tags a merge-on-read layer. Raises
-    `_SparkReadNeeded` for rows `createDataFrame` would alter
-    (`_check_null_maps`)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    pmap = _phys_map(schema_json)
-    data = _slice_fields(schema)
-    out = StructType(
-        data if ords is None else data + [StructField("__ord", IntegerType(), False)]
-    )
-    try:
-        arrow_schema = to_arrow_schema(out)
-    except TypeError as e:  # a type pyspark does not carry in Arrow
-        raise _SparkReadNeeded from e
-    parts = [arrow_schema.empty_table()]
-    for j, t in enumerate(tables):
-        cols = _conform_table(t, data, pmap)
-        if ords is not None:
-            cols.append(pa.array([ords[j]] * t.num_rows, pa.int32()))
-        parts.append(pa.Table.from_arrays(cols, schema=arrow_schema))
-    table = pa.concat_tables(parts)
-    for col in table.columns:
-        for chunk in col.chunks:
-            _check_null_maps(chunk)
-    return spark.createDataFrame(table, out)
 
 
 def _norm_stat(v):
@@ -2702,7 +2539,7 @@ def write_bucket_table_versioned(
             df, path, key, n_buckets,
             packed=_packed_from_meta(meta, n_buckets),
             pack_target_bytes=_pack_target_from_meta(meta),
-            est_bytes=_plan_bytes(df),
+            size=(None, (), df),
         )
         stats = {i: _harvest_stats(path, i, g) for i, g in gens.items()}
         if key_bloom:
@@ -2784,19 +2621,55 @@ def init_bucket_table_versioned(
     return 1
 
 
-# Classic-layout writes whose size estimate is at most this many bytes
-# take the local writer (`_stage_local`): one toArrow() collect of the
-# rows and one pyarrow file per bucket, instead of Spark's bucket
-# repartition, its write stage and the partitioned file commit, which
-# cost a small commit a fixed ~0.5 s of task and job overhead. The
-# estimate is known on the driver before any job runs: the committed
-# bytes of the slice being rewritten (`_slice_bytes`) plus Spark's
+# The driver-local paths. A point lookup, a small copy-on-write commit,
+# a small change feed and a small write can each run on the driver with
+# pyarrow instead of in Spark jobs; each asks `_slice_gate` once, which
+# answers with what the driver path reads or with the first reason it
+# may not run. Every answer is one debug record on `_log` (attributes
+# `surface`, `taken`, `reason`).
+_log = logging.getLogger(__name__)
+
+# Point lookups whose live generation files total at most this many
+# bytes read them on the driver and return a local relation, so the
+# caller's filter, select and collect fold into a LocalTableScan and
+# run no Spark job. The largest generation size at which the local read
+# won in the committed crossover measurement, LOOKUPCROSSOVER.json
+# (tools/lookup_crossover.py).
+LOCAL_READ_BYTES = 1 << 24
+
+# Commits, feeds and writes whose size is at most this many bytes run
+# on the driver: one toArrow() collect and one pyarrow file per bucket
+# instead of Spark's bucket repartition, its write stage and the
+# partitioned file commit, which cost a small commit a fixed ~0.5 s of
+# task and job overhead. The size is known before any job runs: the
+# committed bytes of the slice (`_slice_bytes`) plus Spark's
 # optimized-plan estimate of the incoming rows (`_plan_bytes`). The
 # largest slice size at which the local writer won in the committed
 # crossover measurement, WRITECROSSOVER.json (tools/write_crossover.py),
 # among the sizes whose slice, collected at up to 4 bytes of Arrow per
 # parquet byte, stays within an eighth of a 2 GB driver.
 LOCAL_WRITE_BYTES = 1 << 26
+
+# Why `_slice_gate` refuses a driver-local path, in the order it checks.
+REFUSALS = (
+    "custom-merge",      # a merger, delete leg, fold policy or CHECK constraint
+    "bucket-column",     # the batch has a column named `bucket`
+    "packed",            # a packed range-file entry, or a write that packs
+    "sorted-write",      # a write that sorts or rolls its files
+    "no-schema",         # the manifest records no schema
+    "mor-deltas",        # a bucket has merge-on-read deltas
+    "deletion-vectors",  # a bucket has deletion vectors
+    "map-column",        # a map at any depth (Spark's `<=>` rejects it)
+    "collation",         # a string with a non-default collation
+    "schema-changed",    # the feed's two versions have other columns
+    "key-type",          # a key Arrow does not compare as Spark does
+    "widened-type",      # Spark's merge widens an input column
+    "not-arrow",         # pyarrow cannot carry or store the schema
+    "no-stats",          # a generation records no byte count
+    "too-large",         # over LOCAL_READ_BYTES or LOCAL_WRITE_BYTES
+    "int96-file",        # INT96 timestamps pyarrow mis-decodes
+    "null-map",          # NULL maps createDataFrame would empty
+)
 
 
 def _plan_bytes(df: DataFrame) -> int:
@@ -2825,14 +2698,314 @@ def _slice_bytes(full: dict, bucket_ids) -> int | None:
     return sum(sizes.values())
 
 
-def _merge_bytes(full: dict, bucket_ids, batch: DataFrame) -> int | None:
-    """The size estimate of a write that merges `batch` into the given
-    buckets' committed slice (`_slice_bytes` + `_plan_bytes`); None
-    when the slice has no stats."""
-    s = _slice_bytes(full, bucket_ids)
-    if s is None or s > LOCAL_WRITE_BYTES:
-        return s
-    return s + _plan_bytes(batch)
+def _upsert_schema(fields: list, batch, key: str, now):
+    """The schema `merge_upsert` gives the default upsert of a batch of
+    schema `batch` into a slice of `fields` (`_slice_fields`, [] for an
+    empty slice), without asking Spark, or None when Spark's analysis
+    would widen an input column: a column present on both sides under
+    two types (an int batch key against a long key column), or audit
+    columns that are not timestamps. With no widening the output types
+    are the input types: every column of a non-empty slice comes out
+    nullable (a full outer join), with its field metadata when only one
+    side has it, while an empty slice passes the batch's fields
+    through; the audit stamps are
+    nullable only when `now` is a string Spark casts (the cast may give
+    NULL). Law: tests/test_commit_local.py
+    (test_upsert_schema_rule_equals_spark_analysis)."""
+    from pyspark.sql.types import StructField, StructType, TimestampType
+
+    from .merge import AUDIT_COLS
+
+    stamp = StructField("", TimestampType(), isinstance(now, str))
+    audit = [StructField(c, stamp.dataType, stamp.nullable) for c in AUDIT_COLS]
+    u = {f.name: f for f in batch.fields if f.name not in AUDIT_COLS}
+    if not fields:
+        return StructType(
+            [u[key]] + [f for c, f in u.items() if c != key] + audit
+        )
+    t = {f.name: f for f in fields}
+
+    def same(a, b) -> bool:
+        return _type_fingerprint(a.jsonValue()) == _type_fingerprint(b.jsonValue())
+
+    if any(c in t and not same(t[c].dataType, f.dataType) for c, f in u.items()):
+        return None
+    if any(c in t and not same(t[c].dataType, stamp.dataType) for c in AUDIT_COLS):
+        return None
+    if "updated_at" in t:
+        audit[1] = StructField("updated_at", stamp.dataType, True)
+    # a column from one side only keeps its field metadata
+    out = [StructField(key, t[key].dataType, True)] + [
+        StructField(c, f.dataType, True, None if c in u else f.metadata)
+        for c, f in t.items() if c != key and c not in AUDIT_COLS
+    ] + [StructField(c, f.dataType, True, f.metadata) for c, f in u.items() if c not in t]
+    return StructType(out + audit)
+
+
+class _Gate(NamedTuple):
+    """`_slice_gate`'s answer: `reason` None and what the driver path
+    reads (`read`), or the first refusal. A merge also carries its
+    collected batch (`batch`, kept when the slice is refused: the
+    touched set comes off it) and the batch's plan estimate (`plan`)."""
+
+    reason: str | None = None
+    read: object = None
+    batch: object = None
+    plan: int | None = None
+
+
+def _incomparable(t) -> str | None:
+    """"map-column" or "collation" when Spark type `t` holds a map or a
+    string under a non-default collation at any depth: Spark's `<=>`
+    rejects maps, and Arrow compares strings by their bytes."""
+    from pyspark.sql.types import ArrayType, MapType, StringType, StructType
+
+    if isinstance(t, StructType):
+        return next(filter(None, (_incomparable(f.dataType) for f in t)), None)
+    if isinstance(t, ArrayType):
+        return _incomparable(t.elementType)
+    if isinstance(t, MapType):
+        return "map-column"
+    if isinstance(t, StringType) and t.collation != "UTF8_BINARY":
+        return "collation"
+    return None
+
+
+def _slice_gate(
+    purpose: str, *, path: str | None = None, full: dict | None = None,
+    old: dict | None = None, buckets=(), key=None, value=None,
+    gens: list | None = None, columns: list | None = None,
+    ords: bool = False, frame=None, batch: _Gate | None = None,
+    n_buckets: int | None = None, custom: bool = False, plan=None,
+    packed: bool = False, sort: bool = False, now=None,
+) -> _Gate:
+    """The one decision of every driver-local path: the pyarrow read of
+    the slice a `purpose` needs, or the first reason (REFUSALS) it must
+    take the Spark path, in the order the checks below run. The bounds,
+    `_parquet_file`'s refusal and the key-type rule are read here only.
+    What `read` holds per purpose:
+    - lookup: the rows of `gens` ((location, tag) pairs) whose `key`
+      equals `value`, conformed and tagged `__ord` when `ords`, and
+      their Spark schema; with `columns`, the raw matching rows as
+      (table, tag) pairs (the deletion-vector probe);
+    - merge: the touched slice with its `bucket` (None when empty), the
+      batch conformed with its `bucket`, the merged schema JSON; without
+      `full` it stops after the batch collect and records nothing (the
+      OCC admission, whose answer an attempt passes back as `batch`);
+    - feed: the `old` and `full` versions' slices of `buckets`, and
+      their fields;
+    - write: `frame` (the rows with their `bucket`) collected once, or
+      an Arrow `frame` as it is; its size is `full`'s slice of
+      `buckets` plus the plan estimate of `plan`."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from concurrent.futures import ThreadPoolExecutor
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (
+        IntegerType, IntegralType, LongType, StringType, StructField, StructType,
+    )
+
+    def answer(reason=None, **kw) -> _Gate:
+        if purpose != "merge" or full is not None:
+            _log.debug(
+                "%s: %s", purpose, reason or "driver path",
+                extra={"surface": purpose, "taken": reason is None, "reason": reason},
+            )
+        return _Gate(reason, **kw)
+
+    def key_refusal(t, *probe) -> str | None:
+        # only a string (binary collation) or an integer key compares in
+        # Arrow exactly as Spark's `=` and equi-join do; a probed value
+        # must be a str or a 64-bit int of the same kind
+        if isinstance(t, pa.DataType):
+            kind = "str" if pa.types.is_string(t) else "int" if pa.types.is_integer(t) else None
+        else:
+            kind = "int" if isinstance(t, IntegralType) else "str" if (
+                isinstance(t, StringType) and t.collation == "UTF8_BINARY") else None
+        if probe and not (
+            type(probe[0]) is str and kind == "str"
+            or type(probe[0]) is int and -(2**63) <= probe[0] < 2**63 and kind == "int"
+        ):
+            return "key-type"
+        return None if kind else "key-type"
+
+    def layout_refusal(m: dict, ids) -> str | None:
+        for i in map(str, ids):
+            if i not in m["buckets"]:
+                continue
+            if _is_packed_entry(m["buckets"][i]):
+                return "packed"
+            if (m.get("deltas") or {}).get(i):
+                return "mor-deltas"
+            if (m.get("dv") or {}).get(i):
+                return "deletion-vectors"
+        return None
+
+    def conformed(parts, fields: list, pmap: dict, tag: StructField | None, arrow=None):
+        # (tag, pyarrow table) parts conformed to `fields` as one table,
+        # each row's tag in a last column when `tag` names it
+        arrow = arrow or to_arrow_schema(StructType(fields + ([tag] if tag else [])))
+        return pa.concat_tables([arrow.empty_table()] + [
+            pa.Table.from_arrays(_conform_table(t, fields, pmap) + (
+                [pa.repeat(pa.scalar(v, arrow.field(-1).type), t.num_rows)] if tag else []
+            ), schema=arrow)
+            for v, t in parts
+        ])
+
+    def read_slice(m: dict, ids, fields: list, tag=None):
+        # the buckets' generations in `m`, tagged with their bucket id,
+        # read on a few threads (pyarrow releases the GIL while it
+        # decodes); None when a file holds INT96 pyarrow mis-decodes
+        files = [
+            (int(i), _parquet_file(f)) for i in map(str, ids) if i in m["buckets"]
+            for f in _data_files(f"{path}/bucket={i}/{m['buckets'][i]}")
+        ]
+        if any(pf is None for _, pf in files):
+            return None
+        with ThreadPoolExecutor(min(4, len(files) or 1)) as ex:
+            tables = list(ex.map(lambda f: f[1].read(), files))
+        return conformed(
+            zip((i for i, _ in files), tables), fields, _phys_map(m["schema"]), tag
+        )
+
+    bound = LOCAL_READ_BYTES if purpose == "lookup" else LOCAL_WRITE_BYTES
+
+    if purpose == "lookup":
+        if full.get("schema") is None:
+            return answer("no-schema")
+        schema = StructType.fromJson(full["schema"])
+        r = key_refusal(schema[key].dataType, value)
+        if r:
+            return answer(r)
+        data = _slice_fields(schema)
+        tag = StructField("__ord", IntegerType(), False) if ords else None
+        out = StructType(data + ([tag] if tag else []))
+        arrow = _arrow_schema(out)
+        if arrow is None:
+            return answer("not-arrow")
+        files = [(f, t) for loc, t in gens for f in _data_files(loc)]
+        if sum(os.path.getsize(f) for f, _ in files) > bound:
+            return answer("too-large")
+        pfs = [_parquet_file(f) for f, _ in files]
+        if any(pf is None for pf in pfs):
+            return answer("int96-file")
+        hits = []
+        for pf, (_, t) in zip(pfs, files):
+            i = pf.schema_arrow.get_field_index(key)
+            r = key_refusal(pf.schema_arrow.field(i).type, value) if i >= 0 else "key-type"
+            if r:
+                return answer(r)
+            mask = pc.equal(pf.read(columns=[key]).column(0), value)
+            if pc.any(mask).as_py():
+                hits.append((t, pf.read(columns=columns).filter(mask)))
+        if columns is not None:
+            return answer(read=[(rows, t) for t, rows in hits])
+        table = conformed(hits, data, _phys_map(full["schema"]), tag, arrow)
+        if any(_has_null_maps(c) for col in table.columns for c in col.chunks):
+            return answer("null-map")
+        return answer(read=(table, out))
+
+    if purpose == "merge":
+        if batch is None:
+            if custom:
+                return answer("custom-merge")
+            if "bucket" in frame.columns:
+                return answer("bucket-column")
+            r = key_refusal(frame.schema[key].dataType) if key in frame.columns else "key-type"
+            if r:
+                return answer(r)
+            if _arrow_schema(frame.schema) is None:
+                return answer("not-arrow")
+            p = _plan_bytes(frame)
+            if p > bound:
+                return answer("too-large", plan=p)
+            batch = _Gate(plan=p, batch=_collect_arrow(
+                frame.withColumn("bucket", bucket_expr(key, n_buckets))
+            ))
+        b, p = batch.batch, batch.plan
+        touched = [] if b is None else pc.unique(b["bucket"]).to_pylist()
+        if batch.reason or full is None or not touched:
+            return answer(batch.reason, batch=b, plan=p)
+
+        def refuse(reason: str) -> _Gate:
+            return answer(reason, batch=b, plan=p)
+
+        fields = []
+        if any(str(i) in full["buckets"] for i in touched):
+            if full.get("schema") is None:
+                return refuse("no-schema")
+            r = layout_refusal(full, touched)
+            if r:
+                return refuse(r)
+            s = _slice_bytes(full, touched)
+            if s is None:
+                return refuse("no-stats")
+            if s + p > bound:
+                return refuse("too-large")
+            fields = _slice_fields(StructType.fromJson(full["schema"]))
+        out = _upsert_schema(fields, frame.schema, key, now)
+        if out is None:
+            return refuse("widened-type")
+        if _arrow_schema(out) is None:
+            return refuse("not-arrow")
+        target = None
+        if fields:
+            # bucket_expr's type: pmod of a long
+            target = read_slice(full, touched, fields, StructField("bucket", LongType()))
+            if target is None:
+                return refuse("int96-file")
+        u = _slice_fields(frame.schema)
+        rows = pa.Table.from_arrays(
+            _conform_table(b, u, {}) + [b["bucket"]], names=[f.name for f in u] + ["bucket"]
+        )
+        return answer(read=(target, rows, json.loads(out.json())), batch=b, plan=p)
+
+    if purpose == "feed":
+        for r in [
+            "no-schema" if m.get("schema") is None else None for m in (old, full)
+        ] + [layout_refusal(m, buckets) for m in (old, full)]:
+            if r:
+                return answer(r)
+        was, schema = (StructType.fromJson(m["schema"]) for m in (old, full))
+        r = _incomparable(was) or _incomparable(schema)
+        if r:
+            return answer(r)
+        fields = _slice_fields(schema)
+        if _slice_fields(was) != fields:
+            return answer("schema-changed")
+        r = next(filter(None, (
+            key_refusal(schema[k].dataType) if k in schema.names else "key-type" for k in key
+        )), None)
+        if r:
+            return answer(r)
+        if _arrow_schema(StructType(fields)) is None:
+            return answer("not-arrow")
+        sizes = [_slice_bytes(m, buckets) for m in (old, full)]
+        if None in sizes:
+            return answer("no-stats")
+        if sum(sizes) > bound:
+            return answer("too-large")
+        sides = [read_slice(m, buckets, fields) for m in (old, full)]
+        if None in sides:
+            return answer("int96-file")
+        return answer(read=(*sides, fields))
+
+    if purpose == "write":
+        if not isinstance(frame, DataFrame):
+            return answer(read=frame)
+        if packed or sort:
+            return answer("packed" if packed else "sorted-write")
+        s = 0 if full is None else _slice_bytes(full, buckets)
+        if s is None or full is None and plan is None:
+            return answer("no-stats")
+        if s <= bound and plan is not None:
+            s += plan if isinstance(plan, int) else _plan_bytes(plan)
+        if s > bound:
+            return answer("too-large")
+        if _arrow_schema(frame.schema) is None:
+            return answer("not-arrow")
+        return answer(read=_collect_arrow(frame))
+    raise ValueError(f"unknown driver-local purpose {purpose!r}")
 
 
 def _collect_arrow(df: DataFrame):
@@ -2852,15 +3025,14 @@ def _collect_arrow(df: DataFrame):
     return df.select(*cols).toArrow()
 
 
-def _stage_local(staged, staging: str, pmap: dict | None) -> None:
+def _stage_local(t, staging: str, pmap: dict | None) -> None:
     """The local writer: the rows plus their `bucket` column, as an
-    Arrow table or a frame collected once (`_collect_arrow`), each
-    bucket's rows written with `_write_parquet` as one file under
-    `staging/bucket=<i>/`, the layout Spark's partitioned write leaves,
-    under physical column names when the table maps columns."""
+    Arrow table, each bucket's rows written with `_write_parquet` as one
+    file under `staging/bucket=<i>/`, the layout Spark's partitioned
+    write leaves, under physical column names when the table maps
+    columns."""
     import pyarrow.compute as pc
 
-    t = _collect_arrow(staged) if isinstance(staged, DataFrame) else staged
     order = pc.sort_indices(t.column("bucket"))
     t = t.take(order)
     runs = pc.value_counts(t.column("bucket"))  # ascending after the sort
@@ -2923,7 +3095,7 @@ def _write_generations(
     pmap: dict[str, str] | None = None,
     packed: bool = False,
     pack_target_bytes: int | None = None,
-    est_bytes: int | None = None,
+    size: tuple | None = None,
 ) -> dict[str, str]:
     """Bucket the rows and land each written bucket as an immutable
     `bucket=<i>/g-<hex>` generation dir (a rename off a staging dir —
@@ -2932,39 +3104,42 @@ def _write_generations(
     whose rows already carry their `bucket` (a driver-side merge's
     output), which always takes the local writer.
 
-    Two writers fill the staging dir. When the caller's driver-side
-    size estimate `est_bytes` (see LOCAL_WRITE_BYTES; None = unknown)
-    is at most LOCAL_WRITE_BYTES, the write is classic and unsorted and
-    pyarrow can carry the schema, the local writer (`_stage_local`)
-    collects the rows once and writes one pyarrow file per bucket.
-    Otherwise one Spark job repartitions by bucket and writes
-    partitioned by it; restricting to `buckets` keeps the repartition
-    width = |touched|. `sort_by` sorts every bucket's rows by the given
-    columns inside its task (sortWithinPartitions — no extra shuffle
-    beyond the bucket repartition) and `max_records_per_file` rolls
-    the writer at a row budget: together they produce the CLUSTERED
-    layout — per bucket, a run of files each covering a contiguous
-    sorted range, which is what makes per-file min/max selective for
-    value predicates (optimize_versioned). Everything after staging
-    (the renames, the out-of-bucket check, the packed layout) is the
-    same for both writers."""
+    Two writers fill the staging dir. `_slice_gate("write")` decides:
+    the local writer (`_stage_local`) collects the rows once and writes
+    one pyarrow file per bucket when the write is classic and unsorted
+    and its size is at most LOCAL_WRITE_BYTES. `size` = (manifest,
+    bucket ids, plan) says what the size is: the committed bytes of
+    those buckets in the manifest (None: none) plus the plan estimate
+    of `plan` (a frame, bytes already measured, or None); without
+    `size` the write's size is unknown and Spark writes it. Otherwise
+    one Spark job repartitions by bucket and writes partitioned by it;
+    restricting to `buckets` keeps the repartition width = |touched|.
+    `sort_by` sorts every bucket's rows by the given columns inside its
+    task (sortWithinPartitions — no extra shuffle beyond the bucket
+    repartition) and `max_records_per_file` rolls the writer at a row
+    budget: together they produce the CLUSTERED layout — per bucket, a
+    run of files each covering a contiguous sorted range, which is what
+    makes per-file min/max selective for value predicates
+    (optimize_versioned). Everything after staging (the renames, the
+    out-of-bucket check, the packed layout) is the same for both
+    writers."""
     gen = f"g-{uuid.uuid4().hex[:12]}"
     staging = f"{path}/.stage-{gen}"
     width = len(buckets) if buckets is not None else n_buckets
     out: dict[str, str] = {}
-    if isinstance(df, DataFrame):
-        staged = df.withColumn("bucket", bucket_expr(key, n_buckets))
-        local = (
-            est_bytes is not None
-            and est_bytes <= LOCAL_WRITE_BYTES
-            and not (sort_by or max_records_per_file or packed)
-            and _arrow_schema(staged.schema) is not None
-        )
-    else:  # the driver-side merge's rows, with their buckets
-        staged, local = df, True
+    staged = (
+        df.withColumn("bucket", bucket_expr(key, n_buckets))
+        if isinstance(df, DataFrame) else df
+    )
+    full, ids, plan = size or (None, (), None)
+    local = _slice_gate(
+        "write", frame=staged, packed=packed,
+        sort=bool(sort_by or max_records_per_file),
+        full=full, buckets=ids, plan=plan,
+    ).read
     try:
-        if local:
-            _stage_local(staged, staging, pmap)
+        if local is not None:
+            _stage_local(local, staging, pmap)
         else:
             _stage_spark(
                 staged, staging, width, sort_by, max_records_per_file, pmap
@@ -3091,99 +3266,6 @@ def _default_upsert(
     )
 
 
-def _collect_batch(updates: DataFrame, key: str, n_buckets: int):
-    """A default upsert's batch collected on the driver with its rows'
-    `bucket` (one toArrow() job), or None when it keeps the Spark
-    merge: its plan estimate exceeds LOCAL_WRITE_BYTES, its key is not
-    a string or integer column (the key types an Arrow join matches
-    exactly as Spark's join does), it has a column named `bucket`, or
-    pyarrow cannot carry its schema."""
-    from pyspark.sql.types import IntegralType, StringType
-
-    if (
-        key not in updates.columns
-        or "bucket" in updates.columns
-        or not isinstance(
-            updates.schema[key].dataType, (StringType, IntegralType)
-        )
-        or _arrow_schema(updates.schema) is None
-        or _plan_bytes(updates) > LOCAL_WRITE_BYTES
-    ):
-        return None
-    return _collect_arrow(
-        updates.withColumn("bucket", bucket_expr(key, n_buckets))
-    )
-
-
-def _merge_local(
-    spark: SparkSession, path: str, full: dict, touched: list[int],
-    batch, updates: DataFrame, key: str, now,
-):
-    """The default upsert of a collected batch (`_collect_batch`) into
-    the touched slice, on the driver: the slice read with pyarrow and
-    conformed to the committed schema (`_conform_table`), then
-    `merge_upsert_arrow`. Returns (the merged rows with their `bucket`
-    as an Arrow table, the merged schema JSON), or None when the commit
-    must take the Spark merge:
-    - a touched bucket is packed, or has merge-on-read deltas or
-      deletion vectors;
-    - the slice's committed bytes plus the batch's plan estimate exceed
-      LOCAL_WRITE_BYTES, or the slice has no stats;
-    - pyarrow cannot read some slice file as Spark does
-      (`_parquet_file`), or cannot carry the merged schema;
-    - an input column's type differs from the type of the output column
-      it feeds in the Spark form (`merge_upsert` over the same schemas,
-      analyzed and never run), e.g. an int batch key against a long
-      key column, which Spark widens."""
-    import pyarrow as pa
-    from pyspark.sql.types import StructType
-
-    from .merge import AUDIT_COLS, merge_upsert_arrow, now_micros
-
-    stored = full.get("schema")
-    gens = {
-        i: full["buckets"][i] for i in map(str, touched) if i in full["buckets"]
-    }
-    fields, stub = [], None
-    if gens:
-        if stored is None or any(
-            _is_packed_entry(g)
-            or (full.get("deltas") or {}).get(i)
-            or (full.get("dv") or {}).get(i)
-            for i, g in gens.items()
-        ):
-            return None
-        s = _slice_bytes(full, gens)
-        if s is None or s + _plan_bytes(updates) > LOCAL_WRITE_BYTES:
-            return None
-        fields = _slice_fields(StructType.fromJson(stored))
-        stub = spark.createDataFrame([], StructType(fields))
-    out = merge_upsert(stub, updates, key=key, now=now).schema
-    if _arrow_schema(out) is None:
-        return None
-    want = {f.name: _type_fingerprint(f.dataType.jsonValue()) for f in out}
-    feeds = fields + [f for f in updates.schema if f.name not in AUDIT_COLS]
-    if any(
-        _type_fingerprint(f.dataType.jsonValue()) != want[f.name]
-        for f in feeds
-    ):
-        return None
-    target = None
-    if gens:
-        target = _read_slice_local(
-            path, gens, fields, _phys_map(stored), with_bucket=True
-        )
-        if target is None:
-            return None
-    u_fields = _slice_fields(updates.schema)
-    batch = pa.Table.from_arrays(
-        _conform_table(batch, u_fields, {}) + [batch["bucket"]],
-        names=[f.name for f in u_fields] + ["bucket"],
-    )
-    merged = merge_upsert_arrow(target, batch, key, now_micros(spark, now))
-    return merged, json.loads(out.json())
-
-
 class ConcurrentWriteConflict(RuntimeError):
     """An optimistic merge lost its commit race: between its snapshot
     read and its commit attempt, another writer committed a version
@@ -3216,22 +3298,23 @@ def _prepare_scoped_merge(
     bytes} for a commit-assembly step to publish (serial or OCC).
 
     A default upsert (no merger, deleted_col, mor_fold or constraints)
-    whose batch has a plan estimate of at most LOCAL_WRITE_BYTES is
-    collected once with its rows' buckets (`_collect_batch`, one job),
-    and the touched set is read off that collect. When the touched
-    slice is plain and small it is merged on the driver
-    (`_merge_local`: a pyarrow read, `merge_upsert_arrow`) and written
-    by the local writer, so the commit runs that one job. Otherwise
-    the Spark merge below runs with the collected touched set. Either
-    way the schema union, the out-of-bucket check, the renames, the
-    stats and the blooms are the same.
+    asks `_slice_gate("merge")`: when its batch is small it is
+    collected once with its rows' buckets (one job) and the touched set
+    is read off that collect; when the touched slice is plain and small
+    too it is merged on the driver (`merge_upsert_arrow`) and written by
+    the local writer, so the commit runs that one job. Otherwise the
+    Spark merge below runs, with the collected touched set when there
+    is one. Either way the schema union, the out-of-bucket check, the
+    renames, the stats and the blooms are the same.
 
-    `touched_hint` = (n_buckets, bucket ids, collected batch or None) a
-    caller already computed for THIS batch (the OCC admission path
-    collects it for the commit intent): honored only when the layout
-    matches the snapshot's, so a raced rebucket can never smuggle in
-    stale bucket ids or buckets."""
+    `touched_hint` = (n_buckets, bucket ids, the gate's answer for the
+    batch collect) a caller already computed for THIS batch (the OCC
+    admission path collects it for the commit intent): honored only
+    when the layout matches the snapshot's, so a raced rebucket can
+    never smuggle in stale bucket ids or buckets."""
     import pyarrow.compute as pc
+
+    from .merge import merge_upsert_arrow, now_micros
 
     key = meta["key"]
     # the layout (bucket count) comes from the SNAPSHOT manifest, not
@@ -3247,19 +3330,16 @@ def _prepare_scoped_merge(
         if touched_hint is not None and touched_hint[0] == n_buckets
         else None
     )
-    # a default upsert's batch is collected once with its buckets: the
-    # touched set is read off it, and a small slice merges on the
-    # driver (`_merge_local`)
-    batch = None
-    if _default_upsert(meta, deleted_col, merger, constraints):
-        batch = (
-            hint[2] if hint is not None
-            else _collect_batch(updates, key, n_buckets)
-        )
+    gate = _slice_gate(
+        "merge", path=path, full=full, frame=updates, key=key,
+        n_buckets=n_buckets, now=now,
+        custom=not _default_upsert(meta, deleted_col, merger, constraints),
+        batch=hint[2] if hint is not None else None,
+    )
     if hint is not None:
         touched = sorted(int(x) for x in hint[1])
-    elif batch is not None:
-        touched = sorted(pc.unique(batch["bucket"]).to_pylist())
+    elif gate.batch is not None:
+        touched = sorted(pc.unique(gate.batch["bucket"]).to_pylist())
     else:
         # bounded driver-side state: ≤ n_buckets ints, never row data
         touched = sorted(
@@ -3270,12 +3350,9 @@ def _prepare_scoped_merge(
         )
     if not touched:
         return None
-    local = (
-        _merge_local(spark, path, full, touched, batch, updates, key, now)
-        if batch is not None else None
-    )
-    if local is not None:
-        merged, batch_schema = local
+    if gate.read is not None:
+        target, batch, batch_schema = gate.read
+        merged = merge_upsert_arrow(target, batch, key, now_micros(spark, now))
     else:
         # the target slice is read under the COMMITTED schema (a column
         # an earlier merge added may be absent from these buckets'
@@ -3345,10 +3422,7 @@ def _prepare_scoped_merge(
         _enforce_constraints(merged, effective, path)
         new_gens = _write_generations(
             merged, path, key, n_buckets, touched, pmap=pmap,
-            est_bytes=(
-                None if local is not None
-                else _merge_bytes(full, touched, updates)
-            ),
+            size=(full, touched, updates if gate.plan is None else gate.plan),
         )
     finally:
         if persisted:
@@ -3708,17 +3782,17 @@ def merge_scoped_versioned_occ(
     intent = None
     if admission if admission is not None else pre_commit_hook is None:
         n_b = _root_n_buckets(path, latest_version(path))
-        # a default upsert's batch is collected once here: the intent's
-        # buckets come off that collect, and the first attempt merges it
-        batch = (
-            _collect_batch(updates, meta["key"], n_b)
-            if _default_upsert(meta, deleted_col, merger, constraints)
-            else None
+        # a small default upsert's batch is collected once here: the
+        # intent's buckets come off that collect, and the first attempt
+        # merges it
+        batch = _slice_gate(
+            "merge", frame=updates, key=meta["key"], n_buckets=n_b,
+            custom=not _default_upsert(meta, deleted_col, merger, constraints),
         )
-        if batch is not None:
+        if batch.batch is not None:
             import pyarrow.compute as pc
 
-            my_buckets = sorted(pc.unique(batch["bucket"]).to_pylist())
+            my_buckets = sorted(pc.unique(batch.batch["bucket"]).to_pylist())
         else:
             my_buckets = sorted(
                 r[0]
@@ -4308,7 +4382,7 @@ def _mor_attempt(
             )
         new_gens = _write_generations(
             part, path, key, n_buckets, light, pmap=pmap,
-            est_bytes=_plan_bytes(stamped),
+            size=(None, (), stamped),
         )
     # leveling leg: capped buckets fold base+deltas+batch into a
     # fresh base generation (cost ∝ those buckets)
@@ -4336,7 +4410,7 @@ def _mor_attempt(
             )
         leveled_gens = _write_generations(
             merged_l, path, key, n_buckets, capped, pmap=pmap,
-            est_bytes=_merge_bytes(full, capped, updates),
+            size=(full, capped, updates),
         )
     harvested: dict[str, dict] = {}
     for gens in (new_gens, leveled_gens):
@@ -4606,7 +4680,7 @@ def compact_versioned(
                     and _packed_base_for(path, n_buckets)
                 ),
                 pack_target_bytes=_pack_target_from_meta(meta),
-                est_bytes=_slice_bytes(full, target),
+                size=(full, target, None),
             )
             if folded is not None
             else {}
@@ -4784,7 +4858,7 @@ def rebucket_versioned(
                 pmap=_phys_map(full.get("schema")),
                 packed=_packed_base_for(path, new_n_buckets),
                 pack_target_bytes=_pack_target_from_meta(meta),
-                est_bytes=_slice_bytes(full, sorted(full["buckets"])),
+                size=(full, sorted(full["buckets"]), None),
             )
             stats = {i: _harvest_stats(path, i, g) for i, g in gens.items()}
             if meta.get("key_bloom"):
@@ -5091,14 +5165,13 @@ def read_bucket_for_key_versioned(
 
     The slice plan runs on the driver: the bucket (`bucket_of_value`),
     the deletion-vector gate, and the footer-stats and key-bloom
-    exclusions of each generation. When the live generations' files
-    total at most LOCAL_READ_BYTES, they are read on the driver with
-    pyarrow, filtered on the key, and returned as a local relation
-    (`_live_rows_local`, `_read_local`): the caller's filter, select
-    and collect then fold into a LocalTableScan and run no Spark job.
-    The DV probe reads its DV files the same way under the same bound.
-    Larger slices, and files pyarrow cannot read as Spark does, keep
-    the Spark read. A merge-on-read slice tags each generation's rows
+    exclusions of each generation. When `_slice_gate("lookup")` admits
+    the live generations, they are read on the driver with pyarrow,
+    filtered on the key, and returned as a local relation: the caller's
+    filter, select and collect then fold into a LocalTableScan and run
+    no Spark job. The DV probe asks the gate for its DV files the same
+    way. Anything the gate refuses keeps the Spark read (its reasons:
+    `_slice_gate`). A merge-on-read slice tags each generation's rows
     with its ordinal either way and runs the same fold
     (`_fold_ordinals`/`_fold_rows`), which is a Spark aggregate, unless
     the local read found one live generation holding at most one row
@@ -5148,7 +5221,14 @@ def read_bucket_for_key_versioned(
         _dv_ref(e) for e in (full.get("dv") or {}).get(str(bid), [])
     ]
     if dv_refs:
-        hits = _dv_hits_local(path, dv_refs, meta["key"], value, bid)
+        probe = _slice_gate(
+            "lookup", full=full, key=meta["key"], value=value,
+            gens=[(f"{path}/{n}", d) for n, d in sorted(dv_refs)],
+            columns=["__dv_bucket"],
+        )
+        hits = None if probe.read is None else [
+            d for t, d in probe.read if int(bid) in t.column(0).to_pylist()
+        ]
         if hits is None:
             probe = None
             for n, d in sorted(dv_refs):
@@ -5201,24 +5281,25 @@ def read_bucket_for_key_versioned(
         live.append((gdir, ordn))
     if not live:
         return None
-    schema = StructType.fromJson(stored) if stored is not None else None
     mor = len(gens) > 1
     fold = full["mor_fold"] if "mor_fold" in full else meta.get("mor_fold")
     key = meta["key"]
     df = None
     own_fold = False
-    local = _live_rows_local(live, key, value) if schema is not None else None
+    local = _slice_gate(
+        "lookup", full=full, key=key, value=value, gens=live, ords=mor
+    ).read
     if local is not None:
-        tables, ords = local
+        table, out = local
         # one live generation holding at most one row of the key is
         # its own fold: the merge-on-read lookup skips the aggregate
-        own_fold = mor and len(live) == 1 and sum(t.num_rows for t in tables) <= 1
+        own_fold = mor and len(live) == 1 and table.num_rows <= 1
+        if own_fold:
+            table, out = table.drop_columns("__ord"), StructType(out.fields[:-1])
         mor = mor and not own_fold
-        try:
-            df = _read_local(spark, tables, schema, stored, ords if mor else None)
-        except _SparkReadNeeded:
-            pass
-    if df is None:
+        df = spark.createDataFrame(table, out)
+    else:
+        schema = StructType.fromJson(stored) if stored is not None else None
         for gdir, ordn in live:
             part = _read_dirs(spark, [gdir], schema, schema_json=stored).filter(
                 F.col(key) == F.lit(value)
@@ -5457,33 +5538,54 @@ def apply_change_feed(
     replica: DataFrame | None, feed: DataFrame, key: str | list[str]
 ) -> DataFrame:
     """Apply a change feed to a downstream replica: delete the
-    tombstoned keys, replace/insert everything else with the feed's
+    tombstoned rows, replace/insert everything else with the feed's
     (complete, surviving-side) payload. The generic inverse of
     `change_feed` — unlike merge_upsert_deletes it needs no `now` and
     works for composite keys, because feed rows carry whole rows, audit
     columns included: replica@v_old + feed(v_old, v_new) == snapshot
-    @v_new EXACTLY (law in tests/test_merge_versioned.py). Idempotent
-    (re-applying the same feed is a no-op), which upgrades at-least-
-    once feed delivery into exactly-once replica effects — the crash-
-    between-apply-and-checkpoint case S19 exercises.
+    @v_new EXACTLY under `change_feed`'s key contract (laws in
+    tests/test_merge_versioned.py and tests/test_feed_local.py).
+    Idempotent (re-applying the same feed is a no-op), which upgrades
+    at-least-once feed delivery into exactly-once replica effects — the
+    crash-between-apply-and-checkpoint case S19 exercises.
 
-    One anti join + one union: the anti-join keys against the feed
-    are broadcast EXPLICITLY — a feed is batch-sized by contract
-    (cost ∝ change, never ∝ table), so the hint is always right and
-    spares the replica side a shuffle even when stale size stats
-    would have talked the planner out of it."""
+    A replica row is replaced by the feed rows with its key; a row
+    with a NULL key part, by a feed row equal to it on every column
+    the two share (map and collated columns, `_incomparable`, aside). A
+    replica column whose physical name a feed column carries under
+    another name (field metadata "phys", see `change_feed`) was renamed
+    inside the span and takes the feed's name first.
+
+    One anti join + one union: the feed side of the anti join is
+    broadcast EXPLICITLY — a feed is batch-sized by contract (cost ∝
+    change, never ∝ table), so the hint is always right and spares the
+    replica side a shuffle even when stale size stats would have
+    talked the planner out of it."""
     keys = [key] if isinstance(key, str) else list(key)
     live = feed.filter(F.col("change") != "delete").drop("change")
     if replica is None:
         return live
-    touched = F.broadcast(feed.select(*keys))
+    to_feed = {(f.metadata or {}).get("phys", f.name): f.name for f in feed.schema}
+    replica = replica.withColumnsRenamed({
+        f.name: to_feed[p] for f in replica.schema
+        for p in [(f.metadata or {}).get("phys", f.name)]
+        if to_feed.get(p, f.name) != f.name and to_feed[p] not in replica.columns
+    })
+    cond = keyed = same = F.lit(True)
+    for k in keys:
+        cond = cond & F.col(f"r.{k}").eqNullSafe(F.col(f"f.{k}"))
+        keyed = keyed & F.col(f"f.{k}").isNotNull()
+    for c in replica.columns:
+        if c in feed.columns and c not in keys and not _incomparable(feed.schema[c].dataType):
+            same = same & F.col(f"r.{c}").eqNullSafe(F.col(f"f.{c}"))
     # allowMissingColumns: a feed crossing a SCHEMA EVOLUTION boundary
     # carries columns the replica predates (and vice versa after a
     # replica-side evolution) — the union fills them with nulls, which
     # is exactly what the evolved snapshot holds for those rows
-    return replica.join(touched, keys, "left_anti").unionByName(
-        live, allowMissingColumns=True
-    )
+    return replica.alias("r").join(
+        F.broadcast(feed.drop("change")).alias("f"),
+        cond & (keyed | same), "left_anti",
+    ).unionByName(live, allowMissingColumns=True)
 
 
 _NO_EXACT = object()  # sentinel: no exact cross-rebucket plan exists
@@ -5644,83 +5746,6 @@ def _feed_across_rebucket(
     return aligned_diff(_changed_rows(old_df), _changed_rows(new_df))
 
 
-def _feed_local(
-    spark: SparkSession, path: str, m_from: dict, m_to: dict, changed,
-    keys: list[str],
-) -> DataFrame | None:
-    """The same-layout change feed over the `changed` buckets, diffed on
-    the driver: both slices read with pyarrow (`_read_slice_local`),
-    `merge.table_diff_arrow`, and a local relation under the schema of
-    the Spark form. None when the feed must take the Spark diff:
-    - a changed bucket on either side is packed, or has merge-on-read
-      deltas or deletion vectors, or a side records no schema;
-    - the two versions' slice fields differ (an added or renamed
-      column: the Spark form aligns them);
-    - a column holds a map at any depth (Spark's `<=>` rejects maps,
-      and that error must stay), a string uses a non-default
-      collation, or a key column is not a string or integer column;
-    - pyarrow cannot carry the schema or read some file as Spark does;
-    - the two slices' committed bytes sum to more than
-      LOCAL_WRITE_BYTES, or a slice has no stats."""
-    from pyspark.sql.types import (
-        ArrayType, IntegralType, MapType, StringType, StructField, StructType,
-    )
-
-    from .merge import table_diff_arrow
-
-    def plain(t) -> bool:
-        if isinstance(t, StructType):
-            return all(plain(f.dataType) for f in t.fields)
-        if isinstance(t, ArrayType):
-            return plain(t.elementType)
-        if isinstance(t, StringType):
-            return t.collation == "UTF8_BINARY"
-        return not isinstance(t, MapType)
-
-    sides = []
-    for m in (m_from, m_to):
-        gens = {
-            i: m["buckets"][i] for i in map(str, changed) if i in m["buckets"]
-        }
-        if m.get("schema") is None or any(
-            _is_packed_entry(g)
-            or (m.get("deltas") or {}).get(i)
-            or (m.get("dv") or {}).get(i)
-            for i, g in gens.items()
-        ):
-            return None
-        sides.append((gens, _slice_fields(StructType.fromJson(m["schema"]))))
-    fields = sides[0][1]
-    schema = StructType(fields)
-    if (
-        sides[1][1] != fields
-        or not plain(schema)
-        or any(
-            k not in schema.names
-            or not isinstance(schema[k].dataType, (StringType, IntegralType))
-            for k in keys
-        )
-        or _arrow_schema(schema) is None
-    ):
-        return None
-    sizes = [_slice_bytes(m, changed) for m in (m_from, m_to)]
-    if None in sizes or sum(sizes) > LOCAL_WRITE_BYTES:
-        return None
-    pmap = _phys_map(m_to["schema"])
-    old, new = (
-        _read_slice_local(path, gens, fields, pmap) for gens, _ in sides
-    )
-    if old is None or new is None:
-        return None
-    # the Spark form's columns are expressions: no field metadata
-    out = StructType(
-        [StructField(k, schema[k].dataType) for k in keys]
-        + [StructField(f.name, f.dataType) for f in fields if f.name not in keys]
-        + [StructField("change", StringType(), False)]
-    )
-    return spark.createDataFrame(table_diff_arrow(old, new, keys), out)
-
-
 def change_feed(
     spark: SparkSession,
     path: str,
@@ -5738,10 +5763,18 @@ def change_feed(
     inserts/updates/deletes instead).
 
     Rows: (key, payload-from-the-surviving-side, change) with change
-    in {insert, update, delete} — `merge.table_diff` semantics, with
-    the apply law (replaying the feed onto the old snapshot through
-    `merge_upsert_deletes` reproduces the new snapshot exactly,
-    tests/test_merge_versioned.py).
+    in {insert, update, delete} — `merge.table_diff` semantics. A row
+    whose key parts are all non-NULL is matched on its key; a row with
+    a NULL key part is matched on its whole content, so it shows up
+    only when it was inserted or deleted, never as an update. The
+    apply law: `apply_change_feed` of the feed onto the old snapshot
+    gives the new snapshot exactly when non-NULL keys are unique per
+    version and no version holds two equal rows with a NULL key part
+    (tests/test_feed_local.py, tests/test_merge_versioned.py). A column
+    renamed inside the span is one column under its new name (its
+    physical name ties the two versions' names), and feed columns whose
+    name differs from their physical name carry it as field metadata
+    ("phys"), which `apply_change_feed` uses to rename the replica's.
 
     Cost ∝ CHANGE, not table: a key's rows live only in its hash
     bucket and both manifests share one layout, so the full-outer diff
@@ -5752,14 +5785,11 @@ def change_feed(
     to a full-snapshot diff (which is empty for the rebucket itself —
     content-neutral by law).
 
-    A same-layout span whose two slices are small and plain (classic
-    generations without deltas or deletion vectors, one schema on both
-    sides, no maps, committed bytes within LOCAL_WRITE_BYTES) diffs on
-    the driver instead (`_feed_local`: pyarrow reads and
-    `merge.table_diff_arrow`), returning a local relation with the
-    Spark form's rows and schema: its consumer's actions run no
-    full-outer join and no shuffle. Any other span takes the Spark
-    diff.
+    A same-layout span that `_slice_gate("feed")` admits (its reasons
+    are listed there) diffs on the driver instead: pyarrow reads and
+    `merge.table_diff_arrow`, returning a local relation with the Spark
+    form's rows and schema, so its consumer's actions run no full-outer
+    join and no shuffle. Any other span takes the Spark diff.
 
     `key` defaults to the table's bucket key. Tables maintained by a
     custom merger can hold SEVERAL rows per bucket key (the keep-latest
@@ -5782,6 +5812,19 @@ def change_feed(
     to_v = _resolve_version(path, to_version)
     r_from = _load_root(path, since_version)
     r_to = _load_root(path, to_v)
+    # column identity is the physical name: a column renamed inside the
+    # span is diffed under its new name on both sides
+    to_phys = _phys_map(r_to.get("schema"))
+    by_phys = {p: l for l, p in _phys_map(r_from.get("schema")).items()}
+    renamed = {by_phys.get(p, p): l for l, p in to_phys.items() if by_phys.get(p, p) != l}
+    mapped = {l: {"phys": p} for l, p in to_phys.items()}
+
+    def _tagged(feed: DataFrame) -> DataFrame:
+        # the mapped columns' physical names, for `apply_change_feed`
+        for c, md in mapped.items():
+            if c in feed.columns:
+                feed = feed.withMetadata(c, md)
+        return feed
 
     def _root_empty(root: dict) -> bool:
         # emptiness is decidable from the ROOT alone (no shard loads):
@@ -5796,6 +5839,9 @@ def change_feed(
         # columns added between the versions — an old row gaining a
         # value classifies as update, and applying the feed to the old
         # snapshot reproduces the evolved new snapshot
+        old_df = old_df.withColumnsRenamed(
+            {o: n for o, n in renamed.items() if o in old_df.columns}
+        )
         for col, typ in [
             (f.name, f.dataType)
             for f in new_df.schema.fields
@@ -5808,7 +5854,7 @@ def change_feed(
             if f.name not in new_df.columns
         ]:
             new_df = new_df.withColumn(col, F.lit(None).cast(typ))
-        return table_diff(old_df, new_df, key=key)
+        return _tagged(table_diff(old_df, new_df, key=key))
 
     if r_from["n_buckets"] != r_to["n_buckets"]:
         # layout changed between the versions. A consumer checkpointed
@@ -5852,7 +5898,7 @@ def change_feed(
         # rows the general path would produce (every key "payload from
         # the surviving side", change='insert').
         snap = read_bucket_table_versioned(spark, path, to_v)
-        return snap.withColumn("change", F.lit("insert"))
+        return _tagged(snap.withColumn("change", F.lit("insert")))
 
     # slice loads: only the shards the changed buckets live in — the
     # consumer's whole poll is O(changed), root to data pages
@@ -5862,9 +5908,26 @@ def change_feed(
         str(i) in m["buckets"] for m in (m_from, m_to) for i in changed
     ):
         return None
-    local = _feed_local(spark, path, m_from, m_to, changed, keys)
+    local = _slice_gate(
+        "feed", path=path, old=m_from, full=m_to, buckets=changed, key=keys
+    ).read
     if local is not None:
-        return local
+        from pyspark.sql.types import StringType, StructField, StructType
+
+        from .merge import table_diff_arrow
+
+        old, new, fields = local
+        typ = {f.name: f.dataType for f in fields}
+        # the Spark form's columns are expressions: their only field
+        # metadata is the physical names `_tagged` adds
+        out = StructType(
+            [
+                StructField(c, typ[c], metadata=mapped.get(c))
+                for c in keys + [f.name for f in fields if f.name not in keys]
+            ]
+            + [StructField("change", StringType(), False)]
+        )
+        return spark.createDataFrame(table_diff_arrow(old, new, keys), out)
 
     def _read(m: dict, like: DataFrame | None):
         # each side reads THROUGH its version's deltas and deletion

@@ -22,7 +22,7 @@ from pyspark.sql import Row, functions as F
 
 from cvemate_spark.operators import merge_versioned as mv
 from cvemate_spark.operators.merge import bucket_of_value
-from test_write_local import INSTANTS, SCHEMA, Twins, _feed, _row
+from test_write_local import INSTANTS, SCHEMA, Twins, _feed, _row, gate_log, paths
 
 T0 = "2024-01-01 00:00:00"
 T1 = "2024-02-01 00:00:00"
@@ -31,34 +31,35 @@ KEYS = [f"k{i:02d}" for i in range(40)]
 
 
 class Pair(Twins):
-    """The twin tables of tests/test_write_local.py, plus a spy on the
-    driver-side merge: `local` says whether the step's commit must take
-    it (None: the step does not merge). Every committed version must
-    also record the same schema and stats on both."""
+    """The twin tables of tests/test_write_local.py, plus the merge
+    gate's record: `local` says whether the step's commit must take the
+    driver-side merge (None: the step does not merge). The Spark twin's
+    commit is refused as too large. Every committed version must also
+    record the same schema and stats on both."""
 
-    def __init__(self, spark, root: Path, monkeypatch):
+    def __init__(self, spark, root: Path, caplog):
         super().__init__(spark, root)
-        self.took: list[bool] = []
-        real = mv._merge_local
+        self.caplog = caplog
+        gate_log(caplog)
 
-        def spy(*a, **kw):
-            out = real(*a, **kw)
-            self.took.append(out is not None)
-            return out
-
-        monkeypatch.setattr(mv, "_merge_local", spy)
+    @property
+    def took(self) -> list[bool]:
+        return [t for t, _ in paths(self.caplog, "merge")]
 
     def step(self, fn, local: bool | None = True):
         took = {}
 
         def run(path):
-            self.took.clear()
+            self.caplog.clear()
             fn(path)
-            took[path] = list(self.took)
+            took[path] = paths(self.caplog, "merge")
 
         super().step(run)
-        assert took[self.paths["local"]] == ([] if local is None else [local])
-        assert took[self.paths["spark"]] == []
+        if local is None:
+            assert took[self.paths["local"]] == took[self.paths["spark"]] == []
+            return
+        assert [t for t, _ in took[self.paths["local"]]] == [local]
+        assert took[self.paths["spark"]] == [(False, "too-large")]
 
     def assert_same(self):
         super().assert_same()
@@ -90,13 +91,13 @@ def _bucket_of(spark, k) -> int:
     return bucket_of_value(spark, k, N_BUCKETS)
 
 
-def test_local_commit_equals_spark_commit_wide_rows(spark, tmp_path, monkeypatch):
+def test_local_commit_equals_spark_commit_wide_rows(spark, tmp_path, caplog):
     """The initial sync into an empty table, then upserts over struct,
     array and map columns with NULL elements, timestamps at 1000-01-01,
     1960-05-05 and 9999-12-31, NTZ and decimals; a struct column whose
     non-nullable field sits under NULL structs; a batch that adds a
     column; a renamed column."""
-    pair = Pair(spark, tmp_path, monkeypatch)
+    pair = Pair(spark, tmp_path, caplog)
     _init(pair)
     base = _feed(spark, tmp_path, "base", [_row(k, i) for i, k in enumerate(KEYS)], SCHEMA)
     pair.step(lambda p: mv.merge_scoped_versioned(spark, p, base, now=T0))
@@ -130,10 +131,10 @@ def test_local_commit_equals_spark_commit_wide_rows(spark, tmp_path, monkeypatch
     assert "amount" in schema.names and "price" not in schema.names
 
 
-def test_local_commit_null_and_duplicate_keys(spark, tmp_path, monkeypatch):
+def test_local_commit_null_and_duplicate_keys(spark, tmp_path, caplog):
     """NULL keys in the batch and in the target match nothing, and a key
     repeated within the batch yields one row per batch row."""
-    pair = Pair(spark, tmp_path, monkeypatch)
+    pair = Pair(spark, tmp_path, caplog)
     _init(pair)
     base = _feed(spark, tmp_path, "base", [(k, i, f"d{i}") for i, k in enumerate(KEYS)]
                  + [(None, -1, "null-target")], "id string, n long, d string")
@@ -151,10 +152,10 @@ def test_local_commit_null_and_duplicate_keys(spark, tmp_path, monkeypatch):
     assert str(k02["created_at"]) < str(k02["updated_at"])
 
 
-def test_local_commit_into_absent_buckets(spark, tmp_path, monkeypatch):
+def test_local_commit_into_absent_buckets(spark, tmp_path, caplog):
     """A batch whose keys fall partly in buckets the manifest does not
     hold yet."""
-    pair = Pair(spark, tmp_path, monkeypatch)
+    pair = Pair(spark, tmp_path, caplog)
     _init(pair)
     held = [k for k in KEYS if _bucket_of(spark, k) in (0, 1, 2)]
     other = [k for k in KEYS if _bucket_of(spark, k) not in (0, 1, 2)]
@@ -174,8 +175,8 @@ def test_local_commit_into_absent_buckets(spark, tmp_path, monkeypatch):
     datetime.datetime(2024, 2, 1, 8, 30, 15, 123456),
     datetime.datetime(2024, 2, 1, 8, 30, tzinfo=datetime.timezone(datetime.timedelta(hours=5))),
 ], ids=["naive", "aware"])
-def test_local_commit_now_datetimes(spark, tmp_path, monkeypatch, now):
-    pair = Pair(spark, tmp_path, monkeypatch)
+def test_local_commit_now_datetimes(spark, tmp_path, caplog, now):
+    pair = Pair(spark, tmp_path, caplog)
     _init(pair)
     base = _feed(spark, tmp_path, "base", [(k, i) for i, k in enumerate(KEYS)], "id string, n long")
     pair.step(lambda p: mv.merge_scoped_versioned(spark, p, base, now=now))
@@ -184,11 +185,11 @@ def test_local_commit_now_datetimes(spark, tmp_path, monkeypatch, now):
     pair.step(lambda p: mv.merge_scoped_versioned(spark, p, upd, now=now))
 
 
-def test_local_commit_now_none_stamps_the_call(spark, tmp_path, monkeypatch):
+def test_local_commit_now_none_stamps_the_call(spark, tmp_path, caplog):
     """With no `now`, new rows get created_at == updated_at, an instant
     inside the call; matched rows keep created_at and get the same
     updated_at; untouched rows keep both."""
-    pair = Pair(spark, tmp_path, monkeypatch)
+    pair = Pair(spark, tmp_path, caplog)
     path = pair.paths["local"]
     mv.init_bucket_table_versioned(path, key="id", n_buckets=N_BUCKETS)
     base = _feed(spark, tmp_path, "base", [(k, i) for i, k in enumerate(KEYS)], "id string, n long")
@@ -209,10 +210,10 @@ def test_local_commit_now_none_stamps_the_call(spark, tmp_path, monkeypatch):
     assert {(str(r["created_at"]), str(r["updated_at"])) for r in untouched} == {(T0, T0)}
 
 
-def test_int_batch_key_against_long_column_takes_spark_merge(spark, tmp_path, monkeypatch):
+def test_int_batch_key_against_long_column_takes_spark_merge(spark, tmp_path, caplog):
     """An int batch key against a long key column: Spark widens the key
     in its join, so the commit keeps the Spark merge."""
-    pair = Pair(spark, tmp_path, monkeypatch)
+    pair = Pair(spark, tmp_path, caplog)
     _init(pair)
     base = _feed(spark, tmp_path, "base", [(i, f"v{i}") for i in range(30)], "id long, v string")
     pair.step(lambda p: mv.merge_scoped_versioned(spark, p, base, now=T0))
@@ -223,10 +224,10 @@ def test_int_batch_key_against_long_column_takes_spark_merge(spark, tmp_path, mo
     pair.step(lambda p: mv.merge_scoped_versioned(spark, p, wide, now=T1))
 
 
-def test_local_commit_occ(spark, tmp_path, monkeypatch):
+def test_local_commit_occ(spark, tmp_path, caplog):
     """An optimistic-concurrency commit takes the driver-side merge too,
     its touched set from the admission intent."""
-    pair = Pair(spark, tmp_path, monkeypatch)
+    pair = Pair(spark, tmp_path, caplog)
     _init(pair)
     base = _feed(spark, tmp_path, "base", [_row(k, i) for i, k in enumerate(KEYS)], SCHEMA)
     pair.step(lambda p: mv.merge_scoped_versioned_occ(spark, p, base, now=T0))
@@ -237,10 +238,10 @@ def test_local_commit_occ(spark, tmp_path, monkeypatch):
     assert (out["attempts"], out["rebased"]) == (1, False)
 
 
-def test_mor_and_dv_slices_keep_spark_merge(spark, tmp_path, monkeypatch):
+def test_mor_and_dv_slices_keep_spark_merge(spark, tmp_path, caplog):
     """A slice with merge-on-read deltas or deletion vectors keeps the
     Spark merge; a plain slice after a compaction takes the local one."""
-    pair = Pair(spark, tmp_path, monkeypatch)
+    pair = Pair(spark, tmp_path, caplog)
     _init(pair)
     base = _feed(spark, tmp_path, "base", [(k, i) for i, k in enumerate(KEYS)], "id string, n long")
     pair.step(lambda p: mv.merge_scoped_versioned(spark, p, base, now=T0))
@@ -282,3 +283,69 @@ def test_now_micros_memoizes_spark_cast(spark, monkeypatch):
         assert utc - now_micros(spark, lit) == (5 * 3600 + 1800) * 10**6
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz)
+
+
+def test_upsert_schema_rule_equals_spark_analysis(spark):
+    """Law: the driver-side merge's type rule (`_upsert_schema`) gives
+    exactly the schema Spark's analysis of `merge_upsert` gives, or
+    refuses exactly where some input column's type differs from the
+    output column it feeds, over key and column type pairs (int/long,
+    float/double, decimal precisions, strings, nested structs and
+    arrays, nested nullability), columns on one side only, audit columns
+    present or not, renamed columns' field metadata, string/datetime/None
+    `now` and an empty slice."""
+    from pyspark.sql.types import (
+        ArrayType, DecimalType, DoubleType, FloatType, IntegerType, LongType,
+        StringType, StructField, StructType, TimestampNTZType, TimestampType,
+    )
+
+    from cvemate_spark.operators.merge import AUDIT_COLS, merge_upsert
+
+    def st(t, nullable=True):
+        return StructType([StructField("p", t, nullable), StructField("q", StringType())])
+
+    pairs = [
+        (IntegerType(), LongType()), (LongType(), IntegerType()), (LongType(), LongType()),
+        (FloatType(), DoubleType()), (DoubleType(), FloatType()), (DoubleType(), DoubleType()),
+        (DecimalType(10, 2), DecimalType(12, 2)), (DecimalType(12, 4), DecimalType(10, 2)),
+        (DecimalType(10, 2), DecimalType(10, 2)), (StringType(), StringType()),
+        (st(IntegerType()), st(LongType())), (st(LongType()), st(LongType(), False)),
+        (ArrayType(IntegerType()), ArrayType(LongType())),
+        (ArrayType(st(LongType())), ArrayType(st(LongType(), False), False)),
+    ]
+    keys = [(StringType(), StringType()), (LongType(), LongType()), (LongType(), IntegerType()),
+            (IntegerType(), LongType())]
+    nows = ["2024-02-01 00:00:00", datetime.datetime(2024, 2, 1), None]
+    audits = [
+        [StructField("created_at", TimestampType()), StructField("updated_at", TimestampType())],
+        [], [StructField("created_at", TimestampNTZType())],
+    ]
+    checked = 0
+    for (kt, ku), (ct, cu), now, audit in [
+        (k, c, n, a) for k in keys for c in pairs for n in nows for a in audits
+    ][::2]:
+        t_fields = [
+            StructField("id", kt, True, {"k": 1}), StructField("c", ct, True, {"phys": "c0"}),
+            StructField("t_only", st(IntegerType()), True, {"phys": "t0"}),
+        ] + audit
+        target = mv._slice_fields(StructType(t_fields))
+        batch = StructType([
+            StructField("id", ku, False, {"k": 2}),
+            StructField("u_only", ArrayType(st(LongType(), False)), True, {"u": 1}),
+            StructField("c", cu, False, {"c": 1}), StructField("created_at", StringType()),
+        ])
+        for fields in (target, []):
+            stub = spark.createDataFrame([], StructType(fields)) if fields else None
+            out = merge_upsert(stub, spark.createDataFrame([], batch), key="id", now=now).schema
+            want = {f.name: mv._type_fingerprint(f.dataType.jsonValue()) for f in out}
+            widened = any(
+                mv._type_fingerprint(f.dataType.jsonValue()) != want[f.name]
+                for f in fields + [f for f in batch.fields if f.name not in AUDIT_COLS]
+            )
+            got = mv._upsert_schema(fields, batch, "id", now)
+            case = (kt, ku, ct, cu, now, audit, bool(fields))
+            assert (got is None) == widened, case
+            if got is not None:
+                assert got.jsonValue() == out.jsonValue(), case
+            checked += 1
+    assert checked > 200

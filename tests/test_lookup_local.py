@@ -143,16 +143,31 @@ def test_local_equals_spark_classic_and_packed(spark, tmp_path, packed):
             assert (rows[0]["far"], rows[0]["old"]) == (FAR, old), (k, bound)
 
 
+def _ask(schema: StructType, files: list[str], key: str, value):
+    """The lookup gate's answer for `key` = `value` over `files`, read
+    under the committed `schema`."""
+    return mv._slice_gate(
+        "lookup", full={"schema": schema.jsonValue()}, key=key, value=value,
+        gens=[(f, 0) for f in files],
+    )
+
+
+def _read(spark, schema: StructType, files: list[str], key: str, value):
+    table, out = _ask(schema, files, key, value).read
+    return spark.createDataFrame(table, out)
+
+
 def test_pyarrow_int96_files_keep_the_spark_read(tmp_path):
     """Range files packed before the coalescer wrote INT64 timestamps
     hold pyarrow-written INT96, which pyarrow mis-decodes before 1970:
-    `_key_rows_local` leaves such files to Spark."""
+    the gate leaves such files to Spark."""
     f = str(tmp_path / "r0-7.parquet")
     pq.write_table(
         pa.table({"id": ["a"], "ts": pa.array([datetime.datetime(1960, 5, 5)], pa.timestamp("us"))}),
         f, use_deprecated_int96_timestamps=True,
     )
-    assert mv._key_rows_local([f], "id", "a") is None
+    schema = StructType([StructField("id", StringType()), StructField("ts", TimestampType())])
+    assert _ask(schema, [f], "id", "a").reason == "int96-file"
 
 
 def test_local_equals_spark_packed_range_files(spark, tmp_path):
@@ -326,7 +341,7 @@ def _files_law(spark, tmp_path, tables: list[pa.Table], schema: StructType, key,
         want = mv._read_dirs(spark, [str(gdir)], schema, schema_json).filter(
             F.col(key) == F.lit(v)
         )
-        got = mv._read_local(spark, mv._key_rows_local(files, key, v), schema, schema_json)
+        got = _read(spark, schema, files, key, v)
         assert got.schema == want.schema, v
         assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr), v
 
@@ -376,9 +391,7 @@ def test_conform_reads_int96_timestamps_at_microseconds(spark, tmp_path):
     stored = mv._load_manifest_full(path, 1)["schema"]
     files = mv._data_files(gdir)
     k = pq.read_table(files[0], columns=["id"]).column(0)[0].as_py()
-    got = mv._read_local(
-        spark, mv._key_rows_local(files, "id", k), StructType.fromJson(stored), stored
-    ).collect()
+    got = _read(spark, StructType.fromJson(stored), files, "id", k).collect()
     assert got[0]["far"] == FAR
 
 
@@ -391,8 +404,9 @@ def test_key_type_mismatch_keeps_spark_read(spark, tmp_path):
         f for g in mv._load_manifest_full(path, 1)["buckets"].items()
         for f in mv._data_files(mv._gen_data_path(path, *g))
     ]
-    assert mv._key_rows_local(files, "id", 5) is None
-    assert mv._key_rows_local(files, "id", True) is None
+    schema = mv.table_schema(path)
+    assert _ask(schema, files, "id", 5).reason == "key-type"
+    assert _ask(schema, files, "id", True).reason == "key-type"
     ls, lr, lj = _lookup(spark, path, 5, 1 << 40)
     ss, sr, _ = _lookup(spark, path, 5, 0)
     assert lr == sr and lj >= 1

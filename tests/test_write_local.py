@@ -14,6 +14,8 @@ from __future__ import annotations
 import datetime
 import decimal
 import json
+import logging
+import sys
 from pathlib import Path
 
 import pyarrow.parquet as pq
@@ -87,6 +89,20 @@ def _row(k: str, i: int) -> tuple:
         bytes([i % 256, 0, 255]) if i % 5 else None,
         Row(src="nvd", seen=INSTANTS[(i + 1) % 3], score=None if i % 2 else i / 3),
     )
+
+
+def gate_log(caplog) -> None:
+    """Record the driver-local path answers (`mv._slice_gate`) in
+    `caplog`; `paths` reads them back."""
+    caplog.set_level(logging.DEBUG, logger=mv.__name__)
+
+
+def paths(caplog, surface: str) -> list[tuple[bool, str | None]]:
+    """(taken, reason) of each recorded answer for `surface`, in order."""
+    return [
+        (r.taken, r.reason) for r in caplog.records
+        if getattr(r, "surface", None) == surface
+    ]
 
 
 def _feed(spark, root: Path, name: str, rows, schema):
@@ -396,3 +412,36 @@ def test_local_write_bound_is_the_committed_crossover():
     assert feeds
     for r in feeds:
         assert r["local_feed_s"] < r["spark_feed_s"], r
+
+
+# py4j round trips of a warm point lookup and of a 6-row default
+# copy-on-write commit into a 16-bucket table, measured at the commit
+# before the driver-local paths shared one gate: the gate is pure
+# driver code, so neither may grow.
+LOOKUP_ROUND_TRIPS = 23
+COMMIT_ROUND_TRIPS = 195
+
+
+def test_lookup_and_commit_round_trip_ceilings(spark, tmp_path):
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+    from qtime import counted
+
+    t0, t1 = datetime.datetime(2024, 1, 1), datetime.datetime(2024, 2, 1)
+    schema = "id string, n long, desc string"
+    base = _feed(spark, tmp_path, "base", [(f"CVE-2024-{i:04d}", i, f"d{i}") for i in range(300)], schema)
+    path = str(tmp_path / "t")
+    mv.init_bucket_table_versioned(path, key="id", n_buckets=16)
+    mv.merge_scoped_versioned(spark, path, base, now=t0)
+    for k in ("CVE-2024-0007", "CVE-2024-0008"):  # warm
+        mv.read_bucket_for_key_versioned(spark, path, k).collect()
+    with counted(spark, "rt-lookup") as lookup:
+        mv.read_bucket_for_key_versioned(spark, path, "CVE-2024-0011")
+    warm = _feed(spark, tmp_path, "warm", [(f"CVE-2024-{i:04d}", -i, None) for i in range(1, 7)], schema)
+    mv.merge_scoped_versioned(spark, path, warm, now=t1)
+    small = _feed(spark, tmp_path, "small", [
+        (f"CVE-2024-{i:04d}", -i, None) for i in (10, 40, 70, 100, 130, 400)], schema)
+    with counted(spark, "rt-commit") as commit:
+        mv.merge_scoped_versioned(spark, path, small, now=t1)
+    assert (lookup["jobs"], commit["jobs"]) == (0, COMMIT_JOBS_LOCAL)
+    assert lookup["round_trips"] <= LOOKUP_ROUND_TRIPS
+    assert commit["round_trips"] <= COMMIT_ROUND_TRIPS

@@ -14,7 +14,7 @@ forms of the commit:
   pyarrow read of the slice, the Arrow upsert and one pyarrow file per
   bucket;
 - local_s: the Spark merge and the local writer (LOCAL_WRITE_BYTES
-  unbounded, the batch collect switched off): the touched-set distinct,
+  unbounded, the merge refused at `_slice_gate`): the touched-set distinct,
   one toArrow() collect of the merged slice, one pyarrow file per
   bucket;
 - spark_s: the Spark merge and the Spark writer (LOCAL_WRITE_BYTES =
@@ -27,7 +27,7 @@ the version before to the commit's, plus the consumer's
 2 x 2^k bytes (`feed_bytes`), timed the same way in two forms:
 
 - local_feed_s: both slices read with pyarrow and diffed on the driver
-  (`_feed_local`, the bound unbounded);
+  (`_slice_gate("feed")` admits it, the bound unbounded);
 - spark_feed_s: the Spark full-outer diff (the bound at 0).
 
 Each row also records `arrow_bytes`, the in-memory size of the slice
@@ -97,16 +97,20 @@ def _rows(spark, n: int, salt: str):
 
 def _timed_commit(spark, path: str, batch, bound: int, merge_local: bool = True) -> float:
     saved, mv.LOCAL_WRITE_BYTES = mv.LOCAL_WRITE_BYTES, bound
-    collect = mv._collect_batch
+    gate = mv._slice_gate
     if not merge_local:
-        mv._collect_batch = lambda *a: None
+        # the gate refuses the driver-side merge, so the Spark merge runs
+        # and the local writer still writes its output
+        mv._slice_gate = lambda purpose, **kw: (
+            mv._Gate("custom-merge") if purpose == "merge" else gate(purpose, **kw)
+        )
     try:
         t0 = time.perf_counter()
         r = mv.merge_scoped_versioned(spark, path, batch)
         dt = time.perf_counter() - t0
     finally:
         mv.LOCAL_WRITE_BYTES = saved
-        mv._collect_batch = collect
+        mv._slice_gate = gate
     assert r["buckets_touched"] == N_BUCKETS, r
     # drop the displaced generations so the disk holds one slice
     mv.vacuum_bucket_versions(path, keep=1)
