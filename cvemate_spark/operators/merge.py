@@ -11,11 +11,12 @@ insert, `updated_at` stamped on every write that matches.
 
 Spark-first rewrite: one full-outer join on the key + per-column
 coalesce — a single shuffle on `key`, no point lookups, no write
-queue. On a cluster the target is written hash-partitioned
-(bucketed) by `key` so repeated merges co-locate and the join side
-needs no re-shuffle; Delta `MERGE INTO` is a drop-in upgrade where
-available. Atomicity without Delta comes from the
-write-new-then-swap directory protocol (`write_atomic`).
+queue. Atomicity without Delta comes from the write-new-then-swap
+directory protocol (`write_atomic`) or the version pointer
+(`write_versioned`). The bucketed table, where a merge rewrites only
+the buckets its batch touches and commits atomically across them, is
+`operators/merge_versioned.py`; this module holds the bucket hash it
+shares with its callers (`bucket_expr`, `bucket_of_value`).
 
 Laws (tested in tests/test_merge_laws.py, SURVEY §5.3-5.4):
     idempotence          merge(merge(T, B), B) == merge(T, B)
@@ -681,22 +682,13 @@ def vacuum_versions(
     return doomed
 
 
-# ------------------------------------- bucket-scoped (partition) merge
-# The reference applies updates as per-key point writes
-# (mongodb_handler.py:141-195 — each UpdateOne touches only the
-# documents whose keys appear in the batch). `merge_upsert` +
-# `write_atomic` is semantically equal but rewrites the WHOLE target
-# directory per merge — cost ∝ |target|, which at 100 TB turns a 1 GB
-# nightly batch into a 100 TB write. The bucket-scoped layout restores
-# the reference's point-update economics at file granularity: the
-# table lives as hash(key)-bucketed partition directories
-# (`path/bucket=<i>/`), a merge computes the ≤ n_buckets bucket ids its
-# batch touches (a bounded collect), joins ONLY those buckets, and
-# swaps ONLY those directories — cost ∝ |batch| × bucket size, and an
-# untouched bucket's files are never opened, rewritten, or moved.
-# Atomicity is per-bucket (two renames each, the write_atomic
-# protocol); cross-bucket atomicity is the manifest upgrade
-# (`write_versioned`) or Delta's log commit in production.
+# ------------------------------------------------------ bucket hashing
+# The bucketed table (operators/merge_versioned.py) lays rows out as
+# hash(key) buckets so a merge rewrites only the buckets its batch
+# touches: the reference's per-key point writes
+# (mongodb_handler.py:141-195) at file granularity. Its writes, its
+# point lookups and the queries that pick keys by bucket share the one
+# hash defined here; `_BUCKETS` records a table's key and bucket count.
 BUCKET_META = "_BUCKETS"  # leading underscore: invisible to Spark scans
 
 
@@ -767,392 +759,6 @@ def bucket_of_value(spark: SparkSession, value, n_buckets: int) -> int:
         )
         .collect()[0][0]
     )
-
-
-def write_bucket_table(
-    df: DataFrame, path: str, key: str = "id", n_buckets: int = 16
-) -> None:
-    """Initial (full) load of a bucket-scoped table: one partitioned
-    write, then the bucket dirs are published under `path` with the
-    layout metadata (`_BUCKETS`: key, n_buckets, format version) that
-    later merges validate against."""
-    import json
-
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    (
-        df.withColumn("bucket", bucket_expr(key, n_buckets))
-        .repartition(n_buckets, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(tmp)
-    )
-    with open(os.path.join(tmp, BUCKET_META), "w") as f:
-        json.dump({"key": key, "n_buckets": n_buckets, "v": 1}, f)
-    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    # seed the freshness manifest over every written bucket
-    _update_stats(
-        df.sparkSession, path, key, n_buckets, list(range(n_buckets))
-    )
-
-
-def init_bucket_table(path: str, key: str = "id", n_buckets: int = 16) -> None:
-    """Metadata-only creation of an EMPTY bucket table: layout meta,
-    no bucket dirs, no Spark job. The CDC-replay shape starts from
-    nothing and lands everything through merge_scoped — spending a
-    distributed write (plus a stats pass) to materialize zero rows is
-    pure fixed overhead per stream start."""
-    import json
-
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, BUCKET_META), "w") as f:
-        json.dump({"key": key, "n_buckets": n_buckets, "v": 1}, f)
-
-
-def read_bucket_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read the whole table (partition discovery over bucket=<i> dirs;
-    the synthetic bucket column is dropped)."""
-    return spark.read.parquet(path).drop("bucket")
-
-
-def read_bucket_for_key(spark: SparkSession, path: str, value) -> DataFrame:
-    """Point-lookup read: prune to the ONE bucket dir that can hold
-    `value` — listing-time pruning, the same economics as the
-    reference's indexed point query (ensure_index_on_id,
-    mongodb_handler.py:229-259)."""
-    import json
-
-    with open(os.path.join(path, BUCKET_META)) as f:
-        meta = json.load(f)
-    b = bucket_of_value(spark, value, meta["n_buckets"])
-    bdir = os.path.join(path, f"bucket={b}")
-    if not os.path.isdir(bdir):
-        return None
-    return spark.read.parquet(bdir).filter(F.col(meta["key"]) == F.lit(value))
-
-
-def merge_scoped(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    now=None,
-    deleted_col: str | None = None,
-    merger=None,
-) -> dict:
-    """Bucket-scoped OP-MERGE: upsert `updates` into the bucket table
-    at `path`, rewriting ONLY the bucket directories the batch touches.
-
-    Returns the scoping stats the merge-cost contract is measured on:
-    {n_buckets, buckets_touched, files_rewritten, files_total} —
-    buckets_touched ≤ min(|batch keys|, n_buckets) by construction, so
-    merge cost is bounded by the batch, not the target. With
-    `deleted_col`, tombstone rows delete their keys (the
-    merge_upsert_deletes leg); a bucket whose last row is deleted has
-    its directory removed.
-    """
-    import fcntl
-    import glob as _glob
-    import json
-
-    with open(os.path.join(path, BUCKET_META)) as f:
-        meta = json.load(f)
-    key, n_buckets = meta["key"], meta["n_buckets"]
-    b = bucket_expr(key, n_buckets)
-
-    # bounded driver-side state: ≤ n_buckets ints, never row data
-    touched = sorted(
-        r[0] for r in updates.select(b.alias("__b")).distinct().collect()
-    )
-    files_total = len(_glob.glob(f"{path}/bucket=*/*.parquet"))
-    if not touched:
-        return {
-            "n_buckets": n_buckets, "buckets_touched": 0,
-            "files_rewritten": 0, "files_total": files_total,
-        }
-
-    # Concurrent mergers serialize on a table-level commit lock (the
-    # write_versioned/vacuum flock pattern): the read-merge-swap-stats
-    # sequence must see a stable table, or two writers would each
-    # merge against the other's pre-swap state and the later swap
-    # would silently drop the earlier batch. Lock-free concurrency at
-    # scale is the manifest-pointer sink or Delta's optimistic commit;
-    # at file granularity the lock IS the correct semantics (merges
-    # against the same table are order-dependent only in timestamps,
-    # so serializing them preserves every batch).
-    lock = open(os.path.join(path, "_MERGELOCK"), "w")
-    fcntl.flock(lock, fcntl.LOCK_EX)
-    try:
-        return _merge_scoped_locked(
-            spark, path, updates, key, n_buckets, b, touched, files_total,
-            now, deleted_col, merger,
-        )
-    finally:
-        fcntl.flock(lock, fcntl.LOCK_UN)
-        lock.close()
-
-
-def _merge_scoped_locked(
-    spark, path, updates, key, n_buckets, b, touched, files_total,
-    now, deleted_col, merger,
-) -> dict:
-    import glob as _glob
-
-    existing = [
-        f"{path}/bucket={i}"
-        for i in touched
-        if os.path.isdir(f"{path}/bucket={i}")
-    ]
-    target = spark.read.parquet(*existing) if existing else None
-    if merger is not None:
-        # custom merge semantics over the touched buckets (e.g. the
-        # keep-latest CDC law: late rows must LOSE the per-key ordering,
-        # which coalesce-upsert can't express) — the callable sees only
-        # the touched-bucket slice and the batch, scoping unchanged
-        merged = merger(target, updates)
-    elif deleted_col is not None:
-        merged = merge_upsert_deletes(
-            target, updates, key=key, deleted_col=deleted_col, now=now
-        )
-    else:
-        merged = merge_upsert(target, updates, key=key, now=now)
-
-    tmp = f"{path}/.merge-tmp-{uuid.uuid4().hex[:8]}"
-    (
-        # co-locate each bucket in one task so a rewritten bucket dir
-        # is ONE file (not shuffle-partitions-many shards per bucket);
-        # at cluster scale pair this with maxRecordsPerFile to split
-        # oversized buckets back into target-sized files
-        merged.withColumn("bucket", b)
-        .repartition(len(touched), "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(tmp)
-    )
-    files_rewritten = bytes_rewritten = 0
-    for i in touched:
-        src, dst = f"{tmp}/bucket={i}", f"{path}/bucket={i}"
-        old = f"{dst}.old-{uuid.uuid4().hex[:8]}"
-        if os.path.isdir(src):
-            new_files = _glob.glob(f"{src}/*.parquet")
-            files_rewritten += len(new_files)
-            bytes_rewritten += sum(os.path.getsize(f) for f in new_files)
-            if os.path.exists(dst):
-                os.rename(dst, old)
-            os.rename(src, dst)
-        elif os.path.exists(dst):  # every row of this bucket deleted
-            os.rename(dst, old)
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-    if "updated_at" in merged.columns:
-        _update_stats(spark, path, key, n_buckets, touched)
-    else:
-        # no updated_at -> no freshness semantics to track; drop the
-        # touched entries rather than pay a second read of the touched
-        # slice for a rows-only manifest nothing consumes (the s17
-        # per-batch fixed-cost finding, VERDICT r8 item 7)
-        stats = _load_stats(path)
-        if stats:
-            for i in touched:
-                stats.pop(str(i), None)
-            _store_stats(path, stats)
-    return {
-        "n_buckets": n_buckets,
-        "buckets_touched": len(touched),
-        "files_rewritten": files_rewritten,
-        "bytes_rewritten": bytes_rewritten,
-        "files_total": files_total,
-    }
-
-
-BUCKET_STATS = "_STATS"  # per-bucket freshness manifest (underscore: invisible to scans)
-
-
-def _load_stats(path: str) -> dict:
-    import json
-
-    p = os.path.join(path, BUCKET_STATS)
-    if not os.path.exists(p):
-        return {}
-    with open(p) as f:
-        return json.load(f)
-
-
-def _store_stats(path: str, stats: dict) -> None:
-    import json
-
-    tmp = os.path.join(path, f"{BUCKET_STATS}.tmp-{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        json.dump(stats, f, indent=0, sort_keys=True)
-    os.replace(tmp, os.path.join(path, BUCKET_STATS))  # atomic file swap
-
-
-def _update_stats(
-    spark: SparkSession, path: str, key: str, n_buckets: int,
-    touched: list[int],
-) -> None:
-    """Advance the per-bucket freshness manifest for the touched
-    buckets only: {bucket: {rows, max_updated_at}} — the table-side
-    form of the reference's per-source watermark
-    (mongodb_handler.py:261-289 get_last_update_time). Reads the
-    POST-SWAP bucket directories (never a pre-swap lineage, whose
-    re-execution would chase renamed files); bounded work: one agg
-    over the touched slice, <= |touched| rows collected. Tables
-    without an updated_at column skip freshness (rows still
-    recorded)."""
-    dirs = [
-        f"{path}/bucket={i}" for i in touched
-        if os.path.isdir(f"{path}/bucket={i}")
-    ]
-    stats = _load_stats(path)
-    per_bucket: dict[int, dict] = {}
-    if dirs:
-        df = spark.read.parquet(*dirs)
-        aggs = [F.count("*").alias("rows")]
-        has_updated = "updated_at" in df.columns
-        if has_updated:
-            # full microsecond precision: a whole-second watermark
-            # truncates merges landing later within the same second as
-            # a consumer's checkpoint, and the strict '>' comparison in
-            # changed_buckets_since would then skip those rows forever
-            aggs.append(
-                F.date_format(
-                    F.max("updated_at"), "yyyy-MM-dd HH:mm:ss.SSSSSS"
-                ).alias("max_upd")
-            )
-        b = bucket_expr(key, n_buckets)
-        per_bucket = {
-            int(r["bucket"]): r
-            for r in df.withColumn("bucket", b).groupBy("bucket").agg(*aggs).collect()
-        }
-    else:
-        has_updated = False
-    for i in touched:
-        r = per_bucket.get(i)
-        if r is None:  # bucket emptied (delete leg) or never written
-            stats.pop(str(i), None)
-            continue
-        stats[str(i)] = {
-            "rows": int(r["rows"]),
-            **({"max_updated_at": r["max_upd"]} if has_updated else {}),
-        }
-    _store_stats(path, stats)
-
-
-def _canon_ts(s: str) -> str:
-    """Canonical microsecond form for watermark string comparison:
-    'yyyy-MM-dd HH:mm:ss[.f+]' -> fraction right-padded to >= 6 digits
-    ('.000000' when absent), so a whole-second checkpoint compares
-    EQUAL to (not less than) the same instant stored at full
-    precision, and mixed-precision manifests (pre-/post-upgrade)
-    order correctly."""
-    if "." not in s:
-        return s + ".000000"
-    head, frac = s.split(".", 1)
-    return f"{head}.{frac.ljust(6, '0')}"
-
-
-def changed_buckets_since(path: str, since: str) -> list[int]:
-    """Bucket ids whose max_updated_at is strictly later than `since`
-    — pure manifest arithmetic, no scan. Watermarks are stored at full
-    microsecond precision ('yyyy-MM-dd HH:mm:ss.SSSSSS'): a merge
-    landing later within the same second as a consumer's checkpoint
-    still advances the watermark, so its rows are never silently
-    skipped. Both sides are canonicalized before the string compare."""
-    cutoff = _canon_ts(since)
-    return sorted(
-        int(k)
-        for k, v in _load_stats(path).items()
-        if v.get("max_updated_at") is not None
-        and _canon_ts(v["max_updated_at"]) > cutoff
-    )
-
-
-def read_changed_since(
-    spark: SparkSession, path: str, since: str
-) -> DataFrame | None:
-    """Incremental downstream consumption: read ONLY the bucket dirs
-    whose freshness watermark advanced past `since`, then filter to
-    the actually-newer rows. Listing cost = |changed buckets|; an
-    up-to-date consumer reads NOTHING. This is the reference's
-    incremental-refresh contract (update_status / get_last_update_time
-    per source) applied to the merged table itself: downstream jobs
-    checkpoint a timestamp and pay only for what moved."""
-    changed = changed_buckets_since(path, since)
-    if not changed:
-        return None
-    dirs = [
-        f"{path}/bucket={i}"
-        for i in changed
-        if os.path.isdir(f"{path}/bucket={i}")
-    ]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs).filter(
-        F.col("updated_at") > F.lit(since).cast("timestamp")
-    )
-
-
-def compact_buckets(
-    spark: SparkSession,
-    path: str,
-    max_files_per_bucket: int = 1,
-    min_files_to_compact: int = 2,
-) -> dict:
-    """Small-file compaction for the bucket table (the OPTIMIZE /
-    bin-packing maintenance pass every file-based table needs at
-    100 TB: a long merge history leaves each bucket with many small
-    files, and scan cost degrades with file COUNT, not bytes).
-
-    Rewrites — with the same per-bucket two-rename swap merge_scoped
-    uses — only the buckets holding more than `min_files_to_compact`
-    files, coalescing each to `max_files_per_bucket`. Content is
-    byte-for-byte row-preserving (no merge logic runs); buckets
-    already compact are not opened. Returns
-    {buckets_compacted, files_before, files_after}.
-
-    Serializes on the table's _MERGELOCK: compaction is the same
-    read-then-swap sequence as merge_scoped, so an unlocked compaction
-    racing a concurrent merge could snapshot a bucket, lose the race,
-    and swap its stale pre-merge copy back in — silently dropping the
-    merged batch. (write_bucket_table's full-republish path replaces
-    the whole table dir — including the lock file's inode — and is an
-    initial-load operation, documented as not concurrency-safe.)"""
-    import fcntl
-    import glob as _glob
-
-    lock = open(os.path.join(path, "_MERGELOCK"), "w")
-    fcntl.flock(lock, fcntl.LOCK_EX)
-    try:
-        bdirs = sorted(_glob.glob(f"{path}/bucket=*"))
-        files_before = sum(len(_glob.glob(f"{d}/*.parquet")) for d in bdirs)
-        todo = [
-            d for d in bdirs
-            if len(_glob.glob(f"{d}/*.parquet")) > max(min_files_to_compact, 1)
-        ]
-        for d in todo:
-            tmp = f"{d}.compact-{uuid.uuid4().hex[:8]}"
-            spark.read.parquet(d).coalesce(max_files_per_bucket).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            old = f"{d}.old-{uuid.uuid4().hex[:8]}"
-            os.rename(d, old)
-            os.rename(tmp, d)
-            shutil.rmtree(old, ignore_errors=True)
-        files_after = sum(
-            len(_glob.glob(f"{d}/*.parquet"))
-            for d in sorted(_glob.glob(f"{path}/bucket=*"))
-        )
-    finally:
-        fcntl.flock(lock, fcntl.LOCK_UN)
-        lock.close()
-    return {
-        "buckets_compacted": len(todo),
-        "files_before": files_before,
-        "files_after": files_after,
-    }
 
 
 def merge_many(

@@ -1,13 +1,14 @@
 """Versioned bucket table: cross-bucket atomic scoped merges + time travel.
 
-Composes the two sink protocols `operators/merge.py` ships separately:
+Composes two properties no simpler sink has at once:
 
-* `merge_scoped` — merge cost ∝ batch (only touched bucket dirs are
-  rewritten), but its per-bucket two-rename swaps commit one bucket at
-  a time: a reader scanning during a multi-bucket merge can observe
-  bucket 3 post-merge and bucket 7 pre-merge, and a crash mid-swap
-  leaves that mix on disk.
-* `write_versioned` — an atomic manifest-pointer commit with time
+* bucket scoping — merge cost ∝ batch: rows live in hash(key) buckets
+  (`merge.bucket_expr`) and a merge rewrites only the buckets its
+  batch touches. Swapping those bucket directories in place would
+  commit one bucket at a time: a reader scanning during a
+  multi-bucket merge could observe bucket 3 post-merge and bucket 7
+  pre-merge, and a crash mid-swap would leave that mix on disk.
+* `merge.write_versioned` — an atomic pointer commit with time
   travel, but each version is a full snapshot: write cost ∝ table.
 
 This module gives both properties at once — the production story a
@@ -842,6 +843,18 @@ def _schema_of(df: DataFrame) -> dict:
     return json.loads(df.schema.json())
 
 
+def _struct_of(schema_json: dict):
+    """The StructType of a recorded schema, parsed from a copy: pyspark
+    4.1's `StructField.fromJson` rewrites the collation metadata of the
+    dict it is given (`spark.UTF8_LCASE` -> `UTF8_LCASE`), and a second
+    parse of that dict then fails."""
+    import copy
+
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(copy.deepcopy(schema_json))
+
+
 class SchemaConflict(ValueError):
     """A merge batch redefined an existing column at an incompatible
     type. Raised BEFORE the commit — Delta-style schema enforcement:
@@ -1028,11 +1041,9 @@ def table_schema(path: str, version: int | None = None):
     returns the table AS IT WAS — columns added later don't exist in
     older versions. None for manifests written before schemas were
     recorded (readers fall back to parquet inference)."""
-    from pyspark.sql.types import StructType
-
     v = _resolve_version(path, version)
     s = _load_manifest_full(path, v).get("schema")
-    return StructType.fromJson(s) if s is not None else None
+    return _struct_of(s) if s is not None else None
 
 
 def _phys_map(schema_json: dict | None) -> dict[str, str]:
@@ -1057,13 +1068,11 @@ def _physical_struct(schema_json: dict):
     replaced by their physical names (top level only — nested fields
     are not renameable, `alter_bucket_table_versioned` rejects
     attempts)."""
-    from pyspark.sql.types import StructType
-
     fields = [
         {**f, "name": (f.get("metadata") or {}).get("phys") or f["name"]}
         for f in schema_json["fields"]
     ]
-    return StructType.fromJson({**schema_json, "fields": fields})
+    return _struct_of({**schema_json, "fields": fields})
 
 
 def _read_dirs(
@@ -1741,12 +1750,10 @@ def scan_versioned_multi(
     so the result is exact (pruned ≡ unpruned law in
     tests/test_merge_versioned.py). The practical 100 TB shape is
     freshness AND a dimension bound in one pass."""
-    from pyspark.sql.types import StructType
-
     plan = prune_files(path, predicates, version)
     full_m = plan["manifest"]
     stored = full_m.get("schema")
-    schema = StructType.fromJson(stored) if stored is not None else None
+    schema = _struct_of(stored) if stored is not None else None
     dirs = plan["read"]
     with open(os.path.join(path, BUCKET_META)) as f:
         _k = json.load(f)["key"]
@@ -2117,14 +2124,12 @@ def _read_snapshot_slice(
     (all buckets' j-th delta in one scan, j bounded by merges since
     the last compaction), never one-job-per-dir. Returns None when
     none of the requested buckets hold data."""
-    from pyspark.sql.types import StructType
-
     manifest = full["buckets"]
     ids = [str(i) for i in bucket_ids if str(i) in manifest]
     if not ids:
         return None
     stored = full.get("schema")
-    schema = StructType.fromJson(stored) if stored is not None else None
+    schema = _struct_of(stored) if stored is not None else None
     classic, packed, excl = _plan_base_paths(path, full, ids)
     deltas = full.get("deltas") or {}
     depth = max((len(deltas.get(i, [])) for i in ids), default=0)
@@ -2452,9 +2457,8 @@ def write_bucket_table_versioned(
     """Full load: generation dirs for every non-empty bucket, one
     manifest, pointer published. On a FRESH path this commits v-1; on
     an EXISTING table it commits a full-snapshot RELOAD as the next
-    version (the recovery action merge.py::write_bucket_table supports
-    by replacing the directory — here the old versions additionally
-    stay time-travelable until vacuumed). A reload may change
+    version (the old versions stay time-travelable until vacuumed).
+    A reload may change
     n_buckets (manifests carry their own layout) but never the KEY:
     older manifests would become unreadable by point lookups, so a
     key change raises instead of silently corrupting. `constraints`
@@ -2576,7 +2580,7 @@ def init_bucket_table_versioned(
 ) -> int:
     """Metadata-only creation of an EMPTY versioned table: meta, an
     empty manifest v-1, pointer — no Spark job (the CDC-replay shape
-    starts from nothing; see merge.py::init_bucket_table).
+    starts from nothing).
     `constraints` are recorded for every future merge to enforce —
     nothing to check yet on an empty table. Init on an EXISTING table
     is ensure-exists: the committed table wins untouched (rewriting
@@ -2873,7 +2877,7 @@ def _slice_gate(
     if purpose == "lookup":
         if full.get("schema") is None:
             return answer("no-schema")
-        schema = StructType.fromJson(full["schema"])
+        schema = _struct_of(full["schema"])
         r = key_refusal(schema[key].dataType, value)
         if r:
             return answer(r)
@@ -2942,7 +2946,7 @@ def _slice_gate(
                 return refuse("no-stats")
             if s + p > bound:
                 return refuse("too-large")
-            fields = _slice_fields(StructType.fromJson(full["schema"]))
+            fields = _slice_fields(_struct_of(full["schema"]))
         out = _upsert_schema(fields, frame.schema, key, now)
         if out is None:
             return refuse("widened-type")
@@ -2966,7 +2970,7 @@ def _slice_gate(
         ] + [layout_refusal(m, buckets) for m in (old, full)]:
             if r:
                 return answer(r)
-        was, schema = (StructType.fromJson(m["schema"]) for m in (old, full))
+        was, schema = (_struct_of(m["schema"]) for m in (old, full))
         r = _incomparable(was) or _incomparable(schema)
         if r:
             return answer(r)
@@ -5249,7 +5253,7 @@ def read_bucket_for_key_versioned(
         ktype = next(
             (
                 f.dataType
-                for f in StructType.fromJson(stored).fields
+                for f in _struct_of(stored).fields
                 if f.name == meta["key"]
             ),
             None,
@@ -5299,7 +5303,7 @@ def read_bucket_for_key_versioned(
         mor = mor and not own_fold
         df = spark.createDataFrame(table, out)
     else:
-        schema = StructType.fromJson(stored) if stored is not None else None
+        schema = _struct_of(stored) if stored is not None else None
         for gdir, ordn in live:
             part = _read_dirs(spark, [gdir], schema, schema_json=stored).filter(
                 F.col(key) == F.lit(value)
@@ -5322,10 +5326,10 @@ def changed_buckets_between(
 ) -> list[int]:
     """Bucket ids whose generation changed between two committed
     versions — pure manifest arithmetic, no scan, no clocks. The
-    version number IS the consumer's watermark: unlike timestamp
-    freshness (merge.py::changed_buckets_since) there is no precision
-    or clock-skew surface at all, and a layout change (rebucket)
-    degrades safely to "everything changed".
+    version number IS the consumer's watermark: unlike a timestamp
+    watermark there is no precision or clock-skew surface at all
+    (`version_at` maps a time to a version), and a layout change
+    (rebucket) degrades safely to "everything changed".
 
     The diff runs at the ROOT first: a shard whose content-addressed
     file reference is identical in both versions is byte-identical, so

@@ -30,11 +30,13 @@ TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 # layout those tables use changes: every cache then rebuilds from zero
 # instead of being read under the new code. Epoch 2: manifest roots
 # are always sharded (format 2), monolithic roots no longer load.
+# Epoch 3: `e_merge_scoped` stages a versioned table where it staged
+# an unversioned bucket table.
 SCRATCH_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
     ".scratch",
 )
-LAYOUT_EPOCH = 2
+LAYOUT_EPOCH = 3
 
 
 def scratch_dir(sf_dir: str, table: str, prefix: str) -> str:

@@ -1681,18 +1681,18 @@ INS_OFFSET = 900_000_000  # synthetic insert keys, disjoint from orders
            CAST(SUM(CAST(price AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
     FROM merged GROUP BY status ORDER BY status
     """,
-    doc="Bucket-scoped OP-MERGE (operators/merge.py::merge_scoped): the "
-    "orders table is laid out as 32 hash(key)-bucketed partition "
-    "directories, then a mixed update+insert batch (every 97th key "
+    doc="Bucket-scoped OP-MERGE (operators/merge_versioned.py::"
+    "merge_scoped_versioned): the orders table is laid out as 32 "
+    "hash(key) buckets, then a mixed update+insert batch (every 97th key "
     "repriced, every 997th key's synthetic twin inserted) is merged by "
-    "rewriting ONLY the bucket dirs the batch touches — the "
-    "reference's point-update economics (mongodb_handler.py:141-195, "
+    "writing new generations for ONLY the buckets the batch touches — "
+    "the reference's point-update economics (mongodb_handler.py:141-195, "
     "each UpdateOne touches only matched documents) at file "
     "granularity, vs write_atomic's whole-table rewrite. The returned "
     "aggregate proves the merged CONTENT equals the plain full-outer "
     "merge the oracle computes; the scoping law (untouched buckets "
     "physically untouched, cost ∝ batch) is pinned in "
-    "tests/test_merge_laws.py and measured in MERGEBENCH.json. At "
+    "tests/test_merge_versioned.py and measured in MERGEBENCH.json. At "
     "100 TB this bounds nightly-merge writes by the batch footprint, "
     "not the corpus.",
 )
@@ -1700,8 +1700,11 @@ def e_merge_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from ..operators.merge import (
-        merge_scoped, merge_upsert, read_bucket_table, write_bucket_table,
+    from ..operators.merge import merge_upsert
+    from ..operators.merge_versioned import (
+        merge_scoped_versioned,
+        read_bucket_table_versioned,
+        write_bucket_table_versioned,
     )
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -1714,9 +1717,8 @@ def e_merge_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(path)
         # initial load through merge_upsert(None, ...) so every bucket
         # file carries the audit columns from day one — merged and
-        # untouched buckets then share one schema (no parquet
-        # schema-merge dependence on which file the reader samples)
-        write_bucket_table(
+        # untouched buckets then share one schema
+        write_bucket_table_versioned(
             merge_upsert(None, orders, key="o_orderkey", now=T_MERGE),
             path, key="o_orderkey", n_buckets=MS_BUCKETS,
         )
@@ -1731,12 +1733,12 @@ def e_merge_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         )
-        stats = merge_scoped(spark, path, batch, now=T_MERGE)
+        stats = merge_scoped_versioned(spark, path, batch, now=T_MERGE)
         assert 0 < stats["buckets_touched"] <= MS_BUCKETS
         with open(done, "w") as f:
             f.write(str(stats))
     return (
-        read_bucket_table(spark, path)
+        read_bucket_table_versioned(spark, path)
         .groupBy(F.col("o_orderstatus").alias("status"))
         .agg(
             F.count("*").cast("long").alias("cnt"),
@@ -1797,8 +1799,8 @@ def e_merge_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Versioned bucket table (operators/merge_versioned.py): scoped "
     "merges with a cross-bucket ATOMIC commit + time travel — the "
-    "composition of merge_scoped's batch-bounded write cost with "
-    "write_versioned's manifest-pointer snapshot protocol (VERDICT r8 "
+    "composition of a bucket-scoped merge's batch-bounded write cost "
+    "with write_versioned's manifest-pointer snapshot protocol (VERDICT r8 "
     "item 2; the reference's point-update economics, "
     "mongodb_handler.py:141-195, under snapshot isolation). Three "
     "committed versions are built (initial orders load; an "
@@ -3190,7 +3192,7 @@ def e_rebucket_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Multi-writer OPTIMISTIC concurrency on the versioned table "
     "(operators/merge_versioned.py::merge_scoped_versioned_occ — the "
-    "Delta/Iceberg commit protocol the serial _MERGELOCK path can't "
+    "Delta/Iceberg commit protocol the serial merge lock can't "
     "give): two writers' merge WORK (target read, join, generation "
     "writes) runs with NO lock held and genuinely overlaps — a "
     "two-party barrier in the pre-commit seam proves both snapshotted "

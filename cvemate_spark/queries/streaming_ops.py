@@ -72,34 +72,6 @@ def s3_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @REG.add(
-    "s17_scoped_replay",
-    """
-    SELECT user_id, event_type, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts
-    FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) AS rn
-        FROM events
-    ) WHERE rn = 1
-    ORDER BY user_id, event_type, event_id, ts
-    """,
-    doc="S17: the S3 out-of-order replay landing through BUCKET-SCOPED "
-    "merges (operators/merge.py::merge_scoped with the keep-latest "
-    "merger) — CDC into a hash(user_id)-bucketed table where each "
-    "micro-batch reads/re-ranks/swaps ONLY its users' bucket dirs. "
-    "Same convergence oracle as S3 (batch Q20 keep-latest): the hash "
-    "gate proves that scoping the rewrite changes nothing, while "
-    "per-batch merge cost is bounded by the batch's bucket footprint "
-    "— at 100 TB the difference between a nightly CDC landing that "
-    "rewrites gigabytes and one that rewrites the table. "
-    "streaming/jobs.py::scoped_replay.",
-)
-def s17_scoped_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return jobs.scoped_replay(spark, sf_dir).orderBy(
-        "user_id", "event_type", "event_id", "ts"
-    )
-
-
-@REG.add(
     "s18_versioned_replay",
     """
     SELECT user_id, event_type, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts
@@ -110,15 +82,18 @@ def s17_scoped_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rn = 1
     ORDER BY user_id, event_type, event_id, ts
     """,
-    doc="S18: the S17 bucket-scoped CDC replay landing through the "
-    "VERSIONED table (operators/merge_versioned.py) — every "
-    "micro-batch commits atomically (new generations for touched "
-    "buckets + one manifest/pointer replace), so a reader racing the "
-    "replay sees exact batch boundaries (version n = first n-1 "
-    "batches), never S17's transient half-swapped bucket mix, and "
-    "every boundary stays time-travelable for replay debugging. Same "
+    doc="S18: the S3 out-of-order replay landing through bucket-scoped "
+    "merges into the VERSIONED table (operators/merge_versioned.py) — "
+    "CDC into a hash(user_id)-bucketed table where each micro-batch "
+    "reads and re-ranks ONLY its users' buckets and commits atomically "
+    "(new generations for touched buckets + one manifest/pointer "
+    "replace), so a reader racing the replay sees exact batch "
+    "boundaries (version n = first n-1 batches), never a half-merged "
+    "bucket mix, and every boundary stays time-travelable for replay "
+    "debugging. Per-batch merge cost is bounded by the batch's bucket "
+    "footprint, not the table. Same "
     "keep-latest semantics and the same batch Q20 convergence oracle "
-    "as S3/S17; the builder asserts the commit history is exactly "
+    "as S3; the builder asserts the commit history is exactly "
     "empty-init + one version per micro-batch. "
     "streaming/jobs.py::scoped_replay_versioned.",
 )
@@ -150,7 +125,7 @@ def s18_versioned_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     "of how many micro-batches were staged. The reference's streaming "
     "handlers have exactly this gap: every bulk_write is live the "
     "instant it lands (mongodb_handler.py). Same batch Q20 "
-    "keep-latest convergence oracle as S3/S17/S18 — the hash gate "
+    "keep-latest convergence oracle as S3/S18 — the hash gate "
     "proves staging + publish changes nothing about the data while "
     "adding the atomic-visibility boundary. "
     "streaming/jobs.py::wap_replay.",
@@ -183,7 +158,7 @@ def s22_wap_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     "converges exactly as the CoW merger decides — a late chunk's "
     "older event loses at read time. The closing compact_versioned "
     "folds the chains (the off-peak cadence; chains also self-level "
-    "at max_depth). Same batch Q20 keep-latest oracle as S3/S17/S18: "
+    "at max_depth). Same batch Q20 keep-latest oracle as S3/S18: "
     "the hash proves MOR replay ≡ CoW replay ≡ batch. "
     "streaming/jobs.py::mor_replay.",
 )
@@ -214,7 +189,7 @@ def s20_mor_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     "re-lands on the compacted base (asserted: the retry fired; the "
     "version ledger is exact) — appends compose or retry per the "
     "conflict rules, never lose rows, never chain onto a stale base. "
-    "Same batch Q20 keep-latest oracle as S3/S17/S18/S20: the hash "
+    "Same batch Q20 keep-latest oracle as S3/S18/S20: the hash "
     "proves the interleaved run ≡ CoW replay ≡ batch.",
 )
 def s21_mor_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -245,7 +220,7 @@ def s21_mor_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "between apply and advance, so the next poll re-pulls an "
     "overlapping span: idempotent apply turns at-least-once delivery "
     "into exactly-once replica effects — the hash oracle (the same "
-    "batch Q20 keep-latest as S3/S17/S18) proves the replica "
+    "batch Q20 keep-latest as S3/S18) proves the replica "
     "converged through the crash. Per-poll cost ∝ commits since the "
     "checkpoint (changed buckets only), never the table; the final "
     "up-to-date poll is manifest arithmetic alone (asserted None).",

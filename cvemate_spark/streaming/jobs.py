@@ -227,82 +227,23 @@ def replay_merge(spark: SparkSession, sf_dir: str, n_chunks: int = 2) -> DataFra
     )
 
 
-def scoped_replay(spark: SparkSession, sf_dir: str, n_chunks: int = 2) -> DataFrame:
-    """S17: the S3 out-of-order replay landing through BUCKET-SCOPED
-    merges — the CDC-into-a-bucketed-table shape a 100 TB ingest runs.
-
-    Same chunked landing and keep-latest CDC semantics as S3, but the
-    target is the hash(user_id)-bucketed table and each micro-batch
-    merges via `merge_scoped`: only the bucket directories holding the
-    batch's users are read, re-ranked, and swapped. Scoping is sound
-    for the per-(user_id, event_type) keep-latest window because the
-    bucket key (user_id) FUNCTIONALLY DETERMINES the window partition
-    key's bucket: every row that can compete with a batch row lives in
-    that row's own bucket, so the touched-slice window is complete.
-    Convergence law unchanged: the merge is commutative across batch
-    orderings, so the replayed table equals the batch Q20 keep-latest
-    (the same oracle S3 uses); merge cost per micro-batch is bounded
-    by the batch's bucket footprint, not the table.
-    """
-    from ..operators.merge import (
-        init_bucket_table, keep_latest_merge, merge_scoped, read_bucket_table,
-    )
-
-    _ensure_session_confs(spark)
-    in_dir = _chunked_landing(spark, sf_dir, n_chunks=n_chunks)
-
-    run_dir = f"{SCRATCH}/s17_{os.getpid()}"
-    target, ckpt = f"{run_dir}/target", f"{run_dir}/ckpt"
-    shutil.rmtree(run_dir, ignore_errors=True)
-    os.makedirs(run_dir)
-    # empty bucket table, keyed on user_id (16 buckets at test scale;
-    # at 100 TB: n_buckets ∝ table size, same layout). Metadata-only
-    # init: materializing zero rows with a distributed write was ~1 s
-    # of fixed overhead per stream start (VERDICT r8 item 7).
-    init_bucket_table(target, key="user_id", n_buckets=16)
-
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        merge_scoped(
-            batch.sparkSession,
-            target,
-            batch,
-            merger=lambda cur, b: keep_latest_merge(
-                cur,
-                b,
-                keys=["user_id", "event_type"],
-                order_by=[F.desc("ts"), F.desc("event_id")],
-            ),
-        )
-
-    q = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-        .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return read_bucket_table(spark, target).select(
-        "user_id",
-        "event_type",
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-    )
-
-
 def scoped_replay_versioned(
     spark: SparkSession, sf_dir: str, n_chunks: int = 2
 ) -> DataFrame:
-    """S18: the S17 bucket-scoped CDC replay landing through the
-    VERSIONED table (merge_scoped_versioned) — every micro-batch is one
+    """S18: the S3 out-of-order replay landing through bucket-scoped
+    merges into the VERSIONED table (merge_scoped_versioned) — the
+    CDC-into-a-bucketed-table shape a 100 TB ingest runs. Each
+    micro-batch reads and re-ranks only the buckets holding its users.
+    Scoping is sound for the per-(user_id, event_type) keep-latest
+    window because the bucket key (user_id) functionally determines the
+    window partition key's bucket: every row that can compete with a
+    batch row lives in that row's own bucket. Every micro-batch is one
     atomic cross-bucket commit, so a downstream reader racing the
     replay always sees a complete batch boundary (version n = exactly
     the first n-1 batches applied), never a half-merged mix of bucket
     directories, and any intermediate state remains time-travelable
     for replay debugging. Same keep-latest CDC semantics and the same
-    batch Q20 convergence oracle as S3/S17; per-batch write cost is
+    batch Q20 convergence oracle as S3; per-batch write cost is
     still bounded by the batch's bucket footprint (new generations for
     touched buckets only + one manifest/pointer commit).
     """
@@ -364,7 +305,7 @@ def wap_replay(
     streaming write-audit-publish (operators/catalog.py branch block).
 
     Same chunked out-of-order landing, keep-latest semantics, and
-    batch Q20 convergence oracle as S3/S17/S18, but every micro-batch
+    batch Q20 convergence oracle as S3/S18, but every micro-batch
     lands through `branch_txn` on branch 'ingest': the table-level
     commits are identical to S18's (bucket-scoped generations + one
     manifest/pointer per batch — cost ∝ batch footprint), yet only the
@@ -463,7 +404,7 @@ def mor_replay(
     """S20: the S18 CDC replay landing through MERGE-ON-READ deltas —
     the write-amplification fix for high-frequency micro-batches.
 
-    S17/S18 pay (touched-bucket bytes) per micro-batch: every chunk
+    S18 pays (touched-bucket bytes) per micro-batch: every chunk
     re-reads and rewrites the bucket directories its users hash into,
     so N small batches cost N x bucket-size even when each batch is a
     few rows (MERGEBENCH: a 20-row batch rewrites 1.2 MB CoW vs 30 KB
@@ -479,7 +420,7 @@ def mor_replay(
     CoW merger. A closing `compact_versioned` folds the chains back
     to one generation per bucket (the off-peak cadence; delta chains
     also self-level at max_depth). Convergence oracle: batch Q20
-    keep-latest — the same oracle as S3/S17/S18, so the hash proves
+    keep-latest — the same oracle as S3/S18, so the hash proves
     MOR replay ≡ CoW replay ≡ batch.
     """
     from ..operators.merge_versioned import (
@@ -552,7 +493,7 @@ def mor_compact_race(
     init + one commit per batch + the mid-window compact + the
     closing compact.
 
-    Convergence oracle: batch Q20 keep-latest, same as S3/S17/S18/S20
+    Convergence oracle: batch Q20 keep-latest, same as S3/S18/S20
     — the hash proves the interleaved run ≡ CoW replay ≡ batch."""
     from ..operators.merge_versioned import (
         compact_versioned,
@@ -651,7 +592,7 @@ def feed_replica(
     pinning this is tests/test_merge_versioned.py::
     test_feed_replica_aba_revert_converges. Convergence oracle: the
     replica equals batch Q20 keep-latest over all events (the same
-    oracle as S3/S17/S18).
+    oracle as S3/S18).
 
     Scale: each poll reads changed buckets' generations only (feed
     cost ∝ commits since the checkpoint, not the table) and rewrites

@@ -71,7 +71,6 @@ SLOW_TESTS = {
     # NOT listed although >8s — kept as the default-profile
     # representative of the streaming equivalence laws:
     #   test_s1_tumbling_equals_batch
-    "test_subsecond_merges_never_lost_by_watermark",
     "test_no_python_udf_in_sql_hot_paths",
 }
 

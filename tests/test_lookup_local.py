@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import itertools
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -85,12 +86,19 @@ def _write(spark, path: str, keys, **kw) -> None:
     )
 
 
+# job-group names must be unique over the session: the status tracker
+# keeps every earlier group's jobs, so a reused name (an `id()` of a
+# freed object is reused) would count another lookup's jobs
+_CALLS = itertools.count()
+
+
 def _lookup(spark, path: str, value, bound: int, **kw):
     saved, mv.LOCAL_READ_BYTES = mv.LOCAL_READ_BYTES, bound
     try:
         out = {}
+        n = next(_CALLS)
         jobs = _jobs(
-            spark, f"lookup-local-{bound}-{id(out)}",
+            spark, f"lookup-local-{bound}-{n}",
             lambda: out.update(
                 df=mv.read_bucket_for_key_versioned(spark, path, value, **kw)
             ),
@@ -99,7 +107,7 @@ def _lookup(spark, path: str, value, bound: int, **kw):
         if df is None:
             return None, None, jobs
         rows = []
-        jobs += _jobs(spark, f"collect-{bound}-{id(out)}", lambda: rows.extend(df.collect()))
+        jobs += _jobs(spark, f"collect-{bound}-{n}", lambda: rows.extend(df.collect()))
         return df.schema, sorted(rows, key=repr), jobs
     finally:
         mv.LOCAL_READ_BYTES = saved

@@ -374,372 +374,6 @@ def test_advance_pointer_never_stamps_unfinished_write(spark, tmp_path):
     assert 5 in vacuum_versions(path, keep=1, grace_seconds=0.0)
 
 
-# ----------------------------------------- bucket-scoped merge laws
-def _bucket_files(path):
-    """{bucket_dir: {file: mtime_ns}} — the physical-identity snapshot
-    the scoping law compares."""
-    import glob
-    import os
-
-    out = {}
-    for d in glob.glob(f"{path}/bucket=*"):
-        out[os.path.basename(d)] = {
-            os.path.basename(f): os.stat(f).st_mtime_ns
-            for f in glob.glob(f"{d}/*.parquet")
-        }
-    return out
-
-
-def test_scoped_merge_equals_global_merge(spark, tmp_path):
-    """Semantics: merge_scoped over the bucketed layout produces
-    exactly the merge_upsert result (same rows, same audit columns)."""
-    from cvemate_spark.operators.merge import (
-        merge_upsert, merge_scoped, read_bucket_table, write_bucket_table,
-    )
-
-    base = _batch(spark, "nvd", {f"CVE-{i}": f"n{i}" for i in range(40)})
-    target = merge_upsert(None, base, now=T0)
-    path = str(tmp_path / "bt")
-    write_bucket_table(target, path, key="id", n_buckets=8)
-
-    batch = _batch(spark, "nvd", {"CVE-3": "n3x", "CVE-900": "new"})
-    stats = merge_scoped(spark, path, batch, now=T1)
-    assert stats["buckets_touched"] >= 1
-
-    got = {
-        r["id"]: (r["nvd"], str(r["created_at"]), str(r["updated_at"]))
-        for r in read_bucket_table(spark, path).collect()
-    }
-    want = {
-        r["id"]: (r["nvd"], str(r["created_at"]), str(r["updated_at"]))
-        for r in merge_upsert(target, batch, now=T1).collect()
-    }
-    assert got == want
-
-
-def test_scoped_merge_cost_is_bounded_by_batch(spark, tmp_path):
-    """The 100-TB contract: a merge touches at most |batch-keys|
-    buckets, and every UNTOUCHED bucket's files are physically
-    untouched (same names, same mtimes — never rewritten or moved)."""
-    from cvemate_spark.operators.merge import (
-        merge_upsert, merge_scoped, write_bucket_table,
-    )
-
-    base = _batch(spark, "nvd", {f"CVE-{i}": f"n{i}" for i in range(200)})
-    path = str(tmp_path / "bt2")
-    write_bucket_table(merge_upsert(None, base, now=T0), path,
-                       key="id", n_buckets=16)
-    before = _bucket_files(path)
-    assert len(before) > 4  # the layout really is spread over buckets
-
-    batch = _batch(spark, "nvd", {"CVE-7": "x"})
-    stats = merge_scoped(spark, path, batch, now=T1)
-    assert stats["buckets_touched"] == 1
-    assert stats["files_rewritten"] < stats["files_total"]
-    after = _bucket_files(path)
-    changed = [b for b in before if before[b] != after.get(b)]
-    assert len(changed) == 1  # exactly the one touched bucket moved
-
-
-def test_scoped_merge_idempotent_and_delete_leg(spark, tmp_path):
-    """Idempotence (same batch twice = same table) and the tombstone
-    leg (deleted keys vanish; deleting an absent key is a no-op)."""
-    from pyspark.sql import Row
-
-    from cvemate_spark.operators.merge import (
-        merge_upsert, merge_scoped, read_bucket_table, write_bucket_table,
-    )
-
-    base = _batch(spark, "nvd", {f"CVE-{i}": f"n{i}" for i in range(20)})
-    path = str(tmp_path / "bt3")
-    write_bucket_table(merge_upsert(None, base, now=T0), path,
-                       key="id", n_buckets=4)
-    batch = _batch(spark, "nvd", {"CVE-1": "v2"})
-    merge_scoped(spark, path, batch, now=T1)
-    once = sorted(
-        (r["id"], r["nvd"]) for r in read_bucket_table(spark, path).collect()
-    )
-    merge_scoped(spark, path, batch, now=T1)
-    twice = sorted(
-        (r["id"], r["nvd"]) for r in read_bucket_table(spark, path).collect()
-    )
-    assert once == twice
-
-    tomb = spark.createDataFrame([
-        Row(id="CVE-2", nvd=None, _deleted=True),
-        Row(id="CVE-nonexistent", nvd=None, _deleted=True),
-        Row(id="CVE-3", nvd="n3x", _deleted=False),
-    ])
-    merge_scoped(spark, path, tomb, now=T2, deleted_col="_deleted")
-    m = {r["id"]: r["nvd"] for r in read_bucket_table(spark, path).collect()}
-    assert "CVE-2" not in m and "CVE-nonexistent" not in m
-    assert m["CVE-3"] == "n3x" and m["CVE-1"] == "v2"
-
-
-def test_bucket_point_lookup_prunes_to_one_dir(spark, tmp_path):
-    """read_bucket_for_key reads exactly one bucket directory (the
-    listing-time pruning contract) and returns the right row."""
-    from cvemate_spark.operators.merge import (
-        merge_upsert, read_bucket_for_key, write_bucket_table,
-    )
-
-    base = _batch(spark, "nvd", {f"CVE-{i}": f"n{i}" for i in range(50)})
-    path = str(tmp_path / "bt4")
-    write_bucket_table(merge_upsert(None, base, now=T0), path,
-                       key="id", n_buckets=8)
-    df = read_bucket_for_key(spark, path, "CVE-17")
-    rows = df.collect()
-    assert len(rows) == 1 and rows[0]["nvd"] == "n17"
-    # the scan's file list is confined to one bucket dir
-    scan_files = [
-        f.path if hasattr(f, "path") else f
-        for f in df.inputFiles()
-    ]
-    assert scan_files and all("bucket=" in f for f in scan_files)
-    assert len({f.split("bucket=")[1].split("/")[0] for f in scan_files}) == 1
-
-
-def test_compact_buckets_preserves_content_and_reduces_files(spark, tmp_path):
-    """Compaction is content-neutral maintenance: rows identical
-    before/after, file counts reduced to the target, already-compact
-    buckets not touched (same names + mtimes)."""
-    import glob
-    import os
-
-    from cvemate_spark.operators.merge import (
-        compact_buckets, merge_upsert, read_bucket_table, write_bucket_table,
-    )
-
-    base = _batch(spark, "nvd", {f"CVE-{i}": f"n{i}" for i in range(100)})
-    path = str(tmp_path / "bt5")
-    write_bucket_table(merge_upsert(None, base, now=T0), path,
-                       key="id", n_buckets=4)
-    # fragment two buckets: append extra files directly (the shape a
-    # long small-batch merge history leaves behind)
-    frag_dirs = sorted(glob.glob(f"{path}/bucket=*"))[:2]
-    for d in frag_dirs:
-        df = spark.read.parquet(d)
-        df.limit(0).write.mode("append").parquet(d)  # schema-only shard
-        df.repartition(3).write.mode("append").parquet(d)
-    # the appended copy duplicates rows — rebuild expectation from disk
-    before_rows = sorted(
-        tuple(r) for r in read_bucket_table(spark, path).collect()
-    )
-    before = _bucket_files(path)
-    assert any(len(v) > 2 for v in before.values())
-
-    stats = compact_buckets(spark, path, max_files_per_bucket=1)
-    after = _bucket_files(path)
-    after_rows = sorted(
-        tuple(r) for r in read_bucket_table(spark, path).collect()
-    )
-    assert after_rows == before_rows            # content-neutral
-    assert stats["buckets_compacted"] == len(frag_dirs)
-    assert stats["files_after"] < stats["files_before"]
-    for d, files in after.items():
-        full = os.path.join(path, d)
-        if full not in frag_dirs:
-            assert files == before[d]           # untouched bucket: identical
-        else:
-            assert len(files) == 1              # compacted to target
-
-
-def test_incremental_consumption_via_freshness_manifest(spark, tmp_path):
-    """The downstream-consumer contract: after a scoped merge, exactly
-    the touched buckets advance their max_updated_at watermark, and
-    read_changed_since(checkpoint) returns precisely the rows written
-    after it — an up-to-date consumer reads nothing at all (None, no
-    scan). The reference's get_last_update_time incremental refresh,
-    applied to the merged table itself."""
-    from cvemate_spark.operators.merge import (
-        changed_buckets_since, merge_scoped, merge_upsert,
-        read_changed_since, write_bucket_table, _load_stats,
-    )
-
-    base = _batch(spark, "nvd", {f"CVE-{i}": f"n{i}" for i in range(60)})
-    path = str(tmp_path / "bt6")
-    write_bucket_table(merge_upsert(None, base, now=T0), path,
-                       key="id", n_buckets=8)
-    # freshness seeded everywhere at T0: nothing changed since T0
-    assert changed_buckets_since(path, T0) == []
-    assert read_changed_since(spark, path, T0) is None
-
-    batch = _batch(spark, "nvd", {"CVE-5": "v2", "CVE-777": "new"})
-    stats = merge_scoped(spark, path, batch, now=T1)
-    changed = changed_buckets_since(path, T0)
-    assert len(changed) == stats["buckets_touched"]
-
-    got = {
-        (r["id"], r["nvd"])
-        for r in read_changed_since(spark, path, T0).collect()
-    }
-    assert got == {("CVE-5", "v2"), ("CVE-777", "new")}
-    # consumer checkpointed at T1: nothing newer exists
-    assert read_changed_since(spark, path, T1) is None
-
-    # manifest row counts stay exact (60 base + 1 insert)
-    manifest = _load_stats(path)
-    assert sum(v["rows"] for v in manifest.values()) == 61
-
-    # compaction is content-neutral: the manifest stays valid
-    from cvemate_spark.operators.merge import compact_buckets
-
-    compact_buckets(spark, path, max_files_per_bucket=1,
-                    min_files_to_compact=0)
-    assert sum(v["rows"] for v in _load_stats(path).values()) == 61
-    got2 = {
-        (r["id"], r["nvd"])
-        for r in read_changed_since(spark, path, T0).collect()
-    }
-    assert got2 == got
-
-
-def test_concurrent_scoped_merges_serialize_and_keep_both(spark, tmp_path):
-    """Two mergers racing on the SAME table: the commit lock
-    serializes the read-merge-swap sequence, so both batches land
-    (neither swap clobbers the other's) and the freshness manifest
-    stays exact. Without the lock, the later writer would merge
-    against the earlier writer's pre-swap state and silently drop its
-    rows whenever their buckets overlap."""
-    import threading
-
-    from cvemate_spark.operators.merge import (
-        merge_scoped, merge_upsert, read_bucket_table, write_bucket_table,
-        _load_stats,
-    )
-
-    base = _batch(spark, "nvd", {f"CVE-{i}": f"n{i}" for i in range(30)})
-    path = str(tmp_path / "bt7")
-    # n_buckets=1: EVERY merge touches the same bucket — the maximal
-    # collision case
-    write_bucket_table(merge_upsert(None, base, now=T0), path,
-                       key="id", n_buckets=1)
-
-    batches = [
-        _batch(spark, "nvd", {"CVE-1": "left", "CVE-800": "L"}),
-        _batch(spark, "nvd", {"CVE-2": "right", "CVE-900": "R"}),
-    ]
-    errs = []
-
-    def run(i):
-        try:
-            merge_scoped(spark, path, batches[i], now=T1)
-        except Exception as e:  # pragma: no cover - failure reporting
-            errs.append(e)
-
-    ts = [threading.Thread(target=run, args=(i,)) for i in range(2)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
-    assert not errs, errs
-
-    m = {r["id"]: r["nvd"] for r in read_bucket_table(spark, path).collect()}
-    # both batches' updates AND inserts landed
-    assert m["CVE-1"] == "left" and m["CVE-2"] == "right"
-    assert m["CVE-800"] == "L" and m["CVE-900"] == "R"
-    assert len(m) == 32
-    assert sum(v["rows"] for v in _load_stats(path).values()) == 32
-
-
-def test_subsecond_merges_never_lost_by_watermark(spark, tmp_path):
-    """ADVICE r8: the freshness watermark must carry microsecond
-    precision. A consumer checkpoints the watermark it just observed;
-    a later merge landing WITHIN THE SAME SECOND must still surface
-    through read_changed_since — under whole-second truncation the
-    stored watermark compared equal and the batch was silently
-    skipped forever."""
-    from cvemate_spark.operators.merge import (
-        changed_buckets_since, merge_scoped, merge_upsert,
-        read_changed_since, write_bucket_table, _load_stats,
-    )
-
-    base = _batch(spark, "nvd", {f"CVE-{i}": f"n{i}" for i in range(20)})
-    path = str(tmp_path / "bt8")
-    write_bucket_table(merge_upsert(None, base, now=T0), path,
-                       key="id", n_buckets=4)
-
-    ta = "2024-01-05 10:00:00.250000"
-    tb = "2024-01-05 10:00:00.750000"  # same second, later
-    merge_scoped(spark, path, _batch(spark, "nvd", {"CVE-3": "a"}), now=ta)
-    # consumer checkpoints the exact watermark it observed (full
-    # precision, straight from the manifest)
-    wm = max(
-        v["max_updated_at"] for v in _load_stats(path).values()
-        if "max_updated_at" in v
-    )
-    assert wm.endswith("00.250000")  # stored at full precision
-    assert read_changed_since(spark, path, wm) is None  # up to date
-
-    merge_scoped(spark, path, _batch(spark, "nvd", {"CVE-7": "b"}), now=tb)
-    got = {
-        (r["id"], r["nvd"])
-        for r in read_changed_since(spark, path, wm).collect()
-    }
-    assert got == {("CVE-7", "b")}  # the same-second batch surfaces
-
-    # mixed precision: a whole-second checkpoint sees both merges and
-    # an equal-instant sub-second checkpoint sees neither
-    whole = {
-        (r["id"], r["nvd"])
-        for r in read_changed_since(spark, path, "2024-01-05 10:00:00").collect()
-    }
-    assert whole == {("CVE-3", "a"), ("CVE-7", "b")}
-    assert changed_buckets_since(path, tb) == []
-
-
-def test_compact_buckets_waits_for_the_merge_lock(spark, tmp_path):
-    """ADVICE r8: compaction is a read-then-swap on bucket dirs, so it
-    must serialize on the same _MERGELOCK as merge_scoped — an
-    unlocked compaction racing a merge can swap a stale pre-merge
-    snapshot back in. Deterministic check: while the lock is held,
-    compact_buckets must NOT complete; it proceeds on release."""
-    import fcntl
-    import os
-    import threading
-    import time
-
-    from cvemate_spark.operators.merge import (
-        compact_buckets, merge_upsert, read_bucket_table,
-        write_bucket_table,
-    )
-
-    base = _batch(spark, "nvd", {f"CVE-{i}": f"n{i}" for i in range(20)})
-    path = str(tmp_path / "bt9")
-    write_bucket_table(merge_upsert(None, base, now=T0), path,
-                       key="id", n_buckets=2)
-    # fragment one bucket so compaction has real work
-    import glob as _glob
-    d = sorted(_glob.glob(f"{path}/bucket=*"))[0]
-    spark.read.parquet(d).limit(0).write.mode("append").parquet(d)
-    spark.read.parquet(d).repartition(3).write.mode("append").parquet(d)
-    before_rows = sorted(
-        tuple(r) for r in read_bucket_table(spark, path).collect()
-    )
-
-    holder = open(os.path.join(path, "_MERGELOCK"), "w")
-    fcntl.flock(holder, fcntl.LOCK_EX)
-    done = {}
-
-    def run():
-        done["stats"] = compact_buckets(spark, path, max_files_per_bucket=1)
-
-    t = threading.Thread(target=run)
-    t.start()
-    deadline = time.monotonic() + 1.0
-    while time.monotonic() < deadline:
-        assert "stats" not in done, "compact_buckets ignored _MERGELOCK"
-        time.sleep(0.05)
-    fcntl.flock(holder, fcntl.LOCK_UN)
-    holder.close()
-    t.join(timeout=120)
-    assert done["stats"]["buckets_compacted"] >= 1
-    after_rows = sorted(
-        tuple(r) for r in read_bucket_table(spark, path).collect()
-    )
-    assert after_rows == before_rows
-
-
 def test_keep_latest_merge_strict_union_by_default(spark):
     """ADVICE r11 (low): the public keep_latest_merge must REJECT a
     batch whose columns don't line up with the target — silent

@@ -84,6 +84,16 @@ def test_versioned_scoped_merge_time_travel_and_scoping(spark, tmp_path):
         spark, path, "CVE-5", version=1
     ).collect()[0]["nvd"] == "n5"
 
+    # idempotence: re-merging the same batch commits a version whose
+    # content equals the one before it
+    snap2 = read_bucket_table_versioned(spark, path).collect()
+    again = merge_scoped_versioned(
+        spark, path, _batch(spark, "nvd", {"CVE-5": "v2", "CVE-777": "new"}),
+        now=T1,
+    )
+    assert again["version"] == 3
+    assert sorted(read_bucket_table_versioned(spark, path).collect()) == sorted(snap2)
+
 
 def test_versioned_merge_delete_leg(spark, tmp_path):
     base = _batch(spark, "nvd", {f"CVE-{i}": f"n{i}" for i in range(20)})
@@ -102,6 +112,43 @@ def test_versioned_merge_delete_leg(spark, tmp_path):
     assert m["CVE-1"] == "upd" and "CVE-2" not in m and len(m) == 19
     # the tombstoned key is still present in version 1 (time travel)
     assert "CVE-2" in _as_map(read_bucket_table_versioned(spark, path, 1))
+
+
+def test_collated_string_column_survives_reload_merge_lookup_feed(
+    spark, tmp_path
+):
+    """A `string collate UTF8_LCASE` column round-trips through the
+    manifest schema: every reader parses that schema again, so the
+    table must survive two reloads, a merge, a point lookup and a
+    change feed, and still compare `d` under its collation."""
+    from pyspark.sql import functions as F
+
+    from cvemate_spark.operators.merge_versioned import (
+        change_feed, table_schema,
+    )
+
+    ddl = "id string, d string collate UTF8_LCASE"
+    path = str(tmp_path / "coll")
+    for rows in ([("CVE-1", "a"), ("CVE-2", "b")],
+                 [("CVE-1", "a"), ("CVE-2", "b"), ("CVE-3", "c")]):
+        write_bucket_table_versioned(
+            spark.createDataFrame(rows, ddl), path, key="id", n_buckets=4
+        )
+    assert table_schema(path) == table_schema(path)
+    assert table_schema(path)["d"].dataType.collation == "UTF8_LCASE"
+    stats = merge_scoped_versioned(
+        spark, path, spark.createDataFrame([("CVE-2", "bb"), ("CVE-4", "d")], ddl),
+        now=T1,
+    )
+    assert stats["version"] == 3
+    assert [r["d"] for r in read_bucket_for_key_versioned(spark, path, "CVE-2").collect()] == ["bb"]
+    feed = change_feed(spark, path, 2, 3)
+    assert sorted((r["id"], r["change"]) for r in feed.collect()) == [
+        ("CVE-2", "update"), ("CVE-4", "insert"),
+    ]
+    snap = read_bucket_table_versioned(spark, path)
+    assert snap.schema["d"].dataType.collation == "UTF8_LCASE"
+    assert snap.filter(F.col("d") == "BB").count() == 1
 
 
 def test_crash_before_pointer_leaves_readers_on_old_version(

@@ -10,7 +10,6 @@ column or file encoding)."""
 from __future__ import annotations
 
 import contextlib
-import copy
 import datetime
 
 import pyarrow.parquet as pq
@@ -304,15 +303,26 @@ def _feed_cases(w: Walk):
                        "id string, n long, d string, tag string")
         return pair(a, b, lambda p: mv.merge_scoped_versioned(w.spark, p, tagged, now=T1))
 
+    def commits(a: str, b: str, ua, ub):
+        """Commit `ua` to `a` and `ub` to `b`, and return the feeds over
+        those commits (for twins whose batches differ in type)."""
+        va, vb = mv.latest_version(a), mv.latest_version(b)
+        mv.merge_scoped_versioned(w.spark, a, ua, now=T1)
+        mv.merge_scoped_versioned(w.spark, b, ub, now=T1)
+        return lambda: w.feed(a, va, va + 1), lambda: w.feed(b, vb, vb + 1)
+
+    def collation():
+        # compared in Arrow by its bytes, not by its collation; the twin's
+        # `d` is a plain string
+        coll = "id string, n long, d string collate UTF8_LCASE"
+        return commits(w.table(w.rows(coll)), w.table(), w.batch(coll), w.batch())
+
     def key_type():
         a = w.table(w.rows("id double, n long, d string", lambda i, k: (float(i), i, k)))
         b = w.table(w.rows("id long, n long, d string", lambda i, k: (i, i, k)))
         ua = _feed(w.spark, w.root, "fkt-a", [(float(i), -i, None) for i in (0, 3, 40)], "id double, n long, d string")
         ub = _feed(w.spark, w.root, "fkt-b", [(i, -i, None) for i in (0, 3, 40)], "id long, n long, d string")
-        va, vb = mv.latest_version(a), mv.latest_version(b)
-        mv.merge_scoped_versioned(w.spark, a, ua, now=T1)
-        mv.merge_scoped_versioned(w.spark, b, ub, now=T1)
-        return lambda: w.feed(a, va, va + 1), lambda: w.feed(b, vb, vb + 1)
+        return commits(a, b, ua, ub)
 
     def not_arrow():
         return pair(w.table(w.rows(IV, _iv)), w.table(), drop=["iv"])
@@ -403,8 +413,9 @@ CASES = [
      "widened-type", "int96-file")
 ] + [
     ("feed", r) for r in
-    ("no-schema", "packed", "mor-deltas", "deletion-vectors", "schema-changed",
-     "key-type", "not-arrow", "no-stats", "too-large", "int96-file")
+    ("no-schema", "packed", "mor-deltas", "deletion-vectors", "collation",
+     "schema-changed", "key-type", "not-arrow", "no-stats", "too-large",
+     "int96-file")
 ] + [
     ("write", r) for r in
     ("packed", "sorted-write", "no-stats", "too-large", "not-arrow")
@@ -440,23 +451,6 @@ def test_feed_map_column_refused_and_raises(spark, tmp_path, monkeypatch, caplog
     assert paths(caplog, "feed") == [(False, "map-column")]
 
 
-def test_feed_collated_string_refused():
-    """A string column under a non-default collation compares in Arrow
-    by its bytes, not by its collation, so the feed gate refuses it.
-    Only the gate is asked: a versioned table cannot hold such a column
-    yet, because pyspark's `StructField.fromJson` rewrites the collation
-    metadata of the JSON it parses in place, and a second parse of the
-    same manifest schema fails. Each side gets its own copy here."""
-    schema = {"type": "struct", "fields": [
-        {"name": "id", "type": "string", "nullable": True, "metadata": {}},
-        {"name": "d", "type": "string", "nullable": True,
-         "metadata": {"__COLLATIONS": {"d": "spark.UTF8_LCASE"}}},
-    ]}
-    old, new = ({"buckets": {}, "schema": copy.deepcopy(schema)} for _ in range(2))
-    got = mv._slice_gate("feed", path="unused", old=old, full=new, buckets=[0], key=["id"])
-    assert got == mv._Gate("collation")
-
-
 def test_every_reason_is_walked():
-    walked = {r for _, r in CASES} | {"map-column", "collation"}
+    walked = {r for _, r in CASES} | {"map-column"}
     assert walked == set(mv.REFUSALS)

@@ -1,23 +1,24 @@
 #!/usr/bin/env python3
-"""Merge-cost scaling bench: bucket-scoped merge vs whole-table rewrite.
+"""Merge-cost scaling bench: bucket-scoped versioned merge vs
+whole-table rewrite.
 
 The contract under measurement (VERDICT r7 item 3, r8 items 3/6): with
-the bucket-scoped layout, merge cost is bounded by the BATCH footprint
-(buckets touched x bucket size), not the TARGET size — the reference's
-point-update economics (mongodb_handler.py:141-195) at file
-granularity. The old `merge_upsert` + `write_atomic` path rewrites the
-whole target directory per merge regardless of batch size.
+the bucketed versioned table, merge cost is bounded by the BATCH
+footprint (buckets touched x bucket size), not the TARGET size — the
+reference's point-update economics (mongodb_handler.py:141-195) at
+file granularity, under an atomic cross-bucket commit. The
+`merge_upsert` + `write_atomic` path rewrites the whole target
+directory per merge regardless of batch size.
 
-Measured per run:
+Measured per run, all through `merge_versioned`:
   * the batch-size ladder (uniform keys) — bytes_rewritten ∝ batch
   * a HOT-BUCKET batch (all keys hashing into ~1% of buckets, the
     zipf worst case): same row count as a uniform rung, so the skew
     delta is isolated (r8 item 6)
-  * one merge through the VERSIONED commit (merge_scoped_versioned) —
-    the atomicity premium over the in-place scoped swap
-  * compact_buckets cost after the ladder fragments the table
-  * freshness-manifest amortization: read_changed_since(checkpoint)
-    vs a full-table scan after a small merge
+  * incremental consumption: read_changed_between(checkpoint version)
+    vs a full-table scan after the hot merge
+  * merge-on-read batches, the read premium of standing deltas, and
+    the compact_versioned pass that folds them
   * the write_atomic whole-rewrite baseline
 
 Usage: python3 tools/mergebench.py [sf_dir] [n_buckets] [xN]
@@ -59,12 +60,12 @@ T2 = "2026-01-03 00:00:00"
 
 def main() -> None:
     from cvemate_spark.operators.merge import (
-        bucket_expr, compact_buckets, merge_scoped, merge_upsert,
-        read_bucket_table, read_changed_since, write_atomic,
-        write_bucket_table,
+        bucket_expr, merge_upsert, write_atomic,
     )
     from cvemate_spark.operators.merge_versioned import (
-        merge_scoped_versioned, write_bucket_table_versioned,
+        compact_versioned, latest_version, merge_scoped_versioned,
+        merge_scoped_versioned_mor, read_bucket_table_versioned,
+        read_changed_between, write_bucket_table_versioned,
     )
     from cvemate_spark.session import get_spark
 
@@ -87,9 +88,10 @@ def main() -> None:
 
     shutil.rmtree(SCRATCH, ignore_errors=True)
     os.makedirs(SCRATCH)
-    path = f"{SCRATCH}/bucketed"
+    path = f"{SCRATCH}/versioned"
     t = time.monotonic()
-    write_bucket_table(base, path, key="o_orderkey", n_buckets=N_BUCKETS)
+    write_bucket_table_versioned(base, path, key="o_orderkey",
+                                 n_buckets=N_BUCKETS)
     load_s = time.monotonic() - t
 
     # batch sizes as modulus filters: ~1/100000 .. ~1/10 of the keys
@@ -101,11 +103,11 @@ def main() -> None:
         )
         n_batch = batch.count()
         t = time.monotonic()
-        stats = merge_scoped(spark, path, batch, now=T1)
+        stats = merge_scoped_versioned(spark, path, batch, now=T1)
         dt = time.monotonic() - t
         results.append(
             {
-                "mode": "scoped",
+                "mode": "scoped_versioned",
                 "batch_rows": n_batch,
                 "batch_frac": n_batch / target_rows,
                 "sec": round(dt, 3),
@@ -117,7 +119,7 @@ def main() -> None:
     # ---- hot-bucket (zipf worst case, r8 item 6): same row count as
     # the mod=1000 uniform rung, every key hashing into <=1% of the
     # buckets — the bound is buckets_touched <= hot set, so a skewed
-    # batch rewrites FEWER, larger dirs; wall should not regress
+    # batch writes FEWER, larger generations; wall should not regress
     uniform_rows = next(
         (r for r in results if r["batch_rows"] >= 1000),
         results[-1],  # tiny sf: largest available rung, not a crash
@@ -131,12 +133,13 @@ def main() -> None:
         .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1.0))
     )
     n_hot = hot.count()
+    checkpoint = latest_version(path)
     t = time.monotonic()
-    stats = merge_scoped(spark, path, hot, now=T2)
+    stats = merge_scoped_versioned(spark, path, hot, now=T2)
     dt = time.monotonic() - t
     results.append(
         {
-            "mode": "scoped_hot_bucket",
+            "mode": "scoped_versioned_hot_bucket",
             "hot_bucket_frac": hot_buckets / N_BUCKETS,
             "batch_rows": n_hot,
             "sec": round(dt, 3),
@@ -147,99 +150,22 @@ def main() -> None:
     )
     print(json.dumps(results[-1]))
 
-    # ---- freshness-manifest amortization: an incremental consumer
-    # checkpointed at T1 reads only the hot merge's buckets vs a full
-    # scan (both forced with .count())
+    # ---- incremental consumption: a consumer checkpointed at the
+    # version before the hot merge reads only that merge's buckets vs
+    # a full scan (both forced with .count())
     t = time.monotonic()
-    inc_rows = read_changed_since(spark, path, T1).count()
+    inc_rows = read_changed_between(spark, path, checkpoint).count()
     inc_dt = time.monotonic() - t
     t = time.monotonic()
-    full_rows = read_bucket_table(spark, path).count()
+    full_rows = read_bucket_table_versioned(spark, path).count()
     full_dt = time.monotonic() - t
     results.append(
         {
-            "mode": "read_changed_since",
+            "mode": "read_changed_between",
             "rows_returned": inc_rows,
             "sec": round(inc_dt, 3),
             "full_scan_rows": full_rows,
             "full_scan_sec": round(full_dt, 3),
-        }
-    )
-    print(json.dumps(results[-1]))
-
-    # ---- compaction: scoped merges rewrite whole buckets (1 file
-    # each), so fragment every 8th bucket with two appended shards
-    # first — the long-merge-history state compaction exists for —
-    # then measure the maintenance pass at this (rows, n_buckets)
-    # point (cost = listing all buckets + rewriting the fragmented 1/64)
-    frag = 0
-    for d in sorted(glob.glob(f"{path}/bucket=*"))[::64]:
-        shard = spark.read.parquet(d).limit(50)
-        shard.coalesce(1).write.mode("append").parquet(d)
-        shard.coalesce(1).write.mode("append").parquet(d)
-        frag += 1
-    t = time.monotonic()
-    cstats = compact_buckets(spark, path, max_files_per_bucket=1,
-                             min_files_to_compact=1)
-    dt = time.monotonic() - t
-    results.append({"mode": "compact_buckets", "buckets_fragmented": frag,
-                    "sec": round(dt, 3), **cstats})
-    print(json.dumps(results[-1]))
-
-    # ---- versioned commit premium: same 1500-row-rung merge through
-    # merge_scoped_versioned (immutable generations + manifest +
-    # pointer) on a fresh versioned copy of the table
-    vpath = f"{SCRATCH}/versioned"
-    t = time.monotonic()
-    write_bucket_table_versioned(base, vpath, key="o_orderkey",
-                                 n_buckets=N_BUCKETS)
-    vload_s = time.monotonic() - t
-    vbatch = (
-        orders.filter(F.col("o_orderkey") % 1_000 == 0)
-        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1.0))
-    )
-    t = time.monotonic()
-    vstats = merge_scoped_versioned(spark, vpath, vbatch, now=T1)
-    dt = time.monotonic() - t
-    results.append(
-        {
-            "mode": "scoped_versioned",
-            "batch_rows": vbatch.count(),
-            "sec": round(dt, 3),
-            "initial_load_sec": round(vload_s, 3),
-            **vstats,
-        }
-    )
-    print(json.dumps(results[-1]))
-
-    # ---- versioned hot-bucket (zipf worst case through the VERSIONED
-    # path, r10 item 6): the same skewed shape as scoped_hot_bucket —
-    # every key in <=1% of the buckets — through merge_scoped_versioned,
-    # so the versioned commit's bound has the same two measured points
-    # as the in-place one: bytes_rewritten <= hot-set bytes, and skew
-    # REDUCES commit cost (fewer generation dirs, fewer manifest
-    # entries changed)
-    vuniform = results[-1]
-    vhot = (
-        orders.withColumn("__b", bucket_expr("o_orderkey", N_BUCKETS))
-        .filter(F.col("__b") < hot_buckets)
-        .drop("__b")
-        .limit(vuniform["batch_rows"])
-        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1.0))
-    )
-    n_vhot = vhot.count()
-    t = time.monotonic()
-    vhstats = merge_scoped_versioned(spark, vpath, vhot, now=T2)
-    dt = time.monotonic() - t
-    results.append(
-        {
-            "mode": "scoped_versioned_hot_bucket",
-            "hot_bucket_frac": hot_buckets / N_BUCKETS,
-            "batch_rows": n_vhot,
-            "sec": round(dt, 3),
-            "uniform_control_sec": vuniform["sec"],
-            "uniform_control_bytes": vuniform["bytes_rewritten"],
-            **vhstats,
         }
     )
     print(json.dumps(results[-1]))
@@ -249,11 +175,6 @@ def main() -> None:
     # ROWS (delta generations only), vs the CoW rungs above whose
     # bytes ∝ touched-bucket SIZE. Then the read-side debt (snapshot
     # wall with deltas standing) and the compaction that retires it.
-    from cvemate_spark.operators.merge_versioned import (
-        compact_versioned, merge_scoped_versioned_mor,
-        read_bucket_table_versioned,
-    )
-
     for mod, tag in ((100_000, "tiny"), (1_000, "rung")):
         mbatch = (
             orders.filter(F.col("o_orderkey") % mod == 0)
@@ -262,11 +183,11 @@ def main() -> None:
         n_m = mbatch.count()
         cow_control = next(
             (r for r in results
-             if r["mode"] == "scoped" and r["batch_rows"] == n_m),
+             if r["mode"] == "scoped_versioned" and r["batch_rows"] == n_m),
             None,
         )
         t = time.monotonic()
-        mstats = merge_scoped_versioned_mor(spark, vpath, mbatch, now=T2)
+        mstats = merge_scoped_versioned_mor(spark, path, mbatch, now=T2)
         dt = time.monotonic() - t
         results.append(
             {
@@ -285,13 +206,13 @@ def main() -> None:
         print(json.dumps(results[-1]))
     # read premium while deltas stand, then compaction retires it
     t = time.monotonic()
-    mor_read_rows = read_bucket_table_versioned(spark, vpath).count()
+    mor_read_rows = read_bucket_table_versioned(spark, path).count()
     mor_read_s = time.monotonic() - t
     t = time.monotonic()
-    cstats2 = compact_versioned(spark, vpath)
+    cstats = compact_versioned(spark, path)
     compact_s = time.monotonic() - t
     t = time.monotonic()
-    flat_read_rows = read_bucket_table_versioned(spark, vpath).count()
+    flat_read_rows = read_bucket_table_versioned(spark, path).count()
     flat_read_s = time.monotonic() - t
     results.append(
         {
@@ -301,12 +222,12 @@ def main() -> None:
             "compact_sec": round(compact_s, 3),
             "rows": mor_read_rows,
             "rows_after": flat_read_rows,
-            **cstats2,
+            **cstats,
         }
     )
     print(json.dumps(results[-1]))
 
-    # the old economics: full merge + whole-directory swap, once,
+    # the whole-table baseline: full merge + whole-directory swap, once,
     # with the SMALLEST batch — cost should sit near the full-load
     # cost regardless of the batch being ~10 rows
     tiny = (

@@ -297,8 +297,12 @@ def main() -> int:
     path = os.path.join(root, "PLANAUDIT.json")
     fleet = out
     if only and os.path.exists(path):
+        # entries of queries no longer registered drop out
         with open(path) as f:
-            fleet = {**json.load(f)["per_query"], **out}
+            fleet = {
+                n: r for n, r in {**json.load(f)["per_query"], **out}.items()
+                if n in REGISTRY.specs
+            }
     summary = {
         "metric": "fleet-wide physical-plan policy audit",
         "sf_dir": sf_dir,

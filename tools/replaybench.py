@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Warm-session replay-path timings (s3 / s17 / s18 / s19) at sf0.01.
+"""Warm-session replay-path timings (s3 / s18 / s19 / s20) at sf0.01.
 
 The STREAMBENCH "replay paths" section: one streaming warm-up query,
 then 3 runs of each replay query on the same session, min recorded.
@@ -26,7 +26,6 @@ RUNS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 
 QUERIES = [
     "s3_merge_replay",
-    "s17_scoped_replay",
     "s18_versioned_replay",
     "s19_feed_replica",
     "s20_mor_replay",
