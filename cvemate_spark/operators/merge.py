@@ -717,19 +717,13 @@ def bucket_membership_expr(
 
 @functools.lru_cache(maxsize=1)
 def _xxh64(jvm):
-    """(UTF8String.fromString, XXH64.hashUTF8String, the XXH64 class,
-    an XXH64 instance seeded 42) of one JVM. Each py4j attribute is a
-    gateway round trip, so these are resolved once per JVM and reused
-    by every lookup. XXH64's static hashInt(int, long) and
-    hashLong(long, long) share their names with instance methods, which
-    py4j's static member lookup does not reach; an instance's
-    hashInt(v) is the static hashInt(v, its seed)."""
+    """(UTF8String.fromString, XXH64.hashUTF8String) of one JVM. Each
+    py4j attribute is a gateway round trip, so these are resolved once
+    per JVM and reused by every lookup."""
     xxh = getattr(jvm, "org.apache.spark.sql.catalyst.expressions.XXH64")
     return (
         getattr(jvm, "org.apache.spark.unsafe.types.UTF8String").fromString,
         xxh.hashUTF8String,
-        xxh,
-        xxh(42),
     )
 
 
@@ -747,7 +741,7 @@ def bucket_of_value(spark: SparkSession, value, n_buckets: int) -> int:
     (bool, float, Decimal, date, out-of-range int, ...) is cast by
     Spark on a 1-row frame, which runs one job."""
     if type(value) is str or (type(value) is int and -(2**63) <= value < 2**63):
-        from_string, hash_utf8, _, _ = _xxh64(spark._jvm)
+        from_string, hash_utf8 = _xxh64(spark._jvm)
         return hash_utf8(from_string(str(value)), 42) % n_buckets
     return (
         spark.range(1)

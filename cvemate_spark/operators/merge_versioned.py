@@ -20,7 +20,7 @@ publish a new manifest.
 
 Layout under `path/`:
     _BUCKETS                   layout meta {key, n_buckets, versioned,
-                               constraints?, key_bloom?, mor_fold?}
+                               constraints?, mor_fold?}
     _LATEST                    the committed version number (pointer FILE)
     _COMMITLOCK / _MERGELOCK   flock files (pointer advance / merger serialization)
     v-<n>.json                 immutable manifest ROOT: {format: 2, n_buckets,
@@ -36,9 +36,8 @@ Layout under `path/`:
                                (merge-on-read delta chains)}
     v-<n>.superseded           vacuum grace marker (stamped when displaced)
     _HISTORY.jsonl             commit log (one line per commit; O(1)/line history)
-    bucket=<i>/g-<hex>/        immutable per-bucket generation (parquet,
-                               optional _KEYBLOOM.json sidecar); Spark
-                               writes it, or pyarrow on the driver when
+    bucket=<i>/g-<hex>/        immutable per-bucket generation (parquet);
+                               Spark writes it, or pyarrow on the driver when
                                `_slice_gate` admits the write (small,
                                classic, unsorted), as for small default
                                upserts, which also merge on the driver;
@@ -76,6 +75,8 @@ buckets are carried by manifest REFERENCE, zero bytes copied.
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import functools
 import json
 import logging
@@ -168,6 +169,19 @@ def _table_meta(path: str) -> dict:
         return {}
 
 
+@contextlib.contextmanager
+def _merge_lock(path: str):
+    """Hold the table's `_MERGELOCK` for the block: the exclusive flock
+    that serializes mergers and maintenance (released on exit, also on
+    an exception)."""
+    with open(os.path.join(path, "_MERGELOCK"), "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        try:
+            yield
+        finally:
+            fcntl.flock(lock, fcntl.LOCK_UN)
+
+
 def _shard_size_for(n_buckets: int) -> int:
     """Buckets per manifest shard: ⌈√n⌉, so a root holds ~√n shard
     entries and each shard ~√n buckets — root and one-shard loads both
@@ -204,9 +218,7 @@ ROOT_CKPT_EVERY = 16
 # lookups and pruned scans read the per-bucket FILE directly — file
 # grain, O(1) in width. Auto-enabled at >= PACK_MIN_BUCKETS (tables
 # under it keep the classic layout: a 16-dir scan plans in ms anyway);
-# explicit opt-in/out via meta "packed_base". Tables with key blooms
-# stay classic (bloom sidecars live in generation dirs; a packed
-# lookup is already a single-file read).
+# explicit opt-in/out via meta "packed_base".
 PACKED_DIR = "_packed"
 PACK_MIN_BUCKETS = 256
 PACK_META_FILE = "_PACK.json"
@@ -363,8 +375,6 @@ def _pack_groups(
 
 
 def _packed_from_meta(meta: dict, n_buckets: int) -> bool:
-    if meta.get("key_bloom"):
-        return False
     p = meta.get("packed_base")
     if p is not None:
         return bool(p)
@@ -1106,8 +1116,8 @@ def _read_dirs(
 def _data_files(loc: str) -> list[str]:
     """The files Spark reads at a generation location: the file itself
     for a packed entry, else the directory's files whose names do not
-    start with "_" or "." (Spark's hidden-file rule, which skips the
-    key-bloom sidecar and checksum files)."""
+    start with "_" or "." (Spark's hidden-file rule, which skips
+    checksum and marker files)."""
     if not os.path.isdir(loc):
         return [loc]
     return sorted(
@@ -1835,176 +1845,6 @@ def scan_versioned(
     return scan_versioned_multi(spark, path, [(column, lo, hi)], version)
 
 
-KEYBLOOM_FILE = "_KEYBLOOM.json"
-
-
-def _write_key_blooms(
-    spark: SparkSession, path: str, key: str,
-    gens: dict[str, str], stats: dict[str, dict], n_buckets: int,
-    bits_per_key: int = 8, k: int = 4,
-) -> None:
-    """Per-generation KEY bloom filters, as SIDECAR files inside each
-    new generation dir (underscore-named: invisible to Spark scans;
-    immutable with the generation — the Iceberg-puffin shape, NOT in
-    the manifest, whose per-commit full rewrite must stay ∝ buckets,
-    never ∝ bloom bytes).
-
-    Built by ONE distributed job over the new generations only (cost
-    ∝ batch): one scan of the new dirs with the bucket id RECOMPUTED
-    from the key (the writer's own bucket_expr under the layout the
-    generations were written with — a union of per-dir scans would
-    put n_buckets relations in one plan, which chokes analysis on a
-    4096-bucket initial load); k xxhash64 probes per key fold into
-    64-bit words via bit_or, and the driver collects ≤ |touched
-    buckets| x m/64 bounded ints — never row data. `m` is sized from the fattest touched
-    generation's row count (bits_per_key bits/key, rounded to a power
-    of two — FP ≈ 2.5% at 8 bits / 4 probes) and recorded in the
-    sidecar so lookups use the exact build-time geometry.
-
-    Complements the footer min/max short-circuit: bounds prove misses
-    OUTSIDE [lo, hi]; the bloom proves misses INSIDE the range — the
-    common case for sparse CDC key spaces — with zero data pages
-    opened. Absent sidecars mean MUST READ, never a wrong miss."""
-    import base64
-
-    if not gens:
-        return
-    max_rows = max(
-        (stats.get(i, {}).get("rows", 0) for i in gens), default=0
-    )
-    m = 64
-    while m < max(64, bits_per_key * max_rows):
-        m *= 2
-    from .merge import bucket_expr
-
-    dirs = [f"{path}/bucket={i}/{g}" for i, g in sorted(gens.items())]
-    tagged = (
-        _read_dirs(spark, dirs, None)
-        .select(F.col(key).alias("__k"))
-        .withColumn(
-            "__b", bucket_expr("__k", n_buckets).cast("string")
-        )
-    )
-    agg = (
-        tagged.withColumn(
-            "__pos",
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(
-                            F.xxhash64(F.col("__k"), F.lit(j)), F.lit(m)
-                        )
-                        for j in range(k)
-                    ]
-                )
-            ),
-        )
-        .select(
-            "__b",
-            (F.col("__pos") / 64).cast("int").alias("__w"),
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(__pos % 64 AS INT))"
-            ).alias("__bit"),
-        )
-        .groupBy("__b", "__w")
-        .agg(F.expr("bit_or(__bit)").alias("__word"))
-        .collect()
-    )
-    words: dict[str, dict[int, int]] = {}
-    for r in agg:
-        words.setdefault(r["__b"], {})[r["__w"]] = r["__word"]
-    for i, g in sorted(gens.items()):
-        w = words.get(str(i), {})
-        arr = bytearray(m // 8)
-        for widx, val in w.items():
-            arr[widx * 8 : widx * 8 + 8] = (val & (2**64 - 1)).to_bytes(
-                8, "little"
-            )
-        sidecar = {
-            "m": m,
-            "k": k,
-            "bits_b64": base64.b64encode(bytes(arr)).decode("ascii"),
-        }
-        tmp = f"{path}/bucket={i}/{g}/.bloom-tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(sidecar, f)
-        os.replace(tmp, f"{path}/bucket={i}/{g}/{KEYBLOOM_FILE}")
-
-
-def _bloom_positions(spark: SparkSession, value, key_type, m: int, k: int) -> list[int]:
-    """The k bit positions `pmod(xxhash64(cast(value AS key_type), j), m)`
-    that `_write_key_blooms` sets for `value`. xxhash64 folds its
-    arguments left to right from seed 42, so the key's own hash seeds
-    `hashInt(j, .)` for every probe j. For a string key (a str, or an
-    int in the 64-bit range, which casts to the digits it prints as), an
-    int key (an int in the 32-bit range) or a bigint key (an int in the
-    64-bit range), that chain runs on the driver through Spark's own
-    XXH64 (`merge._xxh64`): at most k + 3 gateway calls, no Spark job. Every
-    other pair casts on a 1-row frame, which runs one job."""
-    from pyspark.sql.types import IntegerType, LongType, StringType
-
-    from .merge import _xxh64
-
-    from_string, hash_utf8, xxh, seed42 = _xxh64(spark._jvm)
-    h = None
-    if type(value) is str or (type(value) is int and -(2**63) <= value < 2**63):
-        if isinstance(key_type, StringType):
-            h = hash_utf8(from_string(str(value)), 42)
-        elif type(value) is int and isinstance(key_type, LongType):
-            h = seed42.hashLong(value)
-        elif type(value) is int and isinstance(key_type, IntegerType) and (
-            -(2**31) <= value < 2**31
-        ):
-            h = seed42.hashInt(value)
-    if h is not None:
-        chain = xxh(h)
-        return [chain.hashInt(j) % m for j in range(k)]
-    probe = F.lit(value).cast(key_type)
-    row = (
-        spark.range(1)
-        .select(
-            *[
-                F.pmod(F.xxhash64(probe, F.lit(j)), F.lit(m)).alias(f"p{j}")
-                for j in range(k)
-            ]
-        )
-        .collect()[0]
-    )
-    return [row[j] for j in range(k)]
-
-
-def _bloom_proves_absent(
-    spark: SparkSession, gen_dir: str, value, key_type=None
-) -> bool:
-    """True iff the generation's key-bloom sidecar PROVES `value`
-    absent (any probe bit unset). Missing/corrupt sidecars mean MUST
-    READ. The probe positions are the builder's own xxhash64
-    expression (`_bloom_positions`). `key_type` is the COMMITTED key
-    column type: xxhash64 is type-sensitive (a Python int literal
-    hashes as INT while a stored LongType column hashes as BIGINT), so
-    the probe literal must be cast to the exact stored type — when the
-    type is unknown, the bloom is skipped (must-read, never a wrong
-    miss)."""
-    import base64
-
-    if key_type is None:
-        return False
-    p = os.path.join(gen_dir, KEYBLOOM_FILE)
-    if not os.path.exists(p):
-        return False
-    try:
-        with open(p) as f:
-            sc = json.load(f)
-        m, k = sc["m"], sc["k"]
-        bits = base64.b64decode(sc["bits_b64"])
-    except (ValueError, KeyError):
-        return False
-    for pos in _bloom_positions(spark, value, key_type, m, k):
-        if not (bits[pos // 8] >> (pos % 8)) & 1:
-            return True  # an unset probe bit: definitely absent
-    return False
-
-
 def _dv_ref(e) -> tuple[str, int]:
     """Normalize a manifest DV reference to (dir name, depth). Depth is
     the delta-chain position the delete was committed at: the DV kills
@@ -2244,15 +2084,12 @@ def merge_deletes_dv(
     manifest/pointer commit; a crash leaves an orphan for vacuum.
     Returns {version, buckets_touched, dv_rows, dv_bytes}.
     """
-    import fcntl
     import glob as _glob
 
     with open(os.path.join(path, BUCKET_META)) as f:
         meta = json.load(f)
     key = meta["key"]
-    lock = open(os.path.join(path, "_MERGELOCK"), "w")
-    fcntl.flock(lock, fcntl.LOCK_EX)
-    try:
+    with _merge_lock(path):
         cur = latest_version(path)
         full = _load_manifest_full(path, cur)
         n_buckets = full["n_buckets"]
@@ -2304,9 +2141,6 @@ def merge_deletes_dv(
             dead_phys=full.get("dead_phys"),
             base_full=full, changed=set(touched),
         )
-    finally:
-        fcntl.flock(lock, fcntl.LOCK_UN)
-        lock.close()
     return {
         "version": v, "buckets_touched": len(touched),
         "dv_rows": n_rows, "dv_bytes": dv_bytes,
@@ -2328,7 +2162,6 @@ def _commit(
     of a FILE, atomic on POSIX) is monotonic, same rule as
     merge.py::_advance_pointer; older manifests get a supersession
     marker so vacuum's grace clock runs on time-since-displaced."""
-    import fcntl
 
     tmp = os.path.join(path, f"_LATEST.tmp-{uuid.uuid4().hex[:8]}")
     with open(tmp, "w") as f:
@@ -2449,7 +2282,6 @@ def _enforce_constraints(df: DataFrame, constraints: dict[str, str], path: str) 
 def write_bucket_table_versioned(
     df: DataFrame, path: str, key: str = "id", n_buckets: int = 16,
     constraints: dict[str, str] | None = None,
-    key_bloom: dict | bool | None = None,
     mor_fold: dict | None = None,
     packed_base: bool | None = None,
     pack_target_bytes: int | None = None,
@@ -2471,14 +2303,11 @@ def write_bucket_table_versioned(
     must not silently disarm CHECK enforcement just because the caller
     didn't re-type it. Pass a dict (even `{}`, to clear explicitly) to
     override. Returns the committed version."""
-    import fcntl
 
     os.makedirs(path, exist_ok=True)
     meta_path = os.path.join(path, BUCKET_META)
-    lock = open(os.path.join(path, "_MERGELOCK"), "w")
-    fcntl.flock(lock, fcntl.LOCK_EX)
-    persisted = False
-    try:
+    # unpersist (if persisted) before the lock is released
+    with _merge_lock(path), contextlib.ExitStack() as cleanup:
         # the existing-version probe happens UNDER the merge lock: read
         # before it and a concurrent merge could advance the pointer,
         # making our _commit a silent monotonic no-op while we report
@@ -2497,23 +2326,17 @@ def write_bucket_table_versioned(
                 )
             if constraints is None:
                 constraints = old_meta.get("constraints")
-            if key_bloom is None:
-                key_bloom = old_meta.get("key_bloom")
             if mor_fold is None:
                 mor_fold = old_meta.get("mor_fold")
             if packed_base is None:
                 packed_base = old_meta.get("packed_base")
             if pack_target_bytes is None:
                 pack_target_bytes = old_meta.get("pack_target_bytes")
-        if key_bloom is True:
-            key_bloom = {"bits_per_key": 8, "k": 4}
         meta = {
             "key": key, "n_buckets": n_buckets, "v": 2, "versioned": True,
         }
         if constraints:
             meta["constraints"] = constraints
-        if key_bloom:
-            meta["key_bloom"] = key_bloom
         if mor_fold:
             if key not in mor_fold.get("keys", []):
                 raise ValueError(
@@ -2533,7 +2356,7 @@ def write_bucket_table_versioned(
             # persist so the constraint check and the write compute
             # the input lineage once, not twice (the merge path's rule)
             df = df.persist()
-            persisted = True
+            cleanup.callback(df.unpersist)
             _enforce_constraints(df, constraints, path)
         if existing_v is None:
             # fresh table: the meta must exist before the first commit
@@ -2546,11 +2369,6 @@ def write_bucket_table_versioned(
             size=(None, (), df),
         )
         stats = {i: _harvest_stats(path, i, g) for i, g in gens.items()}
-        if key_bloom:
-            _write_key_blooms(
-                spark=df.sparkSession, path=path, key=key, gens=gens,
-                stats=stats, n_buckets=n_buckets, **key_bloom,
-            )
         v = 1 if existing_v is None else existing_v + 1
         _commit(path, v, gens, n_buckets, _schema_of(df), stats, op="load")
         if existing_v is not None:
@@ -2563,18 +2381,12 @@ def write_bucket_table_versioned(
             with open(tmp, "w") as f:
                 json.dump(meta, f)
             os.replace(tmp, meta_path)
-    finally:
-        if persisted:
-            df.unpersist()
-        fcntl.flock(lock, fcntl.LOCK_UN)
-        lock.close()
     return v
 
 
 def init_bucket_table_versioned(
     path: str, key: str = "id", n_buckets: int = 16,
     constraints: dict[str, str] | None = None,
-    key_bloom: dict | bool | None = None,
     mor_fold: dict | None = None,
     packed_base: bool | None = None,
 ) -> int:
@@ -2600,10 +2412,6 @@ def init_bucket_table_versioned(
     meta = {"key": key, "n_buckets": n_buckets, "v": 2, "versioned": True}
     if constraints:
         meta["constraints"] = constraints
-    if key_bloom:
-        meta["key_bloom"] = (
-            {"bits_per_key": 8, "k": 4} if key_bloom is True else key_bloom
-        )
     if mor_fold:
         # recorded READ policy for merge-on-read tables maintained by
         # keep-latest semantics: {"keys": [...], "order_by": [[col,
@@ -3293,9 +3101,9 @@ def _prepare_scoped_merge(
 ) -> dict | None:
     """The WORK phase of a scoped merge, against the `full` manifest
     snapshot: read the touched target slice DV-applied, merge, enforce
-    schema compatibility + CHECK constraints, write new generation dirs
-    (+ bloom sidecars), harvest footer stats. Everything here is safe
-    to run WITHOUT any lock — generation dirs are content-addressed and
+    schema compatibility + CHECK constraints, write new generation dirs,
+    harvest footer stats. Everything here is safe to run WITHOUT any
+    lock — generation dirs are content-addressed and
     unreferenced until a commit names them, so a parallel writer doing
     the same can never collide on disk. Returns None for an empty
     batch; otherwise {touched, new_gens, stats, batch_schema, files,
@@ -3309,7 +3117,7 @@ def _prepare_scoped_merge(
     the local writer, so the commit runs that one job. Otherwise the
     Spark merge below runs, with the collected touched set when there
     is one. Either way the schema union, the out-of-bucket check, the
-    renames, the stats and the blooms are the same.
+    renames and the stats are the same.
 
     `touched_hint` = (n_buckets, bucket ids, the gate's answer for the
     batch collect) a caller already computed for THIS batch (the OCC
@@ -3441,15 +3249,6 @@ def _prepare_scoped_merge(
         stats_touched[str(i)] = st
         files += st["files"]
         bytes_ += st["bytes"]
-    if meta.get("key_bloom") and new_gens:
-        # sidecars land BEFORE the commit: a generation is never
-        # referenced without its bloom (readers treat an absent
-        # sidecar as must-read anyway, so a crash window is safe)
-        _write_key_blooms(
-            spark, path, key, new_gens,
-            {i: stats_touched[i] for i in new_gens if i in stats_touched},
-            n_buckets, **meta["key_bloom"],
-        )
     return {
         "touched": touched,
         "new_gens": new_gens,
@@ -3595,13 +3394,10 @@ def merge_scoped_versioned(
     Returns {version, n_buckets, buckets_touched, files_rewritten,
     bytes_rewritten}.
     """
-    import fcntl
 
     with open(os.path.join(path, BUCKET_META)) as f:
         meta = json.load(f)
-    lock = open(os.path.join(path, "_MERGELOCK"), "w")
-    fcntl.flock(lock, fcntl.LOCK_EX)
-    try:
+    with _merge_lock(path):
         cur = latest_version(path)
         full = _load_manifest_full(path, cur)
         prep = _prepare_scoped_merge(
@@ -3615,9 +3411,6 @@ def merge_scoped_versioned(
                 "bytes_rewritten": 0,
             }
         v = _assemble_scoped_commit(path, full, prep, op="merge")
-    finally:
-        fcntl.flock(lock, fcntl.LOCK_UN)
-        lock.close()
     return {
         "version": v, "n_buckets": full["n_buckets"],
         "buckets_touched": len(prep["touched"]),
@@ -3656,18 +3449,16 @@ def _await_intent_turn(
     path: str,
     my_intent: str,
     my_buckets,
-    ttl: float = OCC_INTENT_TTL_S,
-    timeout: float | None = None,
 ) -> bool:
     """Block until no LIVE intent strictly earlier than `my_intent`
-    names a bucket in `my_buckets` (or `timeout` elapses — then the
-    writer proceeds optimistically and OCC sorts it out). Stale
-    intents (older than ttl) never block and are reclaimed. Returns
-    whether any waiting happened (metrics/tests)."""
+    names a bucket in `my_buckets` (or OCC_INTENT_TTL_S elapses — then
+    the writer proceeds optimistically and OCC sorts it out). Stale
+    intents (older than the TTL) never block and are reclaimed.
+    Returns whether any waiting happened (metrics/tests)."""
     d = os.path.join(path, OCC_INTENT_DIR)
     my_name = os.path.basename(my_intent)
     mine = {int(b) for b in my_buckets}
-    deadline = time.monotonic() + (timeout if timeout is not None else ttl)
+    deadline = time.monotonic() + OCC_INTENT_TTL_S
     waited = False
     while True:
         blocked = False
@@ -3683,7 +3474,7 @@ def _await_intent_turn(
                 ts_ns = int(n.split("-")[1])
             except (IndexError, ValueError):
                 continue
-            if time.time_ns() - ts_ns > ttl * 1e9:
+            if time.time_ns() - ts_ns > OCC_INTENT_TTL_S * 1e9:
                 try:
                     os.unlink(fp)  # crashed writer: reclaim
                 except OSError:
@@ -3713,9 +3504,6 @@ def merge_scoped_versioned_occ(
     constraints: dict[str, str] | None = None,
     max_retries: int = 3,
     pre_commit_hook=None,
-    reuse: bool = True,
-    admission: bool | None = None,
-    intent_ttl: float = OCC_INTENT_TTL_S,
 ) -> dict:
     """OPTIMISTIC concurrency for scoped merges — Delta/Iceberg's
     multi-writer commit protocol: the expensive phase (target read,
@@ -3760,7 +3548,9 @@ def merge_scoped_versioned_occ(
     carried bucket is validated-unchanged) and recomputes only the
     conflicted buckets' slice of the batch. OCCBENCH's cow_overlap
     rung measured 0.7x serial with whole-work retries; reuse makes the
-    redo ∝ conflicted buckets.
+    redo ∝ conflicted buckets. A layout change, a vacuumed carried
+    snapshot or a mapping drift (a raced rename) drops the carry and
+    redoes the whole batch.
 
     ADMISSION (VERDICT r12 item 2): reuse cannot help when EVERY
     bucket conflicts (full overlap — the reuse set is empty by
@@ -3770,13 +3560,13 @@ def merge_scoped_versioned_occ(
     COMMIT INTENT naming its buckets and waits for earlier live
     intents that intersect (total order by timestamp -> deadlock-
     free; TTL-bounded -> a crashed writer stalls others at most
-    `intent_ttl`, never wedges). Fully-overlapping writers thus
+    OCC_INTENT_TTL_S, never wedges). Fully-overlapping writers thus
     serialize at admission — wall ≈ serial, attempts ≈ 1, zero
     orphans — while disjoint writers still overlap completely.
     Advisory only: OCC validation remains the correctness authority,
     so a timed-out or raced admission degrades to the reuse-retry
-    path, never to a wrong result. `admission=None` resolves to ON
-    unless `pre_commit_hook` is set: the hook is the law tests' race-
+    path, never to a wrong result. Admission is on exactly when
+    `pre_commit_hook` is None: the hook is the law tests' race-
     injection seam, and admission would serialize away the very race
     those tests construct (a barrier hook would deadlock against the
     wait).
@@ -3784,7 +3574,7 @@ def merge_scoped_versioned_occ(
     with open(os.path.join(path, BUCKET_META)) as f:
         meta = json.load(f)
     intent = None
-    if admission if admission is not None else pre_commit_hook is None:
+    if pre_commit_hook is None:
         n_b = _root_n_buckets(path, latest_version(path))
         # a small default upsert's batch is collected once here: the
         # intent's buckets come off that collect, and the first attempt
@@ -3808,8 +3598,8 @@ def merge_scoped_versioned_occ(
     try:
         return _merge_scoped_versioned_occ_loop(
             spark, path, updates, meta, now, deleted_col, merger,
-            constraints, max_retries, pre_commit_hook, reuse,
-            intent, my_buckets if intent else (), intent_ttl,
+            constraints, max_retries, pre_commit_hook,
+            intent, my_buckets if intent else (),
             touched_hint=(n_b, my_buckets, batch) if intent else None,
         )
     finally:
@@ -3822,10 +3612,8 @@ def merge_scoped_versioned_occ(
 
 def _merge_scoped_versioned_occ_loop(
     spark, path, updates, meta, now, deleted_col, merger, constraints,
-    max_retries, pre_commit_hook, reuse, intent, my_buckets, intent_ttl,
-    touched_hint=None,
+    max_retries, pre_commit_hook, intent, my_buckets, touched_hint=None,
 ) -> dict:
-    import fcntl
 
     attempts = 0
     # carried state from failed attempts: per-bucket generation (None
@@ -3843,7 +3631,7 @@ def _merge_scoped_versioned_occ_loop(
             # admission: take the snapshot only after earlier
             # conflicting intents clear, so the work phase runs
             # against a base those writers already committed into
-            _await_intent_turn(path, intent, my_buckets, ttl=intent_ttl)
+            _await_intent_turn(path, intent, my_buckets)
         base_v = latest_version(path)
         base_full = _load_manifest_full(path, base_v)
         prep = _prepare_scoped_merge(
@@ -3873,9 +3661,7 @@ def _merge_scoped_versioned_occ_loop(
         conflict = None
         full_reset = False
         retry_buckets: set[int] = set()
-        lock = open(os.path.join(path, "_MERGELOCK"), "w")
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
+        with _merge_lock(path):
             cur = latest_version(path)
             cur_full = (
                 base_full if cur == base_v
@@ -3949,9 +3735,6 @@ def _merge_scoped_versioned_occ_loop(
                     }
                     v = _assemble_scoped_commit(path, cur_full, combined)
                     rebased = cur != base_v or bool(carry_gens)
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
-            lock.close()
         if conflict is None:
             committed_stats = [
                 combined["stats"][str(i)]
@@ -3976,9 +3759,7 @@ def _merge_scoped_versioned_occ_loop(
                 f"(last: {conflict}); generations from the failed "
                 "attempts are unreferenced orphans for vacuum"
             )
-        if full_reset or not reuse:
-            # `reuse=False` is the benchmark A/B switch: every retry
-            # redoes the whole work phase (the pre-round-12 behavior)
+        if full_reset:
             carry_gens, carry_stats = {}, {}
             carry_schema, carry_v = None, None
             pending = updates
@@ -4066,7 +3847,7 @@ def merge_scoped_versioned_mor(
     copy-on-write legs.
 
     `occ=True` runs the whole work phase (classification, constraint
-    fold, generation writes, harvest, blooms) with NO lock held and
+    fold, generation writes, harvest) with NO lock held and
     validates at commit exactly like `merge_scoped_versioned_occ`:
     same-snapshot -> publish; bucket-signature-disjoint intervening
     commits -> REBASE onto the newest manifest (sound: disjointness
@@ -4093,7 +3874,6 @@ def merge_scoped_versioned_mor(
     leveled_buckets, files_written, bytes_written, rebased, attempts,
     composed} — `composed` lists the buckets that ordinal-composed.
     """
-    import fcntl
 
     with open(os.path.join(path, BUCKET_META)) as f:
         meta = json.load(f)
@@ -4101,13 +3881,13 @@ def merge_scoped_versioned_mor(
     attempts = 0
     while True:
         attempts += 1
-        lock = None
-        if not occ:
-            lock = open(os.path.join(path, "_MERGELOCK"), "w")
-            fcntl.flock(lock, fcntl.LOCK_EX)
         conflict = None
         composed: list = []
-        try:
+        # the serial path holds the merge lock for the whole attempt;
+        # OCC takes it only for commit validation
+        with contextlib.ExitStack() as held:
+            if not occ:
+                held.enter_context(_merge_lock(path))
             result = _mor_attempt(
                 spark, path, meta, updates, now, constraints, max_depth,
             )
@@ -4123,8 +3903,7 @@ def merge_scoped_versioned_mor(
             if occ:
                 if pre_commit_hook is not None:
                     pre_commit_hook()
-                lock = open(os.path.join(path, "_MERGELOCK"), "w")
-                fcntl.flock(lock, fcntl.LOCK_EX)
+                held.enter_context(_merge_lock(path))
                 cur2 = latest_version(path)
                 if cur2 == result["cur"]:
                     v = result["publish"](result["full"])
@@ -4174,10 +3953,6 @@ def merge_scoped_versioned_mor(
             else:
                 v = result["publish"](result["full"])
                 rebased = False
-        finally:
-            if lock is not None:
-                fcntl.flock(lock, fcntl.LOCK_UN)
-                lock.close()
         if conflict is None:
             return {
                 "version": v, "n_buckets": result["n_buckets"],
@@ -4259,9 +4034,9 @@ def _mor_attempt(
     max_depth: int,
 ) -> dict:
     """One MOR work pass against the current committed snapshot. All
-    disk effects are unreferenced generation dirs (+ bloom sidecars
-    inside them) until the returned `publish(commit_full)` closure
-    assembles and commits a manifest — publish against the snapshot it
+    disk effects are unreferenced generation dirs until the returned
+    `publish(commit_full)` closure assembles and commits a manifest —
+    publish against the snapshot it
     was prepared on (serial / no-race OCC) or against a newer
     signature-disjoint manifest (OCC rebase)."""
     key = meta["key"]
@@ -4423,13 +4198,6 @@ def _mor_attempt(
             harvested[i] = st
             files += st["files"]
             bytes_ += st["bytes"]
-    if meta.get("key_bloom") and (new_gens or leveled_gens):
-        both = {**new_gens, **leveled_gens}
-        _write_key_blooms(
-            spark, path, key, both,
-            {i: harvested[i] for i in both if i in harvested},
-            n_buckets, **meta["key_bloom"],
-        )
 
     def publish(commit_full: dict) -> int:
         """Assemble and commit this attempt on `commit_full` — the
@@ -4534,7 +4302,6 @@ def alter_bucket_table_versioned(
     recorded CHECK constraints or the mor_fold policy must be released
     from those first (raise). Returns {version, schema_columns}.
     """
-    import fcntl
     import re
 
     rename = dict(rename or {})
@@ -4571,9 +4338,7 @@ def alter_bucket_table_versioned(
                 f"alter touches column(s) {hit} referenced by the "
                 "mor_fold policy — not renameable in place"
             )
-    lock = open(os.path.join(path, "_MERGELOCK"), "w")
-    fcntl.flock(lock, fcntl.LOCK_EX)
-    try:
+    with _merge_lock(path):
         cur = latest_version(path)
         full = _load_manifest_full(path, cur)
         schema = full.get("schema")
@@ -4623,9 +4388,6 @@ def alter_bucket_table_versioned(
             # the commit reuses EVERY shard file (root only)
             base_full=full, changed=set(),
         )
-    finally:
-        fcntl.flock(lock, fcntl.LOCK_UN)
-        lock.close()
     return {"version": v, "schema_columns": len(new_fields)}
 
 
@@ -4641,14 +4403,11 @@ def compact_versioned(
     manifest reference — the incremental cadence a 100 TB table runs
     off-peak, exactly Delta's REORG/OPTIMIZE shape for DV tables).
     Returns {version, buckets_compacted}."""
-    import fcntl
 
     with open(os.path.join(path, BUCKET_META)) as f:
         meta = json.load(f)
     key = meta["key"]
-    lock = open(os.path.join(path, "_MERGELOCK"), "w")
-    fcntl.flock(lock, fcntl.LOCK_EX)
-    try:
+    with _merge_lock(path):
         cur = latest_version(path)
         full = _load_manifest_full(path, cur)
         n_buckets = full["n_buckets"]
@@ -4699,12 +4458,6 @@ def compact_versioned(
             else:
                 manifest[si] = g
                 stats_all[si] = _harvest_stats(path, i, g)
-        if meta.get("key_bloom") and gens:
-            _write_key_blooms(
-                spark, path, key, gens,
-                {i: stats_all[i] for i in gens if i in stats_all},
-                n_buckets, **meta["key_bloom"],
-            )
         tset = {str(i) for i in target}
         dv_all = {
             k2: list(v2)
@@ -4723,9 +4476,6 @@ def compact_versioned(
             dead_phys=full.get("dead_phys"),
             base_full=full, changed=set(target),
         )
-    finally:
-        fcntl.flock(lock, fcntl.LOCK_UN)
-        lock.close()
     return {"version": v, "buckets_compacted": len(target)}
 
 
@@ -4767,16 +4517,15 @@ def pack_decay(path: str, version: int | None = None) -> dict:
 def repack_if_decayed(
     spark: SparkSession,
     path: str,
-    threshold: float = REPACK_THRESHOLD,
 ) -> dict:
     """Maintenance hook that keeps full-scan path counts
     O(packs + recent rewrites) over ANY history length: when the
     fraction of buckets no longer served from a pack crosses
-    `threshold`, fold EVERY bucket back into one fresh pack
+    REPACK_THRESHOLD, fold EVERY bucket back into one fresh pack
     (compact_versioned with the explicit full bucket list — one
     content-neutral commit); below it, a metadata-only no-op.
 
-    Economics of the default: re-packing every threshold*width
+    Economics of the threshold: re-packing every threshold*width
     distinct-bucket rewrites costs one full-table rewrite, i.e. an
     amortized 1/threshold write amplification on the natural merge
     rate — 2.5x at 0.4 — in exchange for a plan that never exceeds
@@ -4792,7 +4541,7 @@ def repack_if_decayed(
     d = pack_decay(path)
     if (
         not _packed_base_for(path, d["n_buckets"])
-        or d["decayed_frac"] < threshold
+        or d["decayed_frac"] < REPACK_THRESHOLD
     ):
         return {**d, "repacked": False, "buckets_compacted": 0}
     full = _load_manifest_full(path, d["version"])
@@ -4830,15 +4579,12 @@ def rebucket_versioned(
     Returns {version, n_buckets_before, n_buckets_after,
     buckets_written}.
     """
-    import fcntl
     import json as _json
 
     with open(os.path.join(path, BUCKET_META)) as f:
         meta = _json.load(f)
     key = meta["key"]
-    lock = open(os.path.join(path, "_MERGELOCK"), "w")
-    fcntl.flock(lock, fcntl.LOCK_EX)
-    try:
+    with _merge_lock(path):
         cur = latest_version(path)
         full = _load_manifest_full(path, cur)
         old_n = full["n_buckets"]
@@ -4865,11 +4611,6 @@ def rebucket_versioned(
                 size=(full, sorted(full["buckets"]), None),
             )
             stats = {i: _harvest_stats(path, i, g) for i, g in gens.items()}
-            if meta.get("key_bloom"):
-                _write_key_blooms(
-                    spark, path, key, gens, stats, new_n_buckets,
-                    **meta["key_bloom"],
-                )
         v = max([cur] + _list_versions(path)) + 1
         _commit(
             path, v, gens, new_n_buckets,
@@ -4895,9 +4636,6 @@ def rebucket_versioned(
         with open(tmp_meta, "w") as f:
             _json.dump(new_meta, f)
         os.replace(tmp_meta, os.path.join(path, BUCKET_META))
-    finally:
-        fcntl.flock(lock, fcntl.LOCK_UN)
-        lock.close()
     return {
         "version": v, "n_buckets_before": old_n,
         "n_buckets_after": new_n_buckets,
@@ -4923,14 +4661,15 @@ def _ledger_bounds(full: dict, column: str) -> tuple | None:
 
 
 def _zorder_column(
-    df: DataFrame, full: dict, cluster_by: list[str], bits: int
+    df: DataFrame, full: dict, cluster_by: list[str]
 ) -> F.Column:
-    """Morton z-value over the cluster columns, quantized to `bits`
+    """Morton z-value over the cluster columns, quantized to 8 bits
     per dimension using ledger-global bounds (one manifest pass; an
     aggregate job only when the ledger lacks a column's bounds).
     Interleaving gives every dimension equal stats selectivity, so a
     box predicate on ANY subset of the columns prunes — lexicographic
     sort gives the first column everything and the rest nothing."""
+    bits = 8
     qcols = []
     need_agg = [
         c for c in cluster_by if _ledger_bounds(full, c) is None
@@ -4991,10 +4730,8 @@ def optimize_versioned(
     path: str,
     cluster_by: list[str],
     files_per_bucket: int = 8,
-    rows_per_file: int | None = None,
     buckets: list[int] | None = None,
     zorder: bool = False,
-    zorder_bits: int = 8,
 ) -> dict:
     """OPTIMIZE ... ZORDER/CLUSTER BY economics for the versioned
     table: a content-neutral committed version whose generations are
@@ -5021,9 +4758,10 @@ def optimize_versioned(
     `buckets` restricts the rewrite to a subset (incremental
     clustering: cost ∝ subset, untouched buckets carried by manifest
     reference) — the knob a 100 TB table uses to re-cluster only the
-    buckets recent merges de-clustered. `rows_per_file` overrides the
-    row budget (default: bucket rows / files_per_bucket from the
-    stats ledger). Reference semantics to beat: the reference has no
+    buckets recent merges de-clustered. The row budget per file is the
+    fattest target bucket's rows / files_per_bucket, from the stats
+    ledger (one count job only when the ledger lacks row counts).
+    Reference semantics to beat: the reference has no
     layout management at all (mongodb_handler.py relies on a BTree
     index); Delta OPTIMIZE is the real contract here.
 
@@ -5038,15 +4776,12 @@ def optimize_versioned(
 
     Returns {version, buckets_written, files_written, rows_per_file}.
     """
-    import fcntl
     import math
 
     with open(os.path.join(path, BUCKET_META)) as f:
         meta = json.load(f)
     key = meta["key"]
-    lock = open(os.path.join(path, "_MERGELOCK"), "w")
-    fcntl.flock(lock, fcntl.LOCK_EX)
-    try:
+    with _merge_lock(path):
         cur = latest_version(path)
         full = _load_manifest_full(path, cur)
         n_buckets = full["n_buckets"]
@@ -5060,27 +4795,24 @@ def optimize_versioned(
                 "version": cur, "buckets_written": 0, "files_written": 0,
                 "rows_per_file": None,
             }
-        if rows_per_file is None:
-            stats0 = full.get("stats") or {}
-            known = [
-                stats0[i]["rows"] for i in target
-                if i in stats0 and "rows" in stats0[i]
-            ]
-            if known:
-                per_bucket = max(known)  # size to the fattest bucket
-            else:
-                per_bucket = math.ceil(
-                    read_bucket_table_versioned(spark, path, cur).count()
-                    / max(len(manifest), 1)
-                )
-            rows_per_file = max(1, math.ceil(per_bucket / files_per_bucket))
+        stats0 = full.get("stats") or {}
+        known = [
+            stats0[i]["rows"] for i in target
+            if i in stats0 and "rows" in stats0[i]
+        ]
+        if known:
+            per_bucket = max(known)  # size to the fattest bucket
+        else:
+            per_bucket = math.ceil(
+                read_bucket_table_versioned(spark, path, cur).count()
+                / max(len(manifest), 1)
+            )
+        rows_per_file = max(1, math.ceil(per_bucket / files_per_bucket))
         # the slice reads THROUGH deltas and DVs (the clustered rewrite
         # folds both — the commit clears their refs for these buckets)
         slice_df = _read_snapshot_slice(spark, path, full, target, key)
         if zorder and len(cluster_by) > 1:
-            sort_key = [_zorder_column(
-                slice_df, full, list(cluster_by), zorder_bits
-            )]
+            sort_key = [_zorder_column(slice_df, full, list(cluster_by))]
         else:
             sort_key = list(cluster_by)
         new_gens = _write_generations(
@@ -5103,12 +4835,6 @@ def optimize_versioned(
             st = _harvest_stats(path, int(i), g)
             stats_all[i] = st
             files += st["files"]
-        if meta.get("key_bloom") and new_gens:
-            _write_key_blooms(
-                spark, path, key, new_gens,
-                {i: stats_all[i] for i in new_gens if i in stats_all},
-                n_buckets, **meta["key_bloom"],
-            )
         dv_all = {
             k2: list(v2)
             for k2, v2 in (full.get("dv") or {}).items()
@@ -5132,9 +4858,6 @@ def optimize_versioned(
             dead_phys=full.get("dead_phys"),
             base_full=full, changed=set(target),
         )
-    finally:
-        fcntl.flock(lock, fcntl.LOCK_UN)
-        lock.close()
     return {
         "version": v,
         "buckets_written": len(target),
@@ -5168,8 +4891,8 @@ def read_bucket_for_key_versioned(
     sharded-manifest design point.
 
     The slice plan runs on the driver: the bucket (`bucket_of_value`),
-    the deletion-vector gate, and the footer-stats and key-bloom
-    exclusions of each generation. When `_slice_gate("lookup")` admits
+    the deletion-vector gate, and the footer-stats exclusion of each
+    generation. When `_slice_gate("lookup")` admits
     the live generations, they are read on the driver with pyarrow,
     filtered on the key, and returned as a local relation: the caller's
     filter, select and collect then fold into a LocalTableScan and run
@@ -5248,24 +4971,11 @@ def read_bucket_for_key_versioned(
             hits = [r["__d"] for r in probe.collect()]
         if hits:
             dv_gate = max(hits)
-    ktype = None
-    if meta.get("key_bloom") and stored is not None:
-        ktype = next(
-            (
-                f.dataType
-                for f in _struct_of(stored).fields
-                if f.name == meta["key"]
-            ),
-            None,
-        )
     # every generation of the bucket — base + merge-on-read deltas —
     # is short-circuited INDEPENDENTLY: footer key bounds prove misses
-    # outside [lo, hi], the key-bloom sidecar (when the table opted
-    # in; probe cast to the committed key type — xxhash64 is
-    # type-sensitive) proves misses inside it, both without opening a
-    # data page. A generation proven key-free contributes nothing and
-    # drops from the read; all generations proven key-free = a
-    # definite miss.
+    # outside [lo, hi] without opening a data page. A generation
+    # proven key-free contributes nothing and drops from the read; all
+    # generations proven key-free = a definite miss.
     gens = [(
         _gen_data_path(path, bid, g), 0,
         (full.get("stats") or {}).get(str(bid)),
@@ -5277,10 +4987,6 @@ def read_bucket_for_key_versioned(
         if ordn <= dv_gate:
             continue  # DV-deleted at this ordinal: dead for this key
         if _key_stats_exclude(st):
-            continue
-        if ktype is not None and _bloom_proves_absent(
-            spark, gdir, value, ktype
-        ):
             continue
         live.append((gdir, ordn))
     if not live:
@@ -5968,13 +5674,11 @@ def vacuum_bucket_versions(
     Takes BOTH locks: _COMMITLOCK so no pointer advance interleaves,
     _MERGELOCK so no merger is mid-flight (its not-yet-referenced
     generations would otherwise look like orphans)."""
-    import fcntl
     import glob as _glob
 
     removed_versions: list[int] = []
     removed_gens: list[str] = []
-    with open(os.path.join(path, "_MERGELOCK"), "w") as mlock:
-        fcntl.flock(mlock, fcntl.LOCK_EX)
+    with _merge_lock(path):
         with open(os.path.join(path, "_COMMITLOCK"), "w") as clock_:
             fcntl.flock(clock_, fcntl.LOCK_EX)
             try:
@@ -6119,7 +5823,6 @@ def vacuum_bucket_versions(
                     )
             finally:
                 fcntl.flock(clock_, fcntl.LOCK_UN)
-        fcntl.flock(mlock, fcntl.LOCK_UN)
     return {
         "removed_versions": removed_versions,
         "removed_gens": removed_gens,

@@ -27,7 +27,6 @@ from cvemate_spark.session import get_spark  # noqa: E402
 # The full battery runs via tools/battery.py (-m "slow or not slow").
 SLOW_TESTS = {
     "test_full_verify_green_for_every_scale_bound_query",
-    "test_key_bloom_point_lookup_laws",
     "test_catalog_replica_crash_lands_on_joint_snapshot",
     "test_mor_random_program_matches_python_model",
     "test_kmv_laws_fuzz",

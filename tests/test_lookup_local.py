@@ -3,13 +3,17 @@ generation files total at most `LOCAL_READ_BYTES`,
 `read_bucket_for_key_versioned` reads them with pyarrow and returns a
 local relation. Law: that relation holds exactly the rows the Spark
 read returns, across layouts, versions, merge-on-read deltas, deletion
-vectors, schema evolution and key blooms."""
+vectors and schema evolution."""
 
 from __future__ import annotations
 
+import base64
 import datetime
 import decimal
+import glob
 import itertools
+import json
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -31,7 +35,7 @@ from pyspark.sql.types import (
 
 from cvemate_spark.operators import merge_versioned as mv
 from cvemate_spark.operators.merge import merge_upsert
-from test_point_lookup import _jobs, _key_values
+from test_point_lookup import _jobs
 
 T0 = "2024-01-01 00:00:00"
 T1 = "2024-02-01 00:00:00"
@@ -310,15 +314,67 @@ def test_local_equals_spark_renamed_column(spark, tmp_path):
     _assert_same(spark, path, ["k7", "k8"], version=1)
 
 
-def test_local_equals_spark_key_bloom(spark, tmp_path):
-    """Key-bloom tables: the driver-side probe proves misses without a
-    job, so hits and misses alike run none."""
-    path = str(tmp_path / "t")
-    keys = [f"k{i:03d}" for i in range(0, 200, 2)]
-    _write(spark, path, keys, key_bloom=True)
-    probes = keys[:10] + [f"k{i:03d}" for i in range(1, 21, 2)]
-    jobs = _assert_same(spark, path, probes)
-    assert jobs == [0] * len(jobs)
+def test_legacy_key_bloom_table_equals_its_twin(spark, tmp_path):
+    """Tables written while key blooms existed carry a "key_bloom"
+    entry in their meta and a `_KEYBLOOM.json` sidecar in each
+    generation dir. Both are ignored now: on such a table a merge,
+    point lookups (a hit, an in-range miss and an out-of-range miss,
+    driver and Spark read), a change feed, a compaction, a reload and
+    a vacuum answer as on a twin without them. The reload drops the
+    meta entry and the vacuum removes the sidecars with their
+    generations. The sidecars hold no set bit, so a reader that still
+    consulted them would miss every key."""
+    schema = "id string, n long, ts timestamp"
+
+    def frame(keys, n0):
+        ts = datetime.datetime(2024, 3, 1, 12, 30, 45, 123456)
+        return merge_upsert(
+            None, spark.createDataFrame([(k, n0 + i, ts) for i, k in enumerate(keys)], schema),
+            now=T0,
+        )
+
+    legacy, twin = str(tmp_path / "legacy"), str(tmp_path / "twin")
+    for p in (legacy, twin):
+        mv.write_bucket_table_versioned(
+            frame([f"k{i:03d}" for i in range(0, 200, 2)], 0), p, key="id", n_buckets=8
+        )
+    meta_path = os.path.join(legacy, "_BUCKETS")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    meta["key_bloom"] = {"bits_per_key": 8, "k": 4}
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    for i, g in mv._load_manifest_full(legacy, 1)["buckets"].items():
+        with open(f"{legacy}/bucket={i}/{g}/_KEYBLOOM.json", "w") as f:
+            json.dump({"m": 64, "k": 4, "bits_b64": base64.b64encode(bytes(8)).decode()}, f)
+
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    def same(fn):
+        a, b = fn(legacy), fn(twin)
+        assert a == b
+        return a
+
+    batch = spark.createDataFrame([("k004", 7, None), ("k401", 8, None)], schema)
+    same(lambda p: mv.merge_scoped_versioned(spark, p, batch, now=T1)["version"])
+    for v in ("k004", "k010", "k401", "k011", "a", "zzz"):
+        for bound in (1 << 40, 0):
+            got = same(lambda p: _lookup(spark, p, v, bound)[:2])
+            assert (got[1] is not None) == (v in ("k004", "k010", "k401")), v
+    assert same(lambda p: rows(mv.change_feed(spark, p, 1)))
+    all_buckets = sorted(int(i) for i in mv._load_manifest_full(twin, 2)["buckets"])
+    same(lambda p: mv.compact_versioned(spark, p, buckets=all_buckets)["version"])
+    same(lambda p: rows(mv.read_bucket_table_versioned(spark, p)))
+    same(lambda p: mv.write_bucket_table_versioned(
+        frame([f"r{i}" for i in range(20)], 100), p, key="id", n_buckets=8
+    ))
+    with open(meta_path) as f:
+        assert "key_bloom" not in json.load(f)
+    same(lambda p: sorted(mv.vacuum_bucket_versions(p, keep=1)["removed_versions"]))
+    assert not glob.glob(f"{legacy}/bucket=*/*/_KEYBLOOM.json")
+    assert same(lambda p: rows(mv.read_bucket_table_versioned(spark, p)))
+    same(lambda p: _lookup(spark, p, "r3", 1 << 40)[:2])
 
 
 def test_local_equals_spark_in_another_session_time_zone(spark, tmp_path):
@@ -418,47 +474,6 @@ def test_key_type_mismatch_keeps_spark_read(spark, tmp_path):
     ls, lr, lj = _lookup(spark, path, 5, 1 << 40)
     ss, sr, _ = _lookup(spark, path, 5, 0)
     assert lr == sr and lj >= 1
-
-
-def test_bloom_positions_match_jvm_expression(spark):
-    """Law: the driver-side probe positions equal Spark's
-    pmod(xxhash64(cast(v AS key_type), j), m) for every probe j, over
-    the point-lookup key corpus, for string, int and bigint keys; none
-    of them runs a job."""
-    ints, strs = _key_values()
-    m, k = 8192 + 64 * 7, 4
-    cases = [
-        (StringType(), strs + ints),
-        (LongType(), ints),
-        (IntegerType(), [v for v in ints if -(2**31) <= v < 2**31]),
-    ]
-    for key_type, values in cases:
-        want = spark.range(1).select(
-            *[
-                F.pmod(F.xxhash64(F.lit(v).cast(key_type), F.lit(j)), F.lit(m))
-                for v in values for j in range(k)
-            ]
-        ).collect()[0]
-        got = []
-        jobs = _jobs(
-            spark, f"bloom-{key_type.simpleString()}",
-            lambda: [got.extend(mv._bloom_positions(spark, v, key_type, m, k)) for v in values],
-        )
-        assert got == list(want), key_type
-        assert jobs == 0, key_type
-
-
-def test_bloom_positions_other_pairs_keep_the_job(spark):
-    for v, key_type in ((True, StringType()), ("7", LongType()), (1.5, StringType())):
-        want = spark.range(1).select(
-            *[F.pmod(F.xxhash64(F.lit(v).cast(key_type), F.lit(j)), F.lit(64)) for j in range(3)]
-        ).collect()[0]
-        got = []
-        jobs = _jobs(
-            spark, f"bloom-other-{v}",
-            lambda: got.extend(mv._bloom_positions(spark, v, key_type, 64, 3)),
-        )
-        assert got == list(want) and jobs == 1, (v, key_type)
 
 
 def test_local_read_bound_is_the_committed_crossover():

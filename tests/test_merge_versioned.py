@@ -1654,79 +1654,6 @@ def test_optimize_zorder_prunes_every_dimension(spark, tmp_path):
     assert frac_read(zed, y_band) < frac_read(lex, y_band) - 0.1
 
 
-def test_key_bloom_point_lookup_laws(spark, tmp_path):
-    """Key-bloom sidecars (round 10 — the Iceberg-puffin shape): an
-    opted-in table writes a per-generation bloom of its key column;
-    point lookups prove IN-RANGE misses without opening a data page.
-    Laws: (a) NO FALSE NEGATIVES — every present key still returns
-    its row, across load, merge, rebucket and optimize generations;
-    (b) the bloom actually bites — a majority of absent in-range
-    probes return None (FP rate is bounded, not zero); (c) a table
-    WITHOUT the option never consults a bloom (sidecars absent); (d)
-    reload inherits the option like constraints."""
-    import glob as _glob
-    import os
-
-    from cvemate_spark.operators.merge_versioned import (
-        KEYBLOOM_FILE, optimize_versioned, rebucket_versioned,
-    )
-
-    # sparse even keys: odd keys are in-range misses for the bloom
-    base = spark.createDataFrame(
-        [Row(id=2 * i, v=float(i)) for i in range(400)]
-    )
-    path = str(tmp_path / "vbt_bloom")
-    write_bucket_table_versioned(
-        base, path, key="id", n_buckets=4, key_bloom=True
-    )
-    sidecars = _glob.glob(f"{path}/bucket=*/g-*/{KEYBLOOM_FILE}")
-    assert len(sidecars) == 4
-
-    # (a) across the whole lifecycle: merge, rebucket, optimize
-    merge_scoped_versioned(
-        spark, path, spark.createDataFrame([Row(id=9000, v=1.0)])
-    )
-    rebucket_versioned(spark, path, 8)
-    optimize_versioned(spark, path, cluster_by=["v"], files_per_bucket=3)
-    present = [0, 2, 398 * 2, 9000]
-    for kv in present:
-        got = read_bucket_for_key_versioned(spark, path, kv)
-        assert got is not None and got.count() == 1, kv
-    # every current generation carries a sidecar (rebuilt per op)
-    from cvemate_spark.operators.merge_versioned import _load_manifest_full
-
-    m = _load_manifest_full(path, latest_version(path))
-    for i, g in m["buckets"].items():
-        assert os.path.exists(f"{path}/bucket={i}/{g}/{KEYBLOOM_FILE}"), i
-
-    # (b) absent in-range probes: odd ids inside [0, 800]
-    probes = list(range(1, 401, 2))
-    proven_absent = sum(
-        1
-        for kv in probes
-        if read_bucket_for_key_versioned(spark, path, kv) is None
-    )
-    # min/max alone can prove none of these (all in-range); the bloom
-    # must prove the vast majority (FP ~2.5% at 8 bits/4 probes)
-    assert proven_absent >= int(len(probes) * 0.8), proven_absent
-
-    # (c) an un-opted table has no sidecars and still answers exactly
-    path2 = str(tmp_path / "vbt_nobloom")
-    write_bucket_table_versioned(base, path2, key="id", n_buckets=4)
-    assert not _glob.glob(f"{path2}/bucket=*/g-*/{KEYBLOOM_FILE}")
-    assert read_bucket_for_key_versioned(spark, path2, 2).count() == 1
-
-    # (d) reload without re-passing the option keeps it
-    write_bucket_table_versioned(base, path, key="id", n_buckets=4)
-    import json as _json
-
-    with open(f"{path}/_BUCKETS") as f:
-        assert "key_bloom" in _json.load(f)
-    m2 = _load_manifest_full(path, latest_version(path))
-    for i, g in m2["buckets"].items():
-        assert os.path.exists(f"{path}/bucket={i}/{g}/{KEYBLOOM_FILE}"), i
-
-
 def test_history_log_matches_manifest_fallback(spark, tmp_path):
     """The commit log (round 10: O(V x tiny line) history/version_at
     instead of O(V x manifest load)) must agree EXACTLY with the
@@ -3465,37 +3392,6 @@ def test_occ_retry_reuses_unconflicted_generations(spark, tmp_path):
     ]
     assert len(orphans) == 1
     assert f"bucket={b_w}/" in orphans[0]
-
-    # the A/B control: reuse=False redoes the whole batch — BOTH
-    # first-attempt generations orphan this time
-    state["first"] = True
-
-    def hook2():
-        if state["first"]:
-            state["first"] = False
-            merge_scoped_versioned(
-                spark, path,
-                spark.createDataFrame(
-                    [(k_winner_only, "W2")], "id string, nvd string"
-                ),
-                now=T1,
-            )
-
-    res2 = merge_scoped_versioned_occ(
-        spark, path,
-        spark.createDataFrame(
-            [(k_shared, "L3"), (k_loser_only, "L4")],
-            "id string, nvd string",
-        ),
-        now=T1, pre_commit_hook=hook2, max_retries=4, reuse=False,
-    )
-    assert res2["attempts"] == 2 and res2["buckets_reused"] == 0
-    snap2 = {
-        r["id"]: r["nvd"]
-        for r in read_bucket_table_versioned(spark, path).collect()
-    }
-    assert snap2[k_shared] == "L3" and snap2[k_loser_only] == "L4"
-    assert snap2[k_winner_only] == "W2"
 
 
 def test_mor_append_racing_compactor_relands(spark, tmp_path):

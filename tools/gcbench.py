@@ -18,7 +18,9 @@ content, manifest bytes track retained history, and each vacuum
 returns total/live to a stable band.
 
 Usage: python3 tools/gcbench.py [sf_dir] [n_commits] [n_buckets]
-Writes GCBENCH.json.
+Writes GCBENCH.json when the inputs are the recorded run's (sf0.1, 600
+commits, 1024 buckets), else GCBENCH_<differing inputs>.json
+(tools/artifacts.py).
 """
 
 from __future__ import annotations
@@ -33,6 +35,8 @@ import threading
 import time
 
 sys.path.insert(0, "/root/repo")
+
+from tools.artifacts import artifact_path, data_token  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 N_COMMITS = 600
@@ -269,7 +273,12 @@ def main() -> None:
         },
         "loadavg_1m": os.getloadavg()[0],
     }
-    with open("/root/repo/GCBENCH.json", "w") as f:
+    dst = artifact_path(
+        "GCBENCH",
+        {"GCBENCH.json": ("sf0.1", "c600", "b1024")},
+        (data_token(SF_DIR), f"c{N_COMMITS}", f"b{N_BUCKETS}"),
+    )
+    with open(dst, "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps({k: v for k, v in out.items() if k != "samples"}))
 

@@ -24,8 +24,10 @@ Measured per run, all through `merge_versioned`:
 Usage: python3 tools/mergebench.py [sf_dir] [n_buckets] [xN]
   xN (e.g. x10) replicates orders N times with distinct keys — the
   second decade (VERDICT r8 item 3: n_buckets ∝ table size needs two
-  points: 1.5M/256 and 15M/4096). Output goes to MERGEBENCH.json, or
-  MERGEBENCH_<n_buckets>.json when n_buckets != 256.
+  points: 1.5M/256 and 15M/4096). Output goes to the committed record
+  the inputs repeat (MERGEBENCH.json: sf1, 256 buckets, x1;
+  MERGEBENCH_4096.json: sf0.1, 4096 buckets, x10), else to
+  MERGEBENCH_<differing inputs>.json (tools/artifacts.py).
 """
 
 from __future__ import annotations
@@ -40,6 +42,8 @@ import time
 sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
+
+from tools.artifacts import artifact_path, data_token  # noqa: E402
 
 SF_DIR = "/root/repo/.scratch/sf1"
 N_BUCKETS = 256
@@ -264,13 +268,17 @@ def main() -> None:
         "loadavg_1m": os.getloadavg()[0],
         "runs": results,
     }
-    name = (
-        "MERGEBENCH.json" if N_BUCKETS == 256
-        else f"MERGEBENCH_{N_BUCKETS}.json"
+    dst = artifact_path(
+        "MERGEBENCH",
+        {
+            "MERGEBENCH.json": ("sf1", "b256", "x1"),
+            "MERGEBENCH_4096.json": ("sf0.1", "b4096", "x10"),
+        },
+        (data_token(SF_DIR), f"b{N_BUCKETS}", f"x{MULT}"),
     )
-    with open(f"/root/repo/{name}", "w") as f:
+    with open(dst, "w") as f:
         json.dump(out, f, indent=1)
-    print(f"wrote {name}")
+    print(f"wrote {dst.name}")
     shutil.rmtree(SCRATCH, ignore_errors=True)
 
 

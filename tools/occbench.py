@@ -13,9 +13,10 @@ ordinal-composes, and orphan bytes, for:
     buckets' generations and recomputes only the hot one)
   * mor_overlap:  MOR OCC writers on the same buckets, key-disjoint
     (round-11 ordinal compose: same contention, ZERO retries)
-  * cow_overlap_noadm: overlap with commit-intent ADMISSION disabled
-    (round-12 behavior control — isolates what round-13's admission
-    serialization buys under full contention)
+
+(the committed OCCBENCH.json also holds the cow_partial_noreuse and
+cow_overlap_noadm controls, run while retry reuse and admission could
+still be switched off)
 
 plus a serial baseline per scenario (the same batches, one after
 another, through the locked path). Orphan bytes = generation dirs no
@@ -24,8 +25,10 @@ races, reclaimed by vacuum.
 
 Usage: python3 tools/occbench.py [sf_dir] [writers_csv] [xN] [bN]
   xN (e.g. x10) multiplies the orders corpus; bN (e.g. b4096) sets
-  the bucket count. Writes OCCBENCH.json (OCCBENCH_<buckets>.json
-  when bN is given — decade points don't overwrite each other).
+  the bucket count. Writes the committed record the inputs repeat
+  (OCCBENCH.json: sf0.1, 2,4,8 writers, x1, 256 buckets;
+  OCCBENCH_4096.json: 4 writers, x10, 4096 buckets), else
+  OCCBENCH_<differing inputs>.json (tools/artifacts.py).
 """
 
 from __future__ import annotations
@@ -40,11 +43,12 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
+from tools.artifacts import artifact_path, data_token  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.1"
 WRITERS = [2, 4, 8]
 N_BUCKETS = 256
 MULTIPLIER = 1
-OUT_NAME = "OCCBENCH.json"
 for a in sys.argv[1:]:
     if "/" in a:
         SF_DIR = a
@@ -52,7 +56,6 @@ for a in sys.argv[1:]:
         MULTIPLIER = int(a[1:])
     elif a.startswith("b") and a[1:].isdigit():
         N_BUCKETS = int(a[1:])
-        OUT_NAME = f"OCCBENCH_{N_BUCKETS}.json"
     elif "," in a or a.isdigit():
         WRITERS = [int(x) for x in a.split(",")]
 
@@ -196,8 +199,6 @@ def main() -> None:
             (f"cow_disjoint_{n}w", "disjoint", "cow"),
             (f"cow_overlap_{n}w", "overlap", "cow"),
             (f"cow_partial_{n}w", "partial", "cow"),
-            (f"cow_partial_noreuse_{n}w", "partial", "cow-noreuse"),
-            (f"cow_overlap_noadm_{n}w", "overlap", "cow-noadm"),
             (f"mor_overlap_{n}w", "overlap", "mor"),
         ):
             path = f"{SCRATCH}/{scen}"
@@ -211,21 +212,6 @@ def main() -> None:
                 if merge_kind == "cow":
                     acc.append(mv.merge_scoped_versioned_occ(
                         spark, path, df, now=T0, max_retries=2 * n,
-                    ))
-                elif merge_kind == "cow-noreuse":
-                    # A/B control: the pre-round-12 whole-work retry
-                    # (admission off too — it would mask the retries)
-                    acc.append(mv.merge_scoped_versioned_occ(
-                        spark, path, df, now=T0, max_retries=2 * n,
-                        reuse=False, admission=False,
-                    ))
-                elif merge_kind == "cow-noadm":
-                    # A/B control: round-12 behavior (reuse retries,
-                    # no commit-intent admission) — isolates what the
-                    # round-13 admission path buys under full overlap
-                    acc.append(mv.merge_scoped_versioned_occ(
-                        spark, path, df, now=T0, max_retries=2 * n,
-                        admission=False,
                     ))
                 else:
                     acc.append(mv.merge_scoped_versioned_mor(
@@ -254,7 +240,7 @@ def main() -> None:
             )
             t = time.time()
             for df in batches:
-                if merge_kind in ("cow", "cow-noreuse"):
+                if merge_kind == "cow":
                     mv.merge_scoped_versioned(spark, path_s, df, now=T0)
                 else:
                     mv.merge_scoped_versioned_mor(spark, path_s, df, now=T0)
@@ -287,7 +273,18 @@ def main() -> None:
         "scenarios": results,
         "loadavg_1m": os.getloadavg()[0],
     }
-    with open(f"/root/repo/{OUT_NAME}", "w") as f:
+    dst = artifact_path(
+        "OCCBENCH",
+        {
+            "OCCBENCH.json": ("sf0.1", "w2,4,8", "x1", "b256"),
+            "OCCBENCH_4096.json": ("sf0.1", "w4", "x10", "b4096"),
+        },
+        (
+            data_token(SF_DIR), "w" + ",".join(map(str, WRITERS)),
+            f"x{MULTIPLIER}", f"b{N_BUCKETS}",
+        ),
+    )
+    with open(dst, "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out, indent=1))
     shutil.rmtree(SCRATCH, ignore_errors=True)

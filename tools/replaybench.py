@@ -9,7 +9,9 @@ min at r9); round 10 trims it via the change_feed bootstrap shortcut
 coalesced replica write.
 
 Usage: python3 tools/replaybench.py [sf_dir] [runs]
-Updates STREAMBENCH.json under "round10_replay_paths_sf0.01".
+Updates STREAMBENCH.json under "round10_replay_paths_sf0.01" when the
+inputs are the recorded run's (sf0.01, 3 runs); any other run writes
+STREAMBENCH_<differing inputs>.json (tools/artifacts.py).
 """
 
 from __future__ import annotations
@@ -20,6 +22,8 @@ import sys
 import time
 
 sys.path.insert(0, "/root/repo")
+
+from tools.artifacts import artifact_path, data_token  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 RUNS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
@@ -61,13 +65,19 @@ def main() -> None:
         print(name, out[name])
     out["loadavg_1m"] = os.getloadavg()[0]
 
-    path = "/root/repo/STREAMBENCH.json"
-    with open(path) as f:
-        doc = json.load(f)
-    doc["round10_replay_paths_sf0.01"] = out
-    with open(path, "w") as f:
-        json.dump(doc, f, indent=1)
-    print("updated STREAMBENCH.json")
+    dst = artifact_path(
+        "STREAMBENCH",
+        {"STREAMBENCH.json": ("sf0.01", "r3")},
+        (data_token(SF_DIR), f"r{RUNS}"),
+    )
+    if dst.name == "STREAMBENCH.json":
+        with open(dst) as f:
+            doc = json.load(f)
+        doc["round10_replay_paths_sf0.01"] = out
+        out = doc
+    with open(dst, "w") as f:
+        json.dump(out, f, indent=1)
+    print(f"wrote {dst.name}")
 
 
 if __name__ == "__main__":

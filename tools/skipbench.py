@@ -22,8 +22,9 @@ Measured per run:
     the harvest share of merge wall-clock
 
 Usage: python3 tools/skipbench.py [sf_dir] [n_buckets] [xN]
-Writes SKIPBENCH.json (SKIPBENCH_<n_buckets>.json when n_buckets is
-not the default 256, so decade points don't overwrite each other).
+Writes the committed record the inputs repeat (SKIPBENCH.json: sf0.1,
+256 buckets, x10; SKIPBENCH_4096.json: 4096 buckets; SKIPBENCH_x100.json:
+x100), else SKIPBENCH_<differing inputs>.json (tools/artifacts.py).
 """
 
 from __future__ import annotations
@@ -37,6 +38,8 @@ import time
 sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
+
+from tools.artifacts import artifact_path, data_token  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 N_BUCKETS = 256
@@ -90,7 +93,9 @@ def main() -> None:
     write_bucket_table_versioned(
         merge_upsert(None, orders, key="o_orderkey", now=T0),
         path, key="o_orderkey", n_buckets=N_BUCKETS,
-        key_bloom=True,  # round 10: in-range point-lookup misses
+        # the classic layout at every width, as in the recorded runs
+        # (their key-bloom tables were never packed)
+        packed_base=False,
     )
     load_s = time.time() - t
 
@@ -167,22 +172,6 @@ def main() -> None:
         lambda: read_bucket_for_key_versioned(spark, path, -1)
     )
     assert miss is None  # keys are non-negative: bounds prove the miss
-    # round 10: an IN-RANGE absent key — bounds cannot prove it, the
-    # key-bloom sidecar does (TPC-H only uses 1/4 of the orderkey
-    # space, so in-range gaps exist; probe until the bloom proves one)
-    keys_df = orders.select("o_orderkey")
-    inrange_absent = (
-        keys_df.select((F.col("o_orderkey") + 1).alias("k"))
-        .join(
-            keys_df.withColumnRenamed("o_orderkey", "k"), "k", "left_anti"
-        )
-        .agg(F.min("k"))
-        .collect()[0][0]
-    )
-    assert inrange_absent is not None
-    bloom_s, bloom_miss = timed(
-        lambda: read_bucket_for_key_versioned(spark, path, inrange_absent)
-    )
 
     # ---- round 10: VALUE-predicate skipping via clustering --------
     # the hash-layout honesty row first: a price band prunes ~nothing
@@ -275,8 +264,6 @@ def main() -> None:
         "point_lookup": {
             "hit_s": round(hit_s, 3),
             "stats_proven_miss_s": round(miss_s, 4),
-            "bloom_proven_inrange_miss_s": round(bloom_s, 4),
-            "bloom_proved_miss": bloom_miss is None,
         },
         "value_band_clustering": {
             "band": [band_lo, band_hi],
@@ -307,12 +294,16 @@ def main() -> None:
         },
         "loadavg_1m": os.getloadavg()[0],
     }
-    name = "SKIPBENCH.json"
-    if N_BUCKETS != 256:
-        name = f"SKIPBENCH_{N_BUCKETS}.json"
-    elif MULT != 10:
-        name = f"SKIPBENCH_x{MULT}.json"
-    with open(f"/root/repo/{name}", "w") as f:
+    dst = artifact_path(
+        "SKIPBENCH",
+        {
+            "SKIPBENCH.json": ("sf0.1", "b256", "x10"),
+            "SKIPBENCH_4096.json": ("sf0.1", "b4096", "x10"),
+            "SKIPBENCH_x100.json": ("sf0.1", "b256", "x100"),
+        },
+        (data_token(SF_DIR), f"b{N_BUCKETS}", f"x{MULT}"),
+    )
+    with open(dst, "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out, indent=1))
     shutil.rmtree(SCRATCH, ignore_errors=True)
