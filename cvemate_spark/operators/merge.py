@@ -217,6 +217,39 @@ def merge_upsert_deletes(
     return merged.join(tombs, key, "left_anti")
 
 
+def _holds_map(t) -> bool:
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    if isinstance(t, MapType):
+        return True
+    if isinstance(t, ArrayType):
+        return _holds_map(t.elementType)
+    if isinstance(t, StructType):
+        return any(_holds_map(f.dataType) for f in t.fields)
+    return False
+
+
+def _orderable(c, t):
+    """Column `c` of Spark type `t` in a form `<=>` compares: Spark
+    orders no map, so each map, at any depth, becomes its entries
+    sorted by key (two maps are equal exactly when those are); `c`
+    itself when `t` holds no map."""
+    from pyspark.sql.types import ArrayType, MapType
+
+    if not _holds_map(t):
+        return c
+    if isinstance(t, MapType):
+        return F.array_sort(F.transform(F.map_entries(c), lambda e: F.struct(
+            _orderable(e["key"], t.keyType).alias("key"),
+            _orderable(e["value"], t.valueType).alias("value"),
+        )))
+    if isinstance(t, ArrayType):
+        return F.transform(c, lambda x: _orderable(x, t.elementType))
+    return F.when(c.isNotNull(), F.struct(*[
+        _orderable(c[f.name], f.dataType).alias(f.name) for f in t.fields
+    ]))
+
+
 def table_diff(
     v1: DataFrame, v2: DataFrame, key: str | list[str] = "id"
 ) -> DataFrame:
@@ -229,7 +262,8 @@ def table_diff(
     logical identity spans several columns, e.g. a keep-latest table
     keyed on (user_id, event_type)). A row whose key parts are all
     non-NULL is matched on its key, and a matched pair whose columns
-    differ under `<=>` is an update. A row with a NULL key part is
+    differ under `<=>` is an update (a column holding a map compares
+    in `_orderable`'s form). A row with a NULL key part is
     identified by its whole content instead: it matches an equal row
     (`<=>` on every column, keys included) on the other side, so it is
     never an update, only an insert or a delete. The law tying this to
@@ -246,8 +280,11 @@ def table_diff(
     for k in keys:
         cond = cond & F.col(f"a.{k}").eqNullSafe(F.col(f"b.{k}"))
         keyed = keyed & F.col(f"a.{k}").isNotNull()
+    types = {f.name: f.dataType for f in v1.schema.fields}
     for c in cols:
-        same = same & F.col(f"a.{c}").eqNullSafe(F.col(f"b.{c}"))
+        same = same & _orderable(F.col(f"a.{c}"), types[c]).eqNullSafe(
+            _orderable(F.col(f"b.{c}"), types[c])
+        )
     # the side markers say which side a joined row came from: a key
     # column cannot, since a key part may be NULL on a matched row
     j = v1.withColumn("__a", F.lit(True)).alias("a").join(
@@ -283,8 +320,8 @@ def _distinct_from(a, b):
     """`NOT (a <=> b)` per row of two same-typed Arrow arrays, as Spark
     orders values: NULL equals NULL at any depth, NaN equals NaN and
     -0.0 equals 0.0; structs compare field by field, lists by length
-    and then element by element. Never NULL. Maps are not comparable
-    (Spark rejects them too)."""
+    and then element by element. Never NULL. Maps are not compared: the
+    feed gate leaves them to `table_diff`."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -697,22 +734,6 @@ def bucket_expr(key: str, n_buckets: int) -> F.Column:
     xxhash64 is a fixed algorithm (stable across sessions/versions), so
     every merge recomputes the same bucket for the same key."""
     return F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets))
-
-
-def bucket_membership_expr(
-    key: str, n_buckets: int, ids, keep: bool
-) -> F.Column:
-    """`bucket_expr(key, n) IN (ids)` (or NOT IN, keep=False) built as
-    ONE parsed SQL expression. Column.isin costs one py4j gateway
-    round trip PER LITERAL (~0.6 ms each — an 8.7k-id exclusion
-    measured ~5 s of driver time per merge on a coalesced pack);
-    parsing one IN-list string is a single call and Catalyst compiles
-    large IN lists to an InSet hash probe either way. The key is
-    backtick-quoted; ids are ints by construction (bucket ids)."""
-    lst = ",".join(str(int(i)) for i in sorted(set(ids)))
-    q = key.replace("`", "``")
-    e = f"pmod(xxhash64(cast(`{q}` as string)), {int(n_buckets)})"
-    return F.expr(f"{e} {'IN' if keep else 'NOT IN'} ({lst})")
 
 
 @functools.lru_cache(maxsize=1)

@@ -39,13 +39,10 @@ Layout under `path/`:
     bucket=<i>/g-<hex>/        immutable per-bucket generation (parquet);
                                Spark writes it, or pyarrow on the driver when
                                `_slice_gate` admits the write (small,
-                               classic, unsorted), as for small default
-                               upserts, which also merge on the driver;
-                               small change feeds read and diff there too
-    _packed/pg-<hex>/          packed base: Spark-written b<i>.parquet
-                               files and pyarrow-coalesced r<lo>-<hi>.parquet
-                               range files (INT64 timestamps; range files
-                               packed before that hold pyarrow INT96)
+                               unsorted), as for small default upserts,
+                               which also merge on the driver; small
+                               change feeds read and diff there too. The
+                               one base layout at every bucket count
     dv-<hex>/                  deletion-vector key sets (parquet, Spark)
 
 Write protocols on top of the manifest-pointer commit:
@@ -77,7 +74,6 @@ from __future__ import annotations
 
 import contextlib
 import fcntl
-import functools
 import json
 import logging
 import math
@@ -200,63 +196,6 @@ def _shard_size_for(n_buckets: int) -> int:
 ROOT_CKPT_EVERY = 16
 
 
-# PACKED base generations: a FULL-WIDTH write (initial load, compact,
-# rebucket) lands ONE flat `_packed/pg-<hex>/` directory holding one
-# file per bucket (`b<i>.parquet`) instead of one directory per bucket,
-# and the manifest entry is "@pg-<hex>/b<i>.parquet". Why: Spark's
-# reader costs ~200 µs per ROOT PATH it is handed (path qualification +
-# listing + file-index construction — measured flat across strategies),
-# so a 16384-bucket full scan spent ~3 s in plan time REGARDLESS of
-# data size, O(table width). A packed snapshot hands Spark ONE root
-# directory (files enumerate via a single bulk listStatus, ~25 µs/
-# entry) plus only the individually-rewritten buckets' classic dirs —
-# plan cost ∝ changes since the last full write, not width. Buckets
-# later rewritten by scoped merges get classic per-bucket generations;
-# their stale rows inside the packed files are excluded by a
-# pushed-down NOT-IN filter on the recomputed bucket hash (metadata-
-# only exclusion, the Iceberg delete-by-predicate shape). Point
-# lookups and pruned scans read the per-bucket FILE directly — file
-# grain, O(1) in width. Auto-enabled at >= PACK_MIN_BUCKETS (tables
-# under it keep the classic layout: a 16-dir scan plans in ms anyway);
-# explicit opt-in/out via meta "packed_base".
-PACKED_DIR = "_packed"
-PACK_MIN_BUCKETS = 256
-PACK_META_FILE = "_PACK.json"
-# Range-file coalescing inside a pack: per-bucket files smaller than
-# PACK_TARGET_BYTES are concatenated (contiguous bucket-id runs, one
-# row group per bucket) into `r<lo>-<hi>.parquet` files of ~target
-# size. Spark's parquet reader costs ~5-6 ms of fixed work per FILE
-# (footer parse + reader init — measured conf-invariant across 307/77/
-# 32 scan partitions at 16384 one-row files), so a wide pack of tiny
-# buckets pays an O(width) read floor that no partitioning conf
-# removes; coalescing bounds the file count by bytes/target instead.
-# At production scale every bucket file exceeds the target and the
-# layout is byte-identical to the classic one-file-per-bucket pack —
-# the coalescer is a small-table/wide-layout guard, not a new format.
-# Per-table override: meta/`pack_target_bytes` (0 disables). The
-# driver-side concat is bounded by PACK_COALESCE_MAX_BYTES; packs
-# bigger than that keep per-bucket files (at that size the per-file
-# floor is already amortized by data bytes).
-PACK_TARGET_BYTES = 8 << 20
-PACK_COALESCE_MAX_BYTES = 512 << 20
-
-
-def _pack_target_from_meta(meta: dict) -> int:
-    t = meta.get("pack_target_bytes")
-    return PACK_TARGET_BYTES if t is None else int(t)
-
-
-def _pack_file_coverage(name: str) -> list[int]:
-    """Bucket ids a pack FILE may hold rows of, from its basename:
-    `b<i>.parquet` covers {i}; `r<lo>-<hi>.parquet` covers [lo, hi]
-    (vacant ids in the range are harmless — no rows to exclude)."""
-    stem = name.rsplit("/", 1)[-1]
-    if stem.startswith("b"):
-        return [int(stem[1:].split(".")[0])]
-    lo, hi = stem[1:].split(".")[0].split("-")
-    return list(range(int(lo), int(hi) + 1))
-
-
 def _write_parquet(table, dst: str) -> None:
     """Write one Arrow table as a parquet file that Spark reads exactly
     as one of its own: snappy, and timestamps as INT64 microseconds,
@@ -306,175 +245,9 @@ def _arrow_schema(schema):
         return None
 
 
-def _concat_parquet(srcs: list[str], dst: str, schema) -> None:
-    """Concatenate same-schema Spark-written parquet files into one, in
-    bucket order, cast to `schema` (the Arrow form of the written Spark
-    schema, `_arrow_schema`) and written by `_write_parquet`: INT96
-    timestamps come out as INT64 microseconds adjusted to UTC, which
-    pyarrow reads back exactly (its own INT96 writer stores an instant
-    before 1970 with a negative time of day). Readers never rely on
-    the dropped Spark footer schema: every versioned read passes the
-    manifest-recorded schema explicitly."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    # one concatenated write, NOT one write_table per source: a row
-    # group per tiny bucket would put O(coalesced buckets) row groups
-    # in the footer, and every footer parse would pay O(width) — rows
-    # stay in bucket order, stats are file-wide either way. Sources
-    # read on a thread pool: arrow parquet reads release the GIL, and
-    # the per-file fixed cost (~2 ms) is the whole bill at the tiny
-    # sizes that coalesce.
-    from concurrent.futures import ThreadPoolExecutor
-
-    # INT96 read at microseconds, Spark's unit: at pyarrow's default
-    # (nanoseconds) a timestamp outside 1677-2262 wraps around int64
-    # and the rewrite would store a different instant
-    with ThreadPoolExecutor(max_workers=16) as ex:
-        tables = list(ex.map(
-            functools.partial(pq.read_table, coerce_int96_timestamp_unit="us"),
-            srcs,
-        ))
-    _write_parquet(pa.concat_tables(tables).cast(schema), dst)
-
-
-def _pack_groups(
-    per_bucket: dict[int, str], sizes: dict[int, int], target: int
-) -> list[tuple[list[int], str]]:
-    """Greedy contiguous grouping of per-bucket files into pack files:
-    walk buckets ascending, accumulate a run while the run stays under
-    `target` bytes; a file already >= target (the production shape)
-    stands alone as `b<i>`. Runs never interleave, so range coverages
-    are disjoint. Returns [(bucket ids, file basename)]."""
-    out: list[tuple[list[int], str]] = []
-    run: list[int] = []
-    run_bytes = 0
-
-    def _flush():
-        nonlocal run, run_bytes
-        if not run:
-            return
-        if len(run) == 1:
-            out.append((run, f"b{run[0]}.parquet"))
-        else:
-            out.append((run, f"r{run[0]}-{run[-1]}.parquet"))
-        run, run_bytes = [], 0
-
-    for i in sorted(per_bucket):
-        b = sizes[i]
-        if b >= target:
-            _flush()
-            out.append(([i], f"b{i}.parquet"))
-            continue
-        if run_bytes + b > target:
-            _flush()
-        run.append(i)
-        run_bytes += b
-    _flush()
-    return out
-
-
-def _packed_from_meta(meta: dict, n_buckets: int) -> bool:
-    p = meta.get("packed_base")
-    if p is not None:
-        return bool(p)
-    return n_buckets >= PACK_MIN_BUCKETS
-
-
-def _packed_base_for(path: str, n_buckets: int) -> bool:
-    return _packed_from_meta(_table_meta(path), n_buckets)
-
-
-def _is_packed_entry(g: str) -> bool:
-    return g.startswith("@")
-
-
 def _gen_data_path(path: str, i, g: str) -> str:
-    """Filesystem location of bucket i's generation `g`: the classic
-    `bucket=<i>/<gen>` directory, or the single packed FILE for an
-    "@pg-<hex>/b<i>.parquet" entry."""
-    if g.startswith("@"):
-        return f"{path}/{PACKED_DIR}/{g[1:]}"
+    """Directory of bucket i's generation `g`: `bucket=<i>/<gen>`."""
     return f"{path}/bucket={i}/{g}"
-
-
-def _pack_name_of(g: str) -> str:
-    return g[1:].split("/", 1)[0]
-
-
-def _pack_meta(path: str, pg: str) -> dict:
-    """The pack's birth record ({"buckets": [...]}) — which buckets the
-    packed generation originally covered, for deriving the superseded
-    set without listing the directory."""
-    with open(
-        os.path.join(path, PACKED_DIR, pg, PACK_META_FILE)
-    ) as f:
-        return json.load(f)
-
-
-def _plan_base_paths(
-    path: str, full: dict, ids: list
-) -> tuple[list[str], list[str], list[int]]:
-    """Scan plan for the requested buckets' BASE generations. Returns
-    (classic_paths, packed_paths, exclude_buckets): classic per-bucket
-    dirs, packed dirs-or-files, and the bucket ids whose rows must be
-    FILTERED OUT of the packed portion (buckets superseded by later
-    classic generations — their live rows come from classic_paths;
-    the exclusion expression itself is built by the caller,
-    _read_snapshot_slice, which owns the table's bucket key).
-
-    A pack is read as its whole DIRECTORY (one root path) only when
-    the slice covers every bucket still live in it AND the superseded
-    set stays a minority; pruned slices and heavily-superseded packs
-    fall back to per-bucket/range FILE paths.
-
-    The exclusion set is one unified rule — for every packed unit
-    read (a whole dir or a file), excl gains (unit coverage − the
-    requested ids served by that unit). Per-bucket `b<i>` files make
-    that the empty set (the zero-overhead fast path); whole-dir reads
-    reduce it to exactly the superseded set; coalesced `r<lo>-<hi>`
-    range files additionally drop stale AND unrequested-sibling rows.
-    Sound because live entries reference at most ONE pack per
-    manifest version (every packed write is full-width, replacing
-    every entry), so a bucket excluded via one unit's coverage is
-    never legitimately served by another packed unit in the same
-    plan."""
-    manifest = full["buckets"]
-    classic: list[str] = []
-    by_pg: dict[str, list] = {}
-    for i in ids:
-        g = manifest[i]
-        if g.startswith("@"):
-            by_pg.setdefault(_pack_name_of(g), []).append(i)
-        else:
-            classic.append(f"{path}/bucket={i}/{g}")
-    packed: list[str] = []
-    excl: set[int] = set()
-    if by_pg:
-        live_by_pg: dict[str, set] = {}
-        for j, g2 in manifest.items():
-            if g2.startswith("@"):
-                live_by_pg.setdefault(_pack_name_of(g2), set()).add(j)
-        for pg, pids in by_pg.items():
-            if set(pids) == live_by_pg[pg]:
-                orig = _pack_meta(path, pg)["buckets"]
-                superseded = sorted(
-                    set(int(x) for x in orig)
-                    - {int(x) for x in pids}
-                )
-                if len(superseded) * 2 <= len(orig):
-                    packed.append(f"{path}/{PACKED_DIR}/{pg}")
-                    excl.update(superseded)
-                    continue
-            served: dict[str, set[int]] = {}
-            for i in pids:
-                served.setdefault(manifest[i][1:], set()).add(int(i))
-            for fname in sorted(served):
-                packed.append(f"{path}/{PACKED_DIR}/{fname}")
-                excl.update(
-                    set(_pack_file_coverage(fname)) - served[fname]
-                )
-    return classic, packed, sorted(excl)
 
 
 def _load_root_raw(path: str, v: int) -> dict:
@@ -555,6 +328,15 @@ def _load_shard(path: str, fname: str) -> dict:
     if sub is None:
         with open(fpath) as f:
             sub = json.load(f)
+        # every read, commit and vacuum resolves bucket entries through
+        # here: an "@pg-<hex>/..." entry of the removed packed layout
+        # would otherwise be joined into a bucket directory path
+        for i, g in (sub.get("buckets") or {}).items():
+            if g.startswith("@"):
+                raise ValueError(
+                    f"{fpath}: bucket {i} is in the removed packed "
+                    f"layout ({g!r}); rebuild the table from its source"
+                )
         with _SHARD_CACHE_LOCK:
             while len(_SHARD_CACHE) >= _SHARD_CACHE_MAX:
                 _SHARD_CACHE.pop(next(iter(_SHARD_CACHE)), None)
@@ -1114,12 +896,9 @@ def _read_dirs(
 
 
 def _data_files(loc: str) -> list[str]:
-    """The files Spark reads at a generation location: the file itself
-    for a packed entry, else the directory's files whose names do not
-    start with "_" or "." (Spark's hidden-file rule, which skips
-    checksum and marker files)."""
-    if not os.path.isdir(loc):
-        return [loc]
+    """The files Spark reads in a generation directory: those whose
+    names do not start with "_" or "." (Spark's hidden-file rule, which
+    skips checksum and marker files)."""
     return sorted(
         os.path.join(loc, n) for n in os.listdir(loc) if n[0] not in "_."
     )
@@ -1128,10 +907,9 @@ def _data_files(loc: str) -> list[str]:
 def _parquet_file(f: str):
     """`f` opened with pyarrow, INT96 timestamps decoded at microseconds
     (the unit Spark reads them in); None when pyarrow cannot read it as
-    Spark does: it holds INT96 timestamps and was not written by Spark
-    (a packed file), and pyarrow writes an instant before 1970 with a
-    negative time of day, which its own microsecond decoding shifts by
-    2^64 ns."""
+    Spark does: it holds INT96 timestamps and was not written by Spark,
+    and pyarrow writes an instant before 1970 with a negative time of
+    day, which its own microsecond decoding shifts by 2^64 ns."""
     import pyarrow.parquet as pq
 
     pf = pq.ParquetFile(f, coerce_int96_timestamp_unit="us")
@@ -1429,19 +1207,6 @@ def _finalize_cols(cols: dict) -> dict:
     return out_cols
 
 
-@functools.lru_cache(maxsize=512)
-def _packed_file_stats(fpath: str, fsize: int, mtime_ns: int) -> dict:
-    """Footer stats of one immutable pack file, cached on identity
-    (path, size, mtime) — callers copy `cols` before mutating."""
-    import pyarrow.parquet as pq
-
-    cols: dict[str, dict | None] = {}
-    md = pq.read_metadata(fpath)
-    for gi in range(md.num_row_groups):
-        _accumulate_chunk(cols, md.row_group(gi))
-    return {"rows": md.num_rows, "cols": _finalize_cols(cols)}
-
-
 def _harvest_stats(path: str, bucket_id, gen: str) -> dict:
     """Per-generation column stats from parquet FOOTERS — metadata-only
     I/O (KB per file), the Delta/Iceberg data-skipping ledger computed
@@ -1471,28 +1236,7 @@ def _harvest_stats(path: str, bucket_id, gen: str) -> dict:
     nbytes = 0
     per_file: dict[str, dict] = {}
     gen_cols: dict[str, dict | None] = {}
-    if gen.startswith("@"):
-        # packed entry: the generation IS one file. Coalesced range
-        # files are SHARED by many buckets: memoize the footer parse
-        # per (path, size, mtime) or a full-width commit would parse
-        # the same footer once per bucket — O(width^2) driver work
-        # (the 16384-bucket stall this cache fixed). Shared-file stats
-        # are file-wide, i.e. WIDER than any one bucket's true bounds:
-        # pruning stays conservative-correct, just less selective —
-        # exactly the small-table regime coalescing targets.
-        fpath = _gen_data_path(path, bucket_id, gen)
-        st = os.stat(fpath)
-        cached = _packed_file_stats(fpath, st.st_size, st.st_mtime_ns)
-        return {
-            "rows": cached["rows"],
-            "bytes": st.st_size,
-            "files": 1,
-            "cols": dict(cached["cols"]),
-        }
-    else:
-        flist = sorted(
-            _glob.glob(f"{path}/bucket={bucket_id}/{gen}/*.parquet")
-        )
+    flist = sorted(_glob.glob(f"{path}/bucket={bucket_id}/{gen}/*.parquet"))
     for fpath in flist:
         fsize = os.path.getsize(fpath)
         nbytes += fsize
@@ -1660,9 +1404,7 @@ def prune_files(
     the ledgered buckets (unledgered buckets read as whole dirs,
     exactly as before — absent stats never skip). `read_buckets` is
     authoritative for consumers that need the bucket ids (deletion
-    vectors): packed entries resolve to `_packed/pg-*/b<i>.parquet`
-    FILES whose path carries no `bucket=` segment, so parsing ids
-    back out of `read` is not possible in general."""
+    vectors)."""
     plan = prune_generations_multi(path, predicates, version)
     full = plan["manifest"]
     manifest = full["buckets"]
@@ -1682,14 +1424,6 @@ def prune_files(
     delta_buckets: list[str] = []
     deltas = full.get("deltas") or {}
     files_read = files_total = 0
-    # packed entries: several surviving buckets may share one coalesced
-    # range file — read it once, and exclude the rows of every bucket
-    # in its coverage that is NOT a surviving packed entry (stale rows
-    # of classic-superseded buckets would otherwise duplicate their
-    # current rows; pruned-out siblings are already disproven by stats
-    # but excluding them too costs nothing). Per-bucket b<i> files
-    # yield an empty exclusion — the zero-overhead fast path.
-    packed_served: dict[str, set[int]] = {}
     for i in plan["read"]:
         if deltas.get(i):
             # merge-on-read bucket: the per-column ordinal fold means a
@@ -1701,14 +1435,6 @@ def prune_files(
             continue
         gdir = _gen_data_path(path, i, manifest[i])
         fs = (stats.get(i) or {}).get("fs")
-        if manifest[i].startswith("@"):
-            fname = manifest[i][1:]
-            if fname not in packed_served:
-                packed_served[fname] = set()
-                read.append(gdir)
-            packed_served[fname].add(int(i))
-            read_buckets.append(i)
-            continue
         if not fs or not bounded:
             read.append(gdir)
             read_buckets.append(i)
@@ -1728,17 +1454,10 @@ def prune_files(
                 bucket_read = True
         if bucket_read:
             read_buckets.append(i)
-    packed_excl: set[int] = set()
-    packed_paths: list[str] = []
-    for fname, served in packed_served.items():
-        packed_paths.append(f"{path}/{PACKED_DIR}/{fname}")
-        packed_excl.update(set(_pack_file_coverage(fname)) - served)
     return {
         "version": plan["version"],
         "read": read,
         "read_buckets": sorted(read_buckets),
-        "packed_paths": packed_paths,
-        "packed_excl": sorted(packed_excl),
         "skipped": plan["skipped"],
         "skipped_files": skipped_files,
         "delta_buckets": delta_buckets,
@@ -1769,33 +1488,7 @@ def scan_versioned_multi(
         _k = json.load(f)["key"]
     df = None
     if dirs:
-        pexcl = plan.get("packed_excl") or []
-        if pexcl:
-            # coalesced range files carry sibling buckets' rows — the
-            # exclusion applies to the PACKED portion only (the same
-            # bucket ids are legitimately current in the classic part)
-            from .merge import bucket_membership_expr
-
-            ppaths = set(plan["packed_paths"])
-            cl = [d for d in dirs if d not in ppaths]
-            pdf = _read_dirs(
-                spark, [d for d in dirs if d in ppaths],
-                schema, schema_json=stored,
-            ).filter(
-                bucket_membership_expr(
-                    _k, int(full_m["n_buckets"]), pexcl, keep=False
-                )
-            )
-            df = (
-                _read_dirs(spark, cl, schema, schema_json=stored)
-                .unionByName(pdf)
-                if cl else pdf
-            )
-        else:
-            df = _read_dirs(spark, dirs, schema, schema_json=stored)
-        # bucket ids come from the plan, never parsed back out of the
-        # paths: packed entries read as `_packed/pg-*/{b<i>,r<lo>-<hi>}
-        # .parquet` files with no `bucket=` path segment
+        df = _read_dirs(spark, dirs, schema, schema_json=stored)
         df = _apply_dv(spark, path, full_m, plan["read_buckets"], df, _k)
     if plan.get("delta_buckets"):
         # merge-on-read buckets read whole and FOLD (residual filters
@@ -1970,34 +1663,12 @@ def _read_snapshot_slice(
         return None
     stored = full.get("schema")
     schema = _struct_of(stored) if stored is not None else None
-    classic, packed, excl = _plan_base_paths(path, full, ids)
     deltas = full.get("deltas") or {}
     depth = max((len(deltas.get(i, [])) for i in ids), default=0)
-    parts = []
-    if classic:
-        parts.append(_read_dirs(spark, classic, schema, schema_json=stored))
-    if packed:
-        pdf = _read_dirs(spark, packed, schema, schema_json=stored)
-        if excl:
-            # superseded buckets' live rows come from classic dirs;
-            # their stale rows inside the packed files are excluded by
-            # recomputing the bucket hash — a cheap JVM expression the
-            # scan applies before anything downstream (applied ONLY to
-            # the packed portion: the same bucket ids are legitimately
-            # present in the classic part). One parsed expression, not
-            # Column.isin — coalesced range files can make this set
-            # thousands of ids, and isin pays a py4j trip per literal.
-            from .merge import bucket_membership_expr
-
-            pdf = pdf.filter(
-                bucket_membership_expr(
-                    key, int(full["n_buckets"]), excl, keep=False
-                )
-            )
-        parts.append(pdf)
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
+    df = _read_dirs(
+        spark, [_gen_data_path(path, i, manifest[i]) for i in ids], schema,
+        schema_json=stored,
+    )
     if not depth:
         return _apply_dv(spark, path, full, ids, df, key)
     df = df.withColumn("__ord", F.lit(0))
@@ -2283,8 +1954,6 @@ def write_bucket_table_versioned(
     df: DataFrame, path: str, key: str = "id", n_buckets: int = 16,
     constraints: dict[str, str] | None = None,
     mor_fold: dict | None = None,
-    packed_base: bool | None = None,
-    pack_target_bytes: int | None = None,
 ) -> int:
     """Full load: generation dirs for every non-empty bucket, one
     manifest, pointer published. On a FRESH path this commits v-1; on
@@ -2328,10 +1997,6 @@ def write_bucket_table_versioned(
                 constraints = old_meta.get("constraints")
             if mor_fold is None:
                 mor_fold = old_meta.get("mor_fold")
-            if packed_base is None:
-                packed_base = old_meta.get("packed_base")
-            if pack_target_bytes is None:
-                pack_target_bytes = old_meta.get("pack_target_bytes")
         meta = {
             "key": key, "n_buckets": n_buckets, "v": 2, "versioned": True,
         }
@@ -2344,14 +2009,6 @@ def write_bucket_table_versioned(
                     f"the bucket key {key!r}"
                 )
             meta["mor_fold"] = mor_fold
-        if packed_base is not None:
-            # explicit packed-layout policy for full-width writes;
-            # absent = the auto rule in _packed_from_meta
-            meta["packed_base"] = bool(packed_base)
-        if pack_target_bytes is not None:
-            # pack range-file coalescing budget (0 = strict one file
-            # per bucket); absent = PACK_TARGET_BYTES
-            meta["pack_target_bytes"] = int(pack_target_bytes)
         if constraints:
             # persist so the constraint check and the write compute
             # the input lineage once, not twice (the merge path's rule)
@@ -2362,12 +2019,7 @@ def write_bucket_table_versioned(
             # fresh table: the meta must exist before the first commit
             with open(meta_path, "w") as f:
                 json.dump(meta, f)
-        gens = _write_generations(
-            df, path, key, n_buckets,
-            packed=_packed_from_meta(meta, n_buckets),
-            pack_target_bytes=_pack_target_from_meta(meta),
-            size=(None, (), df),
-        )
+        gens = _write_generations(df, path, key, n_buckets, size=(None, (), df))
         stats = {i: _harvest_stats(path, i, g) for i, g in gens.items()}
         v = 1 if existing_v is None else existing_v + 1
         _commit(path, v, gens, n_buckets, _schema_of(df), stats, op="load")
@@ -2388,7 +2040,6 @@ def init_bucket_table_versioned(
     path: str, key: str = "id", n_buckets: int = 16,
     constraints: dict[str, str] | None = None,
     mor_fold: dict | None = None,
-    packed_base: bool | None = None,
 ) -> int:
     """Metadata-only creation of an EMPTY versioned table: meta, an
     empty manifest v-1, pointer — no Spark job (the CDC-replay shape
@@ -2425,8 +2076,6 @@ def init_bucket_table_versioned(
                 f"bucket key {key!r}"
             )
         meta["mor_fold"] = mor_fold
-    if packed_base is not None:
-        meta["packed_base"] = bool(packed_base)
     with open(os.path.join(path, BUCKET_META), "w") as f:
         json.dump(meta, f)
     _commit(path, 1, {}, n_buckets, op="init")
@@ -2466,12 +2115,11 @@ LOCAL_WRITE_BYTES = 1 << 26
 REFUSALS = (
     "custom-merge",      # a merger, delete leg, fold policy or CHECK constraint
     "bucket-column",     # the batch has a column named `bucket`
-    "packed",            # a packed range-file entry, or a write that packs
     "sorted-write",      # a write that sorts or rolls its files
     "no-schema",         # the manifest records no schema
     "mor-deltas",        # a bucket has merge-on-read deltas
     "deletion-vectors",  # a bucket has deletion vectors
-    "map-column",        # a map at any depth (Spark's `<=>` rejects it)
+    "map-column",        # a map at any depth (the Arrow diff compares none)
     "collation",         # a string with a non-default collation
     "schema-changed",    # the feed's two versions have other columns
     "key-type",          # a key Arrow does not compare as Spark does
@@ -2491,23 +2139,19 @@ def _plan_bytes(df: DataFrame) -> int:
 
 def _slice_bytes(full: dict, bucket_ids) -> int | None:
     """The committed bytes of the given buckets' base and merge-on-read
-    delta generations, from the manifest stats (a range file shared by
-    several buckets counts once); None when one of them has no stats."""
+    delta generations, from the manifest stats; None when one of them
+    has no stats."""
     stats = full.get("stats") or {}
     deltas = full.get("deltas") or {}
-    sizes: dict[str, int] = {}
+    total = 0
     for i in map(str, bucket_ids):
-        g = full["buckets"].get(i)
-        if g is None:
+        if i not in full["buckets"]:
             continue
-        if "bytes" not in stats.get(i, {}):
+        gens = [stats.get(i, {})] + [d.get("stats", {}) for d in deltas.get(i, [])]
+        if any("bytes" not in st for st in gens):
             return None
-        sizes[g if _is_packed_entry(g) else f"{i}/{g}"] = stats[i]["bytes"]
-        for d in deltas.get(i, []):
-            if "bytes" not in d.get("stats", {}):
-                return None
-            sizes[f"{i}/{d['g']}"] = d["stats"]["bytes"]
-    return sum(sizes.values())
+        total += sum(st["bytes"] for st in gens)
+    return total
 
 
 def _upsert_schema(fields: list, batch, key: str, now):
@@ -2589,7 +2233,7 @@ def _slice_gate(
     gens: list | None = None, columns: list | None = None,
     ords: bool = False, frame=None, batch: _Gate | None = None,
     n_buckets: int | None = None, custom: bool = False, plan=None,
-    packed: bool = False, sort: bool = False, now=None,
+    sort: bool = False, now=None,
 ) -> _Gate:
     """The one decision of every driver-local path: the pyarrow read of
     the slice a `purpose` needs, or the first reason (REFUSALS) it must
@@ -2645,8 +2289,6 @@ def _slice_gate(
         for i in map(str, ids):
             if i not in m["buckets"]:
                 continue
-            if _is_packed_entry(m["buckets"][i]):
-                return "packed"
             if (m.get("deltas") or {}).get(i):
                 return "mor-deltas"
             if (m.get("dv") or {}).get(i):
@@ -2805,8 +2447,8 @@ def _slice_gate(
     if purpose == "write":
         if not isinstance(frame, DataFrame):
             return answer(read=frame)
-        if packed or sort:
-            return answer("packed" if packed else "sorted-write")
+        if sort:
+            return answer("sorted-write")
         s = 0 if full is None else _slice_bytes(full, buckets)
         if s is None or full is None and plan is None:
             return answer("no-stats")
@@ -2905,24 +2547,22 @@ def _write_generations(
     sort_by: list[str] | None = None,
     max_records_per_file: int | None = None,
     pmap: dict[str, str] | None = None,
-    packed: bool = False,
-    pack_target_bytes: int | None = None,
     size: tuple | None = None,
 ) -> dict[str, str]:
     """Bucket the rows and land each written bucket as an immutable
     `bucket=<i>/g-<hex>` generation dir (a rename off a staging dir —
-    new names, nothing swapped). Returns {bucket id -> generation name}
-    for the buckets that got rows. `df` is a frame, or an Arrow table
-    whose rows already carry their `bucket` (a driver-side merge's
-    output), which always takes the local writer.
+    new names, nothing swapped), the one base layout at every bucket
+    count. Returns {bucket id -> generation name} for the buckets that
+    got rows. `df` is a frame, or an Arrow table whose rows already
+    carry their `bucket` (a driver-side merge's output), which always
+    takes the local writer.
 
     Two writers fill the staging dir. `_slice_gate("write")` decides:
     the local writer (`_stage_local`) collects the rows once and writes
-    one pyarrow file per bucket when the write is classic and unsorted
-    and its size is at most LOCAL_WRITE_BYTES. `size` = (manifest,
-    bucket ids, plan) says what the size is: the committed bytes of
-    those buckets in the manifest (None: none) plus the plan estimate
-    of `plan` (a frame, bytes already measured, or None); without
+    one pyarrow file per bucket when the write is unsorted and its size
+    is at most LOCAL_WRITE_BYTES. `size` = (manifest, bucket ids, plan)
+    says what the size is: the committed bytes of those buckets in the
+    manifest (None: none) plus the plan estimate of `plan` (a frame, bytes already measured, or None); without
     `size` the write's size is unknown and Spark writes it. Otherwise
     one Spark job repartitions by bucket and writes partitioned by it;
     restricting to `buckets` keeps the repartition width = |touched|.
@@ -2932,9 +2572,8 @@ def _write_generations(
     budget: together they produce the CLUSTERED layout — per bucket, a
     run of files each covering a contiguous sorted range, which is what
     makes per-file min/max selective for value predicates
-    (optimize_versioned). Everything after staging (the renames, the
-    out-of-bucket check, the packed layout) is the same for both
-    writers."""
+    (optimize_versioned). Everything after staging (the renames and
+    the out-of-bucket check) is the same for both writers."""
     gen = f"g-{uuid.uuid4().hex[:12]}"
     staging = f"{path}/.stage-{gen}"
     width = len(buckets) if buckets is not None else n_buckets
@@ -2945,7 +2584,7 @@ def _write_generations(
     )
     full, ids, plan = size or (None, (), None)
     local = _slice_gate(
-        "write", frame=staged, packed=packed,
+        "write", frame=staged,
         sort=bool(sort_by or max_records_per_file),
         full=full, buckets=ids, plan=plan,
     ).read
@@ -2959,80 +2598,6 @@ def _write_generations(
         candidates = (
             buckets if buckets is not None else range(n_buckets)
         )
-        if packed:
-            # PACKED layout: move each bucket's single part file into
-            # one flat table-level dir — a full scan then hands Spark
-            # ONE root path instead of O(width). Only sound at one
-            # file per bucket (the plain full-width write: one task
-            # per bucket, no file rolling); a multi-file bucket falls
-            # back to the classic per-bucket dirs below.
-            import glob as _glob
-
-            import pyarrow as pa
-
-            per_bucket: dict[int, list[str]] = {}
-            single = True
-            for i in candidates:
-                fs = _glob.glob(f"{staging}/bucket={i}/*.parquet")
-                if len(fs) > 1:
-                    single = False
-                    break
-                if fs:
-                    per_bucket[int(i)] = fs
-            if single and per_bucket:
-                pg = f"pg-{uuid.uuid4().hex[:12]}"
-                pdir = os.path.join(path, PACKED_DIR, pg)
-                os.makedirs(pdir, exist_ok=True)
-                target = (
-                    PACK_TARGET_BYTES
-                    if pack_target_bytes is None
-                    else int(pack_target_bytes)
-                )
-                sizes = {
-                    i: os.path.getsize(fs[0])
-                    for i, fs in per_bucket.items()
-                }
-                small_total = sum(b for b in sizes.values() if b < target)
-                # the range files' Arrow schema: the written columns
-                # under their physical names; a schema pyarrow cannot
-                # carry keeps one file per bucket
-                arrow = _arrow_schema(df.schema)
-                if arrow is not None:
-                    arrow = pa.schema([
-                        f.with_name((pmap or {}).get(f.name, f.name))
-                        for f in arrow
-                    ])
-                if (
-                    arrow is None or target <= 0
-                    or small_total > PACK_COALESCE_MAX_BYTES
-                ):
-                    groups = [
-                        ([i], f"b{i}.parquet") for i in sorted(per_bucket)
-                    ]
-                else:
-                    groups = _pack_groups(
-                        {i: fs[0] for i, fs in per_bucket.items()},
-                        sizes, target,
-                    )
-                for ids_g, name in groups:
-                    dstf = os.path.join(pdir, name)
-                    if len(ids_g) == 1:
-                        os.rename(per_bucket[ids_g[0]][0], dstf)
-                    else:
-                        _concat_parquet(
-                            [per_bucket[i][0] for i in ids_g], dstf, arrow
-                        )
-                    for i in ids_g:
-                        out[str(i)] = f"@{pg}/{name}"
-                # birth record LAST — a crash before it leaves only
-                # unreferenced files (vacuumable orphans, as with a
-                # classic generation that never got committed)
-                with open(os.path.join(pdir, PACK_META_FILE), "w") as f:
-                    json.dump(
-                        {"buckets": sorted(per_bucket)}, f,
-                        separators=(",", ":"),
-                    )
-                return out
         for i in candidates:
             src = f"{staging}/bucket={i}"
             if os.path.isdir(src):
@@ -3381,7 +2946,7 @@ def merge_scoped_versioned(
     A commit whose touched slice (committed bytes, from the manifest
     stats) plus the batch (Spark's plan estimate) is at most
     LOCAL_WRITE_BYTES runs on the driver. A default upsert into plain
-    classic generations (no deltas, no deletion vectors) collects the
+    generations (no deltas, no deletion vectors) collects the
     batch once, reads the slice with pyarrow, upserts in Arrow and
     writes one pyarrow file per bucket: one Spark job in all
     (`_prepare_scoped_merge`). Other small commits merge in Spark and
@@ -4417,10 +3982,8 @@ def compact_versioned(
             | {int(i) for i in (full.get("dv") or {}) if i in manifest}
         )
         # default scope: dirty buckets only. An EXPLICIT bucket list
-        # folds those buckets regardless of dirtiness — the re-pack /
-        # re-layout hook (a clean bucket rewrites content-neutrally),
-        # e.g. compacting every bucket of a packed table that drifted
-        # into many classic generations back into one pack.
+        # folds those buckets regardless of dirtiness — the re-layout
+        # hook (a clean bucket rewrites content-neutrally).
         target = (
             dirty if buckets is None
             else sorted(
@@ -4435,14 +3998,6 @@ def compact_versioned(
             _write_generations(
                 folded, path, key, n_buckets, target,
                 pmap=_phys_map(full.get("schema")),
-                # a compaction covering EVERY bucket is the re-pack
-                # opportunity for a packed table that drifted into
-                # many classic generations
-                packed=(
-                    set(str(i) for i in target) == set(full["buckets"])
-                    and _packed_base_for(path, n_buckets)
-                ),
-                pack_target_bytes=_pack_target_from_meta(meta),
                 size=(full, target, None),
             )
             if folded is not None
@@ -4477,82 +4032,6 @@ def compact_versioned(
             base_full=full, changed=set(target),
         )
     return {"version": v, "buckets_compacted": len(target)}
-
-
-REPACK_THRESHOLD = 0.4
-
-
-def pack_decay(path: str, version: int | None = None) -> dict:
-    """Decay report for a table's full-scan path economics, computed
-    from one manifest load — no listing, no Spark. A scoped merge
-    moves each touched bucket OUT of its pack (into a classic dir), so
-    after H distinct-bucket rewrites a full scan plans over
-    packs + H roots; past 50% supersession of a pack the planner
-    additionally decays that pack from one dir root to per-live-file
-    paths (test_packed_heavy_supersession) and the scan is O(width)
-    again. `decayed_frac` (classic buckets / width) is the number
-    repack_if_decayed thresholds on; `plan_paths` is what Spark's
-    reader will actually be handed (~200 us of InMemoryFileIndex cost
-    per root path — the round-12 measured constant)."""
-    v = latest_version(path) if version is None else version
-    full = _load_manifest_full(path, v)
-    manifest = full["buckets"]
-    n = int(full["n_buckets"])
-    classic = sum(1 for g in manifest.values() if not g.startswith("@"))
-    cl, pk, _excl = _plan_base_paths(path, full, sorted(manifest))
-    return {
-        "version": v,
-        "n_buckets": n,
-        "classic_buckets": classic,
-        "decayed_frac": round(classic / n, 4) if n else 0.0,
-        "plan_paths": len(cl) + len(pk),
-        "packs": len({
-            _pack_name_of(g)
-            for g in manifest.values()
-            if g.startswith("@")
-        }),
-    }
-
-
-def repack_if_decayed(
-    spark: SparkSession,
-    path: str,
-) -> dict:
-    """Maintenance hook that keeps full-scan path counts
-    O(packs + recent rewrites) over ANY history length: when the
-    fraction of buckets no longer served from a pack crosses
-    REPACK_THRESHOLD, fold EVERY bucket back into one fresh pack
-    (compact_versioned with the explicit full bucket list — one
-    content-neutral commit); below it, a metadata-only no-op.
-
-    Economics of the threshold: re-packing every threshold*width
-    distinct-bucket rewrites costs one full-table rewrite, i.e. an
-    amortized 1/threshold write amplification on the natural merge
-    rate — 2.5x at 0.4 — in exchange for a plan that never exceeds
-    packs + threshold*width roots. The ceiling matters because the
-    planner's per-pack dir-vs-files decision cliffs at 50%
-    supersession (the O(width) per-file fallback); 0.4 keeps an
-    epoch's drift safely under that cliff. Non-packed tables (and
-    sub-threshold packed ones) return {repacked: False} untouched —
-    safe to call on every maintenance cadence, the GCBENCH shape.
-
-    Returns pack_decay() of the resulting state plus {repacked,
-    buckets_compacted}."""
-    d = pack_decay(path)
-    if (
-        not _packed_base_for(path, d["n_buckets"])
-        or d["decayed_frac"] < REPACK_THRESHOLD
-    ):
-        return {**d, "repacked": False, "buckets_compacted": 0}
-    full = _load_manifest_full(path, d["version"])
-    res = compact_versioned(
-        spark, path, buckets=sorted(int(i) for i in full["buckets"])
-    )
-    return {
-        **pack_decay(path),
-        "repacked": True,
-        "buckets_compacted": res["buckets_compacted"],
-    }
 
 
 def rebucket_versioned(
@@ -4606,8 +4085,6 @@ def rebucket_versioned(
             gens = _write_generations(
                 snapshot, path, key, new_n_buckets,
                 pmap=_phys_map(full.get("schema")),
-                packed=_packed_base_for(path, new_n_buckets),
-                pack_target_bytes=_pack_target_from_meta(meta),
                 size=(full, sorted(full["buckets"]), None),
             )
             stats = {i: _harvest_stats(path, i, g) for i, g in gens.items()}
@@ -5719,14 +5196,15 @@ def vacuum_bucket_versions(
                             json.dump(full_root, f, indent=0,
                                       sort_keys=True)
                         os.replace(tmp, _manifest_path(path, v))
-                for v in doomed:
-                    os.unlink(_manifest_path(path, v))
-                    os.unlink(os.path.join(path, f"v-{v}.superseded"))
-                    removed_versions.append(v)
                 referenced = set()
                 dv_referenced = set()
                 shard_referenced = set()
-                for v in _list_versions(path):
+                # every surviving manifest loads before anything is
+                # removed, so a table vacuum cannot read (one holding a
+                # removed layout's entries) is left as it was
+                for v in versions:
+                    if v in doomed_set:
+                        continue
                     root = _load_root(path, v)
                     # shard files referenced by any surviving
                     # root stay; the rest are displaced history or a
@@ -5744,6 +5222,10 @@ def vacuum_bucket_versions(
                     for names in (m_full.get("dv") or {}).values():
                         for e in names:
                             dv_referenced.add(f"{path}/{_dv_ref(e)[0]}")
+                for v in doomed:
+                    os.unlink(_manifest_path(path, v))
+                    os.unlink(os.path.join(path, f"v-{v}.superseded"))
+                    removed_versions.append(v)
                 for gdir in _glob.glob(f"{path}/bucket=*/g-*"):
                     if gdir in referenced:
                         continue
@@ -5758,30 +5240,6 @@ def vacuum_bucket_versions(
                         continue
                     shutil.rmtree(dvdir, ignore_errors=True)
                     removed_gens.append(dvdir)
-                # packed generations reclaim at FILE grain: a bucket's
-                # packed file unreferenced by every surviving manifest
-                # (superseded by a later classic generation, or its
-                # whole pack displaced) is dead; a pack directory with
-                # no data files left goes too (incl. its birth record)
-                # [br]*: per-bucket b<i> files AND coalesced
-                # r<lo>-<hi> range files — a range file is
-                # unreferenced only when EVERY bucket it covers moved
-                # on. A b*-only glob here once classified an all-range
-                # pack as empty and deleted it live (the round-13
-                # manifestbench crash).
-                for pfile in _glob.glob(
-                    f"{path}/{PACKED_DIR}/pg-*/[br]*.parquet"
-                ):
-                    if pfile in referenced:
-                        continue
-                    if now - os.path.getmtime(pfile) < grace_seconds:
-                        continue
-                    os.unlink(pfile)
-                    removed_gens.append(pfile)
-                for pdir in _glob.glob(f"{path}/{PACKED_DIR}/pg-*"):
-                    if not _glob.glob(f"{pdir}/[br]*.parquet"):
-                        shutil.rmtree(pdir, ignore_errors=True)
-                        removed_gens.append(pdir)
                 # staging dirs a kill -9'd writer left behind (its
                 # try/finally never ran); we hold _MERGELOCK so no
                 # writer is mid-stage

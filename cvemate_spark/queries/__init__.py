@@ -103,11 +103,8 @@ REGISTRY = build_registry()
 DRIVER_GATE: tuple[str, ...] = (
     # ---- Round-13 rotation (VERDICT r12 item 6). The r12 gate went
     # green 50/50 in CORRECTNESS_r12.json. Round 13's semantic edits
-    # land in merge_versioned.py (OCC commit-intent admission, packed
-    # stats-pruned-scan plan bucket ids, pack range-file coalescing +
-    # the unified packed exclusion rule, pack decay / repack, the
-    # cross-rebucket feed both-endpoints-empty fix) and engine_ops.py
-    # (e_packed_scan coverage-based lookup assert) — the versioned/
+    # land in merge_versioned.py (OCC commit-intent admission, the
+    # cross-rebucket feed both-endpoints-empty fix) — the versioned/
     # merge/catalog/replay family HOLDS its gate slots. bench.py's
     # headline slot swaps to the angular-bound-pruned near-dup route,
     # which enters the gate per VERDICT r12 item 4. Ceding (unchanged
@@ -121,8 +118,13 @@ DRIVER_GATE: tuple[str, ...] = (
     "emb_neardup_semdedup",
     # --- entrants: longest-unproven changed-closure standing (3)
     "retr_rrf", "s13_drift", "e_quantile_2pass",
-    # --- round-12 entrants hold (builders changed again this round)
-    "s21_mor_compact", "e_packed_scan",
+    # --- round-12 entrant holds (builder changed again this round)
+    "s21_mor_compact",
+    # --- entrant: e_packed_scan left the registry with the packed base
+    # layout. Its slot goes to the longest-unproven standing query
+    # whose builder closure changed with that removal: e_branch_wap,
+    # never driver-gated (born after the round-13 gate froze)
+    "e_branch_wap",
     # --- re-entries: versioned/merge/catalog family (22)
     "e_manifest_shard",
     "e_merge_concurrent", "e_merge_mor", "s20_mor_replay",

@@ -3742,173 +3742,3 @@ def e_manifest_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pre.unionByName(post).unionByName(look).orderBy(
         "version", "tag"
     )
-
-
-# ---------------------------------------------------- e_packed_scan
-@REG.add(
-    "e_packed_scan",
-    """
-    WITH base AS (
-        SELECT o_orderkey AS k, o_totalprice AS price,
-               o_orderstatus AS status
-        FROM orders
-    ),
-    mk97 AS (SELECT MIN(k) AS mk FROM base WHERE k % 97 = 0),
-    upd AS (SELECT k FROM base WHERE k % 97 = 0 ORDER BY k LIMIT 5),
-    v2 AS (
-        SELECT k,
-               CASE WHEN k IN (SELECT k FROM upd)
-                    THEN price + 5.0 ELSE price END AS price,
-               status
-        FROM base
-    ),
-    hist AS (
-        SELECT 1 AS version, status AS tag,
-               CAST(SUM(CAST(price AS DECIMAL(18,2))) AS DOUBLE) AS total,
-               CAST(count(*) AS BIGINT) AS cnt
-        FROM base GROUP BY status
-        UNION ALL
-        SELECT 2, status,
-               CAST(SUM(CAST(price AS DECIMAL(18,2))) AS DOUBLE),
-               CAST(count(*) AS BIGINT)
-        FROM v2 GROUP BY status
-        UNION ALL
-        SELECT 3, status,
-               CAST(SUM(CAST(price AS DECIMAL(18,2))) AS DOUBLE),
-               CAST(count(*) AS BIGINT)
-        FROM v2 GROUP BY status
-        UNION ALL
-        SELECT 9, 'LOOKUP',
-               CAST(CAST(price AS DECIMAL(18,2)) AS DOUBLE),
-               CAST(1 AS BIGINT)
-        FROM v2 CROSS JOIN mk97 WHERE v2.k = mk97.mk
-    )
-    SELECT version, tag, total, cnt FROM hist ORDER BY version, tag
-    """,
-    doc="PACKED base generations (operators/merge_versioned.py::"
-    "_write_generations packed=True + _plan_base_paths — round 12's "
-    "width-independent planning): the full load lands ONE flat "
-    "_packed/pg-*/ dir with one file per bucket and '@pg/b<i>."
-    "parquet' manifest entries (builder asserts: zero bucket=* dirs "
-    "at v1), so a full scan hands Spark O(1) root paths instead of "
-    "O(table width) — measured 3.07s -> 0.97s plan at 16384 buckets "
-    "(MANIFESTBENCH_16384). A scoped merge (v2) rewrites its buckets "
-    "as classic per-bucket generations; the full scan then reads the "
-    "pack dir + those dirs, excluding the superseded buckets' stale "
-    "rows inside the pack via a pushed-down NOT-IN on the recomputed "
-    "bucket hash (builder asserts the exact plan shape: one pack "
-    "root, classic dirs == rewritten buckets, exclusion == rewritten "
-    "buckets). The point lookup at the mixed state resolves a SINGLE "
-    "packed file. compact_versioned over every bucket (v3) RE-PACKS "
-    "into one fresh pack (asserted), and vacuum reclaims the "
-    "superseded pack files at file grain. Oracle hashes v1, the "
-    "mixed v2, the re-packed v3 (≡ v2 — content neutrality of the "
-    "re-pack) and the lookup row.",
-)
-def e_packed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob as _glob
-    import os
-    import shutil
-
-    from ..operators.merge import bucket_of_value, merge_upsert
-    from ..operators.merge_versioned import (
-        _load_manifest_full,
-        _pack_name_of,
-        _plan_base_paths,
-        compact_versioned,
-        merge_scoped_versioned,
-        read_bucket_for_key_versioned,
-        read_bucket_table_versioned,
-        write_bucket_table_versioned,
-    )
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_totalprice").alias("price"),
-        F.col("o_orderstatus").alias("status"),
-    )
-    upd_keys = [
-        r[0]
-        for r in orders.filter(F.col("k") % 97 == 0)
-        .orderBy("k").limit(5).collect()
-    ]  # a FIXED-size rewrite set: the rewritten-bucket count must stay
-    # a small minority of the 32 buckets at EVERY sf, else the planner
-    # correctly decays the pack read to per-file paths and the
-    # plan-shape asserts below would be testing the wrong branch
-    lk = upd_keys[0]  # the lookup key, inside the rewritten stripe
-    path = scratch_dir(sf_dir, "orders", "pck")
-    done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
-    if not os.path.exists(done):
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-        write_bucket_table_versioned(
-            merge_upsert(None, orders, key="k", now=T_MERGE),
-            path, key="k", n_buckets=MS_BUCKETS, packed_base=True,
-        )
-        m1 = _load_manifest_full(path, 1)["buckets"]
-        assert all(g.startswith("@") for g in m1.values())
-        assert not _glob.glob(f"{path}/bucket=*")  # zero per-bucket dirs
-        b1 = orders.filter(F.col("k").isin(upd_keys)).select(
-            "k", (F.col("price") + F.lit(5.0)).alias("price")
-        )
-        s2 = merge_scoped_versioned(spark, path, b1, now=T_MERGE)
-        assert s2["version"] == 2
-        # plan-shape law at the MIXED state: one pack root + exactly
-        # the rewritten buckets' classic dirs, exclusion == rewritten
-        full2 = _load_manifest_full(path, 2)
-        classic, packed, excl = _plan_base_paths(
-            path, full2, sorted(full2["buckets"])
-        )
-        rewritten = {
-            i for i, g in full2["buckets"].items()
-            if not g.startswith("@")
-        }
-        assert len(packed) == 1 and not packed[0].endswith(".parquet")
-        assert len(classic) == len(rewritten) == s2["buckets_touched"]
-        assert sorted(excl) == sorted(int(i) for i in rewritten)
-        s3 = compact_versioned(
-            spark, path,
-            buckets=sorted(int(i) for i in full2["buckets"]),
-        )
-        assert s3["version"] == 3
-        m3 = _load_manifest_full(path, 3)["buckets"]
-        assert all(g.startswith("@") for g in m3.values())
-        assert len({_pack_name_of(g) for g in m3.values()}) == 1
-        # (file-grain vacuum of superseded pack files is law-tested
-        # in tests/test_packed.py — reclaiming here would delete the
-        # v1 this query time-travels to)
-        with open(done, "w") as f:
-            f.write(f"{s2}\n{s3}\n")
-    # the point lookup at the re-packed snapshot resolves ONE packed
-    # file (the versioned fast path at any table width)
-    full3 = _load_manifest_full(path, 3)
-    bid = bucket_of_value(spark, int(lk), full3["n_buckets"])
-    _, plook, _ = _plan_base_paths(path, full3, [str(bid)])
-    from ..operators.merge_versioned import _pack_file_coverage
-
-    assert len(plook) == 1 and plook[0].endswith(".parquet")
-    assert bid in _pack_file_coverage(plook[0])
-    out = None
-    for ver in (1, 2, 3):
-        agg = (
-            read_bucket_table_versioned(spark, path, ver)
-            .groupBy("status")
-            .agg(
-                F.sum(F.col("price").cast("decimal(18,2)"))
-                .cast("double").alias("total"),
-                F.count("*").cast("long").alias("cnt"),
-            )
-            .select(
-                F.lit(ver).alias("version"),
-                F.col("status").alias("tag"),
-                "total", "cnt",
-            )
-        )
-        out = agg if out is None else out.unionByName(agg)
-    look = read_bucket_for_key_versioned(spark, path, int(lk), version=2).select(
-        F.lit(9).alias("version"),
-        F.lit("LOOKUP").alias("tag"),
-        F.col("price").cast("decimal(18,2)").cast("double").alias("total"),
-        F.lit(1).cast("long").alias("cnt"),
-    )
-    return out.unionByName(look).orderBy("version", "tag")

@@ -37,13 +37,11 @@ SLOW_TESTS = {
     "test_catalog_change_feed_joint_apply_law",
     "test_sharded_occ_random_program_matches_python_model",
     "test_quality_canonical_dominates_min_id_selection",
-    "test_packed_classic_twin_all_surfaces",
     "test_root_delta_chain_content_neutral_twin",
     "test_tws_running_agg_gate_or_law",
     "test_schema_evolution_through_merge",
     "test_check_constraints_reject_atomically",
     "test_vacuum_respects_catalog_pins",
-    "test_pack_decay_law_and_auto_repack",
     "test_s3_replay_order_invariant",
     "test_reload_inherits_recorded_constraints",
     "test_ivf_indexed_batch_amortized_serve_law",
@@ -52,7 +50,6 @@ SLOW_TESTS = {
     "test_s6_stream_dedup_equals_distinct",
     "test_unbounded_bnlj_allowance_pins",
     "test_change_feed_and_diff_match_snapshot_diff",
-    "test_coalesced_pack_pruned_scan_exact_and_dv_aware",
     "test_txn_pins_action_returned_version_not_latest",
     "test_composite_key_feed_and_generic_apply",
     "test_zbucket_quadtree_descent_equals_linear_scan",
@@ -60,7 +57,6 @@ SLOW_TESTS = {
     "test_s16_incremental_histogram_laws",
     "test_dedup_canonical_reconciles_with_components",
     "test_prune_files_never_skips_a_matching_file",
-    "test_packed_stats_pruned_scan_exact_and_dv_aware",
     "test_change_feed_two_rebuckets_compose",
     "test_disjoint_source_order_convergence",
     "test_prefix_filter_matches_bruteforce_model",

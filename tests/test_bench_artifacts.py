@@ -46,6 +46,8 @@ def test_every_bench_tool_names_its_committed_records():
         ("occbench", "OCCBENCH"),
         ("gcbench", "GCBENCH"),
         ("replaybench", "STREAMBENCH"),
+        ("manifestbench", "MANIFESTBENCH"),
+        ("morreadbench", "MORREADBENCH"),
     ):
         src = (ROOT / "tools" / f"{tool}.py").read_text()
         assert "artifact_path(" in src, tool

@@ -14,7 +14,6 @@ import datetime
 import decimal
 import math
 
-import pytest
 from pyspark.sql import Row
 from pyspark.sql.types import (
     ArrayType,
@@ -282,9 +281,10 @@ def test_feed_local_renamed_column(spark, tmp_path, caplog):
 
 
 def test_feed_spark_paths(spark, tmp_path, caplog):
-    """An added column, a merge-on-read delta, a deletion-vector delete
-    and a packed base keep the Spark diff; so does a map column, whose
-    feed raises as it always has."""
+    """An added column, a merge-on-read delta and a deletion-vector
+    delete keep the Spark diff; so does a map column, top-level or
+    inside a struct, which the Spark diff compares by its sorted
+    entries: a map whose entries only changed order is unchanged."""
     fd = Feeds(spark, caplog)
     path = str(tmp_path / "t")
     mv.init_bucket_table_versioned(path, key="id", n_buckets=N_BUCKETS)
@@ -307,22 +307,31 @@ def test_feed_spark_paths(spark, tmp_path, caplog):
     v7 = mv.merge_scoped_versioned(spark, path, upd.withColumn("n", upd["n"] + 1), now=T1)["version"]
     fd.check(path, v6, v7)
 
-    packed = str(tmp_path / "packed")
-    df = spark.createDataFrame([(k, i) for i, k in enumerate(KEYS)], "id string, n long")
-    p1 = mv.write_bucket_table_versioned(df, packed, key="id", n_buckets=N_BUCKETS, packed_base=True)
-    assert mv._is_packed_entry(next(iter(mv._load_manifest_full(packed, p1)["buckets"].values())))
-    p2 = mv.merge_scoped_versioned(spark, packed, upd, now=T1)["version"]
-    fd.check(packed, p1, p2, local=False)
-
     maps = str(tmp_path / "maps")
+    info = StructType([StructField("src", StringType()),
+                       StructField("kv", MapType(StringType(), ArrayType(LongType())))])
     schema = StructType([StructField("id", StringType()),
-                         StructField("tags", MapType(StringType(), LongType()))])
-    m1 = _reload(spark, maps, [(k, {"a": 1}) for k in KEYS[:10]], schema)
-    m2 = _reload(spark, maps, [(k, {"a": 2}) for k in KEYS[:10]], schema)
-    fd.caplog.clear()
-    with pytest.raises(Exception, match="INVALID_ORDERING_TYPE"):
-        mv.change_feed(spark, maps, m1, m2).collect()
-    assert fd.took == [False]
+                         StructField("tags", MapType(StringType(), LongType())),
+                         StructField("info", info)])
+    old = {k: (k, {"a": 1, "b": i}, ("nvd", {"x": [i], "y": None})) for i, k in enumerate(KEYS[:10])}
+    old["k07"] = ("k07", None, (None, None))
+    new = dict(old)
+    new["k00"] = ("k00", {"a": 2, "b": 0}, old["k00"][2])         # top-level value
+    new["k01"] = ("k01", {"b": 1, "a": 1}, old["k01"][2])         # entry order only
+    new["k02"] = ("k02", old["k02"][1], ("nvd", {"x": [2, 2], "y": None}))  # nested value
+    new["k03"] = ("k03", old["k03"][1], ("nvd", {"y": None, "x": [3]}))     # nested order only
+    new["k04"] = ("k04", None, old["k04"][2])                     # map to NULL
+    new["k05"] = ("k05", old["k05"][1], None)                     # struct to NULL
+    new["k07"] = ("k07", None, None)                              # all-NULL struct to NULL
+    del new["k06"]
+    new["k99"] = ("k99", {}, ("kev", {}))
+    m1 = _reload(spark, maps, list(old.values()), schema)
+    m2 = _reload(spark, maps, list(new.values()), schema)
+    rows = fd.check(maps, m1, m2, local=False)
+    assert sorted((r["id"], r["change"]) for r in rows) == [
+        ("k00", "update"), ("k02", "update"), ("k04", "update"), ("k05", "update"),
+        ("k06", "delete"), ("k07", "update"), ("k99", "insert"),
+    ]
 
 
 def test_up_to_date_consumer_gets_none(spark, tmp_path, caplog):

@@ -34,7 +34,7 @@ from pyspark.sql.types import (
 )
 
 from cvemate_spark.operators import merge_versioned as mv
-from cvemate_spark.operators.merge import merge_upsert
+from cvemate_spark.operators.merge import bucket_of_value, merge_upsert
 from test_point_lookup import _jobs
 
 T0 = "2024-01-01 00:00:00"
@@ -80,13 +80,13 @@ def _schema(key_type) -> StructType:
     ])
 
 
-def _write(spark, path: str, keys, **kw) -> None:
+def _write(spark, path: str, keys) -> None:
     key_type = StringType() if type(keys[0]) is str else LongType()
     base = spark.createDataFrame(
         [_row(k, i) for i, k in enumerate(keys)], _schema(key_type)
     )
     mv.write_bucket_table_versioned(
-        merge_upsert(None, base, now=T0), path, key="id", n_buckets=8, **kw
+        merge_upsert(None, base, now=T0), path, key="id", n_buckets=8
     )
 
 
@@ -130,18 +130,12 @@ def _assert_same(spark, path: str, values, **kw) -> list[int]:
     return jobs
 
 
-@pytest.mark.parametrize("packed", [False, True])
-def test_local_equals_spark_classic_and_packed(spark, tmp_path, packed):
-    """Both base layouts, str keys (hits and absent keys in and out of
-    the footer bounds), every type family of `_row`. Every lookup runs
-    0 jobs: the packed base's range files store timestamps as INT64
-    microseconds, which pyarrow reads as Spark does."""
+def test_local_equals_spark_str_keys(spark, tmp_path):
+    """Str keys (hits and absent keys in and out of the footer bounds),
+    every type family of `_row`. Every lookup runs 0 jobs."""
     path = str(tmp_path / "t")
     keys = [f"CVE-2024-{i:04d}" for i in range(60)]
-    _write(spark, path, keys, packed_base=packed)
-    if packed:
-        entries = mv._load_manifest_full(path, 1)["buckets"].values()
-        assert all(g.startswith("@") and "/r" in g for g in entries)
+    _write(spark, path, keys)
     jobs = _assert_same(
         spark, path, keys[:12] + ["CVE-2024-0030x", "AAA", "zzz"]
     )
@@ -155,46 +149,30 @@ def test_local_equals_spark_classic_and_packed(spark, tmp_path, packed):
             assert (rows[0]["far"], rows[0]["old"]) == (FAR, old), (k, bound)
 
 
-def _ask(schema: StructType, files: list[str], key: str, value):
-    """The lookup gate's answer for `key` = `value` over `files`, read
-    under the committed `schema`."""
+def _ask(schema: StructType, dirs: list[str], key: str, value):
+    """The lookup gate's answer for `key` = `value` over the generation
+    directories `dirs`, read under the committed `schema`."""
     return mv._slice_gate(
         "lookup", full={"schema": schema.jsonValue()}, key=key, value=value,
-        gens=[(f, 0) for f in files],
+        gens=[(d, 0) for d in dirs],
     )
 
 
-def _read(spark, schema: StructType, files: list[str], key: str, value):
-    table, out = _ask(schema, files, key, value).read
+def _read(spark, schema: StructType, dirs: list[str], key: str, value):
+    table, out = _ask(schema, dirs, key, value).read
     return spark.createDataFrame(table, out)
 
 
 def test_pyarrow_int96_files_keep_the_spark_read(tmp_path):
-    """Range files packed before the coalescer wrote INT64 timestamps
-    hold pyarrow-written INT96, which pyarrow mis-decodes before 1970:
-    the gate leaves such files to Spark."""
-    f = str(tmp_path / "r0-7.parquet")
+    """A file pyarrow wrote with INT96 timestamps, which pyarrow
+    mis-decodes before 1970: the gate leaves such files to Spark."""
+    f = str(tmp_path / "part-0.parquet")
     pq.write_table(
         pa.table({"id": ["a"], "ts": pa.array([datetime.datetime(1960, 5, 5)], pa.timestamp("us"))}),
         f, use_deprecated_int96_timestamps=True,
     )
     schema = StructType([StructField("id", StringType()), StructField("ts", TimestampType())])
-    assert _ask(schema, [f], "id", "a").reason == "int96-file"
-
-
-def test_local_equals_spark_packed_range_files(spark, tmp_path):
-    """The packed layout's coalesced range files, written by pyarrow,
-    read locally when they hold no INT96 column."""
-    path = str(tmp_path / "t")
-    keys = [f"CVE-2024-{i:04d}" for i in range(60)]
-    base = spark.createDataFrame(
-        [_row(k, i) for i, k in enumerate(keys)], _schema(StringType())
-    ).drop("ts", "far", "old", "meta")
-    mv.write_bucket_table_versioned(base, path, key="id", n_buckets=8, packed_base=True)
-    entries = mv._load_manifest_full(path, 1)["buckets"].values()
-    assert all(g.startswith("@") and "/r" in g for g in entries)
-    jobs = _assert_same(spark, path, keys[:8] + ["CVE-2024-0030x"])
-    assert jobs == [0] * len(jobs)
+    assert _ask(schema, [str(tmp_path)], "id", "a").reason == "int96-file"
 
 
 def test_local_equals_spark_int_keys_time_travel_and_new_column(spark, tmp_path):
@@ -377,6 +355,78 @@ def test_legacy_key_bloom_table_equals_its_twin(spark, tmp_path):
     same(lambda p: _lookup(spark, p, "r3", 1 << 40)[:2])
 
 
+def test_legacy_packed_entry_raises(spark, tmp_path):
+    """A manifest entry of the removed packed layout
+    ("@pg-<hex>/b<i>.parquet") is never read as a bucket directory: a
+    full scan, a point lookup, a merge, a change feed and a vacuum each
+    raise, and the vacuum removes nothing."""
+    path = str(tmp_path / "t")
+    keys = [f"k{i:02d}" for i in range(40)]
+    df = spark.createDataFrame([(k, i) for i, k in enumerate(keys)], "id string, n long")
+    mv.write_bucket_table_versioned(df, path, key="id", n_buckets=8)
+    mv.merge_scoped_versioned(spark, path, df.filter("n < 3"), now=T1)
+    bucket = str(bucket_of_value(spark, "k00", 8))
+    # every shard holding the bucket, in every version, names a pack file
+    for f in glob.glob(f"{path}/_manifest/ms-*.json"):
+        with open(f) as fh:
+            shard = json.load(fh)
+        if bucket in shard["buckets"]:
+            shard["buckets"][bucket] = f"@pg-0123456789ab/b{bucket}.parquet"
+            with open(f, "w") as fh:
+                json.dump(shard, fh)
+    mv._SHARD_CACHE.clear()
+    before = sorted(os.listdir(path))
+    legacy = pytest.raises(ValueError, match="removed packed layout.*rebuild the table from its source")
+    with legacy:
+        mv.read_bucket_table_versioned(spark, path).collect()
+    with legacy:
+        mv.read_bucket_for_key_versioned(spark, path, "k00").collect()
+    with legacy:
+        mv.merge_scoped_versioned(spark, path, df.filter("id = 'k00'"), now=T1)
+    with legacy:
+        mv.change_feed(spark, path, 1, 2).collect()
+    with legacy:
+        mv.vacuum_bucket_versions(path, keep=1)
+    assert sorted(os.listdir(path)) == before
+    assert mv.latest_version(path) == 2
+
+
+def test_legacy_packed_base_meta_key_is_ignored(spark, tmp_path):
+    """A `_BUCKETS` that still carries the removed "packed_base" and
+    "pack_target_bytes" keys, on a table whose entries are all
+    per-bucket generations, reads and merges as its twin without them;
+    a reload drops the keys."""
+    df = spark.createDataFrame([(f"k{i:02d}", i) for i in range(40)], "id string, n long")
+    legacy, twin = str(tmp_path / "legacy"), str(tmp_path / "twin")
+    for p in (legacy, twin):
+        mv.write_bucket_table_versioned(df, p, key="id", n_buckets=8)
+    meta_path = os.path.join(legacy, "_BUCKETS")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    with open(meta_path, "w") as f:
+        json.dump({**meta, "packed_base": True, "pack_target_bytes": 0}, f)
+
+    def same(fn):
+        a, b = fn(legacy), fn(twin)
+        assert a == b
+        return a
+
+    def rows(p, v=None):
+        return sorted(map(repr, mv.read_bucket_table_versioned(spark, p, v).collect()))
+
+    batch = spark.createDataFrame([("k03", 7), ("new", 8)], "id string, n long")
+    assert same(lambda p: mv.merge_scoped_versioned(spark, p, batch, now=T1)["version"]) == 2
+    assert same(rows)
+    assert same(lambda p: _lookup(spark, p, "k03", 1 << 40)[:2])[1]
+    same(lambda p: mv.write_bucket_table_versioned(df, p, key="id", n_buckets=256))
+    with open(meta_path) as f:
+        assert not {"packed_base", "pack_target_bytes"} & set(json.load(f))
+    assert same(rows)
+    # 256 buckets: per-bucket generation directories, as at any width
+    entries = mv._load_manifest_full(legacy, 3)["buckets"]
+    assert all(os.path.isdir(f"{legacy}/bucket={i}/{g}") for i, g in entries.items())
+
+
 def test_local_equals_spark_in_another_session_time_zone(spark, tmp_path):
     """Timestamps leave the local read as UTC instants, so a session
     time zone other than UTC renders them exactly as the Spark read
@@ -400,12 +450,11 @@ def _files_law(spark, tmp_path, tables: list[pa.Table], schema: StructType, key,
     for i, t in enumerate(tables):
         pq.write_table(t, str(gdir / f"part-{i}.parquet"))
     schema_json = schema.jsonValue()
-    files = mv._data_files(str(gdir))
     for v in values:
         want = mv._read_dirs(spark, [str(gdir)], schema, schema_json).filter(
             F.col(key) == F.lit(v)
         )
-        got = _read(spark, schema, files, key, v)
+        got = _read(spark, schema, [str(gdir)], key, v)
         assert got.schema == want.schema, v
         assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr), v
 
@@ -455,7 +504,7 @@ def test_conform_reads_int96_timestamps_at_microseconds(spark, tmp_path):
     stored = mv._load_manifest_full(path, 1)["schema"]
     files = mv._data_files(gdir)
     k = pq.read_table(files[0], columns=["id"]).column(0)[0].as_py()
-    got = _read(spark, StructType.fromJson(stored), files, "id", k).collect()
+    got = _read(spark, StructType.fromJson(stored), [gdir], "id", k).collect()
     assert got[0]["far"] == FAR
 
 
@@ -464,13 +513,13 @@ def test_key_type_mismatch_keeps_spark_read(spark, tmp_path):
     (an int against a string key) leaves the read to Spark."""
     path = str(tmp_path / "t")
     _write(spark, path, [str(i) for i in range(20)])
-    files = [
-        f for g in mv._load_manifest_full(path, 1)["buckets"].items()
-        for f in mv._data_files(mv._gen_data_path(path, *g))
+    dirs = [
+        mv._gen_data_path(path, *g)
+        for g in mv._load_manifest_full(path, 1)["buckets"].items()
     ]
     schema = mv.table_schema(path)
-    assert _ask(schema, files, "id", 5).reason == "key-type"
-    assert _ask(schema, files, "id", True).reason == "key-type"
+    assert _ask(schema, dirs, "id", 5).reason == "key-type"
+    assert _ask(schema, dirs, "id", True).reason == "key-type"
     ls, lr, lj = _lookup(spark, path, 5, 1 << 40)
     ss, sr, _ = _lookup(spark, path, 5, 0)
     assert lr == sr and lj >= 1

@@ -97,7 +97,7 @@ def test_driver_gate_is_exactly_50_hard_oracled_queries():
 # round-10 gate — this set holds only queries born in round 10 after
 # the r10 gate froze)
 NEW_THIS_ROUND: set[str] = {  # born r13 post-gate-freeze
-    "e_branch_wap", "s22_wap_replay",
+    "s22_wap_replay",
 }
 
 

@@ -46,23 +46,19 @@ class Walk:
         return _feed(self.spark, self.root, f"f{self.n}",
                      [make(i, k) for i, k in enumerate(KEYS)], schema)
 
-    def table(self, base=None, key="id", **kw) -> str:
+    def table(self, base=None, key="id") -> str:
         """A table loaded by a default upsert from parquet (pyarrow-written
-        generations), or written by `write_bucket_table_versioned` with
-        `kw` (e.g. packed_base)."""
+        generations)."""
         self.n += 1
         path = str(self.root / f"t{self.n}")
         base = self.rows() if base is None else base
-        if kw:
-            mv.write_bucket_table_versioned(base, path, key=key, n_buckets=N, **kw)
-        else:
-            mv.init_bucket_table_versioned(path, key=key, n_buckets=N)
-            mv.merge_scoped_versioned(self.spark, path, base, now=T0)
+        mv.init_bucket_table_versioned(path, key=key, n_buckets=N)
+        mv.merge_scoped_versioned(self.spark, path, base, now=T0)
         return path
 
-    def twins(self, base=None, **kw) -> tuple[str, str]:
+    def twins(self, base=None) -> tuple[str, str]:
         base = self.rows() if base is None else base
-        return self.table(base, **kw), self.table(base, **kw)
+        return self.table(base), self.table(base)
 
     def batch(self, schema=BASE, keys=KEYS[::3] + ["new"]):
         self.n += 1
@@ -209,12 +205,6 @@ def _merge_cases(w: Walk):
         u = w.batch()
         return lambda: w.commit(a, u), lambda: w.commit(b, u)
 
-    def packed():
-        base = w.rows()
-        a, b = w.table(base, packed_base=True), w.table(base, packed_base=False)
-        u = w.batch()
-        return lambda: w.commit(a, u), lambda: w.commit(b, u)
-
     def mor_deltas():
         a, b = w.twins()
         mor = w.batch(keys=KEYS[1::4])
@@ -273,11 +263,6 @@ def _feed_cases(w: Walk):
         w.strip(a, "schema")
         v = mv.latest_version(a)
         return lambda: w.feed(a, v - 2, v), eligible
-
-    def packed():
-        # the audit columns are there before the span, as a merge adds them
-        base = merge_upsert(None, w.rows(), now=T0)
-        return pair(w.table(base, packed_base=True), w.table(base, packed_base=False))
 
     def compacted(change):
         """The feed over `change`, and over it plus the compaction that
@@ -354,15 +339,11 @@ def _feed_cases(w: Walk):
 
 
 def _write_cases(w: Walk):
-    def write(df, path=None, **kw):
+    def write(df):
         w.n += 1
-        path = path or str(w.root / f"w{w.n}")
-        mv.write_bucket_table_versioned(df, path, key="id", n_buckets=N, **kw)
+        path = str(w.root / f"w{w.n}")
+        mv.write_bucket_table_versioned(df, path, key="id", n_buckets=N)
         return w.snapshot(path, [c for c in ("iv",) if c in df.columns])
-
-    def packed():
-        df = w.rows()
-        return lambda: write(df, packed_base=True), lambda: write(df)
 
     def sorted_write():
         a, b = w.twins()
@@ -409,16 +390,16 @@ CASES = [
 ] + [
     ("merge", r) for r in
     ("custom-merge", "bucket-column", "key-type", "not-arrow", "too-large",
-     "no-schema", "packed", "mor-deltas", "deletion-vectors", "no-stats",
+     "no-schema", "mor-deltas", "deletion-vectors", "no-stats",
      "widened-type", "int96-file")
 ] + [
     ("feed", r) for r in
-    ("no-schema", "packed", "mor-deltas", "deletion-vectors", "collation",
+    ("no-schema", "mor-deltas", "deletion-vectors", "collation",
      "schema-changed", "key-type", "not-arrow", "no-stats", "too-large",
      "int96-file")
 ] + [
     ("write", r) for r in
-    ("packed", "sorted-write", "no-stats", "too-large", "not-arrow")
+    ("sorted-write", "no-stats", "too-large", "not-arrow")
 ]
 
 
@@ -436,19 +417,25 @@ def test_refusal_walk(spark, tmp_path, monkeypatch, caplog, surface, reason):
     assert got == want
 
 
-def test_feed_map_column_refused_and_raises(spark, tmp_path, monkeypatch, caplog):
-    """A map column keeps the Spark diff, whose `<=>` rejects maps: the
-    feed raises as it always has, so no driver path may answer it."""
+def test_feed_map_column_refused_and_applies(spark, tmp_path, monkeypatch, caplog):
+    """A map column keeps the Spark diff, which compares maps by their
+    sorted entries: the feed carries exactly the changed row, and
+    applying it to the old snapshot gives the new one."""
     w = Walk(spark, tmp_path, monkeypatch)
-    p = w.table(w.rows("id string, n long, m map<string, long>", lambda i, k: (k, i, {"a": i})))
+    schema = "id string, n long, m map<string, long>"
+    p = w.table(w.rows(schema, lambda i, k: (k, i, {"a": i, "b": -i})))
     v = mv.latest_version(p)
-    mv.merge_scoped_versioned(spark, p, _feed(spark, tmp_path, "m2", [("k01", 5, {"a": 9})],
-                                              "id string, n long, m map<string, long>"), now=T1)
+    mv.merge_scoped_versioned(spark, p, _feed(spark, tmp_path, "m2", [("k01", 1, {"a": 9, "b": -1})], schema),
+                              now=T1)
     gate_log(caplog)
     caplog.clear()
-    with pytest.raises(Exception, match="INVALID_ORDERING_TYPE"):
-        mv.change_feed(spark, p, v, v + 1).collect()
+    feed = mv.change_feed(spark, p, v, v + 1)
     assert paths(caplog, "feed") == [(False, "map-column")]
+    assert [(r["id"], r["change"]) for r in feed.collect()] == [("k01", "update")]
+    old = mv.read_bucket_table_versioned(spark, p, v)
+    new = mv.read_bucket_table_versioned(spark, p, v + 1)
+    applied = mv.apply_change_feed(old, feed, ["id"]).select(*new.columns)
+    assert _canon(applied.collect()) == _canon(new.collect())
 
 
 def test_every_reason_is_walked():

@@ -1,12 +1,12 @@
 #!/usr/bin/env python3
-"""Vacuum/GC economics for the sharded + packed + delta-root + MOR +
+"""Vacuum/GC economics for the sharded + delta-root + MOR +
 DV + OCC era (VERDICT r11 item 4): one long-lived table driven through
 N_COMMITS mixed commits — CoW scoped merges, MOR delta appends, DV
 deletes, periodic two-writer OCC races (orphan producers), periodic
 compaction — with periodic vacuums, recording the storage curve:
 
   * total bytes on disk vs LIVE bytes (latest-manifest-referenced,
-    incl. delta generations, DV dirs and packed files)
+    incl. delta generations and DV dirs)
   * history bytes (referenced only by older retained versions),
     orphan bytes (referenced by nothing — lost races / superseded)
   * manifest-layer bytes (roots + shard files) and root chain shape
@@ -102,7 +102,6 @@ def _storage_terms(path: str, mv) -> dict:
             live_refs = refs
     data_paths = (
         glob.glob(f"{path}/bucket=*/g-*")
-        + glob.glob(f"{path}/_packed/pg-*/[br]*.parquet")
         + glob.glob(f"{path}/dv-*")
     )
     live = hist = orphan = 0
@@ -129,15 +128,6 @@ def _storage_terms(path: str, mv) -> dict:
         "shard_bytes": shard_bytes,
         "total_bytes": _du(path),
         "latest_root_is_delta": "root_base" in raw,
-        # pack-decay terms (VERDICT r12 item 5): plan_paths is what a
-        # full scan hands Spark's file index; flat across epochs ==
-        # the auto-re-pack cadence is holding
-        **{
-            k: v
-            for k, v in mv.pack_decay(path).items()
-            if k in ("classic_buckets", "decayed_frac",
-                     "plan_paths", "packs")
-        },
     }
 
 
@@ -174,7 +164,6 @@ def main() -> None:
 
     samples = []
     vacuums = []
-    repacks = []
     commit_walls = []
     t_start = time.time()
     for i in range(1, N_COMMITS + 1):
@@ -210,13 +199,6 @@ def main() -> None:
             mv.merge_deletes_dv(spark, path, dk)
         if i % COMPACT_EVERY == 0:
             mv.compact_versioned(spark, path)
-            rp = mv.repack_if_decayed(spark, path)
-            if rp["repacked"]:
-                repacks.append({
-                    "at_commit": i,
-                    "buckets_compacted": rp["buckets_compacted"],
-                    "plan_paths_after": rp["plan_paths"],
-                })
         commit_walls.append(time.time() - t)
         if i % VACUUM_EVERY == 0:
             before = _du(path)
@@ -262,7 +244,6 @@ def main() -> None:
         ),
         "samples": samples,
         "vacuums": vacuums,
-        "repacks": repacks,
         "final_vacuum_s": round(final_vac_s, 2),
         "final": final,
         "post_vacuum": {

@@ -19,8 +19,11 @@ and measures whether anything grows with history:
   * manifest count/bytes before and after vacuum
 
 Usage: python3 tools/manifestbench.py [sf_dir] [n_commits] [n_buckets]
-Writes MANIFESTBENCH.json (MANIFESTBENCH_<n>.json for n_buckets != 64
-— the decade points don't overwrite each other).
+Writes the committed record whose inputs the run repeats —
+MANIFESTBENCH.json (sf0.01, 600 commits, 64 buckets),
+MANIFESTBENCH_4096.json (sf0.1, 300, 4096) or MANIFESTBENCH_16384.json
+(sf0.1, 100, 16384) — else MANIFESTBENCH_<differing inputs>.json
+(tools/artifacts.py).
 """
 
 from __future__ import annotations
@@ -30,10 +33,14 @@ import os
 import shutil
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
+
+from tools.artifacts import artifact_path, data_token  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 N_COMMITS = 600
@@ -48,7 +55,7 @@ if int_args:
 if len(int_args) > 1:
     N_BUCKETS = int_args[1]
 
-SCRATCH = "/root/repo/.scratch/manifestbench"
+SCRATCH = f"{ROOT}/.scratch/manifestbench"
 T0 = "2026-01-01 00:00:00"
 
 
@@ -207,11 +214,16 @@ def main() -> None:
         },
         "loadavg_1m": os.getloadavg()[0],
     }
-    name = (
-        "MANIFESTBENCH.json" if N_BUCKETS == 64
-        else f"MANIFESTBENCH_{N_BUCKETS}.json"
+    dst = artifact_path(
+        "MANIFESTBENCH",
+        {
+            "MANIFESTBENCH.json": ("sf0.01", "c600", "b64"),
+            "MANIFESTBENCH_4096.json": ("sf0.1", "c300", "b4096"),
+            "MANIFESTBENCH_16384.json": ("sf0.1", "c100", "b16384"),
+        },
+        (data_token(SF_DIR), f"c{N_COMMITS}", f"b{N_BUCKETS}"),
     )
-    with open(f"/root/repo/{name}", "w") as f:
+    with open(dst, "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out, indent=1))
     shutil.rmtree(SCRATCH, ignore_errors=True)

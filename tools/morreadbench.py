@@ -13,7 +13,9 @@ read-debt payoff line. Every merge touches (almost) every bucket, so
 depth is uniform and the curve is the worst case.
 
 Usage: python3 tools/morreadbench.py [sf_dir] [max_depth] [n_buckets]
-Writes MORREADBENCH.json.
+Writes MORREADBENCH.json when the inputs are the recorded run's (sf0.1,
+depth 8, 256 buckets), else MORREADBENCH_<differing inputs>.json
+(tools/artifacts.py).
 """
 
 from __future__ import annotations
@@ -24,8 +26,12 @@ import os
 import shutil
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+
+from tools.artifacts import artifact_path, data_token  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 MAX_DEPTH = 8
@@ -40,7 +46,7 @@ if ints:
 if len(ints) > 1:
     N_BUCKETS = ints[1]
 
-SCRATCH = "/root/repo/.scratch/morreadbench"
+SCRATCH = f"{ROOT}/.scratch/morreadbench"
 T0 = "2026-01-01 00:00:00"
 
 
@@ -60,11 +66,7 @@ def _table_bytes(path: str) -> int:
         for d in lst
     ]
     return sum(
-        os.path.getsize(f)
-        for g in dirs
-        for f in (
-            [g] if g.endswith(".parquet") else glob.glob(f"{g}/*.parquet")
-        )
+        os.path.getsize(f) for g in dirs for f in glob.glob(f"{g}/*.parquet")
     )
 
 
@@ -137,7 +139,12 @@ def main() -> None:
         "after_compact": after,
         "loadavg_1m": os.getloadavg()[0],
     }
-    with open("/root/repo/MORREADBENCH.json", "w") as f:
+    dst = artifact_path(
+        "MORREADBENCH",
+        {"MORREADBENCH.json": ("sf0.1", "d8", "b256")},
+        (data_token(SF_DIR), f"d{MAX_DEPTH}", f"b{N_BUCKETS}"),
+    )
+    with open(dst, "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out, indent=1))
     shutil.rmtree(SCRATCH, ignore_errors=True)

@@ -87,10 +87,6 @@ def _orphan_bytes(path: str) -> int:
         _dir_bytes(g)
         for g in glob.glob(f"{path}/bucket=*/g-*")
         if g not in referenced
-    ) + sum(
-        os.path.getsize(f)
-        for f in glob.glob(f"{path}/_packed/pg-*/[br]*.parquet")
-        if f not in referenced
     )
 
 

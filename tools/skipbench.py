@@ -93,9 +93,6 @@ def main() -> None:
     write_bucket_table_versioned(
         merge_upsert(None, orders, key="o_orderkey", now=T0),
         path, key="o_orderkey", n_buckets=N_BUCKETS,
-        # the classic layout at every width, as in the recorded runs
-        # (their key-bloom tables were never packed)
-        packed_base=False,
     )
     load_s = time.time() - t
 
