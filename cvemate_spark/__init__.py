@@ -16,4 +16,13 @@ Layout:
     queries/     the declared query surface (SURVEY.md §2.12) + oracles
 """
 
+import os
+
 __version__ = "0.1.0"
+
+# Derived caches (staged tables, landing files, stream state) live
+# under `.scratch/` at the repository root, resolved from this file: a
+# copy of the repository reads and writes its own caches.
+SCRATCH_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)

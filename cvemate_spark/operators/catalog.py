@@ -42,6 +42,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import fsio
 from .merge_versioned import latest_version, read_bucket_table_versioned
 
 
@@ -85,14 +86,10 @@ def _cat_commit(path: str, v: int, tables: dict) -> None:
     for ph in _cat_versions(path):
         if ph > current and ph != v:
             os.unlink(_cat_manifest(path, ph))
-    tmp = os.path.join(path, f".c-tmp-{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
+    with fsio.atomic_file(_cat_manifest(path, v)) as f:
         json.dump({"v": v, "tables": tables}, f, indent=0, sort_keys=True)
-    os.replace(tmp, _cat_manifest(path, v))
-    tmp2 = os.path.join(path, f"_LATEST.tmp-{uuid.uuid4().hex[:8]}")
-    with open(tmp2, "w") as f:
+    with fsio.atomic_file(latest_file) as f:
         f.write(str(v))
-    os.replace(tmp2, os.path.join(path, "_LATEST"))
     # supersession markers: vacuum's grace clock must run on time-
     # since-DISPLACED, not manifest creation time (manifests are
     # immutable, so mtime == creation — a snapshot that served reads
@@ -111,17 +108,11 @@ def catalog_init(path: str) -> int:
     Ensure-exists on an EXISTING catalog: re-running init must not
     overwrite committed manifests or roll the pointer back — the
     current version is returned untouched."""
-    import fcntl
-
     os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "_CATLOCK"), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            if os.path.exists(os.path.join(path, "_LATEST")):
-                return catalog_latest(path)
-            _cat_commit(path, 1, {})
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
+    with fsio.locked(os.path.join(path, "_CATLOCK")):
+        if os.path.exists(os.path.join(path, "_LATEST")):
+            return catalog_latest(path)
+        _cat_commit(path, 1, {})
     return 1
 
 
@@ -158,11 +149,7 @@ def catalog_txn(
 
     Returns {catalog_version, tables: {name: version}}.
     """
-    import fcntl
-
-    lock = open(os.path.join(path, "_CATLOCK"), "w")
-    fcntl.flock(lock, fcntl.LOCK_EX)
-    try:
+    with fsio.locked(os.path.join(path, "_CATLOCK")):
         acted: dict[str, int] = {}
         for name, fn in (actions or {}).items():
             if name not in members:
@@ -189,9 +176,6 @@ def catalog_txn(
         # gaps in the readable catalog timeline
         v = catalog_latest(path) + 1
         _cat_commit(path, v, pinned)
-    finally:
-        fcntl.flock(lock, fcntl.LOCK_UN)
-        lock.close()
     return {
         "catalog_version": v,
         "tables": {n: p["version"] for n, p in pinned.items()},
@@ -248,8 +232,6 @@ def catalog_txn_occ(
     `pre_publish_hook` is the race-window test seam (the two-writer
     law in tests/test_catalog.py).
     """
-    import fcntl
-
     base_v = catalog_latest(path)
     # WORK PHASE — lock-free: each action is that table's own atomic
     # commit; overlapping transactions' Spark jobs genuinely overlap
@@ -273,9 +255,7 @@ def catalog_txn_occ(
     }
     if pre_publish_hook is not None:
         pre_publish_hook()
-    lock = open(os.path.join(path, "_CATLOCK"), "w")
-    fcntl.flock(lock, fcntl.LOCK_EX)
-    try:
+    with fsio.locked(os.path.join(path, "_CATLOCK")):
         cur = catalog_latest(path)
         cur_m = _cat_load(path, cur)["tables"]
         rebased = cur != base_v
@@ -312,9 +292,6 @@ def catalog_txn_occ(
                 tables[n] = e
         v = catalog_latest(path) + 1
         _cat_commit(path, v, tables)
-    finally:
-        fcntl.flock(lock, fcntl.LOCK_UN)
-        lock.close()
     return {
         "catalog_version": v,
         "tables": {n: p["version"] for n, p in tables.items()},
@@ -405,30 +382,25 @@ def vacuum_catalog(
     — a tag is precisely the promise that its snapshot stays readable
     (drop the tag to release it). Under `_CATLOCK` so no transaction
     interleaves."""
-    import fcntl
     import time
 
     removed: list[int] = []
-    with open(os.path.join(path, "_CATLOCK"), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            committed = catalog_latest(path)
-            tagged = set(list_tags(path).values())
-            versions = _cat_versions(path)
-            now = time.time()
-            for v in versions[:-keep] if keep else versions:
-                if v == committed or v in tagged:
-                    continue
-                marker = os.path.join(path, f"c-{v}.superseded")
-                if not os.path.exists(marker):
-                    continue  # never displaced -> not provably dead
-                if now - os.path.getmtime(marker) < grace_seconds:
-                    continue
-                os.unlink(_cat_manifest(path, v))
-                os.unlink(marker)
-                removed.append(v)
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
+    with fsio.locked(os.path.join(path, "_CATLOCK")):
+        committed = catalog_latest(path)
+        tagged = set(list_tags(path).values())
+        versions = _cat_versions(path)
+        now = time.time()
+        for v in versions[:-keep] if keep else versions:
+            if v == committed or v in tagged:
+                continue
+            marker = os.path.join(path, f"c-{v}.superseded")
+            if not os.path.exists(marker):
+                continue  # never displaced -> not provably dead
+            if now - os.path.getmtime(marker) < grace_seconds:
+                continue
+            os.unlink(_cat_manifest(path, v))
+            os.unlink(marker)
+            removed.append(v)
     return {"removed_versions": removed}
 
 
@@ -589,8 +561,6 @@ def replicate_catalog(
     `crash_before_publish` simulates the worst crash point (all data
     written, pointer untouched) for the law tests. Returns
     {applied_version, tables: {name: dir}, advanced: bool}."""
-    import shutil
-
     from .merge_versioned import apply_change_feed
 
     os.makedirs(replica_root, exist_ok=True)
@@ -668,17 +638,15 @@ def replicate_catalog(
             "tables": state["dirs"] if state else {},
             "advanced": False,
         }
-    tmp = os.path.join(replica_root, f".state-tmp-{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
+    with fsio.atomic_file(state_path) as f:
         json.dump({"applied": target, "dirs": new_dirs}, f)
-    os.replace(tmp, state_path)
     # sweep: every dir the published pointer does not name is dead —
     # the displaced previous snapshot and any crashed poll's orphans
     live = set(new_dirs.values())
     for d in os.listdir(replica_root):
         full = os.path.join(replica_root, d)
         if os.path.isdir(full) and d not in live:
-            shutil.rmtree(full, ignore_errors=True)
+            fsio.discard(full)
     return {"applied_version": target, "tables": new_dirs, "advanced": True}
 
 
@@ -802,35 +770,27 @@ def catalog_branch(
     `_BRANCH_META.json` (not just its version number): publish needs
     the three-way base even after main's manifest horizon vacuums past
     the fork point."""
-    import fcntl
-
     broot = branch_root(path, name)
-    with open(os.path.join(path, "_CATLOCK"), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            if os.path.exists(os.path.join(broot, "_LATEST")):
-                raise ValueError(
-                    f"branch {name!r} already exists on {path}"
-                )
-            committed = catalog_latest(path)
-            v0 = committed if from_version is None else from_version
-            if v0 > committed:
-                raise ValueError(
-                    f"cannot branch from uncommitted catalog version "
-                    f"{v0} (latest={committed})"
-                )
-            tables = _cat_load(path, v0)["tables"]
-            os.makedirs(broot, exist_ok=True)
-            tmp = os.path.join(broot, f".meta-tmp-{uuid.uuid4().hex[:8]}")
-            with open(tmp, "w") as f:
-                json.dump(
-                    {"forked_from": v0, "fork_tables": tables},
-                    f, indent=0, sort_keys=True,
-                )
-            os.replace(tmp, os.path.join(broot, BRANCH_META))
-            _cat_commit(broot, 1, tables)
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
+    with fsio.locked(os.path.join(path, "_CATLOCK")):
+        if os.path.exists(os.path.join(broot, "_LATEST")):
+            raise ValueError(
+                f"branch {name!r} already exists on {path}"
+            )
+        committed = catalog_latest(path)
+        v0 = committed if from_version is None else from_version
+        if v0 > committed:
+            raise ValueError(
+                f"cannot branch from uncommitted catalog version "
+                f"{v0} (latest={committed})"
+            )
+        tables = _cat_load(path, v0)["tables"]
+        os.makedirs(broot, exist_ok=True)
+        with fsio.atomic_file(os.path.join(broot, BRANCH_META)) as f:
+            json.dump(
+                {"forked_from": v0, "fork_tables": tables},
+                f, indent=0, sort_keys=True,
+            )
+        _cat_commit(broot, 1, tables)
     return {"branch": name, "root": broot, "forked_from": v0}
 
 
@@ -853,12 +813,8 @@ def branch_txn(
     the branch (name -> path), pinned read-only at their current
     version; paths for acted names default to the branch head's
     binding."""
-    import fcntl
-
     broot = branch_root(path, name)
-    lock = open(os.path.join(broot, "_CATLOCK"), "w")
-    fcntl.flock(lock, fcntl.LOCK_EX)
-    try:
+    with fsio.locked(os.path.join(broot, "_CATLOCK")):
         head = _cat_load(broot, catalog_latest(broot))["tables"]
         extra = dict(members or {})
         acted: dict[str, tuple[str, int]] = {}
@@ -891,9 +847,6 @@ def branch_txn(
             tables[tname] = {"path": tpath, "version": v}
         v = catalog_latest(broot) + 1
         _cat_commit(broot, v, tables)
-    finally:
-        fcntl.flock(lock, fcntl.LOCK_UN)
-        lock.close()
     return {
         "branch_version": v,
         "tables": {n: e["version"] for n, e in tables.items()},
@@ -917,12 +870,10 @@ def drop_branch(path: str, name: str) -> None:
     table versions become unreferenced table-level history — each
     member's own vacuum reclaims them (the same fate as a crashed
     transaction's member commits)."""
-    import shutil
-
     broot = branch_root(path, name)
     if not os.path.exists(os.path.join(broot, BRANCH_META)):
         raise KeyError(f"no branch {name!r} on {path}")
-    shutil.rmtree(broot)
+    fsio.discard(broot)
 
 
 def publish_branch(
@@ -948,9 +899,6 @@ def publish_branch(
     `keep=False` (default) deletes the branch after publishing;
     `keep=True` re-forks it at the published version so staging can
     continue. Returns {catalog_version, tables, fast_forward}."""
-    import fcntl
-    import shutil
-
     broot = branch_root(path, name)
     meta_p = os.path.join(broot, BRANCH_META)
     if not os.path.exists(meta_p):
@@ -959,9 +907,7 @@ def publish_branch(
         meta = json.load(f)
     bhead = _cat_load(broot, catalog_latest(broot))["tables"]
     base = meta["fork_tables"]
-    lock = open(os.path.join(path, "_CATLOCK"), "w")
-    fcntl.flock(lock, fcntl.LOCK_EX)
-    try:
+    with fsio.locked(os.path.join(path, "_CATLOCK")):
         # two publishers of the SAME branch race on the pre-lock reads:
         # whoever loses must not publish the (already-consumed) head
         # again nor crash on the missing dir — re-check under the lock
@@ -1018,10 +964,7 @@ def publish_branch(
         # consume the branch INSIDE the lock: a raced second publisher
         # must fail its own under-lock existence re-check, never
         # republish the already-consumed head
-        shutil.rmtree(broot, ignore_errors=True)
-    finally:
-        fcntl.flock(lock, fcntl.LOCK_UN)
-        lock.close()
+        fsio.discard(broot)
     if keep:
         catalog_branch(path, name, from_version=v)
     return {
@@ -1114,38 +1057,30 @@ def catalog_tag(path: str, name: str, version: int | None = None) -> dict:
     `vacuum_catalog_members` (via `catalog_referenced_versions`) keeps
     the member versions it pins. Re-tagging an existing name raises —
     tags are immutable; drop first to move one."""
-    import fcntl
-
     _valid_ref_name(name)
     refs = os.path.join(path, "refs")
-    with open(os.path.join(path, "_CATLOCK"), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            committed = catalog_latest(path)
-            v = committed if version is None else version
-            if v > committed:
-                raise ValueError(
-                    f"cannot tag uncommitted catalog version {v} "
-                    f"(latest={committed})"
-                )
-            if not os.path.exists(_cat_manifest(path, v)):
-                raise ValueError(
-                    f"catalog version {v} of {path} is no longer "
-                    "retained (vacuumed) — cannot tag it"
-                )
-            os.makedirs(refs, exist_ok=True)
-            ref = os.path.join(refs, f"tag-{name}.json")
-            if os.path.exists(ref):
-                raise ValueError(
-                    f"tag {name!r} already exists on {path} "
-                    "(tags are immutable; drop_tag first)"
-                )
-            tmp = os.path.join(refs, f".tag-tmp-{uuid.uuid4().hex[:8]}")
-            with open(tmp, "w") as f:
-                json.dump({"version": v}, f)
-            os.replace(tmp, ref)
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
+    with fsio.locked(os.path.join(path, "_CATLOCK")):
+        committed = catalog_latest(path)
+        v = committed if version is None else version
+        if v > committed:
+            raise ValueError(
+                f"cannot tag uncommitted catalog version {v} "
+                f"(latest={committed})"
+            )
+        if not os.path.exists(_cat_manifest(path, v)):
+            raise ValueError(
+                f"catalog version {v} of {path} is no longer "
+                "retained (vacuumed) — cannot tag it"
+            )
+        os.makedirs(refs, exist_ok=True)
+        ref = os.path.join(refs, f"tag-{name}.json")
+        if os.path.exists(ref):
+            raise ValueError(
+                f"tag {name!r} already exists on {path} "
+                "(tags are immutable; drop_tag first)"
+            )
+        with fsio.atomic_file(ref) as f:
+            json.dump({"version": v}, f)
     return {"tag": name, "version": v}
 
 

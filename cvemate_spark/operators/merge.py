@@ -31,12 +31,13 @@ from __future__ import annotations
 import functools
 import json
 import os
-import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
+
+from .. import fsio
 
 AUDIT_COLS = ("created_at", "updated_at")
 
@@ -494,14 +495,14 @@ def write_atomic(df: DataFrame, path: str, meta: dict | None = None) -> None:
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     df.write.mode("overwrite").parquet(tmp)
     if meta is not None:
+        # inside the unpublished dir: publish_dir below fsyncs it
         with open(os.path.join(tmp, REPLICA_META), "w") as f:
             json.dump(meta, f)
     old = f"{path}.old-{uuid.uuid4().hex[:8]}"
     if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if os.path.exists(old):
-        shutil.rmtree(old, ignore_errors=True)
+        fsio.publish_dir(path, old)  # move the live table aside
+    fsio.publish_dir(tmp, path)
+    fsio.discard(old)
 
 
 def read_target(spark: SparkSession, path: str) -> DataFrame | None:
@@ -570,60 +571,48 @@ def write_versioned(df: DataFrame, path: str, max_retries: int = 64) -> int:
             continue  # lost the race for this number — re-scan
         os.close(fd)
         df.write.mode("errorifexists").parquet(os.path.join(path, f"v-{v}"))
-        tmp = os.path.join(path, f"_LATEST.tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        _advance_pointer(path, tmp, v)
+        _advance_pointer(path, v)
         return v
     raise RuntimeError(
         f"write_versioned: lost {max_retries} allocation races under {path}"
     )
 
 
-def _advance_pointer(path: str, tmp: str, v: int) -> None:
+def _advance_pointer(path: str, v: int) -> None:
     """Atomically publish `v` into `_LATEST` iff it is higher than the
     currently-published version (monotonic commit under an flock, so a
     slower racer can never roll the pointer back)."""
-    import fcntl
-
-    lock_path = os.path.join(path, "_COMMITLOCK")
-    with open(lock_path, "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            current = -1
-            latest = os.path.join(path, "_LATEST")
-            if os.path.exists(latest):
-                with open(latest) as f:
-                    current = int(f.read().strip() or -1)
-            if v > current:
-                os.replace(tmp, latest)  # the atomic commit
-                # stamp SUPERSESSION time for every older version that
-                # lacks one (the just-displaced current, plus any
-                # never-published orphan below v): vacuum's grace
-                # period counts from this marker, so "age" means time
-                # since a version stopped being resolvable as latest —
-                # the same clock Delta's deletedFileRetentionDuration
-                # runs on — not time since it was written.
-                # Only versions whose parquet job FINISHED (Spark's
-                # _SUCCESS sentinel) are stampable: a racer's v-<old>
-                # directory can exist while its write is still in
-                # flight, and stamping it would start the vacuum grace
-                # clock on a version that is mid-write — a write
-                # outlasting grace_seconds would then be rmtree'd under
-                # the writer. An unfinished racer gets its marker from
-                # whichever commit lands after it completes.
-                for old in _list_versions(path):
-                    if old < v and os.path.exists(
-                        os.path.join(path, f"v-{old}", "_SUCCESS")
-                    ):
-                        marker = os.path.join(path, f"v-{old}.superseded")
-                        if not os.path.exists(marker):
-                            with open(marker, "w") as mf:
-                                mf.write(str(v))
-            else:
-                os.unlink(tmp)  # a newer version is already published
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
+    with fsio.locked(os.path.join(path, "_COMMITLOCK")):
+        current = -1
+        latest = os.path.join(path, "_LATEST")
+        if os.path.exists(latest):
+            with open(latest) as f:
+                current = int(f.read().strip() or -1)
+        if v <= current:
+            return  # a newer version is already published
+        with fsio.atomic_file(latest) as f:  # the atomic commit
+            f.write(str(v))
+        # stamp SUPERSESSION time for every older version that lacks
+        # one (the just-displaced current, plus any never-published
+        # orphan below v): vacuum's grace period counts from this
+        # marker, so "age" means time since a version stopped being
+        # resolvable as latest — the same clock Delta's
+        # deletedFileRetentionDuration runs on — not time since it was
+        # written. Only versions whose parquet job FINISHED (Spark's
+        # _SUCCESS sentinel) are stampable: a racer's v-<old> directory
+        # can exist while its write is still in flight, and stamping it
+        # would start the vacuum grace clock on a version that is
+        # mid-write — a write outlasting grace_seconds would then be
+        # rmtree'd under the writer. An unfinished racer gets its
+        # marker from whichever commit lands after it completes.
+        for old in _list_versions(path):
+            if old < v and os.path.exists(
+                os.path.join(path, f"v-{old}", "_SUCCESS")
+            ):
+                marker = os.path.join(path, f"v-{old}.superseded")
+                if not os.path.exists(marker):
+                    with open(marker, "w") as mf:
+                        mf.write(str(v))
 
 
 def _taken_versions(path: str) -> list[int]:
@@ -686,36 +675,27 @@ def vacuum_versions(
     Runs under the same `_COMMITLOCK` flock the pointer advance takes,
     so two concurrent vacuums serialize (each sees the other's
     removals before selecting) and a vacuum never interleaves with a
-    pointer advance's supersession stamping; the marker unlink still
-    tolerates a missing file, because rmtree(ignore_errors) can leave
-    a half-removed state a later vacuum re-selects."""
-    import fcntl
-
-    with open(os.path.join(path, "_COMMITLOCK"), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            with open(os.path.join(path, "_LATEST")) as f:
-                committed = int(f.read().strip())
-            versions = _list_versions(path)
-            now = time.time()
-            doomed = []
-            for v in versions[:-keep] if keep else []:
-                if v == committed:
-                    continue
-                marker = os.path.join(path, f"v-{v}.superseded")
-                if not os.path.exists(marker):
-                    continue  # never superseded -> not provably dead
-                if now - os.path.getmtime(marker) < grace_seconds:
-                    continue  # a reader may still be in its grace window
-                doomed.append(v)
-            for v in doomed:
-                shutil.rmtree(os.path.join(path, f"v-{v}"), ignore_errors=True)
-                try:
-                    os.unlink(os.path.join(path, f"v-{v}.superseded"))
-                except FileNotFoundError:
-                    pass
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
+    pointer advance's supersession stamping; removals tolerate a
+    missing path (`fsio.discard`), because a crashed vacuum can leave a
+    half-removed state a later vacuum re-selects."""
+    with fsio.locked(os.path.join(path, "_COMMITLOCK")):
+        with open(os.path.join(path, "_LATEST")) as f:
+            committed = int(f.read().strip())
+        versions = _list_versions(path)
+        now = time.time()
+        doomed = []
+        for v in versions[:-keep] if keep else []:
+            if v == committed:
+                continue
+            marker = os.path.join(path, f"v-{v}.superseded")
+            if not os.path.exists(marker):
+                continue  # never superseded -> not provably dead
+            if now - os.path.getmtime(marker) < grace_seconds:
+                continue  # a reader may still be in its grace window
+            doomed.append(v)
+        for v in doomed:
+            fsio.discard(os.path.join(path, f"v-{v}"))
+            fsio.discard(os.path.join(path, f"v-{v}.superseded"))
     return doomed
 
 

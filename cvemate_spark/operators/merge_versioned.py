@@ -73,12 +73,10 @@ buckets are carried by manifest REFERENCE, zero bytes copied.
 from __future__ import annotations
 
 import contextlib
-import fcntl
 import json
 import logging
 import math
 import os
-import shutil
 import threading
 import time
 import uuid
@@ -86,6 +84,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import fsio
 from .merge import (
     BUCKET_META,
     bucket_expr,
@@ -163,19 +162,6 @@ def _table_meta(path: str) -> dict:
             return json.load(f)
     except FileNotFoundError:
         return {}
-
-
-@contextlib.contextmanager
-def _merge_lock(path: str):
-    """Hold the table's `_MERGELOCK` for the block: the exclusive flock
-    that serializes mergers and maintenance (released on exit, also on
-    an exception)."""
-    with open(os.path.join(path, "_MERGELOCK"), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            yield
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
 
 
 def _shard_size_for(n_buckets: int) -> int:
@@ -525,10 +511,8 @@ def _write_manifest_shards(
         fname = f"ms-{h}.json"
         fpath = os.path.join(mdir, fname)
         if not os.path.exists(fpath):
-            tmp = os.path.join(mdir, f".ms-tmp-{uuid.uuid4().hex[:8]}")
-            with open(tmp, "w") as f:
+            with fsio.atomic_file(fpath) as f:
                 f.write(blob)
-            os.replace(tmp, fpath)
         entry: dict = {"f": fname}
         ids_sorted = sorted(int(i) for i in sub["buckets"])
         if ids_sorted and ids_sorted == list(
@@ -566,7 +550,6 @@ def _write_manifest(
     deltas: dict | None = None, dead_phys: list | None = None,
     base_full: dict | None = None, changed: set | None = None,
 ) -> float:
-    tmp = os.path.join(path, f".manifest-tmp-{uuid.uuid4().hex[:8]}")
     m: dict = {
         "v": v,
         "n_buckets": n_buckets,
@@ -625,9 +608,8 @@ def _write_manifest(
             m["shards_set"] = sset
             if sdel:
                 m["shards_del"] = sdel
-    with open(tmp, "w") as f:
+    with fsio.atomic_file(_manifest_path(path, v)) as f:
         json.dump(m, f, indent=0, sort_keys=True)
-    os.replace(tmp, _manifest_path(path, v))
     return m["committed_at"]
 
 
@@ -1760,7 +1742,7 @@ def merge_deletes_dv(
     with open(os.path.join(path, BUCKET_META)) as f:
         meta = json.load(f)
     key = meta["key"]
-    with _merge_lock(path):
+    with fsio.locked(f"{path}/_MERGELOCK"):
         cur = latest_version(path)
         full = _load_manifest_full(path, cur)
         n_buckets = full["n_buckets"]
@@ -1829,89 +1811,78 @@ def _commit(
     both under `_COMMITLOCK`. The manifest lands only here — a merger
     crashing anywhere earlier leaves NO manifest, so its generations
     are unreferenced orphans (vacuumable) and its version number was
-    never part of the readable history. The pointer replace (os.replace
-    of a FILE, atomic on POSIX) is monotonic, same rule as
+    never part of the readable history. Manifest and pointer are each
+    an `fsio.atomic_file` (fsynced, replaced, directory fsynced), so
+    the pointer never reaches disk before the manifest and generations
+    it names. The pointer advance is monotonic, same rule as
     merge.py::_advance_pointer; older manifests get a supersession
     marker so vacuum's grace clock runs on time-since-displaced."""
 
-    tmp = os.path.join(path, f"_LATEST.tmp-{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        f.write(str(v))
-    with open(os.path.join(path, "_COMMITLOCK"), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            current = -1
-            latest = os.path.join(path, "_LATEST")
-            if os.path.exists(latest):
-                with open(latest) as f:
-                    current = int(f.read().strip() or -1)
-            if v > current:
-                # PHANTOM sweep: a merger that died between its
-                # manifest write and its pointer replace left a
-                # manifest > current. Once our pointer advances past
-                # that number it would become readable committed
-                # history holding a never-committed batch — so purge
-                # every uncommitted manifest first. Safe under
-                # _COMMITLOCK: a LIVE merger writes its manifest and
-                # advances the pointer inside this same lock, so any
-                # >current manifest seen here belongs to a dead one.
-                for ph in _list_versions(path):
-                    if ph > current and ph != v:
-                        os.unlink(_manifest_path(path, ph))
-                stamp = _write_manifest(
-                    path, v, buckets, n_buckets, schema, stats, op, dv,
-                    deltas, dead_phys, base_full=base_full,
-                    changed=changed,
-                )
-                os.replace(tmp, latest)
-                # commit-log line AFTER the pointer lands (the commit
-                # is durable at the replace; a crash right here just
-                # leaves this version to history()'s manifest-load
-                # fallback): one tiny JSONL row so history/version_at
-                # stay O(V x LINE), never O(V x manifest) — at 4096
-                # buckets a stats-bearing manifest is ~1.9 MB and
-                # loading 300 of them cost 14.7 s (MANIFESTBENCH_4096)
-                rows_total = bytes_total = None
-                if stats is not None:
-                    rows_total = sum(s["rows"] for s in stats.values())
-                    bytes_total = sum(s["bytes"] for s in stats.values())
-                    # delta generations count into the ledger totals
-                    # (rows become an upper bound until a fold, exactly
-                    # like DV-deleted rows)
-                    for lst in (deltas or {}).values():
-                        rows_total += sum(d["stats"]["rows"] for d in lst)
-                        bytes_total += sum(
-                            d["stats"]["bytes"] for d in lst
-                        )
-                line = json.dumps(
-                    {
-                        "v": v,
-                        "op": op,
-                        "committed_at": stamp,
-                        "n_buckets": n_buckets,
-                        "buckets": len(buckets),
-                        "rows": rows_total,
-                        "bytes": bytes_total,
-                        "n_columns": (
-                            len(schema["fields"])
-                            if schema is not None
-                            else None
-                        ),
-                    },
-                    sort_keys=True,
-                )
-                with open(os.path.join(path, HISTORY_LOG), "a") as hf:
-                    hf.write(line + "\n")
-                for old in _list_versions(path):
-                    if old < v:
-                        marker = os.path.join(path, f"v-{old}.superseded")
-                        if not os.path.exists(marker):
-                            with open(marker, "w") as mf:
-                                mf.write(str(v))
-            else:
-                os.unlink(tmp)
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
+    with fsio.locked(f"{path}/_COMMITLOCK"):
+        current = -1
+        latest = os.path.join(path, "_LATEST")
+        if os.path.exists(latest):
+            with open(latest) as f:
+                current = int(f.read().strip() or -1)
+        if v <= current:
+            return
+        # PHANTOM sweep: a merger that died between its manifest write
+        # and its pointer replace left a manifest > current. Once our
+        # pointer advances past that number it would become readable
+        # committed history holding a never-committed batch — so purge
+        # every uncommitted manifest first. Safe under _COMMITLOCK: a
+        # LIVE merger writes its manifest and advances the pointer
+        # inside this same lock, so any >current manifest seen here
+        # belongs to a dead one.
+        for ph in _list_versions(path):
+            if ph > current and ph != v:
+                os.unlink(_manifest_path(path, ph))
+        stamp = _write_manifest(
+            path, v, buckets, n_buckets, schema, stats, op, dv,
+            deltas, dead_phys, base_full=base_full, changed=changed,
+        )
+        with fsio.atomic_file(latest) as f:
+            f.write(str(v))
+        # commit-log line AFTER the pointer lands (the commit is durable
+        # once the pointer's replace and its directory fsync returned; a
+        # crash right here just leaves this version to history()'s
+        # manifest-load fallback): one tiny JSONL row so
+        # history/version_at stay O(V x LINE), never O(V x manifest) —
+        # at 4096 buckets a stats-bearing manifest is ~1.9 MB and
+        # loading 300 of them cost 14.7 s (MANIFESTBENCH_4096)
+        rows_total = bytes_total = None
+        if stats is not None:
+            rows_total = sum(s["rows"] for s in stats.values())
+            bytes_total = sum(s["bytes"] for s in stats.values())
+            # delta generations count into the ledger totals (rows
+            # become an upper bound until a fold, exactly like
+            # DV-deleted rows)
+            for lst in (deltas or {}).values():
+                rows_total += sum(d["stats"]["rows"] for d in lst)
+                bytes_total += sum(d["stats"]["bytes"] for d in lst)
+        line = json.dumps(
+            {
+                "v": v,
+                "op": op,
+                "committed_at": stamp,
+                "n_buckets": n_buckets,
+                "buckets": len(buckets),
+                "rows": rows_total,
+                "bytes": bytes_total,
+                "n_columns": (
+                    len(schema["fields"]) if schema is not None else None
+                ),
+            },
+            sort_keys=True,
+        )
+        with open(os.path.join(path, HISTORY_LOG), "a") as hf:
+            hf.write(line + "\n")
+        for old in _list_versions(path):
+            if old < v:
+                marker = os.path.join(path, f"v-{old}.superseded")
+                if not os.path.exists(marker):
+                    with open(marker, "w") as mf:
+                        mf.write(str(v))
 
 
 class ConstraintViolation(ValueError):
@@ -1976,7 +1947,7 @@ def write_bucket_table_versioned(
     os.makedirs(path, exist_ok=True)
     meta_path = os.path.join(path, BUCKET_META)
     # unpersist (if persisted) before the lock is released
-    with _merge_lock(path), contextlib.ExitStack() as cleanup:
+    with fsio.locked(f"{path}/_MERGELOCK"), contextlib.ExitStack() as cleanup:
         # the existing-version probe happens UNDER the merge lock: read
         # before it and a concurrent merge could advance the pointer,
         # making our _commit a silent monotonic no-op while we report
@@ -2017,7 +1988,7 @@ def write_bucket_table_versioned(
             _enforce_constraints(df, constraints, path)
         if existing_v is None:
             # fresh table: the meta must exist before the first commit
-            with open(meta_path, "w") as f:
+            with fsio.atomic_file(meta_path) as f:
                 json.dump(meta, f)
         gens = _write_generations(df, path, key, n_buckets, size=(None, (), df))
         stats = {i: _harvest_stats(path, i, g) for i, g in gens.items()}
@@ -2029,10 +2000,8 @@ def write_bucket_table_versioned(
             # mid-write must not leave meta describing a load that
             # never committed (readers stay on the old version AND the
             # old constraints)
-            tmp = f"{meta_path}.tmp-{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as f:
+            with fsio.atomic_file(meta_path) as f:
                 json.dump(meta, f)
-            os.replace(tmp, meta_path)
     return v
 
 
@@ -2076,7 +2045,7 @@ def init_bucket_table_versioned(
                 f"bucket key {key!r}"
             )
         meta["mor_fold"] = mor_fold
-    with open(os.path.join(path, BUCKET_META), "w") as f:
+    with fsio.atomic_file(os.path.join(path, BUCKET_META)) as f:
         json.dump(meta, f)
     _commit(path, 1, {}, n_buckets, op="init")
     return 1
@@ -2602,7 +2571,7 @@ def _write_generations(
             src = f"{staging}/bucket={i}"
             if os.path.isdir(src):
                 os.makedirs(f"{path}/bucket={i}", exist_ok=True)
-                os.rename(src, f"{path}/bucket={i}/{gen}")
+                fsio.publish_dir(src, f"{path}/bucket={i}/{gen}")
                 out[str(i)] = gen
         if buckets is not None:
             # a custom merger may only return rows whose keys fall in
@@ -2626,7 +2595,7 @@ def _write_generations(
         # also on the crash path: a failed write must not leak its
         # batch-sized staging dir (vacuum additionally sweeps aged
         # .stage-* dirs for the kill -9 case this finally can't cover)
-        shutil.rmtree(staging, ignore_errors=True)
+        fsio.discard(staging)
     return out
 
 
@@ -2962,7 +2931,7 @@ def merge_scoped_versioned(
 
     with open(os.path.join(path, BUCKET_META)) as f:
         meta = json.load(f)
-    with _merge_lock(path):
+    with fsio.locked(f"{path}/_MERGELOCK"):
         cur = latest_version(path)
         full = _load_manifest_full(path, cur)
         prep = _prepare_scoped_merge(
@@ -3002,11 +2971,9 @@ def _post_intent(path: str, buckets) -> str:
     d = os.path.join(path, OCC_INTENT_DIR)
     os.makedirs(d, exist_ok=True)
     name = f"intent-{time.time_ns():020d}-{uuid.uuid4().hex}.json"
-    tmp = os.path.join(d, f".{name}.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"buckets": sorted(int(b) for b in buckets)}, f)
     final = os.path.join(d, name)
-    os.replace(tmp, final)
+    with fsio.atomic_file(final) as f:
+        json.dump({"buckets": sorted(int(b) for b in buckets)}, f)
     return final
 
 
@@ -3226,7 +3193,7 @@ def _merge_scoped_versioned_occ_loop(
         conflict = None
         full_reset = False
         retry_buckets: set[int] = set()
-        with _merge_lock(path):
+        with fsio.locked(f"{path}/_MERGELOCK"):
             cur = latest_version(path)
             cur_full = (
                 base_full if cur == base_v
@@ -3452,7 +3419,7 @@ def merge_scoped_versioned_mor(
         # OCC takes it only for commit validation
         with contextlib.ExitStack() as held:
             if not occ:
-                held.enter_context(_merge_lock(path))
+                held.enter_context(fsio.locked(f"{path}/_MERGELOCK"))
             result = _mor_attempt(
                 spark, path, meta, updates, now, constraints, max_depth,
             )
@@ -3468,7 +3435,7 @@ def merge_scoped_versioned_mor(
             if occ:
                 if pre_commit_hook is not None:
                     pre_commit_hook()
-                held.enter_context(_merge_lock(path))
+                held.enter_context(fsio.locked(f"{path}/_MERGELOCK"))
                 cur2 = latest_version(path)
                 if cur2 == result["cur"]:
                     v = result["publish"](result["full"])
@@ -3903,7 +3870,7 @@ def alter_bucket_table_versioned(
                 f"alter touches column(s) {hit} referenced by the "
                 "mor_fold policy — not renameable in place"
             )
-    with _merge_lock(path):
+    with fsio.locked(f"{path}/_MERGELOCK"):
         cur = latest_version(path)
         full = _load_manifest_full(path, cur)
         schema = full.get("schema")
@@ -3972,7 +3939,7 @@ def compact_versioned(
     with open(os.path.join(path, BUCKET_META)) as f:
         meta = json.load(f)
     key = meta["key"]
-    with _merge_lock(path):
+    with fsio.locked(f"{path}/_MERGELOCK"):
         cur = latest_version(path)
         full = _load_manifest_full(path, cur)
         n_buckets = full["n_buckets"]
@@ -4063,7 +4030,7 @@ def rebucket_versioned(
     with open(os.path.join(path, BUCKET_META)) as f:
         meta = _json.load(f)
     key = meta["key"]
-    with _merge_lock(path):
+    with fsio.locked(f"{path}/_MERGELOCK"):
         cur = latest_version(path)
         full = _load_manifest_full(path, cur)
         old_n = full["n_buckets"]
@@ -4107,12 +4074,8 @@ def rebucket_versioned(
         # enforcement for all later merges
         new_meta = dict(meta)
         new_meta["n_buckets"] = new_n_buckets
-        tmp_meta = os.path.join(
-            path, f"{BUCKET_META}.tmp-{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp_meta, "w") as f:
+        with fsio.atomic_file(os.path.join(path, BUCKET_META)) as f:
             _json.dump(new_meta, f)
-        os.replace(tmp_meta, os.path.join(path, BUCKET_META))
     return {
         "version": v, "n_buckets_before": old_n,
         "n_buckets_after": new_n_buckets,
@@ -4258,7 +4221,7 @@ def optimize_versioned(
     with open(os.path.join(path, BUCKET_META)) as f:
         meta = json.load(f)
     key = meta["key"]
-    with _merge_lock(path):
+    with fsio.locked(f"{path}/_MERGELOCK"):
         cur = latest_version(path)
         full = _load_manifest_full(path, cur)
         n_buckets = full["n_buckets"]
@@ -5155,132 +5118,117 @@ def vacuum_bucket_versions(
 
     removed_versions: list[int] = []
     removed_gens: list[str] = []
-    with _merge_lock(path):
-        with open(os.path.join(path, "_COMMITLOCK"), "w") as clock_:
-            fcntl.flock(clock_, fcntl.LOCK_EX)
-            try:
-                committed = latest_version(path)
-                versions = _list_versions(path)
-                now = time.time()
-                doomed: list[int] = []
-                for v in versions[:-keep] if keep else versions:
-                    if v == committed or (pin and v in pin):
-                        continue
-                    marker = os.path.join(path, f"v-{v}.superseded")
-                    if not os.path.exists(marker):
-                        continue  # never displaced -> not provably dead
-                    if now - os.path.getmtime(marker) < grace_seconds:
-                        continue
-                    doomed.append(v)
-                doomed_set = set(doomed)
-                # MATERIALIZE-BEFORE-RECLAIM: a surviving delta root
-                # whose chain base is about to vanish is rewritten as
-                # a self-contained checkpoint FIRST (atomic replace,
-                # same resolved content — readers mid-walk re-resolve
-                # via _load_root's retry). Chains are contiguous
-                # (root_base == v-1), so checking each survivor's
-                # immediate base covers every doomed middle hop.
-                for v in versions:
-                    if v in doomed_set:
-                        continue
-                    raw = _load_root_raw(path, v)
-                    if (
-                        "root_base" in raw
-                        and raw["root_base"] in doomed_set
-                    ):
-                        full_root = _load_root(path, v)
-                        tmp = os.path.join(
-                            path, f".manifest-tmp-{uuid.uuid4().hex[:8]}"
-                        )
-                        with open(tmp, "w") as f:
-                            json.dump(full_root, f, indent=0,
-                                      sort_keys=True)
-                        os.replace(tmp, _manifest_path(path, v))
-                referenced = set()
-                dv_referenced = set()
-                shard_referenced = set()
-                # every surviving manifest loads before anything is
-                # removed, so a table vacuum cannot read (one holding a
-                # removed layout's entries) is left as it was
-                for v in versions:
-                    if v in doomed_set:
-                        continue
-                    root = _load_root(path, v)
-                    # shard files referenced by any surviving
-                    # root stay; the rest are displaced history or a
-                    # crashed commit's orphans (grace-aged below)
-                    for e in root["shards"].values():
-                        shard_referenced.add(e["f"])
-                    m_full = _slice_from_root(path, root, None)
-                    for i, g in m_full["buckets"].items():
-                        referenced.add(_gen_data_path(path, i, g))
-                    # merge-on-read delta generations are LIVE data —
-                    # reclaiming one would drop committed rows
-                    for i, lst in (m_full.get("deltas") or {}).items():
-                        for d in lst:
-                            referenced.add(f"{path}/bucket={i}/{d['g']}")
-                    for names in (m_full.get("dv") or {}).values():
-                        for e in names:
-                            dv_referenced.add(f"{path}/{_dv_ref(e)[0]}")
-                for v in doomed:
-                    os.unlink(_manifest_path(path, v))
-                    os.unlink(os.path.join(path, f"v-{v}.superseded"))
-                    removed_versions.append(v)
-                for gdir in _glob.glob(f"{path}/bucket=*/g-*"):
-                    if gdir in referenced:
-                        continue
-                    if now - os.path.getmtime(gdir) < grace_seconds:
-                        continue
-                    shutil.rmtree(gdir, ignore_errors=True)
-                    removed_gens.append(gdir)
-                for dvdir in _glob.glob(f"{path}/dv-*"):
-                    if dvdir in dv_referenced:
-                        continue
-                    if now - os.path.getmtime(dvdir) < grace_seconds:
-                        continue
-                    shutil.rmtree(dvdir, ignore_errors=True)
-                    removed_gens.append(dvdir)
-                # staging dirs a kill -9'd writer left behind (its
-                # try/finally never ran); we hold _MERGELOCK so no
-                # writer is mid-stage
-                for sdir in _glob.glob(f"{path}/.stage-g-*"):
-                    if now - os.path.getmtime(sdir) < grace_seconds:
-                        continue
-                    shutil.rmtree(sdir, ignore_errors=True)
-                    removed_gens.append(sdir)
-                mdir = os.path.join(path, MANIFEST_DIR)
-                if os.path.isdir(mdir):
-                    for fn in os.listdir(mdir):
-                        if fn in shard_referenced:
-                            continue
-                        fp = os.path.join(mdir, fn)
-                        if now - os.path.getmtime(fp) < grace_seconds:
-                            continue
-                        os.unlink(fp)
-                        removed_gens.append(fp)
-                if removed_versions:
-                    # compact the commit log to surviving versions —
-                    # history == what time travel can still serve, and
-                    # the log must not grow past the vacuum horizon.
-                    # Atomic rewrite under both locks (no commit can
-                    # interleave an append)
-                    log = _read_history_log(path)
-                    survivors = set(_list_versions(path))
-                    tmp_log = os.path.join(
-                        path, f".hist-tmp-{uuid.uuid4().hex[:8]}"
-                    )
-                    with open(tmp_log, "w") as hf:
-                        for v in sorted(log):
-                            if v in survivors:
-                                hf.write(
-                                    json.dumps(log[v], sort_keys=True)
-                                    + "\n"
-                                )
-                    os.replace(
-                        tmp_log, os.path.join(path, HISTORY_LOG)
-                    )
-            finally:
-                fcntl.flock(clock_, fcntl.LOCK_UN)
+    with fsio.locked(f"{path}/_MERGELOCK"), fsio.locked(
+        f"{path}/_COMMITLOCK"
+    ):
+        committed = latest_version(path)
+        versions = _list_versions(path)
+        now = time.time()
+        doomed: list[int] = []
+        for v in versions[:-keep] if keep else versions:
+            if v == committed or (pin and v in pin):
+                continue
+            marker = os.path.join(path, f"v-{v}.superseded")
+            if not os.path.exists(marker):
+                continue  # never displaced -> not provably dead
+            if now - os.path.getmtime(marker) < grace_seconds:
+                continue
+            doomed.append(v)
+        doomed_set = set(doomed)
+        # MATERIALIZE-BEFORE-RECLAIM: a surviving delta root
+        # whose chain base is about to vanish is rewritten as
+        # a self-contained checkpoint FIRST (atomic replace,
+        # same resolved content — readers mid-walk re-resolve
+        # via _load_root's retry). Chains are contiguous
+        # (root_base == v-1), so checking each survivor's
+        # immediate base covers every doomed middle hop.
+        for v in versions:
+            if v in doomed_set:
+                continue
+            raw = _load_root_raw(path, v)
+            if (
+                "root_base" in raw
+                and raw["root_base"] in doomed_set
+            ):
+                full_root = _load_root(path, v)
+                with fsio.atomic_file(_manifest_path(path, v)) as f:
+                    json.dump(full_root, f, indent=0, sort_keys=True)
+        referenced = set()
+        dv_referenced = set()
+        shard_referenced = set()
+        # every surviving manifest loads before anything is
+        # removed, so a table vacuum cannot read (one holding a
+        # removed layout's entries) is left as it was
+        for v in versions:
+            if v in doomed_set:
+                continue
+            root = _load_root(path, v)
+            # shard files referenced by any surviving
+            # root stay; the rest are displaced history or a
+            # crashed commit's orphans (grace-aged below)
+            for e in root["shards"].values():
+                shard_referenced.add(e["f"])
+            m_full = _slice_from_root(path, root, None)
+            for i, g in m_full["buckets"].items():
+                referenced.add(_gen_data_path(path, i, g))
+            # merge-on-read delta generations are LIVE data —
+            # reclaiming one would drop committed rows
+            for i, lst in (m_full.get("deltas") or {}).items():
+                for d in lst:
+                    referenced.add(f"{path}/bucket={i}/{d['g']}")
+            for names in (m_full.get("dv") or {}).values():
+                for e in names:
+                    dv_referenced.add(f"{path}/{_dv_ref(e)[0]}")
+        for v in doomed:
+            os.unlink(_manifest_path(path, v))
+            os.unlink(os.path.join(path, f"v-{v}.superseded"))
+            removed_versions.append(v)
+        for gdir in _glob.glob(f"{path}/bucket=*/g-*"):
+            if gdir in referenced:
+                continue
+            if now - os.path.getmtime(gdir) < grace_seconds:
+                continue
+            fsio.discard(gdir)
+            removed_gens.append(gdir)
+        for dvdir in _glob.glob(f"{path}/dv-*"):
+            if dvdir in dv_referenced:
+                continue
+            if now - os.path.getmtime(dvdir) < grace_seconds:
+                continue
+            fsio.discard(dvdir)
+            removed_gens.append(dvdir)
+        # staging dirs and atomic-write temps a kill -9'd writer left
+        # behind (its try/finally never ran); we hold both locks so no
+        # writer is mid-stage
+        for sdir in _glob.glob(f"{path}/.stage-g-*") + _glob.glob(
+            f"{path}/.*.tmp-*"
+        ):
+            if now - os.path.getmtime(sdir) < grace_seconds:
+                continue
+            fsio.discard(sdir)
+            removed_gens.append(sdir)
+        mdir = os.path.join(path, MANIFEST_DIR)
+        if os.path.isdir(mdir):
+            for fn in os.listdir(mdir):
+                if fn in shard_referenced:
+                    continue
+                fp = os.path.join(mdir, fn)
+                if now - os.path.getmtime(fp) < grace_seconds:
+                    continue
+                os.unlink(fp)
+                removed_gens.append(fp)
+        if removed_versions:
+            # compact the commit log to surviving versions —
+            # history == what time travel can still serve, and
+            # the log must not grow past the vacuum horizon.
+            # Atomic rewrite under both locks (no commit can
+            # interleave an append)
+            log = _read_history_log(path)
+            survivors = set(_list_versions(path))
+            with fsio.atomic_file(os.path.join(path, HISTORY_LOG)) as hf:
+                for v in sorted(log):
+                    if v in survivors:
+                        hf.write(json.dumps(log[v], sort_keys=True) + "\n")
     return {
         "removed_versions": removed_versions,
         "removed_gens": removed_gens,

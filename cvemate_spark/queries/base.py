@@ -19,6 +19,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import SCRATCH_ROOT
+
 SparkBuilder = Callable[[SparkSession, str], DataFrame]
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -32,10 +34,6 @@ TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 # are always sharded (format 2), monolithic roots no longer load.
 # Epoch 3: `e_merge_scoped` stages a versioned table where it staged
 # an unversioned bucket table.
-SCRATCH_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".scratch",
-)
 LAYOUT_EPOCH = 3
 
 

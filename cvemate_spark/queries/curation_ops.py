@@ -36,7 +36,7 @@ from ..functions.text import duck_str_hash
 from ..operators.layout import zorder_expr_duck, zorder_expr_spark
 from ..operators.sketch import DEPTH, WIDTH, _bucket_expr_duck, cms_build, cms_estimate
 from ..tables import load_table
-from .base import Registry
+from .base import SCRATCH_ROOT, Registry
 
 REG = Registry()
 
@@ -712,7 +712,7 @@ def e_zorder_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # deterministic per-input path: re-runs overwrite instead of leaking
     path = os.path.join(
-        "/root/repo/.scratch",
+        SCRATCH_ROOT,
         f"zpart_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
     )
     write_zordered_partitioned(quant, path, "x", "y", n_buckets=64, bits=8)

@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
 
+from .. import fsio
 from ..tables import load_table
 from .base import Registry, TS_FMT_DUCK, TS_FMT_SPARK, scratch_dir
 
@@ -1614,8 +1615,6 @@ def e_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "instead of serving stale versions.",
 )
 def e_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from ..operators.merge import read_versioned, write_versioned
 
     ev = load_table(spark, sf_dir, "events")
@@ -1624,21 +1623,16 @@ def e_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = lambda df: df.groupBy("event_type").agg(  # noqa: E731
         F.count("*").cast("long").alias("cnt")
     )
-    # Crash-safe cache gate: require BOTH committed version dirs, not
-    # just _LATEST — a failure between the v1 and v2 commits would
-    # otherwise leave _LATEST=1 and make every later run skip the
-    # writes and fail on read_versioned(version=2). A partial scratch
-    # dir is rebuilt from zero (version numbers must be exactly 1,2).
-    have_both = os.path.isdir(os.path.join(path, "v-1")) and os.path.isdir(
-        os.path.join(path, "v-2")
-    )
-    if not have_both:
-        if os.path.isdir(path):
-            import shutil
-
-            shutil.rmtree(path)
+    # Crash-safe cache gate: the build's completion marker, not _LATEST
+    # — a failure between the v1 and v2 commits would otherwise leave
+    # _LATEST=1 and make every later run skip the writes and fail on
+    # read_versioned(version=2). A partial scratch dir is rebuilt from
+    # zero (version numbers must be exactly 1,2).
+    def build():
         write_versioned(counts(ev.filter(F.col("event_id") % 2 == 0)), path)
-        write_versioned(counts(ev), path)
+        return write_versioned(counts(ev), path)
+
+    fsio.build_once(path, build)
     v1 = read_versioned(spark, path, version=1).withColumn(
         "version", F.lit(1).cast("int")
     )
@@ -1697,9 +1691,6 @@ INS_OFFSET = 900_000_000  # synthetic insert keys, disjoint from orders
     "not the corpus.",
 )
 def e_merge_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..operators.merge import merge_upsert
     from ..operators.merge_versioned import (
         merge_scoped_versioned,
@@ -1711,10 +1702,8 @@ def e_merge_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
     path = scratch_dir(sf_dir, "orders", "mscope")
-    done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
-    if not os.path.exists(done):
-        if os.path.isdir(path):
-            shutil.rmtree(path)
+
+    def build():
         # initial load through merge_upsert(None, ...) so every bucket
         # file carries the audit columns from day one — merged and
         # untouched buckets then share one schema
@@ -1735,8 +1724,9 @@ def e_merge_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         stats = merge_scoped_versioned(spark, path, batch, now=T_MERGE)
         assert 0 < stats["buckets_touched"] <= MS_BUCKETS
-        with open(done, "w") as f:
-            f.write(str(stats))
+        return str(stats)
+
+    fsio.build_once(path, build)
     return (
         read_bucket_table_versioned(spark, path)
         .groupBy(F.col("o_orderstatus").alias("status"))
@@ -1817,9 +1807,6 @@ def e_merge_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
     "in tests/test_merge_versioned.py.",
 )
 def e_merge_scoped_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..operators.merge import merge_upsert
     from ..operators.merge_versioned import (
         merge_scoped_versioned,
@@ -1831,10 +1818,8 @@ def e_merge_scoped_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
     path = scratch_dir(sf_dir, "orders", "msver")
-    done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
-    if not os.path.exists(done):
-        if os.path.isdir(path):
-            shutil.rmtree(path)
+
+    def build():
         write_bucket_table_versioned(
             merge_upsert(None, orders, key="o_orderkey", now=T_MERGE),
             path, key="o_orderkey", n_buckets=MS_BUCKETS,
@@ -1871,8 +1856,9 @@ def e_merge_scoped_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, path, batch_b, now=T_MERGE, deleted_col="_deleted"
         )
         assert (s1["version"], s2["version"]) == (2, 3)
-        with open(done, "w") as f:
-            f.write(f"{s1}\n{s2}\n")
+        return f"{s1}\n{s2}\n"
+
+    fsio.build_once(path, build)
     hist = None
     for v in (1, 2, 3):
         snap = read_bucket_table_versioned(spark, path, version=v).select(
@@ -1996,9 +1982,6 @@ def e_merge_scoped_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_merge_versioned.py.",
 )
 def e_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..operators.merge import merge_upsert
     from ..operators.merge_versioned import (
         change_feed,
@@ -2011,10 +1994,8 @@ def e_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
     path = scratch_dir(sf_dir, "orders", "cdf")
-    done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
-    if not os.path.exists(done):
-        if os.path.isdir(path):
-            shutil.rmtree(path)
+
+    def build():
         write_bucket_table_versioned(
             merge_upsert(None, orders, key="o_orderkey", now=T_MERGE),
             path, key="o_orderkey", n_buckets=MS_BUCKETS,
@@ -2056,8 +2037,9 @@ def e_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, path, batch_b, now=T_MERGE, deleted_col="_deleted"
         )
         assert (s1["version"], s2["version"]) == (2, 4)
-        with open(done, "w") as f:
-            f.write(f"{s1}\n{s2}\n")
+        return f"{s1}\n{s2}\n"
+
+    fsio.build_once(path, build)
     # the pruning contract: an up-to-date consumer touches no data,
     # and a rebucket-only span is recognized as content-neutral
     assert change_feed(spark, path, 4) is None
@@ -2141,9 +2123,6 @@ def e_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "own batch-bounded commits; reads add one manifest resolution.",
 )
 def e_catalog_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..operators.catalog import (
         catalog_init,
         catalog_read,
@@ -2160,10 +2139,8 @@ def e_catalog_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = scratch_dir(sf_dir, "orders", "cat")
     head, stat, cat = f"{root}/head", f"{root}/stat", f"{root}/cat"
-    done = f"{root}/_MERGED"  # crash-safe gate: rebuilt unless complete
-    if not os.path.exists(done):
-        if os.path.isdir(root):
-            shutil.rmtree(root)
+
+    def build():
         write_bucket_table_versioned(
             merge_upsert(
                 None, orders.select("o_orderkey", "o_totalprice"),
@@ -2204,8 +2181,9 @@ def e_catalog_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assert (r1["catalog_version"], r2["catalog_version"]) == (2, 3)
         assert r2["tables"] == {"head": 2, "stat": 2}
-        with open(done, "w") as f:
-            f.write(f"{r1}\n{r2}\n")
+        return f"{r1}\n{r2}\n"
+
+    fsio.build_once(root, build)
     hist = None
     for v in (2, 3):
         h = catalog_read(spark, cat, "head", version=v)
@@ -2269,9 +2247,6 @@ def e_catalog_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     "REFERENCE in the new pointer (zero bytes copied).",
 )
 def e_catalog_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..operators.catalog import (
         catalog_init,
         catalog_read,
@@ -2291,10 +2266,8 @@ def e_catalog_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = scratch_dir(sf_dir, "orders", "catfeed")
     head, stat, cat = f"{root}/head", f"{root}/stat", f"{root}/cat"
     rep = f"{root}/replica"
-    done = f"{root}/_MERGED"  # crash-safe gate: rebuilt unless complete
-    if not os.path.exists(done):
-        if os.path.isdir(root):
-            shutil.rmtree(root)
+
+    def build():
         write_bucket_table_versioned(
             merge_upsert(
                 None, orders.select("o_orderkey", "o_totalprice"),
@@ -2362,8 +2335,9 @@ def e_catalog_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert not rc["advanced"]
         r4 = replicate_catalog(spark, cat, rep)
         assert r4["advanced"] and r4["applied_version"] == 4
-        with open(done, "w") as f:
-            f.write(f"{r0}\n{r3}\n{r4}\n")
+        return f"{r0}\n{r3}\n{r4}\n"
+
+    fsio.build_once(root, build)
     rep_pair = read_catalog_replica(spark, rep, "head").join(
         read_catalog_replica(spark, rep, "stat"), "o_orderkey"
     )
@@ -2439,9 +2413,6 @@ def e_catalog_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "versions each member's own vacuum reclaims.",
 )
 def e_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..operators.catalog import (
         branch_txn,
         catalog_branch,
@@ -2464,10 +2435,8 @@ def e_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = scratch_dir(sf_dir, "orders", "wap")
     tab, cat = f"{root}/orders_t", f"{root}/cat"
-    done = f"{root}/_MERGED"  # crash-safe gate: rebuilt unless complete
-    if not os.path.exists(done):
-        if os.path.isdir(root):
-            shutil.rmtree(root)
+
+    def build():
         write_bucket_table_versioned(
             merge_upsert(None, orders, key="o_orderkey", now=T_MERGE),
             tab, key="o_orderkey", n_buckets=MS_BUCKETS,
@@ -2498,8 +2467,9 @@ def e_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
         pub = publish_branch(spark, cat, "audit")
         assert pub["fast_forward"] is True
         assert catalog_latest(cat) == 3
-        with open(done, "w") as f:
-            f.write(f"{pub}\n")
+        return f"{pub}\n"
+
+    fsio.build_once(root, build)
     hist = None
     for phase, kw in (
         ("pre", {"tag": "release-1"}),  # the immutable release pin
@@ -2567,9 +2537,6 @@ def e_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_merge_versioned.py.",
 )
 def e_merge_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..operators.merge import merge_upsert
     from ..operators.merge_versioned import (
         ConstraintViolation,
@@ -2583,10 +2550,8 @@ def e_merge_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
     path = scratch_dir(sf_dir, "orders", "chk")
-    done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
-    if not os.path.exists(done):
-        if os.path.isdir(path):
-            shutil.rmtree(path)
+
+    def build():
         write_bucket_table_versioned(
             merge_upsert(None, orders, key="o_orderkey", now=T_MERGE),
             path, key="o_orderkey", n_buckets=MS_BUCKETS,
@@ -2598,8 +2563,9 @@ def e_merge_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         s1 = merge_scoped_versioned(spark, path, batch_good, now=T_MERGE)
         assert s1["version"] == 2
-        with open(done, "w") as f:
-            f.write(f"{s1}\n")
+        return f"{s1}\n"
+
+    fsio.build_once(path, build)
     # the violating batch is attempted on EVERY run: rejection must be
     # atomic and repeatable (no generations, no commit, ever)
     batch_bad = orders.filter(F.col("o_orderkey") % 89 == 0).withColumn(
@@ -2676,9 +2642,6 @@ def e_merge_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_merge_versioned.py.",
 )
 def e_versioned_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..operators.merge import merge_upsert
     from ..operators.merge_versioned import (
         merge_scoped_versioned,
@@ -2694,10 +2657,8 @@ def e_versioned_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
     path = scratch_dir(sf_dir, "orders", "skip")
-    done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
-    if not os.path.exists(done):
-        if os.path.isdir(path):
-            shutil.rmtree(path)
+
+    def build():
         # INT96 (Spark's default parquet timestamp encoding) carries no
         # footer min/max; write this table's commits as TIMESTAMP_MICROS
         # so the freshness column is skippable. Restored after.
@@ -2729,10 +2690,11 @@ def e_versioned_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
             s2 = merge_scoped_versioned(spark, path, batch_b, now=t2)
             assert (s1["version"], s2["version"]) == (2, 3)
             assert s2["buckets_touched"] == 1
-            with open(done, "w") as f:
-                f.write(f"{s1}\n{s2}\n")
+            return f"{s1}\n{s2}\n"
         finally:
             spark.conf.set("spark.sql.parquet.outputTimestampType", old_ts)
+
+    fsio.build_once(path, build)
     # the skipping contract: freshness prunes every untouched bucket
     plan = prune_generations(path, "updated_at", t2, None)
     assert len(plan["read"]) == 1 and len(plan["skipped"]) == MS_BUCKETS - 1
@@ -2806,9 +2768,6 @@ def e_versioned_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_merge_versioned.py.",
 )
 def e_versioned_cluster_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..operators.merge import merge_upsert
     from ..operators.merge_versioned import (
         _load_manifest_full,
@@ -2826,10 +2785,8 @@ def e_versioned_cluster_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
     path = scratch_dir(sf_dir, "orders", "clus")
-    done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
-    if not os.path.exists(done):
-        if os.path.isdir(path):
-            shutil.rmtree(path)
+
+    def build():
         old_ts = spark.conf.get("spark.sql.parquet.outputTimestampType")
         spark.conf.set(
             "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
@@ -2863,10 +2820,11 @@ def e_versioned_cluster_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             assert opt2["version"] == 4
             assert opt2["buckets_written"] == len(degraded)
-            with open(done, "w") as f:
-                f.write(f"{opt}\n{s3}\n{opt2}\n")
+            return f"{opt}\n{s3}\n{opt2}\n"
         finally:
             spark.conf.set("spark.sql.parquet.outputTimestampType", old_ts)
+
+    fsio.build_once(path, build)
     # the skipping contract, at BOTH versions: the fully-clustered v2
     # and the merge-then-incrementally-reoptimized latest each read
     # <= 1/3 of their ledgered files for the narrow band (manifest
@@ -2969,9 +2927,6 @@ def e_versioned_cluster_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "evolution boundary, apply law) in tests/test_merge_versioned.py.",
 )
 def e_versioned_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..operators.merge import merge_upsert
     from ..operators.merge_versioned import (
         merge_scoped_versioned,
@@ -2984,10 +2939,8 @@ def e_versioned_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_totalprice", "o_orderstatus", "o_orderpriority"
     )
     path = scratch_dir(sf_dir, "orders", "evo")
-    done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
-    if not os.path.exists(done):
-        if os.path.isdir(path):
-            shutil.rmtree(path)
+
+    def build():
         write_bucket_table_versioned(
             merge_upsert(
                 None, orders.drop("o_orderpriority"),
@@ -3008,8 +2961,9 @@ def e_versioned_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         s2 = merge_scoped_versioned(spark, path, batch_b, now=T_MERGE)
         assert (s1["version"], s2["version"]) == (2, 3)
-        with open(done, "w") as f:
-            f.write(f"{s1}\n{s2}\n")
+        return f"{s1}\n{s2}\n"
+
+    fsio.build_once(path, build)
     # the evolution contract, asserted against the committed schemas
     assert "prio" not in table_schema(path, 1).fieldNames()
     assert "prio" in table_schema(path, 2).fieldNames()
@@ -3100,9 +3054,6 @@ def e_versioned_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "unreferenced orphans). Laws in tests/test_merge_versioned.py.",
 )
 def e_rebucket_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..operators.merge import merge_upsert
     from ..operators.merge_versioned import (
         merge_scoped_versioned,
@@ -3115,10 +3066,8 @@ def e_rebucket_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
     path = scratch_dir(sf_dir, "orders", "rbk")
-    done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
-    if not os.path.exists(done):
-        if os.path.isdir(path):
-            shutil.rmtree(path)
+
+    def build():
         write_bucket_table_versioned(
             merge_upsert(None, orders, key="o_orderkey", now=T_MERGE),
             path, key="o_orderkey", n_buckets=8,
@@ -3136,8 +3085,9 @@ def e_rebucket_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         s3 = merge_scoped_versioned(spark, path, batch_b, now=T_MERGE)
         assert (s1["version"], s2["version"], s3["version"]) == (2, 3, 4)
         assert s3["n_buckets"] == 32  # post-migration merges: new layout
-        with open(done, "w") as f:
-            f.write(f"{s1}\n{s2}\n{s3}\n")
+        return f"{s1}\n{s2}\n{s3}\n"
+
+    fsio.build_once(path, build)
     hist = None
     for v in (1, 2, 3, 4):
         snap = read_bucket_table_versioned(spark, path, version=v).select(
@@ -3213,8 +3163,6 @@ def e_rebucket_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     "taking N x (read+join+write) serialized wall-clock.",
 )
 def e_merge_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
     import threading
 
     from ..operators.merge import bucket_expr, merge_upsert
@@ -3228,10 +3176,8 @@ def e_merge_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
     path = scratch_dir(sf_dir, "orders", "occver")
-    done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
-    if not os.path.exists(done):
-        if os.path.isdir(path):
-            shutil.rmtree(path)
+
+    def build():
         write_bucket_table_versioned(
             merge_upsert(None, orders, key="o_orderkey", now=T_MERGE),
             path, key="o_orderkey", n_buckets=MS_BUCKETS,
@@ -3283,8 +3229,9 @@ def e_merge_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert sorted(r["rebased"] for r in results.values()) == [
             False, True,
         ]
-        with open(done, "w") as f:
-            f.write(f"{results}\n")
+        return f"{results}\n"
+
+    fsio.build_once(path, build)
     hist = None
     for v in (1, 3):  # v2 content is racy (commit order); v1/v3 exact
         snap = read_bucket_table_versioned(spark, path, version=v).select(
@@ -3382,9 +3329,6 @@ def e_merge_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(bucket bytes / batch bytes) dominates the nightly bill.",
 )
 def e_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..operators.merge import merge_upsert
     from ..operators.merge_versioned import (
         compact_versioned,
@@ -3398,10 +3342,8 @@ def e_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
     path = scratch_dir(sf_dir, "orders", "morver")
-    done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
-    if not os.path.exists(done):
-        if os.path.isdir(path):
-            shutil.rmtree(path)
+
+    def build():
         write_bucket_table_versioned(
             merge_upsert(None, orders, key="o_orderkey", now=T_MERGE),
             path, key="o_orderkey", n_buckets=MS_BUCKETS,
@@ -3457,8 +3399,9 @@ def e_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert (
             s2["version"], s3["version"], s4["version"], s5["version"]
         ) == (2, 3, 4, 5)
-        with open(done, "w") as f:
-            f.write(f"{s2}\n{s3}\n{s4}\n{s5}\n")
+        return f"{s2}\n{s3}\n{s4}\n{s5}\n"
+
+    fsio.build_once(path, build)
     hist = None
     for v in (1, 2, 3, 4, 5):
         snap = read_bucket_table_versioned(spark, path, version=v).select(
@@ -3531,8 +3474,6 @@ def e_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def e_versioned_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
-    import os
-    import shutil
 
     from ..operators.merge import merge_upsert
     from ..operators.merge_versioned import (
@@ -3548,10 +3489,8 @@ def e_versioned_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("status"),
     )
     path = scratch_dir(sf_dir, "orders", "renver")
-    done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
-    if not os.path.exists(done):
-        if os.path.isdir(path):
-            shutil.rmtree(path)
+
+    def build():
         write_bucket_table_versioned(
             merge_upsert(None, orders, key="o_orderkey", now=T_MERGE),
             path, key="o_orderkey", n_buckets=MS_BUCKETS,
@@ -3575,8 +3514,9 @@ def e_versioned_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert new_dirs
         raw_cols = spark.read.parquet(*new_dirs).columns
         assert "price" in raw_cols and "amount" not in raw_cols
-        with open(done, "w") as f:
-            f.write(f"{s2}\n{s3}\n")
+        return f"{s2}\n{s3}\n"
+
+    fsio.build_once(path, build)
     v1 = read_bucket_table_versioned(spark, path, version=1)
     pre = (
         v1.groupBy(F.col("status").alias("tag"))
@@ -3658,9 +3598,6 @@ def e_versioned_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     "commits for the monolithic layout this replaced.",
 )
 def e_manifest_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..operators.merge import merge_upsert
     from ..operators.merge_versioned import (
         _load_root,
@@ -3678,10 +3615,8 @@ def e_manifest_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     min_key = orders.agg(F.min("k")).collect()[0][0]  # 1 driver value
     path = scratch_dir(sf_dir, "orders", "mshard")
-    done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
-    if not os.path.exists(done):
-        if os.path.isdir(path):
-            shutil.rmtree(path)
+
+    def build():
         write_bucket_table_versioned(
             merge_upsert(None, orders, key="k", now=T_MERGE),
             path, key="k", n_buckets=MS_BUCKETS,
@@ -3709,8 +3644,9 @@ def e_manifest_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
         # survivors keep every referenced shard (reads stay exact)
         vacuum_bucket_versions(path, keep=2)
         assert (s2["version"], s3["version"]) == (2, 3)
-        with open(done, "w") as f:
-            f.write(f"{s2}\n{s3}\n")
+        return f"{s2}\n{s3}\n"
+
+    fsio.build_once(path, build)
     v2 = read_bucket_table_versioned(spark, path, version=2)
     pre = (
         v2.groupBy(F.col("status").alias("tag"))

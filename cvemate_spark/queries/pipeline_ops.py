@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from .. import fsio
 from ..pipeline import build_cve_table, score
 from ..operators.merge import merge_upsert
 from ..tables import load_table
@@ -137,9 +138,6 @@ def cve_pipeline_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cost ∝ batch's bucket footprint, one manifest/pointer commit.",
 )
 def cve_pipeline_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..operators.merge_versioned import (
         change_feed,
         history,
@@ -154,10 +152,8 @@ def cve_pipeline_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     t_merge = "2026-01-01 00:00:00"
 
     path = scratch_dir(sf_dir, "orders", "cvever")
-    done = f"{path}/_MERGED"  # crash-safe gate: rebuilt unless complete
-    if not os.path.exists(done):
-        if os.path.isdir(path):
-            shutil.rmtree(path)
+
+    def build():
         init_bucket_table_versioned(path, key="id", n_buckets=32)
         for batch in (
             _nvd_batch(orders),
@@ -167,8 +163,9 @@ def cve_pipeline_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         ):
             merge_scoped_versioned(spark, path, batch, now=t_merge)
         assert latest_version(path) == 5
-        with open(done, "w") as f:
-            f.write("5\n")
+        return 5
+
+    fsio.build_once(path, build)
     # provenance: empty init + one version per feed commit
     assert [e["op"] for e in history(path)] == ["init"] + ["merge"] * 4
     # CDC sees through the idempotent re-apply: its feed is EMPTY (the

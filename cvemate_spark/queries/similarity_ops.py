@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import fsio
 from ..operators.similarity import (
     brute_topk,
     duck_cosine,
@@ -13,7 +14,7 @@ from ..operators.similarity import (
     semdedup,
 )
 from ..tables import load_table
-from .base import Registry
+from .base import SCRATCH_ROOT, Registry
 
 REG = Registry()
 
@@ -160,10 +161,13 @@ def ann_ivf_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = hashlib.md5(
         f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:ivfserve-s50".encode()
     ).hexdigest()[:12]
-    path = f"/root/repo/.scratch/ivfserve_{key}"
-    if not os.path.isdir(f"{path}/vec_index"):  # last-written piece
-        emb = load_table(spark, sf_dir, "embeddings")
-        write_ivf_index(emb, path, centroid_stride=50)
+    path = f"{SCRATCH_ROOT}/ivfserve_{key}"
+    fsio.build_once(
+        path,
+        lambda: write_ivf_index(
+            load_table(spark, sf_dir, "embeddings"), path, centroid_stride=50
+        ),
+    )
     return ivf_topk_indexed_batch(
         spark, path, n_queries=8, k=10, n_probe=3
     ).orderBy("q_id", "vec_id")

@@ -26,8 +26,9 @@ import zipfile
 
 import pyarrow.parquet as pq
 
+from .. import SCRATCH_ROOT as SCRATCH, fsio
+
 LANDING_VERSION = 4
-SCRATCH = "/root/repo/.scratch"
 
 EPSS_LIMIT = 2000
 KEV_LIMIT = 500
@@ -71,10 +72,6 @@ def _rows(sf_dir: str, table: str, cols: list[str], key: str, limit: int) -> lis
     return rows[:limit]
 
 
-def _done(path: str) -> bool:
-    return os.path.exists(path)
-
-
 # ----------------------------------------------------------- SRC-6 EPSS
 def gen_epss_csv(sf_dir: str) -> str:
     """Gzipped CSV with a '#' metadata comment line (epss_handler.py:72-151
@@ -82,28 +79,27 @@ def gen_epss_csv(sf_dir: str) -> str:
     rebuild the exact decimal strings in SQL. Every event_id % 97 == 0
     row has an empty percentile (exercises the completeness filter)."""
     out = f"{landing_dir(sf_dir)}/epss_scores.csv.gz"
-    if _done(out):
-        return out
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    rows = _rows(sf_dir, "events", ["event_id"], "event_id", EPSS_LIMIT)
-    tmp = out + ".tmp"
-    # gzip.open stamps the wall clock into the header MTIME field —
-    # the same nondeterminism the zip generator had; pin mtime=0 so
-    # regeneration is byte-identical (determinism law in test_new_ops)
-    import io
 
-    with open(tmp, "wb") as raw, gzip.GzipFile(
-        filename="", mode="wb", fileobj=raw, mtime=0
-    ) as gz, io.TextIOWrapper(gz, newline="") as f:
-        f.write(
-            f"#model_version:{EPSS_MODEL_VERSION},score_date:{EPSS_SCORE_DATE}\n"
-        )
-        f.write("cve,epss,percentile\n")
-        for r in rows:
-            eid = r["event_id"]
-            pct = "" if eid % 97 == 0 else f"0.{eid % 100:02d}"
-            f.write(f"CVE-2024-{eid},0.{eid % 1000:03d},{pct}\n")
-    os.rename(tmp, out)
+    def build():
+        rows = _rows(sf_dir, "events", ["event_id"], "event_id", EPSS_LIMIT)
+        # gzip.open stamps the wall clock into the header MTIME field —
+        # the same nondeterminism the zip generator had; pin mtime=0 so
+        # regeneration is byte-identical (determinism law in test_new_ops)
+        import io
+
+        with fsio.atomic_file(out, "wb") as raw, gzip.GzipFile(
+            filename="", mode="wb", fileobj=raw, mtime=0
+        ) as gz, io.TextIOWrapper(gz, newline="") as f:
+            f.write(
+                f"#model_version:{EPSS_MODEL_VERSION},score_date:{EPSS_SCORE_DATE}\n"
+            )
+            f.write("cve,epss,percentile\n")
+            for r in rows:
+                eid = r["event_id"]
+                pct = "" if eid % 97 == 0 else f"0.{eid % 100:02d}"
+                f.write(f"CVE-2024-{eid},0.{eid % 1000:03d},{pct}\n")
+
+    fsio.build_once(out, build)
     return out
 
 
@@ -112,32 +108,31 @@ def gen_kev_json(sf_dir: str) -> str:
     """KEV catalog JSON {catalogVersion, dateReleased, vulnerabilities[]}
     (cisa_handler.py:47-67 shape) from the first KEV_LIMIT orders."""
     out = f"{landing_dir(sf_dir)}/kev_catalog.json"
-    if _done(out):
-        return out
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    rows = _rows(
-        sf_dir,
-        "orders",
-        ["o_orderkey", "o_orderstatus", "o_orderpriority"],
-        "o_orderkey",
-        KEV_LIMIT,
-    )
-    cat = {
-        "catalogVersion": "2026.03.15",
-        "dateReleased": "2026-03-15T00:00:00.000Z",
-        "vulnerabilities": [
-            {
-                "cveID": f"CVE-2020-{r['o_orderkey']}",
-                "vendorProject": r["o_orderstatus"],
-                "product": r["o_orderpriority"],
-            }
-            for r in rows
-        ],
-    }
-    tmp = out + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(cat, f)
-    os.rename(tmp, out)
+
+    def build():
+        rows = _rows(
+            sf_dir,
+            "orders",
+            ["o_orderkey", "o_orderstatus", "o_orderpriority"],
+            "o_orderkey",
+            KEV_LIMIT,
+        )
+        cat = {
+            "catalogVersion": "2026.03.15",
+            "dateReleased": "2026-03-15T00:00:00.000Z",
+            "vulnerabilities": [
+                {
+                    "cveID": f"CVE-2020-{r['o_orderkey']}",
+                    "vendorProject": r["o_orderstatus"],
+                    "product": r["o_orderpriority"],
+                }
+                for r in rows
+            ],
+        }
+        with fsio.atomic_file(out, "w") as f:
+            json.dump(cat, f)
+
+    fsio.build_once(out, build)
     return out
 
 
@@ -147,24 +142,23 @@ def gen_metasploit_json(sf_dir: str) -> str:
     shape); each module lists one CVE and one non-CVE reference so the
     prefix filter is exercised."""
     out = f"{landing_dir(sf_dir)}/msf_modules.json"
-    if _done(out):
-        return out
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    rows = _rows(sf_dir, "orders", ["o_orderkey"], "o_orderkey", MSF_LIMIT)
-    modules = {
-        f"exploit/windows/mod_{r['o_orderkey']}": {
-            "name": f"mod_{r['o_orderkey']}",
-            "fullname": f"exploit/windows/mod_{r['o_orderkey']}",
-            "rank": r["o_orderkey"] % 600,
-            "disclosure_date": None,
-            "references": [f"CVE-2020-{r['o_orderkey']}", f"OSVDB-{r['o_orderkey']}"],
+
+    def build():
+        rows = _rows(sf_dir, "orders", ["o_orderkey"], "o_orderkey", MSF_LIMIT)
+        modules = {
+            f"exploit/windows/mod_{r['o_orderkey']}": {
+                "name": f"mod_{r['o_orderkey']}",
+                "fullname": f"exploit/windows/mod_{r['o_orderkey']}",
+                "rank": r["o_orderkey"] % 600,
+                "disclosure_date": None,
+                "references": [f"CVE-2020-{r['o_orderkey']}", f"OSVDB-{r['o_orderkey']}"],
+            }
+            for r in rows
         }
-        for r in rows
-    }
-    tmp = out + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(modules, f)
-    os.rename(tmp, out)
+        with fsio.atomic_file(out, "w") as f:
+            json.dump(modules, f)
+
+    fsio.build_once(out, build)
     return out
 
 
@@ -173,31 +167,30 @@ def gen_debian_json(sf_dir: str) -> str:
     """Two-level dict {package: {cve_id: details}} (debian_handler.py:52-71
     shape): packages are nation names, CVEs come from customers."""
     out = f"{landing_dir(sf_dir)}/debian_tracker.json"
-    if _done(out):
-        return out
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    cust = _rows(
-        sf_dir,
-        "customer",
-        ["c_custkey", "c_nationkey", "c_mktsegment"],
-        "c_custkey",
-        DEBIAN_LIMIT,
-    )
-    nations = {
-        r["n_nationkey"]: r["n_name"]
-        for r in _rows(sf_dir, "nation", ["n_nationkey", "n_name"], "n_nationkey", 10**6)
-    }
-    tracker: dict[str, dict] = {}
-    for r in cust:
-        pkg = nations[r["c_nationkey"]]
-        tracker.setdefault(pkg, {})[f"CVE-2021-{r['c_custkey']}"] = {
-            "description": r["c_mktsegment"],
-            "scope": "local",
+
+    def build():
+        cust = _rows(
+            sf_dir,
+            "customer",
+            ["c_custkey", "c_nationkey", "c_mktsegment"],
+            "c_custkey",
+            DEBIAN_LIMIT,
+        )
+        nations = {
+            r["n_nationkey"]: r["n_name"]
+            for r in _rows(sf_dir, "nation", ["n_nationkey", "n_name"], "n_nationkey", 10**6)
         }
-    tmp = out + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(tracker, f)
-    os.rename(tmp, out)
+        tracker: dict[str, dict] = {}
+        for r in cust:
+            pkg = nations[r["c_nationkey"]]
+            tracker.setdefault(pkg, {})[f"CVE-2021-{r['c_custkey']}"] = {
+                "description": r["c_mktsegment"],
+                "scope": "local",
+            }
+        with fsio.atomic_file(out, "w") as f:
+            json.dump(tracker, f)
+
+    fsio.build_once(out, build)
     return out
 
 
@@ -206,30 +199,29 @@ def gen_cveorg_zip(sf_dir: str) -> str:
     """Zip of one JSON file per CVE, named CVE-YYYY-NNNN.json, plus two
     decoys a real dump would carry (cveorg_handler.py:57-86 shape)."""
     out = f"{landing_dir(sf_dir)}/cveorg_dump.zip"
-    if _done(out):
-        return out
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    rows = _rows(sf_dir, "documents", ["doc_id", "n_chars"], "doc_id", ZIP_LIMIT)
-    tmp = out + ".tmp"
 
-    def entry(name: str) -> zipfile.ZipInfo:
-        # writestr(name, ...) would stamp the CURRENT wall clock into
-        # each member header, making two generations byte-differ when
-        # they cross a second boundary — pin a fixed timestamp so the
-        # archive is bit-deterministic (the determinism law in
-        # tests/test_new_ops.py flaked exactly this way)
-        return zipfile.ZipInfo(name, date_time=(2020, 1, 1, 0, 0, 0))
+    def build():
+        rows = _rows(sf_dir, "documents", ["doc_id", "n_chars"], "doc_id", ZIP_LIMIT)
 
-    with zipfile.ZipFile(tmp, "w") as z:
-        z.writestr(entry("notes.txt"), "not json\n")
-        z.writestr(entry("summary.json"), json.dumps({"kind": "summary"}))
-        for r in rows:
-            cve = f"CVE-2019-{r['doc_id']:04d}"
-            z.writestr(
-                entry(f"{cve}.json"),
-                json.dumps({"cveId": cve, "nChars": r["n_chars"]}),
-            )
-    os.rename(tmp, out)
+        def entry(name: str) -> zipfile.ZipInfo:
+            # writestr(name, ...) would stamp the CURRENT wall clock into
+            # each member header, making two generations byte-differ when
+            # they cross a second boundary — pin a fixed timestamp so the
+            # archive is bit-deterministic (the determinism law in
+            # tests/test_new_ops.py flaked exactly this way)
+            return zipfile.ZipInfo(name, date_time=(2020, 1, 1, 0, 0, 0))
+
+        with fsio.atomic_file(out, "wb") as raw, zipfile.ZipFile(raw, "w") as z:
+            z.writestr(entry("notes.txt"), "not json\n")
+            z.writestr(entry("summary.json"), json.dumps({"kind": "summary"}))
+            for r in rows:
+                cve = f"CVE-2019-{r['doc_id']:04d}"
+                z.writestr(
+                    entry(f"{cve}.json"),
+                    json.dumps({"cveId": cve, "nChars": r["n_chars"]}),
+                )
+
+    fsio.build_once(out, build)
     return out
 
 
@@ -240,24 +232,23 @@ def gen_delta_log(sf_dir: str) -> str:
     subset that the watermark predicate must exclude
     (cveorg_handler.py:119-156 shape)."""
     out = f"{landing_dir(sf_dir)}/deltaLog.json"
-    if _done(out):
-        return out
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    ids = [r["event_id"] for r in _rows(sf_dir, "events", ["event_id"], "event_id", DELTA_LIMIT)]
-    recent = {
-        "fetchTime": "2026-03-15T10:00:00.000Z",
-        "new": [{"cveId": f"CVE-2024-{i}"} for i in ids if i % 2 == 0],
-        "updated": [{"cveId": f"CVE-2024-{i}"} for i in ids if i % 2 == 1],
-    }
-    stale = {
-        "fetchTime": "2026-03-13T10:00:00.000Z",
-        "new": [{"cveId": f"CVE-2024-{i}"} for i in ids[:50]],
-        "updated": [],
-    }
-    tmp = out + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump([recent, stale], f)
-    os.rename(tmp, out)
+
+    def build():
+        ids = [r["event_id"] for r in _rows(sf_dir, "events", ["event_id"], "event_id", DELTA_LIMIT)]
+        recent = {
+            "fetchTime": "2026-03-15T10:00:00.000Z",
+            "new": [{"cveId": f"CVE-2024-{i}"} for i in ids if i % 2 == 0],
+            "updated": [{"cveId": f"CVE-2024-{i}"} for i in ids if i % 2 == 1],
+        }
+        stale = {
+            "fetchTime": "2026-03-13T10:00:00.000Z",
+            "new": [{"cveId": f"CVE-2024-{i}"} for i in ids[:50]],
+            "updated": [],
+        }
+        with fsio.atomic_file(out, "w") as f:
+            json.dump([recent, stale], f)
+
+    fsio.build_once(out, build)
     return out
 
 
@@ -267,34 +258,33 @@ def gen_cwe_xml(sf_dir: str) -> str:
     Weakness per nation, with namespaced tags, an xhtml-marked-up
     Description, and Related_Weaknesses pointing at the region."""
     out = f"{landing_dir(sf_dir)}/cwec.xml"
-    if _done(out):
-        return out
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    rows = _rows(
-        sf_dir, "nation", ["n_nationkey", "n_name", "n_regionkey"], "n_nationkey", 10**6
-    )
-    parts = [
-        '<?xml version="1.0"?>',
-        '<Weakness_Catalog xmlns="http://cwe.mitre.org/cwe-6" '
-        'xmlns:xhtml="http://www.w3.org/1999/xhtml">',
-        "<Weaknesses>",
-    ]
-    for r in rows:
-        parts.append(
-            f'<Weakness ID="{r["n_nationkey"]}" Name="{r["n_name"]}" '
-            'Abstraction="Base">'
-            f"<Description>In region <xhtml:b>{r['n_regionkey']}</xhtml:b>"
-            " weakness</Description>"
-            "<Related_Weaknesses>"
-            f'<Related_Weakness Nature="ChildOf" CWE_ID="R{r["n_regionkey"]}"/>'
-            "</Related_Weaknesses>"
-            "</Weakness>"
+
+    def build():
+        rows = _rows(
+            sf_dir, "nation", ["n_nationkey", "n_name", "n_regionkey"], "n_nationkey", 10**6
         )
-    parts += ["</Weaknesses>", "</Weakness_Catalog>"]
-    tmp = out + ".tmp"
-    with open(tmp, "w") as f:
-        f.write("".join(parts))
-    os.rename(tmp, out)
+        parts = [
+            '<?xml version="1.0"?>',
+            '<Weakness_Catalog xmlns="http://cwe.mitre.org/cwe-6" '
+            'xmlns:xhtml="http://www.w3.org/1999/xhtml">',
+            "<Weaknesses>",
+        ]
+        for r in rows:
+            parts.append(
+                f'<Weakness ID="{r["n_nationkey"]}" Name="{r["n_name"]}" '
+                'Abstraction="Base">'
+                f"<Description>In region <xhtml:b>{r['n_regionkey']}</xhtml:b>"
+                " weakness</Description>"
+                "<Related_Weaknesses>"
+                f'<Related_Weakness Nature="ChildOf" CWE_ID="R{r["n_regionkey"]}"/>'
+                "</Related_Weaknesses>"
+                "</Weakness>"
+            )
+        parts += ["</Weaknesses>", "</Weakness_Catalog>"]
+        with fsio.atomic_file(out, "w") as f:
+            f.write("".join(parts))
+
+    fsio.build_once(out, build)
     return out
 
 
@@ -352,28 +342,27 @@ def gen_nvd_pages(sf_dir: str) -> str:
     cve_pipeline merge has genuinely overlapping keys.
     Returns the landing directory."""
     out_dir = f"{landing_dir(sf_dir)}/nvd_pages"
-    marker = f"{out_dir}/.done"
-    if _done(marker):
-        return out_dir
-    os.makedirs(out_dir, exist_ok=True)
-    rows = _rows(sf_dir, "orders", ["o_orderkey", "o_orderstatus"], "o_orderkey", NVD_LIMIT)
-    for p in range(NVD_PAGES):
-        vulns = [
-            {
-                "cve": {
-                    "id": f"CVE-2020-{r['o_orderkey']}",
-                    "vendor": r["o_orderstatus"],
-                    "metrics": _nvd_metrics(r["o_orderkey"]),
-                    "weaknesses": _nvd_weaknesses(r["o_orderkey"]),
+
+    def build():
+        os.makedirs(out_dir)
+        rows = _rows(sf_dir, "orders", ["o_orderkey", "o_orderstatus"], "o_orderkey", NVD_LIMIT)
+        for p in range(NVD_PAGES):
+            vulns = [
+                {
+                    "cve": {
+                        "id": f"CVE-2020-{r['o_orderkey']}",
+                        "vendor": r["o_orderstatus"],
+                        "metrics": _nvd_metrics(r["o_orderkey"]),
+                        "weaknesses": _nvd_weaknesses(r["o_orderkey"]),
+                    }
                 }
-            }
-            for i, r in enumerate(rows)
-            if i % NVD_PAGES == p
-        ]
-        with open(f"{out_dir}/page-{p}.json", "w") as f:
-            json.dump({"resultsPerPage": len(vulns), "vulnerabilities": vulns}, f)
-    with open(marker, "w") as f:
-        f.write("ok")
+                for i, r in enumerate(rows)
+                if i % NVD_PAGES == p
+            ]
+            with open(f"{out_dir}/page-{p}.json", "w") as f:
+                json.dump({"resultsPerPage": len(vulns), "vulnerabilities": vulns}, f)
+
+    fsio.build_once(out_dir, build)
     return out_dir
 
 
@@ -392,34 +381,33 @@ def gen_redhat_pages(sf_dir: str) -> str:
     there). Ids come from supplier keys in the shared CVE-2020-* space.
     """
     out_dir = f"{landing_dir(sf_dir)}/redhat_pages"
-    marker = f"{out_dir}/.done"
-    if _done(marker):
-        return out_dir
-    os.makedirs(out_dir, exist_ok=True)
-    rows = _rows(sf_dir, "supplier", ["s_suppkey"], "s_suppkey", REDHAT_LIMIT)
-    for p in range(REDHAT_PAGES):
-        vulns = [
-            {
-                "cve": {
-                    "id": f"CVE-2020-{r['s_suppkey']}",
-                    "severity": REDHAT_SEVERITIES[r["s_suppkey"] % 4],
-                    "public_date": f"2025-{r['s_suppkey'] % 12 + 1:02d}-01T00:00:00Z",
-                }
-            }
-            for i, r in enumerate(rows)
-            if i % REDHAT_PAGES == p
-        ]
-        with open(f"{out_dir}/page-{p}.json", "w") as f:
-            json.dump(
+
+    def build():
+        os.makedirs(out_dir)
+        rows = _rows(sf_dir, "supplier", ["s_suppkey"], "s_suppkey", REDHAT_LIMIT)
+        for p in range(REDHAT_PAGES):
+            vulns = [
                 {
-                    "totalResults": len(rows),
-                    "resultsPerPage": len(vulns),
-                    "vulnerabilities": vulns,
-                },
-                f,
-            )
-    with open(marker, "w") as f:
-        f.write("ok")
+                    "cve": {
+                        "id": f"CVE-2020-{r['s_suppkey']}",
+                        "severity": REDHAT_SEVERITIES[r["s_suppkey"] % 4],
+                        "public_date": f"2025-{r['s_suppkey'] % 12 + 1:02d}-01T00:00:00Z",
+                    }
+                }
+                for i, r in enumerate(rows)
+                if i % REDHAT_PAGES == p
+            ]
+            with open(f"{out_dir}/page-{p}.json", "w") as f:
+                json.dump(
+                    {
+                        "totalResults": len(rows),
+                        "resultsPerPage": len(vulns),
+                        "vulnerabilities": vulns,
+                    },
+                    f,
+                )
+
+    fsio.build_once(out_dir, build)
     return out_dir
 
 
@@ -431,20 +419,19 @@ def gen_exploitdb_csv(sf_dir: str) -> str:
     per exploit with a ';'-joined `codes` column mixing CVE and
     non-CVE identifiers; every 3rd row lists two CVEs."""
     out = f"{landing_dir(sf_dir)}/files_exploits.csv"
-    if _done(out):
-        return out
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    rows = _rows(sf_dir, "part", ["p_partkey"], "p_partkey", EXPLOITDB_LIMIT)
-    tmp = out + ".tmp"
-    with open(tmp, "w", newline="") as f:
-        f.write("id,file,description,codes\n")
-        for r in rows:
-            k = r["p_partkey"]
-            codes = f"CVE-2022-{k};OSVDB-{k}"
-            if k % 3 == 0:
-                codes += f";CVE-2023-{k}"
-            f.write(f"{k},exploits/x_{k}.py,exploit {k},{codes}\n")
-    os.rename(tmp, out)
+
+    def build():
+        rows = _rows(sf_dir, "part", ["p_partkey"], "p_partkey", EXPLOITDB_LIMIT)
+        with fsio.atomic_file(out) as f:
+            f.write("id,file,description,codes\n")
+            for r in rows:
+                k = r["p_partkey"]
+                codes = f"CVE-2022-{k};OSVDB-{k}"
+                if k % 3 == 0:
+                    codes += f";CVE-2023-{k}"
+                f.write(f"{k},exploits/x_{k}.py,exploit {k},{codes}\n")
+
+    fsio.build_once(out, build)
     return out
 
 
@@ -456,31 +443,28 @@ def gen_png_files(sf_dir: str, limit: int = 200) -> str:
     constant image whose dims/value derive from the doc's text length
     (the mm_png construction rule), so an oracle can recompute every
     decoded feature from the documents table. Written once per landing
-    fingerprint; the _DONE marker commits the whole directory."""
+    fingerprint; the build's marker commits the whole directory."""
     out = f"{landing_dir(sf_dir)}/png_files"
-    marker = f"{out}/_DONE"
-    if _done(marker):
-        return out
-    import numpy as np
 
-    from ..operators.multimodal import png_encode
+    def build():
+        import numpy as np
 
-    os.makedirs(out, exist_ok=True)
-    t = pq.read_table(
-        f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
-    ).to_pylist()
-    t.sort(key=lambda r: r["doc_id"])
-    for r in t[:limit]:
-        k = len(r["text"].encode("utf-8"))
-        png = png_encode(
-            np.full((k % 5 + 1, k % 9 + 1, 3), k % 256, dtype=np.uint8)
-        )
-        tmp = f"{out}/doc_{r['doc_id']}.png.tmp"
-        with open(tmp, "wb") as f:
-            f.write(png)
-        os.rename(tmp, f"{out}/doc_{r['doc_id']}.png")
-    with open(marker, "w") as f:
-        f.write("ok")
+        from ..operators.multimodal import png_encode
+
+        os.makedirs(out)
+        t = pq.read_table(
+            f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
+        ).to_pylist()
+        t.sort(key=lambda r: r["doc_id"])
+        for r in t[:limit]:
+            k = len(r["text"].encode("utf-8"))
+            png = png_encode(
+                np.full((k % 5 + 1, k % 9 + 1, 3), k % 256, dtype=np.uint8)
+            )
+            with open(f"{out}/doc_{r['doc_id']}.png", "wb") as f:
+                f.write(png)
+
+    fsio.build_once(out, build)
     return out
 
 
@@ -490,13 +474,13 @@ def gen_orc_documents(sf_dir: str) -> str:
     the engine's columnar-format breadth beyond parquet (Spark's ORC
     reader supports the same pushdown/pruning surface)."""
     out = f"{landing_dir(sf_dir)}/documents.orc"
-    if _done(out):
-        return out
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    import pyarrow.orc as po
-    import pyarrow.parquet as pq
 
-    tmp = out + ".tmp"
-    po.write_table(pq.read_table(f"{sf_dir}/documents.parquet"), tmp)
-    os.rename(tmp, out)
+    def build():
+        import pyarrow.orc as po
+        import pyarrow.parquet as pq
+
+        with fsio.atomic_file(out, "wb") as f:
+            po.write_table(pq.read_table(f"{sf_dir}/documents.parquet"), f)
+
+    fsio.build_once(out, build)
     return out

@@ -32,6 +32,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from .. import fsio
+
 FORMAT_NAME = "cvemate_paged_feed"
 
 
@@ -157,16 +159,13 @@ class PagedFeedWriter(DataSourceWriter):
         staging = self._staging()
         _os.makedirs(staging, exist_ok=True)
         out = f"{staging}/page-{pid:05d}-{self.token}.json"
-        tmp = out + f".tmp-{_os.getpid()}"
-        with open(tmp, "w") as f:
+        with fsio.atomic_file(out) as f:
             _json.dump({"vulnerabilities": rows}, f)
-        _os.rename(tmp, out)
         return WriterCommitMessage()
 
     def commit(self, messages):
         import glob as _glob
         import os as _os
-        import shutil as _shutil
 
         _os.makedirs(self.path, exist_ok=True)
         success = f"{self.path}/_SUCCESS"
@@ -178,15 +177,13 @@ class PagedFeedWriter(DataSourceWriter):
         staging = self._staging()
         if _os.path.isdir(staging):
             for p in sorted(_glob.glob(f"{staging}/page-*.json")):
-                _os.replace(p, f"{self.path}/{_os.path.basename(p)}")
-            _shutil.rmtree(staging, ignore_errors=True)
-        with open(success, "w") as f:
+                fsio.publish_dir(p, f"{self.path}/{_os.path.basename(p)}")
+            fsio.discard(staging)
+        with fsio.atomic_file(success) as f:
             f.write("")
 
     def abort(self, messages):
-        import shutil as _shutil
-
-        _shutil.rmtree(self._staging(), ignore_errors=True)
+        fsio.discard(self._staging())
 
 
 # ------------------------------------------------------------ stream reader

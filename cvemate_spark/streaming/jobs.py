@@ -20,10 +20,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from .. import SCRATCH_ROOT as SCRATCH, fsio
 from ..operators.merge import keep_latest_merge, read_target, write_atomic
 from ..tables import _ensure_session_confs
-
-SCRATCH = "/root/repo/.scratch"
 
 # schema of the staged (micros-normalized) events parquet — file-source
 # streams require an explicit schema
@@ -64,7 +63,7 @@ def _stage_events(sf_dir: str) -> str:
     stage = f"{SCRATCH}/events_src_{stage_key}"
     if not os.path.exists(stage):
         tmp = f"{stage}.tmp-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+        fsio.discard(tmp)
         os.makedirs(tmp)
         tbl = pq.read_table(src)
         i = tbl.schema.get_field_index("ts")
@@ -73,10 +72,7 @@ def _stage_events(sf_dir: str) -> str:
                 i, "ts", tbl.column("ts").cast(pa.timestamp("us"), safe=False)
             )
         pq.write_table(tbl, f"{tmp}/events.parquet")
-        try:
-            os.rename(tmp, stage)
-        except OSError:  # concurrent stager won the rename — use theirs
-            shutil.rmtree(tmp, ignore_errors=True)
+        fsio.publish_dir(tmp, stage)  # a concurrent stager's win stands
     return stage
 
 
@@ -98,7 +94,7 @@ def _chunked_landing(spark: SparkSession, sf_dir: str, n_chunks: int = 2) -> str
     in_dir = f"{SCRATCH}/s3_in_{in_key}"
     if not os.path.exists(in_dir):
         tmp = f"{in_dir}.tmp-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+        fsio.discard(tmp)
         ev = spark.read.parquet(stage)  # micros-normalized
         # one partitioned write (not one job per chunk); the partition
         # dirs then become the arrival-ordered landing files
@@ -110,11 +106,8 @@ def _chunked_landing(spark: SparkSession, sf_dir: str, n_chunks: int = 2) -> str
             parts = sorted(glob.glob(f"{chunks_dir}/__chunk={i}/part-*.parquet"))
             for j, part in enumerate(parts):
                 shutil.copy(part, f"{tmp}/chunk{i}_{j}.parquet")
-        shutil.rmtree(chunks_dir)
-        try:
-            os.rename(tmp, in_dir)
-        except OSError:  # concurrent builder won the rename — use theirs
-            shutil.rmtree(tmp, ignore_errors=True)
+        fsio.discard(chunks_dir)
+        fsio.publish_dir(tmp, in_dir)  # a concurrent builder's win stands
     return in_dir
 
 
@@ -1127,9 +1120,8 @@ def checkpoint_resume_counts(
         path = f"{src_dir}/{name}.parquet"
         if not os.path.exists(path):
             os.makedirs(src_dir, exist_ok=True)
-            tmp = f"{path}.tmp-{os.getpid()}"
-            pq.write_table(part, tmp)
-            os.rename(tmp, path)
+            with fsio.atomic_file(path, "wb") as f:
+                pq.write_table(part, f)
 
     def run_phase(phase: int) -> None:
         import time as _time

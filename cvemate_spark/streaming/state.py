@@ -17,6 +17,8 @@ from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import fsio
+
 DEFAULT_LOOKBACK_HOURS = 24  # nvd_handler.py:143-147 fallback window
 
 
@@ -32,10 +34,8 @@ class StatusStore:
 
     def _save(self) -> None:
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
+        with fsio.atomic_file(self.path) as f:
             json.dump(self._data, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.path)
 
     # mongodb_handler.py:261-277
     def last_update_time(self, source: str) -> datetime | None:

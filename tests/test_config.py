@@ -8,6 +8,8 @@ import os
 import subprocess
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_env_overrides_parse_and_precedence():
     from cvemate_spark.config import env_conf_overrides
@@ -46,7 +48,7 @@ def test_env_override_wins_over_default_in_real_session():
     built, and getOrCreate would ignore new confs) with the override
     set and assert the session actually carries it."""
     script = (
-        "import sys; sys.path.insert(0, '/root/repo')\n"
+        f"import sys; sys.path.insert(0, {REPO!r})\n"
         "from cvemate_spark.session import get_spark\n"
         "s = get_spark(cpus=2)\n"
         "print('SHUF=' + s.conf.get('spark.sql.shuffle.partitions'))\n"

@@ -34,7 +34,7 @@ import subprocess
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF1 = f"{REPO}/.scratch/sf1"

@@ -17,7 +17,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from cvemate_spark.queries import REGISTRY
 from cvemate_spark.session import get_spark
@@ -32,7 +33,7 @@ def main() -> int:
 
         names = list(bench.HEADLINE)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = f"/root/repo/plans/{tag}"
+    out_dir = f"{REPO}/plans/{tag}"
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("capture_plans")
     for name in names:

@@ -11,11 +11,13 @@ Usage: python tools/check.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb
 import numpy as np

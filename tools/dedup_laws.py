@@ -370,7 +370,7 @@ if __name__ == "__main__":
     from cvemate_spark.session import get_spark
     from tools.check import duck_connect
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf1"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".scratch", "sf1")
     names = sys.argv[2:] or sorted(SCALE_BOUND)
     spark = get_spark("dedup-laws", cpus=8, shuffle_partitions=8)
     con = duck_connect(sf_dir)

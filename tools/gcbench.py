@@ -34,7 +34,8 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from tools.artifacts import artifact_path, data_token  # noqa: E402
 
@@ -50,7 +51,7 @@ if ints:
 if len(ints) > 1:
     N_BUCKETS = ints[1]
 
-SCRATCH = "/root/repo/.scratch/gcbench"
+SCRATCH = f"{REPO}/.scratch/gcbench"
 T0 = "2026-01-01 00:00:00"
 VACUUM_EVERY = 150
 COMPACT_EVERY = 75

@@ -3,7 +3,7 @@
 are designed for, which the driver testdata deliberately lacks (its
 top pair cosines are ~0.45-0.60 and its docs are weakly similar).
 
-Products under /root/repo/.scratch (derived, regenerable, no RNG —
+Products under .scratch/ at the repository root (derived, regenerable, no RNG —
 everything is a pure function of existing keys):
 
   dup0.1/ — sf0.1 volumes with manufactured duplicate structure:

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Derive larger / skewed test datasets from the driver's sf0.1 tables.
 
-Two products, both under /root/repo/.scratch (gitignored — derived
+Two products, both under .scratch/ at the repository root (gitignored — derived
 data, regenerable):
 
   sf1    — 10x scale-up of sf0.1 (~6M lineitem rows): copy 0 is the

@@ -39,13 +39,14 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 from tools.artifacts import artifact_path, data_token  # noqa: E402
 
-SF_DIR = "/root/repo/.scratch/sf1"
+SF_DIR = f"{REPO}/.scratch/sf1"
 N_BUCKETS = 256
 MULT = 1
 for a in sys.argv[1:]:
@@ -56,7 +57,7 @@ for a in sys.argv[1:]:
     elif a.isdigit():
         N_BUCKETS = int(a)
 
-SCRATCH = "/root/repo/.scratch/mergebench"
+SCRATCH = f"{REPO}/.scratch/mergebench"
 T0 = "2026-01-01 00:00:00"
 T1 = "2026-01-02 00:00:00"
 T2 = "2026-01-03 00:00:00"

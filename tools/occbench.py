@@ -41,7 +41,8 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from tools.artifacts import artifact_path, data_token  # noqa: E402
 
@@ -59,7 +60,7 @@ for a in sys.argv[1:]:
     elif "," in a or a.isdigit():
         WRITERS = [int(x) for x in a.split(",")]
 
-SCRATCH = "/root/repo/.scratch/occbench"
+SCRATCH = f"{REPO}/.scratch/occbench"
 ROWS_PER_WRITER = 200
 T0 = "2026-01-01 00:00:00"
 

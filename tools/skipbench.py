@@ -35,7 +35,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
@@ -52,7 +53,7 @@ for a in sys.argv[1:]:
     elif a.isdigit():
         N_BUCKETS = int(a)
 
-SCRATCH = "/root/repo/.scratch/skipbench"
+SCRATCH = f"{REPO}/.scratch/skipbench"
 T0 = "2026-01-01 00:00:00"
 T1 = "2026-01-02 00:00:00"
 

@@ -18,7 +18,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 QUERIES = [
     "t_drift_ks", "t_drift_psi", "e_kmv_intersect",
@@ -27,7 +28,7 @@ QUERIES = [
     "s15_cms", "s16_quantile", "e_cohort_retention", "e_path_transitions",
     "e_anomaly_volume", "e_ab_test",
 ]
-SCALES = {"sf0.1": "/root/testdata/sf0.1", "sf1": "/root/repo/.scratch/sf1"}
+SCALES = {"sf0.1": "/root/testdata/sf0.1", "sf1": f"{REPO}/.scratch/sf1"}
 
 # Second decade (gen_sf.py sf10: 500k docs / 200k vectors / 10M
 # events — events added round 8 per VERDICT r7 item 5). Invoked
@@ -48,7 +49,7 @@ QUERIES_SF10 = [
     "e_cohort_retention", "e_path_transitions", "e_anomaly_volume",
     "e_ab_test", "s13_drift", "s14_kmv",
 ]
-SCALES_SF10 = {"sf1": "/root/repo/.scratch/sf1", "sf10": "/root/repo/.scratch/sf10"}
+SCALES_SF10 = {"sf1": f"{REPO}/.scratch/sf1", "sf10": f"{REPO}/.scratch/sf10"}
 
 
 def bench_scale(spark, sf_dir: str, runs: int, queries=None) -> dict[str, float]:

@@ -28,10 +28,11 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-ROOT = "/root/repo/.scratch/wapbench"
+ROOT = f"{REPO}/.scratch/wapbench"
 N_BUCKETS = 32
 
 
@@ -188,7 +189,7 @@ def main() -> None:
     out["width_scaling"] = rows
 
     out["loadavg_1m"] = os.getloadavg()[0]
-    with open("/root/repo/WAPBENCH.json", "w") as f:
+    with open(f"{REPO}/WAPBENCH.json", "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out, indent=1))
     shutil.rmtree(ROOT, ignore_errors=True)
